@@ -2874,8 +2874,9 @@ def q_dart_weights(spark, sf_dir):
 
 def q_train_shap(spark, sf_dir):
     """Exact TreeSHAP HASH-MATCHED (promoted from rows-only): the REAL
-    pred_contribs path — broadcast model + the vectorized Lundberg
-    path-recursion kernel (`functions/shap.py tree_shap`, reference
+    pred_contribs path — broadcast model + its compiled root-to-leaf
+    paths, evaluated by the path-decomposed TreeSHAP kernel
+    (`functions/shap.py path_shap`, reference
     `src/predictor/interpretability/shap.cc:101` semantics) — over the
     composed stump model.  On a depth-1 tree exact TreeSHAP is closed
     form: phi_split = leaf(x) - E[leaf] with E the cover-weighted leaf

@@ -449,3 +449,25 @@ def test_multiclass_aucpr_is_macro_averaged(spark):
             {"_yc": (y == k).astype(float), "_sc": p[:, k]}))
         per.append(aucpr_binary(d, y="_yc", score="_sc"))
     assert got == pytest.approx(float(np.mean(per)), abs=1e-9)
+
+
+def test_eval_metric_string_names_one_metric(spark, reg_df):
+    """eval_metric="auc" is a one-element list — for train(params) and
+    for SparkGBDTClassifier alike — not the metrics 'a', 'u', 'c'."""
+    from xgboost_spark.plans.booster import train
+    from xgboost_spark.plans.estimator import SparkGBDTClassifier
+    fc = [f"c{i}" for i in range(5)]
+    df = (reg_df.withColumn("label", (F.col("label") > 0).cast("double"))
+          .withColumn("is_val", F.col("c0") > 0.5))
+    m = train({"objective": "binary:logistic", "num_boost_round": 2,
+               "max_depth": 2, "eval_metric": "auc"},
+              df, feature_cols=fc, evals=[(df, "train")])
+    assert list(m.eval_history["train"]) == ["auc"]
+    assert len(m.eval_history["train"]["auc"]) == 2
+    est = SparkGBDTClassifier(label_col="label", features_col=fc,
+                              num_boost_round=2, max_depth=2,
+                              eval_metric="auc",
+                              validation_indicator_col="is_val")
+    hist = est.fit(df).evals_result()
+    assert list(hist["validation"]) == ["auc"]
+    assert 0.5 < hist["validation"]["auc"][-1] <= 1.0

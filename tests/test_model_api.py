@@ -470,3 +470,29 @@ def test_get_quantile_cut(model):
     for f in range(len(FC)):
         seg = data[int(indptr[f]):int(indptr[f + 1])]
         assert len(seg) > 0 and np.all(np.diff(seg[:-1]) > 0)
+
+
+def test_json_roundtrip_keeps_base_weights(model):
+    """save -> load -> save keeps every node's base_weights.  A loaded
+    document carries no per-node gradient sums, so interior weights
+    must not be re-derived from them (they would all read 0)."""
+    import json
+    import os
+
+    from xgboost_spark.plans.model import GBDTModel
+
+    def node_weights(doc):
+        md = json.loads(doc)["learner"]["gradient_booster"]["model"]
+        return [t["base_weights"] for t in md["trees"]]
+
+    first = bytes(model.save_raw("json"))
+    again = bytes(GBDTModel.load_raw(first).save_raw("json"))
+    assert any(w[0] != 0.0 for w in node_weights(first))   # roots weighted
+    assert node_weights(again) == node_weights(first)
+    assert again == first
+    # a reference document's weights survive the same round trip
+    ref = os.path.join(os.path.dirname(__file__), "fixtures", "ref_models",
+                       "xgboost-3.0.2.cat.json")
+    doc = open(ref).read()
+    assert (node_weights(GBDTModel.from_json(doc).to_json())
+            == node_weights(doc))

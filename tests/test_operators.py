@@ -202,3 +202,18 @@ def test_scaler_and_winsorize(spark):
     assert o2.a_scaled.min() == 0.0 and o2.a_scaled.max() == 1.0
     w = features.winsorize(df, ["a"], {"a": (1.5, 3.5)}).toPandas()
     assert w.a.min() == 1.5 and w.a.max() == 3.5
+
+
+def test_d2_fold_sql_parses_non_finite_centroids(spark):
+    """Centroids inherit NaN/Inf from the embeddings they average; the
+    one-shot SQL fold must still parse, and give the same squared-L2
+    value a Column-built literal would (NaN / Inf propagate)."""
+    from xgboost_spark.operators.similarity import _d2_fold_sql
+    df = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
+    cases = {"finite": [0.5, -1.25], "nan": [float("nan"), 1.0],
+             "pinf": [float("inf"), 2.0], "ninf": [1.0, float("-inf")]}
+    row = df.selectExpr(*[f"{_d2_fold_sql('v', c)} AS {k}"
+                          for k, c in cases.items()]).first()
+    assert row["finite"] == 0.25 + 3.25 ** 2
+    assert np.isnan(row["nan"])
+    assert row["pinf"] == float("inf") and row["ninf"] == float("inf")

@@ -147,6 +147,13 @@ class TrainParams:
     # gblinear then uses the linear defaults.
     explicit_keys: frozenset = frozenset()
 
+    def __post_init__(self):
+        # one metric name is a one-element list (the reference accepts
+        # eval_metric="auc"); iterating the bare string would split it
+        # into characters
+        if isinstance(self.eval_metric, str):
+            self.eval_metric = [self.eval_metric]
+
     ALIASES = {
         "learning_rate": "eta",
         "lambda": "reg_lambda",

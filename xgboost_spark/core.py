@@ -102,6 +102,11 @@ class Tree:
     # (`src/predictor/predict_fn.h:22` — fvalue and the threshold are
     # both float32 there, so rows exactly at a threshold go RIGHT)
     tie_strict: bool = False
+    # per-node weights as loaded from a saved document (its
+    # ``base_weights``); None for trees grown here, whose node weights
+    # follow from (sum_grad, sum_hess).  A loaded document carries no
+    # sum_grad, so the saver writes these back verbatim instead.
+    base_weights: list[float] | None = None
 
     @property
     def n_nodes(self) -> int:

@@ -1,18 +1,29 @@
 """TreeSHAP: exact per-feature contributions for tree ensembles.
 
-Implements the polynomial-time path-dependent TreeSHAP algorithm
-(Lundberg, Erion & Lee 2018, "Consistent Individualized Feature
-Attribution for Tree Ensembles", Algorithm 2 — public knowledge; the
-reference's C++ form is `src/predictor/interpretability/shap.cc:101`).
+Path-dependent TreeSHAP (Lundberg, Erion & Lee 2018, "Consistent
+Individualized Feature Attribution for Tree Ensembles", Algorithm 2 —
+public knowledge; the reference's C++ form is
+`src/predictor/interpretability/shap.cc:101`), evaluated path by path
+as in GPUTreeShap (Mitchell, Frank & Holmes, PeerJ CS 2022) instead of
+by recursion over the tree.
 
 Two forms:
-- `tree_shap` — row-VECTORIZED: one recursion over the tree, per-row
-  path state held in (n_rows, path_cap) NumPy arrays.  Every row visits
-  every node (hot and cold branches both recurse), so the recursion is
-  shared and only the zero/one fractions differ per row.  ~100x faster
-  than per-row recursion inside Arrow batches.
-- `_tree_shap_row` — the scalar textbook form, kept as the testing
-  oracle for the vectorized kernel.
+- the path kernel — `compile_paths` turns a tree, once, into its
+  root-to-leaf paths: each path is a list of unique features
+  ("elements"), each with a zero fraction z (the product of the cover
+  ratios of that feature's hops, so a feature repeated on a path merges
+  the way the recursion's unwind merges it) and the (node, direction)
+  hops it must satisfy.  `path_shap` then builds one node-decision
+  matrix per batch; a row satisfies all of an element's hops or not,
+  so its one fractions o are bits, and the L bits of a path form a
+  pattern.  Element e's contribution w_e * (o_e - z_e) * leaf depends
+  only on (path, pattern): the coefficients come from the path-form
+  EXTEND / UNWOUND_SUM vectorised over (path, pattern) rows — all 2^L
+  patterns when that is no more than the rows, else only the patterns
+  the rows show — and are gathered per row and summed into phi by
+  feature.  No recursion over the tree per batch.
+- `_tree_shap_row` — the scalar textbook recursion, kept as the testing
+  oracle for the path kernel.
 
 Contract (matches the reference's `pred_contribs`):
   phi has F+1 slots; phi[:F] are feature contributions, phi[F] is the
@@ -21,7 +32,10 @@ Contract (matches the reference's `pred_contribs`):
 
 `condition` (+1 / -1 on `condition_feature`) computes SHAP values with
 that feature fixed present/absent — the building block for interaction
-values (`pred_interactions`), mirroring shap.cc's interaction path.
+values (`pred_interactions`), mirroring shap.cc's interaction path.  On
+a path the conditioned element drops out and scales the path by its o
+(present) or z (absent); `path_shap_interactions` applies the same to
+every element of every path at once.
 
 Per-node cover = training sum_hess (the reference uses the same stat).
 """
@@ -63,137 +77,251 @@ def _expected_value(a, cover) -> float:
 
 
 # ---------------------------------------------------------------------------
-# vectorized kernel
+# path kernel
 # ---------------------------------------------------------------------------
 
-class _VecPath:
-    """Path state shared across rows: feature list is identical for every
-    row (it is the recursion path); zero/one fractions and weights are
-    per-row matrices."""
-
-    __slots__ = ("d", "z", "o", "w")
-
-    def __init__(self, n: int, cap: int):
-        self.d = np.full(cap, -1, dtype=np.int64)
-        self.z = np.zeros((n, cap))
-        self.o = np.zeros((n, cap))
-        self.w = np.zeros((n, cap))
-
-    def copy(self) -> "_VecPath":
-        p = _VecPath.__new__(_VecPath)
-        p.d = self.d.copy()
-        p.z = self.z.copy()
-        p.o = self.o.copy()
-        p.w = self.w.copy()
-        return p
+# per-chunk working-set cap, in (row, path, element) cells: rows are
+# processed in chunks so a batch's memory stays bounded by the tree's
+# size, not the batch's
+_CHUNK_CELLS = 1 << 20
 
 
-def _vextend(m: _VecPath, length: int, pz: np.ndarray, po: np.ndarray, pi: int) -> int:
-    m.d[length] = pi
-    m.z[:, length] = pz
-    m.o[:, length] = po
-    m.w[:, length] = 1.0 if length == 0 else 0.0
-    for i in range(length - 1, -1, -1):
-        m.w[:, i + 1] += po * m.w[:, i] * ((i + 1) / (length + 1))
-        m.w[:, i] = pz * m.w[:, i] * ((length - i) / (length + 1))
-    return length + 1
+def compile_paths(a: dict, cover: np.ndarray) -> dict:
+    """One tree as its root-to-leaf paths (driver side, once per tree).
+
+    Returns arrays over P paths padded to the longest path's L unique
+    features: ``feat`` (P, L) (-1 = padding), ``z`` (P, L) (padding =
+    1.0: an element with z = o = 1 is a null player and changes no
+    other element's value) and ``leaf`` (P,); the decision ``nodes``
+    the paths test; and their hops, slot by slot — (``hop_pos`` into
+    ``nodes``, ``hop_left``), where position len(nodes) is an
+    always-true decision for padding slots — with each (path, element)
+    slot's first hop at ``slot_start``.  Size O(P x depth)."""
+    left, right = a["left"], a["right"]
+    bias = _expected_value(a, cover)
+    nodes = np.flatnonzero(left != -1)
+    if len(nodes) == 0:
+        return {"bias": bias, "z": np.ones((1, 0))}
+    pos = np.full(len(left), -1, dtype=np.int64)
+    pos[nodes] = np.arange(len(nodes))
+    paths = []                # (leaf, {feature: (z, [(node pos, go_left)])})
+    stack = [(0, ())]
+    while stack:
+        nid, hops = stack.pop()
+        if left[nid] != -1:
+            stack.append((int(right[nid]), hops + ((nid, False),)))
+            stack.append((int(left[nid]), hops + ((nid, True),)))
+            continue
+        elems: dict[int, tuple[float, list]] = {}
+        for h, go_left in hops:
+            f = int(a["feature"][h])
+            z, hs = elems.get(f, (1.0, []))
+            child = left[h] if go_left else right[h]
+            elems[f] = (z * (cover[child] / max(cover[h], 1e-300)),
+                        hs + [(int(pos[h]), go_left)])
+        paths.append((nid, elems))
+    P = len(paths)
+    L = max(len(elems) for _, elems in paths)
+    feat = np.full((P, L), -1, dtype=np.int64)
+    z = np.ones((P, L))
+    hops, slot_start = [], []
+    for p, (_, elems) in enumerate(paths):
+        feat[p, :len(elems)] = list(elems)
+        z[p, :len(elems)] = [ze for ze, _ in elems.values()]
+        pads = [[(len(nodes), True)]] * (L - len(elems))
+        for hs in [hs for _, hs in elems.values()] + pads:
+            slot_start.append(len(hops))
+            hops.extend(hs)
+    return {
+        "bias": bias, "feat": feat, "z": z,
+        "leaf": np.asarray([a["leaf_value"][leaf] for leaf, _ in paths],
+                           dtype=np.float64),
+        "nodes": nodes,
+        "hop_pos": np.asarray([h for h, _ in hops], dtype=np.int64),
+        "hop_left": np.asarray([d for _, d in hops], dtype=bool),
+        "slot_start": np.asarray(slot_start, dtype=np.int64),
+    }
 
 
-def _vunwind(m: _VecPath, length: int, i: int) -> int:
-    """Remove path element i; handles the o==0 rows and o!=0 rows in one
-    pass with masked arithmetic."""
-    length -= 1
-    o = m.o[:, i]
-    z = m.z[:, i]
-    nz = o != 0
-    o_safe = np.where(nz, o, 1.0)
-    z_safe = np.where(z != 0, z, 1.0)
-    n_ = m.w[:, length].copy()
-    for j in range(length - 1, -1, -1):
-        t = m.w[:, j]
-        w_nz = n_ * ((length + 1) / ((j + 1))) / o_safe
-        w_z = t * ((length + 1) / (length - j)) / z_safe
-        new_w = np.where(nz, w_nz, w_z)
-        n_ = t - new_w * z * ((length - j) / (length + 1))
-        m.w[:, j] = new_w
-    for j in range(i, length):
-        m.d[j] = m.d[j + 1]
-        m.z[:, j] = m.z[:, j + 1]
-        m.o[:, j] = m.o[:, j + 1]
-    return length
-
-
-def _vunwound_sum(m: _VecPath, length: int, i: int) -> np.ndarray:
-    o = m.o[:, i]
-    z = m.z[:, i]
-    nz = o != 0
-    o_safe = np.where(nz, o, 1.0)
-    z_safe = np.where(z != 0, z, 1.0)
-    total_nz = np.zeros(m.z.shape[0])
-    total_z = np.zeros(m.z.shape[0])
-    n_ = m.w[:, length - 1].copy()
-    for j in range(length - 2, -1, -1):
-        t = n_ * (length / (j + 1)) / o_safe
-        total_nz += t
-        n_ = m.w[:, j] - t * z * ((length - 1 - j) / length)
-        total_z += m.w[:, j] * (length / (length - 1 - j)) / z_safe
-    return np.where(nz, total_nz, total_z)
-
-
-def _vrecurse(a, cover, X, phi, nid, m: _VecPath, length: int,
-              pz: np.ndarray, po: np.ndarray, pi: int,
-              condition: int, condition_feature: int, cf: np.ndarray):
-    if condition == 0 or pi != condition_feature:
-        m = m.copy()
-        length = _vextend(m, length, pz, po, pi)
-    if a["left"][nid] == -1:                                   # leaf
-        v = float(a["leaf_value"][nid])
-        for i in range(1, length):
-            w = _vunwound_sum(m, length, i)
-            contrib = w * (m.o[:, i] - m.z[:, i]) * v
-            if condition != 0:
-                contrib = contrib * cf
-            phi[:, m.d[i]] += contrib
-        return
-    f = int(a["feature"][nid])
-    lid, rid = int(a["left"][nid]), int(a["right"][nid])
-    x = X[:, f]
-    node_cats = a.get("categories", (None,) * len(a["left"]))[nid] \
-        if "categories" in a else None
-    if node_cats is not None:
-        code = np.where(np.isnan(x), -1, np.nan_to_num(x)).astype(np.int64)
-        go_left = np.where(np.isnan(x), bool(a["default_left"][nid]),
-                           np.isin(code, node_cats))
+def _decisions(a: dict, nodes: np.ndarray, X: np.ndarray) -> np.ndarray:
+    """(n, len(nodes)) go-left matrix: NaN takes ``default_left``,
+    categorical nodes test set membership, numeric nodes follow
+    `_num_go_left`'s tie convention."""
+    x = X[:, a["feature"][nodes]]
+    sv = a["split_value"][nodes]
+    if a.get("tie_strict"):
+        go_left = x.astype(np.float32) < sv.astype(np.float32)
     else:
-        go_left = np.where(np.isnan(x), bool(a["default_left"][nid]),
-                           _num_go_left(a, nid, x))
-    cj = max(cover[nid], 1e-300)
-    rl = cover[lid] / cj
-    rr = cover[rid] / cj
-    iz = np.ones(X.shape[0])
-    io = np.ones(X.shape[0])
-    k = -1
-    for i in range(1, length):
-        if m.d[i] == f:
-            k = i
-            break
-    if k >= 0:
-        iz = m.z[:, k].copy()
-        io = m.o[:, k].copy()
-        m = m.copy()
-        length = _vunwind(m, length, k)
-    # per-row hot/cold one-fractions; both children recursed once with
-    # row-wise po (hot rows keep io, cold rows get 0)
-    for child, r_c, hot_mask in ((lid, rl, go_left), (rid, rr, ~go_left)):
-        po_c = np.where(hot_mask, io, 0.0)
-        cf_c = cf
-        if condition != 0 and f == condition_feature:
-            if condition > 0:
-                cf_c = np.where(hot_mask, cf, 0.0)
-            else:
-                cf_c = cf * r_c
-        _vrecurse(a, cover, X, phi, child, m, length, iz * r_c, po_c, f,
-                  condition, condition_feature, cf_c)
+        go_left = x <= sv
+    cats = a.get("categories")
+    if cats is not None:
+        for j, nid in enumerate(nodes):
+            if cats[nid] is not None:
+                code = np.nan_to_num(x[:, j]).astype(np.int64)
+                go_left[:, j] = np.isin(code, cats[nid])
+    return np.where(np.isnan(x), a["default_left"][nodes], go_left)
+
+
+def _one_fractions(a: dict, tp: dict, X: np.ndarray) -> np.ndarray:
+    """(n, P, L) bool: does the row satisfy every hop of the element
+    (padding slots always do)."""
+    n = X.shape[0]
+    d = np.ones((n, len(tp["nodes"]) + 1), dtype=bool)
+    d[:, :-1] = _decisions(a, tp["nodes"], X)
+    sat = d[:, tp["hop_pos"]] == tp["hop_left"]
+    o = np.logical_and.reduceat(sat, tp["slot_start"], axis=1)
+    return o.reshape(n, *tp["z"].shape)
+
+
+def _coefs(z: np.ndarray, o: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Per-element contributions w_e * (o_e - z_e) * v of G path
+    instances, element-major: z, o (L, G), leaf values v (G,); returns
+    (L, G).  EXTEND builds the permutation weights of the whole path
+    (root dummy first), then UNWOUND_SUM removes each element in turn —
+    shap.cc's ExtendPath / UnwoundPathSum, every element at once."""
+    L, G = z.shape
+    Lt = L + 1                                # + the root's dummy element
+    w = np.zeros((Lt, G))
+    w[0] = 1.0
+    buf = np.empty((L, G))
+    for ln in range(1, Lt):
+        i = np.arange(ln)[:, None]
+        old = buf[:ln]
+        np.copyto(old, w[:ln])
+        np.multiply(old, (ln - i) / (ln + 1), out=w[:ln])
+        w[:ln] *= z[ln - 1]
+        old *= (i + 1) / (ln + 1)
+        old *= o[ln - 1]
+        w[1:ln + 1] += old
+    nxt = np.repeat(w[L:], L, axis=0)
+    total_one = np.zeros((L, G))
+    total_zero = np.zeros(G)
+    for j in range(L - 1, -1, -1):
+        np.multiply(nxt, Lt / (j + 1), out=buf)
+        total_one += buf
+        buf *= z
+        buf *= (L - j) / Lt
+        np.subtract(w[j], buf, out=nxt)
+        total_zero += w[j] * (Lt / (L - j))
+    total = np.where(o != 0, total_one, total_zero / np.where(z != 0, z, 1.0))
+    total *= o - z
+    total *= v
+    return total
+
+
+def _gather_coefs(z: np.ndarray, v: np.ndarray, o: np.ndarray) -> np.ndarray:
+    """Coefficients of every (row, path) of ``o`` (m, P, L) for paths
+    with zero fractions z (P, L) and leaf values v (P,): a table over
+    all 2^L patterns when that is no more than the m rows, else over
+    the (path, pattern) pairs the rows show.  Returns (m, P, L)."""
+    m, P, L = o.shape
+    if (1 << L) <= m:
+        bits = (np.arange(1 << L) >> np.arange(L)[:, None]) & 1
+        table = _coefs(np.repeat(z.T, 1 << L, axis=1),
+                       np.tile(bits, (1, P)).astype(np.float64),
+                       np.repeat(v, 1 << L)).reshape(L, P, 1 << L)
+        code = o @ (np.int64(1) << np.arange(L, dtype=np.int64))
+        return table[:, np.arange(P), code].transpose(1, 2, 0)
+    # one byte-string key per (row, path): the path id, then its bits
+    pid = np.arange(P, dtype=">u4").view(np.uint8).reshape(1, P, 4)
+    key = np.concatenate([np.broadcast_to(pid, (m, P, 4)),
+                          np.packbits(o, axis=2)], axis=2).reshape(m * P, -1)
+    uniq, inv = np.unique(key.view(np.dtype((np.void, key.shape[1]))).ravel(),
+                          return_inverse=True)
+    ub = uniq.view(np.uint8).reshape(len(uniq), -1)
+    up = ub[:, :4].copy().view(">u4").ravel()
+    uo = np.unpackbits(ub[:, 4:], axis=1, count=L).T.astype(np.float64)
+    return _coefs(z[up].T, uo, v[up]).T[inv].reshape(m, P, L)
+
+
+def _scatter_sum(out: np.ndarray, vals: np.ndarray, keys: np.ndarray):
+    """out[:, k] += sum of vals[:, c] over the columns c with keys[c] ==
+    k (keys < 0 are skipped)."""
+    order = np.argsort(keys, kind="stable")
+    order = order[keys[order] >= 0]
+    if len(order) == 0:
+        return
+    ks = keys[order]
+    starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+    out[:, ks[starts]] += np.add.reduceat(vals[:, order], starts, axis=1)
+
+
+def _chunk_rows(cells_per_row: int) -> int:
+    return max(1, _CHUNK_CELLS // cells_per_row)
+
+
+def path_shap(a: dict, tp: dict, X: np.ndarray, n_features: int,
+              condition: int = 0, condition_feature: int = -1) -> np.ndarray:
+    """SHAP values of one compiled tree (`compile_paths`) over a batch
+    of raw-domain rows: (n, F+1), last column the bias (zero when
+    conditioning, matching shap.cc)."""
+    n = X.shape[0]
+    phi = np.zeros((n, n_features + 1))
+    if condition == 0:
+        phi[:, n_features] = tp["bias"]
+    P, L = tp["z"].shape
+    if n == 0 or L == 0:
+        return phi
+    z, feat = tp["z"], tp["feat"]
+    hit = feat == condition_feature if condition != 0 else None
+    if hit is not None:
+        # the conditioned element drops out as a null player (z = o = 1)
+        z = np.where(hit, 1.0, z)
+        on_path = hit.any(axis=1)
+        e_hit = hit.argmax(axis=1)
+        z_hit = np.where(on_path, tp["z"][np.arange(P), e_hit], 1.0)
+    keys = feat.reshape(-1)
+    step = _chunk_rows(P * L)
+    for lo in range(0, n, step):
+        o = _one_fractions(a, tp, X[lo:lo + step])
+        if hit is not None:
+            o_hit = np.where(on_path, o[:, np.arange(P), e_hit], True)
+            scale = o_hit if condition > 0 else np.broadcast_to(z_hit, o_hit.shape)
+            o = o | hit
+        c = _gather_coefs(z, tp["leaf"], o)
+        if hit is not None:
+            c *= scale[:, :, None]
+        _scatter_sum(phi[lo:lo + step], c.reshape(len(o), -1), keys)
+    return phi
+
+
+def path_shap_interactions(a: dict, tp: dict, X: np.ndarray,
+                           n_features: int) -> np.ndarray:
+    """SHAP interaction values of one compiled tree: (n, F+1, F+1).
+    interaction[i][j] = (phi_i | j present  -  phi_i | j absent) / 2 for
+    i != j — on each path holding j, the coefficients of the path with
+    j's element dropped, scaled by (o_j - z_j) / 2; symmetrised, and the
+    diagonal absorbs the remainder so each row sums to phi (reference
+    shap.cc interaction path)."""
+    n = X.shape[0]
+    F1 = n_features + 1
+    phi = path_shap(a, tp, X, n_features)
+    M = np.zeros((n, F1, F1))
+    P, L = tp["z"].shape
+    if n and L:
+        z, feat = tp["z"], tp["feat"]
+        eye = np.eye(L, dtype=bool)
+        # virtual path (p, e): path p with element e dropped
+        z_drop = np.where(eye, 1.0, z[:, None, :]).reshape(P * L, L)
+        leaf = np.repeat(tp["leaf"], L)
+        fi, fj = feat[:, None, :], feat[:, :, None]
+        keys = np.where((fi >= 0) & (fj >= 0) & ~eye, fi * F1 + fj, -1)
+        Mflat = M.reshape(n, F1 * F1)
+        step = _chunk_rows(P * L * L)
+        for lo in range(0, n, step):
+            o = _one_fractions(a, tp, X[lo:lo + step])
+            m = len(o)
+            c = _gather_coefs(z_drop, leaf,
+                              (o[:, :, None, :] | eye).reshape(m, P * L, L))
+            c = c.reshape(m, P, L, L) * ((o - z) / 2.0)[:, :, :, None]
+            _scatter_sum(Mflat[lo:lo + step], c.reshape(m, -1), keys.reshape(-1))
+    # both conditioning orders estimate the same quantity — symmetrize,
+    # then the diagonal absorbs the remainder so rows sum to phi
+    out = (M + M.transpose(0, 2, 1)) / 2.0
+    idx = np.arange(F1)
+    out[:, idx, idx] = 0.0
+    out[:, idx, idx] = phi - out.sum(axis=2)
+    return out
 
 
 def tree_shap(a: dict, cover: np.ndarray, X: np.ndarray,
@@ -205,25 +333,13 @@ def tree_shap(a: dict, cover: np.ndarray, X: np.ndarray,
     with NaN for missing.  Returns (n, F+1); last column is the bias
     (zero when conditioning, matching shap.cc).
     """
-    n = X.shape[0]
     F = X.shape[1] if n_features is None else n_features
-    phi = np.zeros((n, F + 1))
-    if n == 0:
-        return phi
-    if condition == 0:
-        phi[:, F] = _expected_value(a, cover)
-    if a["left"][0] == -1:          # single-leaf tree: bias only
-        return phi
-    cap = _max_depth(a) + 2
-    m = _VecPath(n, cap)
-    ones = np.ones(n)
-    _vrecurse(a, cover, X, phi, 0, m, 0, ones, ones, -1,
-              condition, condition_feature, ones)
-    return phi
+    return path_shap(a, compile_paths(a, cover), X, F,
+                     condition=condition, condition_feature=condition_feature)
 
 
 # ---------------------------------------------------------------------------
-# scalar reference kernel (testing oracle for the vectorized form)
+# scalar reference kernel (testing oracle for the path kernel)
 # ---------------------------------------------------------------------------
 
 def _decision(a, nid: int, xrow: np.ndarray) -> bool:
@@ -412,24 +528,6 @@ def _node_values(a, cover) -> np.ndarray:
 
 
 def tree_shap_interactions(a: dict, cover: np.ndarray, X: np.ndarray) -> np.ndarray:
-    """SHAP interaction values for one tree: (n, F+1, F+1).
-    interaction[i][j] = (phi_i | j present  -  phi_i | j absent) / 2 for
-    i != j; the diagonal absorbs the remainder so each row sums to the
-    tree margin (reference shap.cc interaction path)."""
-    n, F = X.shape
-    M = np.zeros((n, F + 1, F + 1))
-    phi_total = tree_shap(a, cover, X)
-    used = np.unique(a["feature"][a["left"] != -1])
-    for j in used:
-        on = tree_shap(a, cover, X, condition=1, condition_feature=int(j))
-        off = tree_shap(a, cover, X, condition=-1, condition_feature=int(j))
-        inter = (on - off) / 2.0
-        inter[:, j] = 0.0
-        M[:, :, j] = inter
-    # both conditioning orders estimate the same quantity — symmetrize,
-    # then the diagonal absorbs the remainder so rows sum to phi
-    out = (M + M.transpose(0, 2, 1)) / 2.0
-    idx = np.arange(F + 1)
-    out[:, idx, idx] = 0.0
-    out[:, idx, idx] = phi_total - out.sum(axis=2)
-    return out
+    """SHAP interaction values for one tree: (n, F+1, F+1) (see
+    `path_shap_interactions`)."""
+    return path_shap_interactions(a, compile_paths(a, cover), X, X.shape[1])

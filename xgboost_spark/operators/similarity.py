@@ -207,6 +207,16 @@ EXPR_ASSIGN_MAX = 64
 IVF_BROADCAST_QUERY_MAX = 100_000
 
 
+def _sql_double(x) -> str:
+    """A double as Spark SQL text that parses back to the same value."""
+    x = float(x)
+    if np.isfinite(x):
+        return f"{x!r}D"
+    if np.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
 def _d2_fold_sql(vec_sql: str, center) -> str:
     """SQL text of the squared-L2 fold between ``vec_sql`` and a
     literal centroid: the SAME left-to-right aggregate/zip_with
@@ -217,8 +227,10 @@ def _d2_fold_sql(vec_sql: str, center) -> str:
     pq_encode/pq_topk/_assign_lists (measured round 15: pq_encode build
     7.7 s vs 0.4 s to actually run the codes scan at sf0.01).  repr() of
     a Python float round-trips exactly, so the parsed literals are
-    bit-identical to F.lit's."""
-    lits = ", ".join(f"{float(x)!r}D" for x in center)
+    bit-identical to F.lit's; non-finite values (NaN/Inf embeddings
+    propagate into centroids) have no literal form and render as casts
+    of Spark's special strings, as F.lit would carry them."""
+    lits = ", ".join(_sql_double(x) for x in center)
     return (f"aggregate(zip_with({vec_sql}, array({lits}), "
             "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)")
 

@@ -373,6 +373,7 @@ class GBDTModel:
                 right = [t.left[i] if i in cat_set else t.right[i] for i in range(n)]
                 dleft = [int(not t.default_left[i]) if i in cat_set
                          else int(t.default_left[i]) for i in range(n)]
+                leaf_weights = None
                 if n_targets > 1:
                     # MultiTargetTree dialect: weights_ is every node's
                     # target vector flattened; leaf_weights holds only
@@ -396,7 +397,9 @@ class GBDTModel:
                                                self.params.reg_lambda, self.params.reg_alpha))
                         for i in range(n)
                     ]
-                    leaf_weights = None
+                if t.base_weights is not None:
+                    # a loaded tree keeps its document's node weights
+                    base_weights = [float(x) for x in t.base_weights]
                 trees_json.append({
                     # "id" + full tree_param are REQUIRED by the
                     # reference's loader (GBTreeModel::LoadModel
@@ -657,6 +660,8 @@ class GBDTModel:
             t.gain = list(td["loss_changes"])
             t.sum_hess = list(td["sum_hessian"])
             t.sum_grad = [0.0] * n
+            if "base_weights" in td:
+                t.base_weights = [float(x) for x in td["base_weights"]]
             t.split_bin = [-1] * n
             cats = td.get("categories")
             cat_nodes = td.get("categories_nodes")
@@ -1278,15 +1283,24 @@ class GBDTModel:
             from xgboost_spark.operators.util import ensure_parallelism
             df = ensure_parallelism(df)
         state = self._broadcastable()
-        bc = spark.sparkContext.broadcast(state)
         if not (output_margin or pred_leaf or pred_contribs or pred_interactions):
             # fast path: scalar pandas_udf — only the feature columns
             # cross the Arrow boundary (Catalyst prunes the scan to
             # them); every other column stays JVM-side instead of
             # round-tripping through Python as mapInPandas would
+            bc = spark.sparkContext.broadcast(state)
             out = self._transform_udf(df, feature_cols, array_col, bc, K,
                                       base_margin_col=base_margin_col)
             return out.drop(*enc_tmp) if enc_tmp else out
+        if pred_interactions or (pred_contribs and not approx_contribs):
+            # exact SHAP: every tree compiled once into its root-to-leaf
+            # paths (O(paths x depth)); executors evaluate them per batch
+            from xgboost_spark.functions import shap as shap_mod
+            state["paths"] = [
+                [shap_mod.compile_paths(arrs, cover)
+                 for arrs, cover in zip(rnd, covers)]
+                for rnd, covers in zip(state["trees"], state["covers"])]
+        bc = spark.sparkContext.broadcast(state)
         fields = list(df.schema.fields)
         # vector prediction: class probabilities (softprob) or one value
         # per alpha (multi-alpha quantile/expectile)
@@ -1362,15 +1376,15 @@ class GBDTModel:
                             margin[:, k] += tw * arrs["leaf_value"][lid]
                         if pred_leaf:
                             leaves.append(lid)
-                        cover = st["covers"][ri][i]
                         if phi is not None:
                             phi[:, k, :] += tw * (
-                                shap_mod.saabas_contribs(arrs, cover, X)
+                                shap_mod.saabas_contribs(arrs, st["covers"][ri][i], X)
                                 if approx_contribs
-                                else shap_mod.tree_shap(arrs, cover, X))
+                                else shap_mod.path_shap(arrs, st["paths"][ri][i],
+                                                        X, n_feat))
                         if inter is not None:
-                            inter[:, k, :, :] += tw * shap_mod.tree_shap_interactions(
-                                arrs, cover, X)
+                            inter[:, k, :, :] += tw * shap_mod.path_shap_interactions(
+                                arrs, st["paths"][ri][i], X, n_feat)
                 out = pdf.copy()
                 mm = margin if Kk > 1 else margin[:, 0]
                 pred = obj.pred_transform(mm)
