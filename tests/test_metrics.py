@@ -452,8 +452,9 @@ def test_multiclass_aucpr_is_macro_averaged(spark):
 
 
 def test_eval_metric_string_names_one_metric(spark, reg_df):
-    """eval_metric="auc" is a one-element list — for train(params) and
-    for SparkGBDTClassifier alike — not the metrics 'a', 'u', 'c'."""
+    """eval_metric="auc" is a one-element list — for train(params),
+    SparkGBDTClassifier and cv(metrics=...) alike — not the metrics
+    'a', 'u', 'c'."""
     from xgboost_spark.plans.booster import train
     from xgboost_spark.plans.estimator import SparkGBDTClassifier
     fc = [f"c{i}" for i in range(5)]
@@ -471,3 +472,8 @@ def test_eval_metric_string_names_one_metric(spark, reg_df):
     hist = est.fit(df).evals_result()
     assert list(hist["validation"]) == ["auc"]
     assert 0.5 < hist["validation"]["auc"][-1] <= 1.0
+    from xgboost_spark.plans.cv import cv
+    res = cv({"objective": "binary:logistic", "num_boost_round": 2,
+              "max_depth": 2}, df.drop("is_val"), nfold=2, metrics="auc",
+             feature_cols=fc, as_pandas=False)
+    assert sorted(res) == ["test-auc-mean", "test-auc-std"]

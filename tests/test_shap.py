@@ -347,6 +347,30 @@ def test_path_kernel_deep_trees(deep_trees, name):
     assert np.abs(inter - _interactions_oracle(a, cover, rows[:2], X.shape[1])).max() < 1e-13
 
 
+def test_gather_coefs_long_patterns():
+    """Patterns longer than one int64 key word: the (path, pattern) ids
+    are folded a word at a time, so patterns that agree on the first
+    word and differ after it get their own coefficients.  (Trees with
+    paths this long lose TreeSHAP's own precision, so the dedup is
+    checked directly against per-(row, path) coefficients.)"""
+    rng = np.random.default_rng(9)
+    m, P, L = 64, 3, 60
+    word = 62 - (m * P).bit_length()
+    assert L > word
+    base = rng.random((P, 4, L)) < 0.5
+    base[:, 1] = base[:, 0]
+    base[:, 1, L - 3] = ~base[:, 0, L - 3]       # differs past the first word
+    o = base[np.arange(P), rng.integers(0, 4, (m, P))]
+    z = rng.uniform(0.3, 1.0, (P, L))
+    v = rng.normal(size=P)
+    got = S._gather_coefs(z, v, o)
+    for r in range(m):
+        for p in range(P):
+            want = S._coefs(z[p][:, None], o[r, p][:, None].astype(np.float64),
+                            v[p:p + 1])[:, 0]
+            np.testing.assert_array_equal(got[r, p], want)
+
+
 def test_spark_multiclass_dart_contribs_match_oracle(spark, reg_df):
     """K>1 with DART tree weights: the served per-class contributions
     and interactions equal the tree-weighted sum of the scalar oracle's

@@ -18,9 +18,8 @@ Two forms:
   so its one fractions o are bits, and the L bits of a path form a
   pattern.  Element e's contribution w_e * (o_e - z_e) * leaf depends
   only on (path, pattern): the coefficients come from the path-form
-  EXTEND / UNWOUND_SUM vectorised over (path, pattern) rows — all 2^L
-  patterns when that is no more than the rows, else only the patterns
-  the rows show — and are gathered per row and summed into phi by
+  EXTEND / UNWOUND_SUM vectorised over the distinct (path, pattern)
+  pairs a batch shows, and are gathered per row and summed into phi by
   feature.  No recursion over the tree per batch.
 - `_tree_shap_row` — the scalar textbook recursion, kept as the testing
   oracle for the path kernel.
@@ -148,11 +147,7 @@ def _decisions(a: dict, nodes: np.ndarray, X: np.ndarray) -> np.ndarray:
     categorical nodes test set membership, numeric nodes follow
     `_num_go_left`'s tie convention."""
     x = X[:, a["feature"][nodes]]
-    sv = a["split_value"][nodes]
-    if a.get("tie_strict"):
-        go_left = x.astype(np.float32) < sv.astype(np.float32)
-    else:
-        go_left = x <= sv
+    go_left = _num_go_left(a, nodes, x)
     cats = a.get("categories")
     if cats is not None:
         for j, nid in enumerate(nodes):
@@ -211,27 +206,27 @@ def _coefs(z: np.ndarray, o: np.ndarray, v: np.ndarray) -> np.ndarray:
 
 def _gather_coefs(z: np.ndarray, v: np.ndarray, o: np.ndarray) -> np.ndarray:
     """Coefficients of every (row, path) of ``o`` (m, P, L) for paths
-    with zero fractions z (P, L) and leaf values v (P,): a table over
-    all 2^L patterns when that is no more than the m rows, else over
-    the (path, pattern) pairs the rows show.  Returns (m, P, L)."""
+    with zero fractions z (P, L) and leaf values v (P,), computed once
+    per distinct (path, pattern) pair the rows show — at most
+    min(m, 2^L) per path.  Returns (m, P, L)."""
     m, P, L = o.shape
-    if (1 << L) <= m:
-        bits = (np.arange(1 << L) >> np.arange(L)[:, None]) & 1
-        table = _coefs(np.repeat(z.T, 1 << L, axis=1),
-                       np.tile(bits, (1, P)).astype(np.float64),
-                       np.repeat(v, 1 << L)).reshape(L, P, 1 << L)
-        code = o @ (np.int64(1) << np.arange(L, dtype=np.int64))
-        return table[:, np.arange(P), code].transpose(1, 2, 0)
-    # one byte-string key per (row, path): the path id, then its bits
-    pid = np.arange(P, dtype=">u4").view(np.uint8).reshape(1, P, 4)
-    key = np.concatenate([np.broadcast_to(pid, (m, P, 4)),
-                          np.packbits(o, axis=2)], axis=2).reshape(m * P, -1)
-    uniq, inv = np.unique(key.view(np.dtype((np.void, key.shape[1]))).ravel(),
-                          return_inverse=True)
-    ub = uniq.view(np.uint8).reshape(len(uniq), -1)
-    up = ub[:, :4].copy().view(">u4").ravel()
-    uo = np.unpackbits(ub[:, 4:], axis=1, count=L).T.astype(np.float64)
-    return _coefs(z[up].T, uo, v[up]).T[inv].reshape(m, P, L)
+    flat = o.reshape(m * P, L)
+    # dense id of each (path, pattern) pair: start from the path id and
+    # fold in the bits a word at a time; an id is < m * P, so the word
+    # size keeps every key below 2^62 whatever L is
+    key = np.tile(np.arange(P, dtype=np.int64), m)
+    word = 62 - (m * P).bit_length()
+    for lo in range(0, L, word):
+        bits = flat[:, lo:lo + word]
+        code = bits @ (np.int64(1) << np.arange(bits.shape[1], dtype=np.int64))
+        uniq, key = np.unique((key << bits.shape[1]) | code,
+                              return_inverse=True)
+    # any row of a pair stands for it
+    first = np.empty(len(uniq), dtype=np.int64)
+    first[key] = np.arange(m * P)
+    up = first % P
+    c = _coefs(z[up].T, flat[first].T.astype(np.float64), v[up])
+    return np.take(np.ascontiguousarray(c.T), key, axis=0).reshape(m, P, L)
 
 
 def _scatter_sum(out: np.ndarray, vals: np.ndarray, keys: np.ndarray):

@@ -70,7 +70,7 @@ def _fold_column(df: DataFrame, nfold: int, seed: int, stratified: bool,
 
 
 def cv(params: dict | TrainParams, df: DataFrame, nfold: int = 3,
-       stratified: bool = False, metrics: list[str] | None = None,
+       stratified: bool = False, metrics: str | list[str] | None = None,
        seed: int = 0, label_col: str = "label",
        qid_col: str | None = None, show_train: bool = False,
        share_cuts: bool = True,
@@ -134,7 +134,7 @@ def cv(params: dict | TrainParams, df: DataFrame, nfold: int = 3,
             "row order; a distributed DataFrame has no stable row order "
             "to slice by")
     if metrics:
-        p.eval_metric = list(metrics)
+        p.eval_metric = [metrics] if isinstance(metrics, str) else list(metrics)
     if custom_metric is not None:
         fit_kw["custom_metric"] = custom_metric
     folded = _fold_column(df, nfold, seed, stratified, label_col, qid_col) \
