@@ -569,3 +569,223 @@ def test_fit_derives_barrier_ranks_from_rows(spark, sf_dir, monkeypatch):
                              label_col="l_extendedprice",
                              num_partitions=2)
     assert seen[-1] == 2, seen       # explicit override untouched
+
+
+def _on_ranks(spark, p, fn):
+    """``fn(comm)`` on p ranks wired by a `RendezvousServer` and
+    `RingComm`, results in rank order.  A real Spark barrier job when
+    the session has p task slots (a barrier stage cannot start with
+    fewer); beyond that, one thread per rank over the same sockets."""
+    import pickle
+    srv = collective.RendezvousServer(p)
+    try:
+        if p <= spark.sparkContext.defaultParallelism:
+            addr = srv.address
+            host = spark.sparkContext.getConf().get("spark.driver.host", None)
+            if host:
+                addr = (host, addr[1], addr[2])
+
+            def task(it):
+                import pandas as pd
+                from pyspark import BarrierTaskContext
+                for _ in it:
+                    pass
+                ctx = BarrierTaskContext.get()
+                comm = collective.RingComm.create(ctx, rendezvous=addr)
+                try:
+                    out = pickle.dumps(fn(comm))
+                finally:
+                    comm.close()
+                yield pd.DataFrame({"rank": [ctx.partitionId()],
+                                    "out": [out]})
+
+            rows = (spark.range(p, numPartitions=p)
+                    .mapInPandas(task, "rank int, out binary", barrier=True)
+                    .collect())
+            return [pickle.loads(bytes(r["out"]))
+                    for r in sorted(rows, key=lambda r: r["rank"])]
+        results, errors = {}, []
+
+        def worker(rank):
+            try:
+                comm = collective.RingComm.create(
+                    _FakeCtx(rank, p, None, None), rendezvous=srv.address)
+                try:
+                    results[rank] = fn(comm)
+                finally:
+                    comm.close()
+            except Exception as e:   # pragma: no cover
+                errors.append((rank, e))
+
+        ts = [threading.Thread(target=worker, args=(r,)) for r in range(p)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in ts), "a rank hung"
+        assert not errors, errors
+        return [results[r] for r in range(p)]
+    finally:
+        srv.close()
+
+
+@pytest.mark.parametrize("nranks", [2, 3, 5])
+def test_allgather_rows(spark, nranks):
+    """`Comm.allgather_rows` concatenates every rank's block in rank
+    order, bit-for-bit, on every rank; rank 1 contributes no rows."""
+    def blocks(r):
+        n = 0 if r == 1 else r + 2
+        return np.random.default_rng(r).normal(size=(n, 3))
+
+    def fn(comm):
+        return comm.allgather_rows(blocks(comm.rank))
+
+    expect = np.vstack([blocks(r) for r in range(nranks)])
+    for got in _on_ranks(spark, nranks, fn):
+        assert np.array_equal(got, expect)
+    assert np.array_equal(collective.Loopback().allgather_rows(expect), expect)
+
+
+def _auc_cases():
+    """(name, y, margin (n, K), weight or None) eval sets."""
+    rng = np.random.default_rng(21)
+    n = 600
+    X = rng.normal(size=(n, 3))
+    y = (X[:, 0] + 0.8 * rng.normal(size=n) > 0).astype(np.float64)
+    # three depth-1 stumps: at most 8 distinct margins, heavy ties
+    stumps = (np.where(X[:, 0] < 0.1, -0.4, 0.5)
+              + np.where(X[:, 1] < -0.3, 0.2, -0.1)
+              + np.where(X[:, 2] < 0.7, 0.05, -0.3))
+    smooth = X[:, 0] + 0.3 * X[:, 1]
+    w = rng.uniform(0.2, 3.0, n)
+    Xm = rng.normal(size=(n, 3))
+    ym = rng.integers(0, 3, n).astype(np.float64)
+    Xm[np.arange(n), ym.astype(int)] += 1.0
+    # ties only between equal margin rows: Spark's exp and NumPy's may
+    # differ by an ulp, so rows whose margins differ by a constant
+    # shift (equal softprob in exact arithmetic) could tie on one path
+    # and not the other
+    Xm[1::3] = Xm[0::3][: len(Xm[1::3])]
+    return [("stumps", y, stumps[:, None], None),
+            ("weighted", y, smooth[:, None], w),
+            ("single_class", np.ones(n), smooth[:, None], None),
+            ("multiclass", ym, Xm, None)]
+
+
+@pytest.fixture(scope="module")
+def dataframe_aucs(spark):
+    """Each case's AUC and AUC-PR from the DataFrame-path queries."""
+    import pandas as pd
+    from xgboost_spark.functions import metrics as M
+    out = {}
+    for name, y, m, w in _auc_cases():
+        if name == "single_class":
+            continue
+        K = m.shape[1]
+        pdf = pd.DataFrame({"y": y, **{f"m{k}": m[:, k] for k in range(K)},
+                            "w": np.ones(len(y)) if w is None else w})
+        df = spark.createDataFrame(pdf).coalesce(1)   # one task per stage
+        if K == 1:
+            out[name] = (M.auc_binary(df, score="m0", weight="w"),
+                         M.aucpr_binary(df, score="m0", weight="w"))
+        else:
+            mc = [f"m{k}" for k in range(K)]
+            out[name] = (M.auc_multiclass(df, margin_cols=mc, weight="w"),
+                         M.auc_multiclass(df, margin_cols=mc, weight="w",
+                                          curve="pr"))
+    return out
+
+
+@pytest.mark.parametrize("nranks", [1, 2, 3, 5])
+def test_barrier_auc_matches_dataframe(spark, dataframe_aucs, nranks):
+    """In-job exact AUC / AUC-PR (`metric_global_np`) against the
+    DataFrame queries at several rank counts, with rank 0 empty once
+    p >= 3.  Unweighted values do not depend on the rank count, and
+    binary ROC is bit-identical to the query (every sum is an exact
+    half-integer); AUC-PR and weighted or softprob curves sum in a
+    different order than Spark, to 1e-12.  A single-class set is
+    NaN."""
+    from xgboost_spark.functions.metrics import metric_global_np
+    cases = _auc_cases()
+
+    def fn(comm):
+        got = {}
+        for name, y, m, w in cases:
+            cut = np.linspace(0, len(y), comm.nranks + 1).astype(int)
+            if comm.nranks >= 3:
+                cut[1] = 0                     # rank 0 holds no rows
+            sl = slice(cut[comm.rank], cut[comm.rank + 1])
+            ww = None if w is None else w[sl]
+            got[name] = tuple(metric_global_np(comm, mn, y[sl], m[sl], ww)
+                              for mn in ("auc", "aucpr"))
+        return got
+
+    per_rank = _on_ranks(spark, nranks, fn)
+    for got in per_rank[1:]:                   # every rank agrees bitwise
+        for name in got:
+            np.testing.assert_array_equal(got[name], per_rank[0][name])
+    one_rank = fn(collective.Loopback())
+    got = per_rank[0]
+    for name, _y, _m, w in cases:
+        roc, pr = got[name]
+        if w is None:                         # rank count changes nothing
+            np.testing.assert_array_equal(got[name], one_rank[name])
+        if name == "single_class":            # auc.cc NaN guards
+            assert np.isnan(roc) and np.isnan(pr)
+            continue
+        roc_df, pr_df = dataframe_aucs[name]
+        if name == "stumps":
+            assert roc == roc_df, (name, roc, roc_df)
+        np.testing.assert_allclose(roc, roc_df, rtol=1e-12, err_msg=name)
+        np.testing.assert_allclose(pr, pr_df, rtol=1e-12, err_msg=name)
+
+
+def test_classifier_auc_early_stopping_barrier_matches_dataframe(spark):
+    """AUC / AUC-PR early stopping trains on the barrier path and
+    reproduces the DataFrame path: equal unweighted AUC history (exact),
+    AUC-PR to summation order, the same best_iteration and the same
+    trees."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from xgboost_spark.plans.estimator import SparkGBDTClassifier
+    rng = np.random.default_rng(5)
+    n = 1500
+    X = rng.normal(size=(n, 4))
+    y = (X[:, 0] - 0.5 * X[:, 1] + rng.normal(size=n) > 0).astype(int)
+    df = spark.createDataFrame(pd.DataFrame(
+        {**{f"f{i}": X[:, i] for i in range(4)}, "label": y})).withColumn(
+        "is_val", F.col("f3") > 0.4)
+    models = {}
+    for mode in ("barrier", "dataframe"):
+        models[mode] = SparkGBDTClassifier(
+            label_col="label", features_col=[f"f{i}" for i in range(4)],
+            validation_indicator_col="is_val", eval_metric=["auc", "aucpr"],
+            early_stopping_rounds=1, num_boost_round=4, max_depth=2,
+            max_bin=16, eta=1.0, exec_mode=mode).fit(df)
+    hb = models["barrier"].evals_result()["validation"]
+    hd = models["dataframe"].evals_result()["validation"]
+    assert hb["auc"] == hd["auc"]
+    np.testing.assert_allclose(hb["aucpr"], hd["aucpr"], rtol=1e-12)
+    assert len(hb["auc"]) < 4                  # early stopping fired
+    assert models["barrier"].best_iteration == models["dataframe"].best_iteration
+    assert _structurally_equal(models["barrier"].core, models["dataframe"].core)
+
+
+def test_auto_mode_logs_why_dataframe_path(spark, reg_df, caplog):
+    """exec_mode=auto says at INFO why a fit left the barrier path."""
+    import logging
+    from xgboost_spark.functions.callbacks import TrainingCallback
+    fc = [f"c{i}" for i in range(5)]
+    df = reg_df.withColumn("label", (reg_df["label"] > 0).cast("double"))
+    kw = dict(objective="binary:logistic", num_boost_round=1, max_depth=2,
+              max_bin=16)
+    caplog.set_level(logging.INFO, logger="xgboost_spark")
+    SparkBooster(TrainParams(eval_metric=["ams@0.15"], **kw)).fit(
+        df, feature_cols=fc, label_col="label", evals=[(df, "v")])
+    SparkBooster(TrainParams(**kw)).fit(
+        df, feature_cols=fc, label_col="label",
+        callbacks=[TrainingCallback()])
+    msgs = [r.getMessage() for r in caplog.records
+            if r.name == "xgboost_spark"]
+    assert any("DataFrame path" in m and "'ams@0.15'" in m for m in msgs), msgs
+    assert any("DataFrame path" in m and "callbacks" in m for m in msgs), msgs

@@ -82,6 +82,22 @@ class Comm:
         k = len(red) // 2
         return red[:k], -red[k:]
 
+    def allgather_rows(self, a: np.ndarray) -> np.ndarray:
+        """Every rank's 2-D float64 block concatenated in rank order
+        (all ranks must pass the same column count).  Two sum
+        allreduces: the per-rank row counts, then a zero-padded buffer
+        in which each rank fills only its own slot.  ``x + 0.0 == x``
+        for every float but ``-0.0``, so the blocks arrive verbatim
+        (a negative zero arrives as ``+0.0``)."""
+        a = np.asarray(a, dtype=np.float64)
+        counts = np.zeros(self.nranks)
+        counts[self.rank] = len(a)
+        off = np.concatenate(
+            [[0], np.cumsum(self.allreduce_sum(counts))]).astype(np.int64)
+        buf = np.zeros((int(off[-1]), a.shape[1]))
+        buf[off[self.rank]:off[self.rank + 1]] = a
+        return self.allreduce_sum(buf)
+
     def close(self):
         pass
 
@@ -92,6 +108,9 @@ _OPS = {"sum": np.add, "min": np.minimum, "max": np.maximum}
 class Loopback(Comm):
     def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
         return np.asarray(arr, dtype=np.float64)
+
+    def allgather_rows(self, a: np.ndarray) -> np.ndarray:
+        return np.asarray(a, dtype=np.float64)
 
 
 def _recv_line(sock: socket.socket, deadline: float) -> bytes:

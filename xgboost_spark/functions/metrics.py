@@ -1,4 +1,5 @@
-"""Evaluation metrics as Spark aggregation queries.
+"""Evaluation metrics as Spark aggregation queries, plus their NumPy
+forms for barrier-mode training.
 
 Reference interface `include/xgboost/metric.h:29`; kernels under
 `src/metric/` (elementwise_metric.cu, multiclass_metric.cu, auc.cc,
@@ -7,6 +8,15 @@ reference's allreduce (e.g. `src/metric/auc.cc:124-126`) is Spark's
 `agg` exchange.  All take margin columns (the model's raw output) and
 apply the objective's transform inside the expression, so one pass
 computes the metric without materializing predictions.
+
+AUC and AUC-PR are the EXACT global curves on both training paths: the
+DataFrame path groups rows by score and sweeps them in one sort-free
+query (`auc_binary`); the barrier path gathers every rank's per-score
+(pos, neg) table and sweeps the merged table (`metric_global_np`).  With
+unit weights both give bit-identical values at any partition or rank
+count.  The reference's distributed AUC does not: `auc.cc` GlobalSums
+the per-worker local areas, so its value depends on how rows are
+partitioned.
 """
 
 from __future__ import annotations
@@ -229,6 +239,12 @@ def auc_binary(df: DataFrame, y: str = "y", score: str = "m0",
     `src/metric/auc.cc:421` BinaryROCAUC): group rows by score, order by
     score, trapezoid over cumulative negatives.
     AUC = sum_s [ pos_s * (cumneg_below_s + neg_s/2) ] / (P*N).
+
+    This is the exact global AUC, as is the barrier path's
+    `metric_global_np` sweep of the same closed form (bit-identical
+    with unit weights, where every sum is an exact half-integer).  The
+    reference instead GlobalSums per-worker local areas (`auc.cc`), a
+    partition-dependent value.
     """
     w = F.col(weight) if weight else F.lit(1.0)
     g = (
@@ -548,6 +564,9 @@ BARRIER_ELEMENTWISE = {
 }
 #: per-query metrics: local when groups are co-partitioned by qid
 BARRIER_RANKING = {"ndcg", "map", "pre", "auc", "aucpr"}
+#: exact global curves without qid: gathered per-score tables
+#: (`metric_global_np`)
+BARRIER_GATHERED = {"auc", "aucpr"}
 
 
 def _calc_delta_prauc(fp_prev, fp, tp_prev, tp, total_pos):
@@ -654,8 +673,8 @@ def barrier_metric_supported(metric: str, has_qid: bool) -> bool:
     # inside the barrier job instead of failing upfront.  AUC names
     # take no suffix at all (auc.cc has no minus rule).
     base = name.rstrip("-")
-    if base in ("auc", "aucpr"):
-        return has_qid and name == base
+    if base in BARRIER_GATHERED:
+        return name == base
     return has_qid and base in BARRIER_RANKING
 
 
@@ -833,6 +852,115 @@ def _query_rank_metric(name: str, k: int, y, score, exp_gain: bool,
     if idcg <= 0:
         return 0.0 if minus else 1.0           # rank_metric.cc:382
     return dcg / idcg
+
+
+def _score_table(score, pos, neg):
+    """One ``(score, sum pos, sum neg)`` row per distinct score,
+    ascending: the barrier form of `auc_binary`'s ``groupBy(score)``."""
+    import numpy as np
+    s, inv = np.unique(score, return_inverse=True)
+    return np.column_stack([s, np.bincount(inv, pos, len(s)),
+                            np.bincount(inv, neg, len(s))])
+
+
+def _curve_area(table, pr: bool) -> float:
+    """Exact ROC or PR area over a merged score table (one NumPy sweep
+    of the same closed forms and NaN guards as `auc_binary` /
+    `aucpr_binary`)."""
+    import numpy as np
+    pos, neg = table[:, 1], table[:, 2]
+    # totals are the sweep's own last cumulative sums, so the top
+    # segment starts at exactly (0, 0) with non-unit weights too
+    cum_pos, cum_neg = np.cumsum(pos), np.cumsum(neg)
+    P = float(cum_pos[-1]) if len(pos) else 0.0
+    N = float(cum_neg[-1]) if len(neg) else 0.0
+    if not pr:
+        if not P or not N:
+            return float("nan")
+        return float((pos * (cum_neg - neg + neg / 2)).sum() / (P * N))
+    if P <= 0 or N <= 0:
+        return float("nan")
+    # descending sweep from ascending cumulative sums; the segment's
+    # previous point is the cumulative over strictly higher scores
+    tp = P - cum_pos + pos
+    fp = N - cum_neg + neg
+    tp_prev, fp_prev = tp - pos, fp - neg
+    pr_, pr_prev = tp / P, tp_prev / P
+    with np.errstate(divide="ignore", invalid="ignore"):
+        h = (fp - fp_prev) / (tp - tp_prev)
+        a = h + 1.0
+        b = (fp_prev - h * tp_prev) / P
+
+        def log_(x):        # Spark's log is null (here NaN) for x <= 0
+            return np.where(x > 0, np.log(x), np.nan)
+
+        log_term = log_(a * pr_ + b) - log_(a * pr_prev + b)
+        area = np.where(tp == tp_prev, 0.0, np.where(
+            b != 0.0, (pr_ - pr_prev - b / a * log_term) / a,
+            (pr_ - pr_prev) / a))
+    return float(area.sum())
+
+
+def _auc_global(comm, y, margin, w, pr: bool) -> float:
+    """Exact global (PR-)AUC across barrier ranks: each rank reduces its
+    rows to a per-distinct-score table, `Comm.allgather_rows` collects
+    the tables in rank order, ``np.unique`` merges equal scores and one
+    sweep computes the area.  Binary scores the margin, as the
+    DataFrame path does (a sigmoid would merge distinct extreme margins
+    into ties); multiclass is `auc_multiclass`'s one-vs-rest over
+    softprob — ROC weighted by each class's positive weight, PR a macro
+    average, NaN if any class's curve is undefined."""
+    import numpy as np
+    m = np.asarray(margin, dtype=np.float64)
+    if m.ndim == 1:
+        m = m[:, None]
+    K = m.shape[1]
+    w = np.ones(len(m)) if w is None else np.asarray(w, dtype=np.float64)
+
+    def table(score, is_pos):          # each row's weight to pos or neg
+        return _score_table(score, np.where(is_pos, w, 0.0),
+                            np.where(is_pos, 0.0, w))
+
+    if K == 1:
+        local = table(m[:, 0], y == 1)
+    else:
+        # softprob with `_softprob_cols`' association order
+        e = np.exp(m - m.max(axis=1, keepdims=True))
+        z = e[:, 0]
+        for k in range(1, K):
+            z = z + e[:, k]
+        yc = y.astype(np.int64)
+        tables = []
+        for c in range(K):
+            t = table(e[:, c] / z, yc == c)
+            tables.append(np.column_stack([np.full(len(t), float(c)), t]))
+        local = np.vstack(tables)
+    rows = comm.allgather_rows(local)
+    num = den = 0.0
+    for c in range(K):
+        t = rows if K == 1 else rows[rows[:, 0] == c, 1:]
+        merged = _score_table(t[:, 0], t[:, 1], t[:, 2])
+        auc_c = _curve_area(merged, pr)
+        if K == 1 or math.isnan(auc_c):
+            return auc_c
+        p_c = 1.0 if pr else float(merged[:, 1].sum())
+        num += auc_c * p_c
+        den += p_c
+    return num / den if den > 0 else float("nan")
+
+
+def metric_global_np(comm, metric: str, y, margin, w=None, bounds=None,
+                     obj=None, qid=None, exp_gain: bool = True) -> float:
+    """The global value of ``metric`` over every barrier rank's rows.
+    AUC/AUC-PR without ``qid`` gather per-score tables
+    (`_auc_global`); every other metric allreduces its local
+    `metric_partial_np` and finalizes."""
+    name = metric.partition("@")[0]
+    if name in BARRIER_GATHERED and qid is None:
+        return _auc_global(comm, y, margin, w, pr=name == "aucpr")
+    num, den = metric_partial_np(metric, y, margin, w, bounds=bounds,
+                                 obj=obj, qid=qid, exp_gain=exp_gain)
+    return metric_finalize(metric, *comm.allreduce_scalar(num, den))
 
 
 def metric_finalize(metric: str, num: float, den: float) -> float:

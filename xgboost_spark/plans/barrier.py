@@ -17,9 +17,9 @@ Why it exists alongside the per-level DataFrame path
 aggregations.  As DataFrame jobs those cost a scheduler round-trip each
 (~0.3-1 s fixed, regardless of data size); inside one barrier job the
 same sync is a millisecond-scale allreduce.  The DataFrame path remains
-the declarative, oracle-checkable form and the fallback for operators
-that need global relational context (Cox partial likelihood, adaptive
-leaves, per-round re-sketch, eval-set metrics).
+the declarative, oracle-checkable form and the fallback for what needs
+global relational context (Cox partial likelihood, AMS), callbacks and
+custom metrics.
 
 Scale: per-task memory = its partition's quantized matrix (int16) —
 size partitions so each fits (same contract as the reference Spark
@@ -365,9 +365,10 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
     Eval sets ride in the SAME job: tagged with a ``_role`` column,
     co-partitioned with the training rows, re-binned with the training
     cuts (QuantileDMatrix ``ref=`` semantics); per-round metrics are
-    allreduced partial sums (`functions/metrics.py metric_partial_np`,
-    reference metric allreduce `src/metric/elementwise_metric.cu`), so
-    early stopping decides identically on every rank.
+    allreduced partial sums (`functions/metrics.py metric_global_np`,
+    reference metric allreduce `src/metric/elementwise_metric.cu`) or,
+    for AUC/AUC-PR, gathered per-score tables swept into the exact
+    global curve, so early stopping decides identically on every rank.
 
     Returns (trees per round, eval history, best_iteration).
     """
@@ -507,7 +508,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
             np.asarray(base_score, dtype=np.float64).tolist(),
         )).encode()).hexdigest()
 
-        from xgboost_spark.functions.metrics import metric_finalize, metric_partial_np
+        from xgboost_spark.functions.metrics import metric_global_np
         from xgboost_spark.plans.booster import _compute_grads, _maximize
 
         # captured driver-side so a mid-session A/B toggle reaches the
@@ -956,11 +957,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                         round_trees[ti], Xe, binned=True)
                                     ti += 1
                         for mname in metric_names:
-                            num, den = metric_partial_np(
-                                mname, ye, me, we, bounds=be, obj=obj, qid=qe,
-                                exp_gain=p.ndcg_exp_gain)
-                            rn, rd = comm.allreduce_scalar(num, den)
-                            val = metric_finalize(mname, rn, rd)
+                            val = metric_global_np(
+                                comm, mname, ye, me, we, bounds=be, obj=obj,
+                                qid=qe, exp_gain=p.ndcg_exp_gain)
                             history.setdefault(eval_names[ei], {}).setdefault(
                                 mname, []).append(val)
                             last = val

@@ -7,8 +7,9 @@ Two execution strategies (`TrainParams.exec_mode`):
   histogram sync — see `plans/barrier.py`.  ~100× fewer Spark jobs.
 - **dataframe** (this module's loop): one job per tree level +
   one margin pass per round; fully declarative and oracle-checkable;
-  required for global-context training (cox, adaptive leaves, approx
-  re-sketch, eval sets/early stopping, DART, continuation).
+  required for what `supports_barrier` refuses (e.g. cox, the ``ams``
+  metric, callbacks, custom metrics).  ``auto`` logs the reason at
+  INFO on the ``xgboost_spark`` logger.
 
 Lifecycle mirrors the reference (`src/learner.cc:1114-1139`,
 `src/gbm/gbtree.cc:182-275`) re-expressed for Spark's execution model:
@@ -34,6 +35,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import logging
 import os
 import time
 
@@ -59,6 +61,8 @@ from xgboost_spark.sources.tables import assemble_features
 # down while per-tree throughput holds steady is hiding in one of the
 # first three numbers).  Diagnostic only — never consumed by training.
 FIT_STAGE_TIMES: dict[str, float] = {}
+
+_log = logging.getLogger("xgboost_spark")
 
 
 def _compute_grads(obj, y, m, w, q, seed, subsample, K, bounds=None):
@@ -647,10 +651,16 @@ class SparkBooster:
                         f"features are {feat_names_out}")
                 cat_mask[idx] = True
                 cat_idx.append(idx)
-        barrier_eligible = False
-        if p.exec_mode in ("auto", "barrier") and custom_metric is None:
+        # the ONE path decision of this fit: the sketch resolution below
+        # and the dispatch after it read the same (ok, why)
+        if p.exec_mode not in ("auto", "barrier"):
+            barrier_eligible, why = False, f"exec_mode={p.exec_mode}"
+        elif custom_metric is not None:
+            barrier_eligible, why = False, \
+                "custom_metric runs on the DataFrame path"
+        else:
             from xgboost_spark.plans.barrier import supports_barrier
-            barrier_eligible, _ = supports_barrier(
+            barrier_eligible, why = supports_barrier(
                 p, obj, evals, callbacks, xgb_model, has_qid=has_q)
         fused_bs = None
         n_rows = None       # known only when the sketch scan runs below
@@ -710,12 +720,9 @@ class SparkBooster:
         # fast path: whole boosting loop in ONE barrier job with in-job
         # ring-allreduce histogram sync (plans/barrier.py; the reference's
         # own Spark wrapper architecture, spark/core.py:1128)
-        why = "exec_mode=dataframe"
-        if p.exec_mode in ("auto", "barrier") and custom_metric is None:
-            from xgboost_spark.plans.barrier import fit_barrier, supports_barrier
-            ok, why = supports_barrier(p, obj, evals, callbacks, xgb_model,
-                                       has_qid=has_q)
-            if ok:
+        if p.exec_mode in ("auto", "barrier"):
+            if barrier_eligible:
+                from xgboost_spark.plans.barrier import fit_barrier
                 evals_raw = []
                 for ev_df, ev_name in (evals or []):
                     ev_raw, _ = assemble_features(
@@ -771,6 +778,7 @@ class SparkBooster:
                     p.booster == "dart")
             if p.exec_mode == "barrier":
                 raise ValueError(f"exec_mode=barrier unsupported here: {why}")
+            _log.info("fit runs the DataFrame path: %s", why)
         if p.checkpoint_dir:
             # fault tolerance lives on the barrier path only; a user
             # relying on it must learn it is inactive, not find out at
