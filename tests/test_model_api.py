@@ -496,3 +496,61 @@ def test_json_roundtrip_keeps_base_weights(model):
     doc = open(ref).read()
     assert (node_weights(GBDTModel.from_json(doc).to_json())
             == node_weights(doc))
+
+
+def _expr_vs_udf_margins(spark, m, X, cols):
+    import pandas as pd
+    pdf = pd.DataFrame(X, columns=cols)
+    pdf["rid"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf)
+    out = m.transform_expr(df, feature_cols=cols, output_margin=True)
+    e = out.select("rid", "prediction").toPandas().sort_values("rid")
+    u = (m.transform(df, feature_cols=cols, output_margin=True)
+         .select("rid", "prediction").toPandas().sort_values("rid"))
+    np.testing.assert_array_equal(e["prediction"].to_numpy(),
+                                  u["prediction"].to_numpy())
+    return out
+
+
+def test_transform_expr_one_case_when_per_internal_node(spark):
+    """Each node is ONE CASE WHEN with the missing test folded into its
+    condition, so the ensemble expression is linear in tree size (the
+    old form repeated the default child, ~3^d leaves per tree), and it
+    still serves bit-identically to the UDF path, NaNs both ways."""
+    from xgboost_spark.local.booster import LocalBooster
+    from xgboost_spark.plans.model import GBDTModel
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(3000, 3))
+    X[rng.random(X.shape) < 0.2] = np.nan
+    Z = np.nan_to_num(X, nan=-2.0)
+    y = 2 * Z[:, 0] + Z[:, 1] ** 2 - np.abs(Z[:, 2]) + rng.normal(0, 0.1, 3000)
+    p = TrainParams(num_boost_round=2, max_depth=4, base_score=0.0)
+    trees = LocalBooster(p).fit(X, y).trees
+    internal = [(t, i) for rnd in trees for t in rnd
+                for i in range(t.n_nodes) if t.left[i] != -1]
+    assert {bool(t.default_left[i]) for t, i in internal} == {True, False}
+    m = GBDTModel(p, 0.0, trees, ["a", "b", "c"])
+    out = _expr_vs_udf_margins(spark, m, X[:400], ["a", "b", "c"])
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.count("CASE WHEN") == len(internal)
+
+
+@pytest.mark.parametrize("kind", ["categorical", "tie_strict"])
+def test_transform_expr_categorical_and_tie_strict_match_udf(spark, kind):
+    from xgboost_spark import core
+    from xgboost_spark.plans.model import GBDTModel
+    cat = kind == "categorical"
+    t = core.Tree()
+    ll, lr = t.expand(0, 0, 0, 0.5, True, 1.0, 0, 6.0, 0, 4.0,
+                      categories=[1, 3] if cat else None)
+    t.expand(ll, 1, 0, -0.25, False, 1.0, 0, 3.0, 0, 3.0)
+    t.expand(lr, 0, 0, 2.5, False, 1.0, 0, 2.0, 0, 2.0,
+             categories=[0, 2] if cat else None)
+    for k, nid in enumerate(i for i in range(t.n_nodes) if t.left[i] == -1):
+        t.leaf_value[nid] = 0.37 * (k + 1) * (-1) ** k
+    t.tie_strict = kind == "tie_strict"
+    m = GBDTModel(TrainParams(base_score=0.0), 0.0, [[t]], ["a", "b"])
+    a = np.array([np.nan, 0.0, 0.5, 1.0, 2.0, 2.5, 3.0, 4.0])
+    b = np.array([np.nan, -0.25, -1.0, 1.0])
+    X = np.array([(x, z) for x in a for z in b])
+    _expr_vs_udf_margins(spark, m, X, ["a", "b"])

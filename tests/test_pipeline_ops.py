@@ -1710,6 +1710,28 @@ def test_pipeline_barrier_is_thread_safe_no_conf_mutation(spark):
     assert dedup._barrier_clone(spark) is clone
 
 
+def test_barrier_clone_follows_runtime_shuffle_partitions(spark):
+    """A runtime ``spark.sql.shuffle.partitions`` change reaches the
+    checkpointed subtree (the clone used to keep its builder-time
+    value), and the clone already built for the old value is left as
+    it was."""
+    from xgboost_spark.operators import dedup
+    df = spark.range(100).selectExpr("id % 10 AS k")
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    old_clone = dedup._barrier_clone(spark)
+    try:
+        spark.conf.set(key, "7")
+        ck = dedup._lazy_local_checkpoint(df.distinct())
+        assert ck.rdd.getNumPartitions() == 7
+        assert sorted(r.k for r in ck.collect()) == list(range(10))
+        assert dedup._barrier_clone(spark) is not old_clone
+        assert old_clone.conf.get(key) == before
+    finally:
+        spark.conf.set(key, before)
+    assert dedup._barrier_clone(spark) is old_clone
+
+
 def test_similarity_join_guard_sampled_estimate(spark):
     """guard_sample < 1 scales the sampled bound by 1/f^2 — it must
     still flag a degenerate corpus from a fraction of it."""

@@ -26,7 +26,11 @@ Layout
 
 __version__ = "0.1.0"
 
+from xgboost_spark import _zipcache
 from xgboost_spark.config import TrainParams  # noqa: F401
+
+# skip PySpark workers' per-task zip directory re-reads; see _zipcache
+_zipcache.install()
 
 
 def __getattr__(name):

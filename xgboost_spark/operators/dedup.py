@@ -19,6 +19,7 @@ and min() over the hex strings is an order-preserving min-hash.
 from __future__ import annotations
 
 import threading
+import weakref
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -422,25 +423,30 @@ def ngram_jaccard_on_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "tex
 
 
 _BARRIER_LOCK = threading.Lock()
-_BARRIER_CLONES: "weakref.WeakKeyDictionary" = None  # lazily built below
+# main session -> {shuffle partitions: clone}
+_BARRIER_CLONES = weakref.WeakKeyDictionary()
 
 
 def _barrier_clone(spark):
-    """One dedicated planning session per main session, with AQE off in
-    ITS OWN isolated conf.  ``newSession()`` shares the SparkContext and
-    inherits the builder-time SQL confs (shuffle partitions, Arrow,
-    timezone) but owns a private SQLConf, so flipping AQE here can never
-    be observed by a query planned concurrently on the main session."""
-    global _BARRIER_CLONES
-    import weakref
+    """A dedicated planning session per main session and current
+    ``spark.sql.shuffle.partitions``, with AQE off in ITS OWN isolated
+    conf.  ``newSession()`` shares the SparkContext and inherits the
+    builder-time SQL confs (Arrow, timezone) but owns a private SQLConf,
+    so flipping AQE there can never be observed by a query planned
+    concurrently on the main session.  Shuffle partitions are copied
+    from the main session at creation, and a runtime change to them
+    gets its own clone; a clone's conf is never touched afterwards.
+    Other runtime SQL conf changes on the main session do not reach the
+    checkpointed subtree."""
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
     with _BARRIER_LOCK:
-        if _BARRIER_CLONES is None:
-            _BARRIER_CLONES = weakref.WeakKeyDictionary()
-        clone = _BARRIER_CLONES.get(spark)
+        by_parts = _BARRIER_CLONES.setdefault(spark, {})
+        clone = by_parts.get(parts)
         if clone is None:
             clone = spark.newSession()
             clone.conf.set("spark.sql.adaptive.enabled", "false")
-            _BARRIER_CLONES[spark] = clone
+            clone.conf.set("spark.sql.shuffle.partitions", parts)
+            by_parts[parts] = clone
         return clone
 
 

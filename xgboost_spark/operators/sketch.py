@@ -32,6 +32,20 @@ def _finish_cuts(qs: list[float], vmax: float) -> np.ndarray:
     return cuts
 
 
+def _ranked_picks(vals: np.ndarray, wts: np.ndarray, k: int):
+    """The values at ``k`` evenly spaced cumulative-weight ranks of a
+    weighted sample, and its total weight.  Module-level so the
+    sketch's UDFs reference engine code: unpickling them in a Python
+    worker imports the package (see ``xgboost_spark._zipcache``)."""
+    o = np.argsort(vals, kind="stable")
+    vals = vals[o]
+    cw = np.cumsum(wts[o])
+    W = cw[-1]
+    tgt = (np.arange(1, k + 1) / k) * W
+    idx = np.minimum(np.searchsorted(cw, tgt, side="left"), len(vals) - 1)
+    return vals[idx], W
+
+
 def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
                 accuracy: int | None = None, extra_sums=None):
     """Per-feature bin boundaries via a distributed compaction sketch.
@@ -96,15 +110,9 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
         def squash(i: int, k: int):
             vals = np.concatenate([v for v, _ in bufs[i]])
             wts = np.concatenate([np.full(len(v), w) for v, w in bufs[i]])
-            o = np.argsort(vals, kind="stable")
-            vals = vals[o]
-            cw = np.cumsum(wts[o])
-            W = cw[-1]
             kk = min(k, len(vals))
-            tgt = (np.arange(1, kk + 1) / kk) * W
-            idx = np.minimum(np.searchsorted(cw, tgt, side="left"),
-                             len(vals) - 1)
-            bufs[i] = [(vals[idx], W / kk)]
+            picks, W = _ranked_picks(vals, wts, kk)
+            bufs[i] = [(picks, W / kk)]
             buf_cnt[i] = kk
 
         for pdf in batches:
@@ -158,15 +166,9 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
                                for r in pdf["smp"]])
         wts = np.concatenate([np.full(len(r), n_p / len(r))
                               for r, n_p in zip(pdf["smp"], pdf["n"])])
-        o = np.argsort(vals, kind="stable")
-        vals = vals[o]
-        cw = np.cumsum(wts[o])
-        N = cw[-1]
-        tgt = (np.arange(1, max_bin + 1) / max_bin) * N
-        idx = np.minimum(np.searchsorted(cw, tgt, side="left"),
-                         len(vals) - 1)
+        qs, _ = _ranked_picks(vals, wts, max_bin)
         return pd.DataFrame({"fi": [fi], "mx": [float(pdf["mx"].max())],
-                             "qs": [vals[idx].tolist()]})
+                             "qs": [qs.tolist()]})
 
     merged = (parts.groupBy("fi")
               .applyInPandas(merge, "fi int, mx double, qs array<double>")
