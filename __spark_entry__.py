@@ -730,7 +730,7 @@ def q_ref_gblinear_import(spark, sf_dir):
 
 def q_linear_multigroup_round(spark, sf_dir):
     """Multi-group gblinear training, ONE round through the REAL
-    `_train_linear_multigroup` (plans/linear.py — round-11 exact
+    `train_linear` at K=4 (plans/linear.py — round-11 exact
     sequential semantics: bias first with residual propagation, then
     coordinates at current residuals; reference gblinear.cc DoBoost +
     updater_shotgun.cc): 4-class softprob on lineitem with

@@ -1,4 +1,4 @@
-"""Barrier-mode trainer (plans/barrier.py) + ring allreduce (collective.py).
+"""Barrier-mode trainer (plans/barrier.py) + mesh allreduce (collective.py).
 
 Mirrors the reference's collective tests (`tests/python/test_collective.py`,
 `tests/cpp/collective/`) and its Spark-wrapper equivalence tests
@@ -17,12 +17,11 @@ from xgboost_spark.plans.booster import SparkBooster
 
 
 class _FakeCtx:
-    """Thread-backed stand-in for BarrierTaskContext rendezvous."""
+    """Thread-backed stand-in for the BarrierTaskContext metadata the
+    mesh reads (rendezvous itself goes through a RendezvousServer)."""
 
-    def __init__(self, rank, nranks, barrier, box):
+    def __init__(self, rank, nranks):
         self._rank = rank
-        self._barrier = barrier
-        self._box = box
         self._n = nranks
 
     def partitionId(self):
@@ -30,106 +29,111 @@ class _FakeCtx:
 
     def getTaskInfos(self):
         # rank count is local task metadata (no RPC) — create() reads
-        # the task list length instead of paying an allGather for it
+        # the task list length instead of synchronizing for it
         return [object()] * self._n
 
     def attemptNumber(self):
         return 0
 
-    def allGather(self, msg):
-        self._box[self._rank] = msg
-        self._barrier.wait()
-        out = [self._box[i] for i in range(self._n)]
-        self._barrier.wait()   # don't let a fast rank mutate box early
-        return out
 
+def _on_ranks(spark, p, fn):
+    """``fn(comm)`` on p ranks wired by a `RendezvousServer` and
+    `MeshComm`, results in rank order.  A real Spark barrier job when
+    ``spark`` is given and has p task slots (a barrier stage cannot
+    start with fewer); otherwise one thread per rank over the same
+    sockets."""
+    import pickle
+    srv = collective.RendezvousServer(p)
+    try:
+        if spark is not None and p <= spark.sparkContext.defaultParallelism:
+            addr = srv.address
+            host = spark.sparkContext.getConf().get("spark.driver.host", None)
+            if host:
+                addr = (host, addr[1], addr[2])
 
-def _run_ring(nranks, payloads):
-    barrier = threading.Barrier(nranks)
-    box = {}
-    results = {}
-    errors = []
+            def task(it):
+                import pandas as pd
+                from pyspark import BarrierTaskContext
+                for _ in it:
+                    pass
+                ctx = BarrierTaskContext.get()
+                comm = collective.MeshComm.create(ctx, rendezvous=addr)
+                try:
+                    out = pickle.dumps(fn(comm))
+                finally:
+                    comm.close()
+                yield pd.DataFrame({"rank": [ctx.partitionId()],
+                                    "out": [out]})
 
-    def worker(rank):
-        try:
-            comm = collective.RingComm.create(_FakeCtx(rank, nranks, barrier, box))
+            rows = (spark.range(p, numPartitions=p)
+                    .mapInPandas(task, "rank int, out binary", barrier=True)
+                    .collect())
+            return [pickle.loads(bytes(r["out"]))
+                    for r in sorted(rows, key=lambda r: r["rank"])]
+        results, errors = {}, []
+
+        def worker(rank):
             try:
-                for arr in payloads:
-                    results.setdefault(rank, []).append(
-                        comm.allreduce_sum(arr + rank))
-            finally:
-                comm.close()
-        except Exception as e:   # pragma: no cover
-            errors.append((rank, e))
+                comm = collective.MeshComm.create(
+                    _FakeCtx(rank, p), rendezvous=srv.address)
+                try:
+                    results[rank] = fn(comm)
+                finally:
+                    comm.close()
+            except Exception as e:   # pragma: no cover
+                errors.append((rank, e))
 
-    ts = [threading.Thread(target=worker, args=(r,)) for r in range(nranks)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(timeout=60)
-    assert not errors, errors
-    return results
-
-
-@pytest.mark.parametrize("nranks", [2, 3, 5, 8])
-def test_driver_rendezvous_mesh(nranks):
-    """Round-15: the mesh can bootstrap through the driver-side
-    RendezvousServer instead of allGather (every barrier RPC costs a
-    fixed ~1 s in this Spark build).  Same allreduce results,
-    bit-identical across ranks, and the fake ctx's allGather is never
-    called (the driver path must not pay the RPC)."""
-    srv = collective.RendezvousServer(nranks)
-    results = {}
-    errors = []
-
-    class _NoGatherCtx(_FakeCtx):
-        def allGather(self, msg):       # pragma: no cover
-            raise AssertionError("driver rendezvous must not allGather")
-
-    rng = np.random.default_rng(1)
-    payloads = [rng.normal(size=257), np.zeros(3)]
-
-    def worker(rank):
-        try:
-            comm = collective.RingComm.create(
-                _NoGatherCtx(rank, nranks, None, None),
-                rendezvous=srv.address)
-            try:
-                for arr in payloads:
-                    results.setdefault(rank, []).append(
-                        comm.allreduce_sum(arr + rank))
-            finally:
-                comm.close()
-        except Exception as e:   # pragma: no cover
-            errors.append((rank, e))
-
-    ts = [threading.Thread(target=worker, args=(r,)) for r in range(nranks)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(timeout=60)
-    srv.close()
-    assert not errors, errors
-    for i, arr in enumerate(payloads):
-        expect = arr * nranks + sum(range(nranks))
-        for rank in range(nranks):
-            np.testing.assert_allclose(results[rank][i], expect, rtol=1e-12)
-            assert np.array_equal(results[rank][i], results[0][i])
+        ts = [threading.Thread(target=worker, args=(r,)) for r in range(p)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in ts), "a rank hung"
+        assert not errors, errors
+        return [results[r] for r in range(p)]
+    finally:
+        srv.close()
 
 
-@pytest.mark.parametrize("nranks", [2, 3, 5])
-def test_ring_allreduce_sum(nranks):
-    rng = np.random.default_rng(0)
-    payloads = [rng.normal(size=(4, 7)), rng.normal(size=1000),
-                np.zeros(1), rng.normal(size=3)]
-    results = _run_ring(nranks, payloads)
+def _check_sums(nranks, payloads):
+    """Every rank allreduces ``arr + rank``: the exact sum, bit-identical
+    on every rank (determinism contract)."""
+    results = _on_ranks(None, nranks, lambda comm: [
+        comm.allreduce_sum(arr + comm.rank) for arr in payloads])
     for i, arr in enumerate(payloads):
         expect = arr * nranks + sum(range(nranks))
         for rank in range(nranks):
             got = results[rank][i]
             np.testing.assert_allclose(got, expect, rtol=1e-12)
-            # bit-identical across ranks (determinism contract)
             assert np.array_equal(got, results[0][i])
+
+
+@pytest.mark.parametrize("nranks", [2, 3, 5, 8])
+def test_driver_rendezvous_mesh(nranks):
+    """The mesh bootstraps through the driver-side RendezvousServer
+    (every BarrierTaskContext RPC costs a fixed ~1 s in this Spark
+    build): exact allreduce results, bit-identical across ranks."""
+    rng = np.random.default_rng(1)
+    _check_sums(nranks, [rng.normal(size=257), np.zeros(3)])
+
+
+@pytest.mark.parametrize("nranks", [2, 3, 5])
+def test_ring_allreduce_sum(nranks):
+    """Halving-doubling allreduce over 2-D, long, single-element and
+    short payloads (the name predates the switch from a ring)."""
+    rng = np.random.default_rng(0)
+    _check_sums(nranks, [rng.normal(size=(4, 7)), rng.normal(size=1000),
+                         np.zeros(1), rng.normal(size=3)])
+
+
+@pytest.mark.parametrize("p,links", [(2, [1, 1]), (3, [2, 1, 1]),
+                                     (4, [2, 2, 2, 2]),
+                                     (5, [3, 1, 2, 2, 2])])
+def test_mesh_wires_only_halving_doubling_partners(p, links):
+    """Each rank opens a socket to exactly its fold partner and its
+    halving-doubling partners — no extra links (p=4: 4 links, not 6)."""
+    assert [len(collective._partners(r, p)) for r in range(p)] == links
+    assert _on_ranks(None, p, lambda comm: len(comm._socks)) == links
 
 
 def test_loopback():
@@ -541,11 +545,12 @@ def test_mpb_conf_restored_on_setup_exception(spark, sf_dir):
 def test_fit_derives_barrier_ranks_from_rows(spark, sf_dir, monkeypatch):
     """Round-14 optimization: with num_partitions unset and no qid, the
     barrier rank count comes from the sketch-scan row count at
-    SPARK_GRAFT_ROWS_PER_RANK rows per rank, capped at the core budget
+    booster.ROWS_PER_RANK rows per rank, capped at the core budget
     — every tree level is a full-mesh sync, so tiny inputs must not be
     spread across ranks whose per-level compute cannot cover the
     collective latency.  Explicit num_partitions still wins."""
     from xgboost_spark.plans import barrier as B
+    from xgboost_spark.plans import booster
     from xgboost_spark.sources.tables import load_table
 
     seen = []
@@ -558,7 +563,7 @@ def test_fit_derives_barrier_ranks_from_rows(spark, sf_dir, monkeypatch):
                     mono, isets, n_part, **kw)
 
     monkeypatch.setattr(B, "fit_barrier", spy)
-    monkeypatch.setenv("SPARK_GRAFT_ROWS_PER_RANK", "1000")
+    monkeypatch.setattr(booster, "ROWS_PER_RANK", 1000)
     li = load_table(spark, sf_dir, "lineitem").limit(3000)
     fc = ["l_quantity", "l_discount"]
     params = TrainParams(num_boost_round=1, max_depth=2, max_bin=16)
@@ -569,64 +574,6 @@ def test_fit_derives_barrier_ranks_from_rows(spark, sf_dir, monkeypatch):
                              label_col="l_extendedprice",
                              num_partitions=2)
     assert seen[-1] == 2, seen       # explicit override untouched
-
-
-def _on_ranks(spark, p, fn):
-    """``fn(comm)`` on p ranks wired by a `RendezvousServer` and
-    `RingComm`, results in rank order.  A real Spark barrier job when
-    the session has p task slots (a barrier stage cannot start with
-    fewer); beyond that, one thread per rank over the same sockets."""
-    import pickle
-    srv = collective.RendezvousServer(p)
-    try:
-        if p <= spark.sparkContext.defaultParallelism:
-            addr = srv.address
-            host = spark.sparkContext.getConf().get("spark.driver.host", None)
-            if host:
-                addr = (host, addr[1], addr[2])
-
-            def task(it):
-                import pandas as pd
-                from pyspark import BarrierTaskContext
-                for _ in it:
-                    pass
-                ctx = BarrierTaskContext.get()
-                comm = collective.RingComm.create(ctx, rendezvous=addr)
-                try:
-                    out = pickle.dumps(fn(comm))
-                finally:
-                    comm.close()
-                yield pd.DataFrame({"rank": [ctx.partitionId()],
-                                    "out": [out]})
-
-            rows = (spark.range(p, numPartitions=p)
-                    .mapInPandas(task, "rank int, out binary", barrier=True)
-                    .collect())
-            return [pickle.loads(bytes(r["out"]))
-                    for r in sorted(rows, key=lambda r: r["rank"])]
-        results, errors = {}, []
-
-        def worker(rank):
-            try:
-                comm = collective.RingComm.create(
-                    _FakeCtx(rank, p, None, None), rendezvous=srv.address)
-                try:
-                    results[rank] = fn(comm)
-                finally:
-                    comm.close()
-            except Exception as e:   # pragma: no cover
-                errors.append((rank, e))
-
-        ts = [threading.Thread(target=worker, args=(r,)) for r in range(p)]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join(timeout=60)
-        assert not any(t.is_alive() for t in ts), "a rank hung"
-        assert not errors, errors
-        return [results[r] for r in range(p)]
-    finally:
-        srv.close()
 
 
 @pytest.mark.parametrize("nranks", [2, 3, 5])

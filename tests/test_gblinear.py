@@ -329,3 +329,103 @@ def test_gblinear_get_score_weight_only(spark, lin_df, mc_lin_df):
     sc2 = mc.get_score()
     assert np.allclose(np.array([sc2[c] for c in ["c0", "c1", "c2"]]),
                        mc.weights)
+
+
+def _sequential_replay(X, y, obj, base_score, K, rounds, eta, lam, alpha):
+    """Row-level NumPy replay of the reference's sequential round, per
+    group: the global scale pass, the bias step, then each coordinate
+    in turn with the gradient updated by ``h * dw * x`` (hessians fixed
+    within a round; penalties denormalized by the row count)."""
+    from xgboost_spark.plans.linear import (_coordinate_delta,
+                                            _coordinate_delta_bias)
+    X = np.nan_to_num(X)
+    n, Fn = X.shape
+    W, bias = np.zeros((Fn, K)), np.zeros(K)
+    lam_d, alpha_d = lam * n, alpha * n
+    for _ in range(rounds):
+        M = base_score + bias + X @ W
+        m = M if K > 1 else M[:, 0]
+        obj.set_scale(obj.scale_stats(y, m, None))
+        g, h = obj.grad_hess(y, m, None)
+        g, h = g.reshape(n, K), h.reshape(n, K)
+        for k in range(K):
+            gk, hk = g[:, k].copy(), h[:, k]
+            db = eta * _coordinate_delta_bias(gk.sum(), hk.sum())
+            bias[k] += db
+            gk += hk * db
+            for f in range(Fn):
+                dw = eta * _coordinate_delta(gk @ X[:, f], hk @ X[:, f] ** 2,
+                                             W[f, k], alpha_d, lam_d)
+                W[f, k] += dw
+                gk += hk * dw * X[:, f]
+    return W, bias
+
+
+@pytest.mark.parametrize("objective,extra", [
+    ("reg:absoluteerror", {}),
+    ("reg:quantileerror", {"quantile_alpha": [0.2, 0.7]}),
+])
+def test_gblinear_global_scale_objective_matches_replay(spark, objective,
+                                                        extra):
+    """A global-scale objective (the K+1-stat scale pre-pass runs every
+    round) trained on 12 partitions matches a row-level NumPy replay of
+    the sequential round, for K=1 and K=2."""
+    from xgboost_spark.config import TrainParams
+    from xgboost_spark.functions.objectives import get_objective
+
+    rng = np.random.default_rng(21)
+    n, Fn, rounds = 300, 3, 3
+    X = rng.normal(size=(n, Fn))
+    X[rng.random((n, Fn)) < 0.05] = np.nan
+    y = np.nan_to_num(X) @ np.array([1.5, -2.0, 0.5]) + rng.laplace(0, 0.5, n)
+    pdf = pd.DataFrame(X, columns=[f"c{i}" for i in range(Fn)])
+    pdf["label"] = y
+    df = spark.createDataFrame(pdf).repartition(12)
+    params = {"booster": "gblinear", "objective": objective,
+              "num_boost_round": rounds, "reg_lambda": 0.01,
+              "reg_alpha": 0.001, **extra}
+    model = train_linear(params, df, feature_cols=list(pdf.columns[:Fn]))
+    p = TrainParams.from_dict(params)
+    K = p.n_groups
+    base = 0.5 if K > 1 else y.mean()
+    W, bias = _sequential_replay(X, y, get_objective(objective, p), base,
+                                 K, rounds, 0.5, 0.01, 0.001)
+    assert model.base_score == pytest.approx(base, rel=1e-12)
+    np.testing.assert_allclose(model.weights, W[:, 0] if K == 1 else W,
+                               rtol=1e-9, atol=1e-10)
+    np.testing.assert_allclose(model.bias, bias[0] if K == 1 else bias,
+                               rtol=1e-9, atol=1e-10)
+
+
+def test_gblinear_wide_fallback_single_group(spark):
+    """F > 256 with one output group takes the one-snapshot (Jacobi)
+    pass; on 8 partitions with the shuffle selector it matches a NumPy
+    replay of the bias-first frozen-snapshot math."""
+    from xgboost_spark.plans.linear import (_coordinate_delta,
+                                            _coordinate_delta_bias)
+
+    rng = np.random.default_rng(19)
+    n, Fw, rounds, seed = 120, 260, 2, 7
+    X = rng.normal(size=(n, Fw))
+    y = X[:, :5] @ np.arange(1.0, 6.0) + rng.normal(size=n)
+    fc = [f"x{i}" for i in range(Fw)]
+    pdf = pd.DataFrame(X, columns=fc)
+    pdf["label"] = y
+    df = spark.createDataFrame(pdf).repartition(8)
+    model = train_linear({"booster": "gblinear", "num_boost_round": rounds,
+                          "feature_selector": "shuffle", "seed": seed},
+                         df, feature_cols=fc)
+    assert model.weights.shape == (Fw,)
+
+    w, bias, base = np.zeros(Fw), 0.0, y.mean()
+    order_rng = np.random.default_rng(seed)
+    for _ in range(rounds):
+        g = base + bias + X @ w - y         # squared error, h = 1
+        db = 0.5 * _coordinate_delta_bias(g.sum(), float(n))
+        bias += db
+        gx = X.T @ g + db * X.sum(axis=0)
+        hx2 = (X * X).sum(axis=0)
+        for f in order_rng.permutation(Fw):
+            w[f] += 0.5 * _coordinate_delta(gx[f], hx2[f], w[f], 0.0, 0.0)
+    np.testing.assert_allclose(model.weights, w, rtol=0, atol=1e-8)
+    assert model.bias == pytest.approx(bias, abs=1e-8)

@@ -120,7 +120,8 @@ def test_gradient_based_beats_uniform_at_low_subsample(spark, monkeypatch):
     methods in a statistical tie.  The property under test is the
     sampling law, not the rank sizing — the sizing has its own test
     (test_barrier.test_fit_derives_barrier_ranks_from_rows)."""
-    monkeypatch.setenv("SPARK_GRAFT_ROWS_PER_RANK", "128")   # 4096/128 = 32 ranks
+    from xgboost_spark.plans import booster
+    monkeypatch.setattr(booster, "ROWS_PER_RANK", 128)   # 4096/128 = 32 ranks
     rng = np.random.default_rng(2026)
     n = 4096
     X = rng.normal(size=(n, 16))

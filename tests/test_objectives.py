@@ -182,3 +182,58 @@ def test_reg_linear_deprecated_alias():
         obj = get_objective("reg:linear")
     assert isinstance(obj, SquaredError)
     assert any("deprecated" in str(x.message) for x in w)
+
+
+_PRED_CASES = [
+    ("reg:squarederror", {}), ("reg:squaredlogerror", {}),
+    ("reg:pseudohubererror", {}), ("reg:absoluteerror", {}),
+    ("binary:logistic", {}), ("reg:logistic", {}), ("binary:logitraw", {}),
+    ("binary:hinge", {}), ("count:poisson", {}), ("reg:gamma", {}),
+    ("reg:tweedie", {}), ("survival:aft", {}), ("survival:cox", {}),
+    ("rank:ndcg", {}), ("rank:pairwise", {}), ("rank:map", {}),
+    ("reg:quantileerror", {}),
+    ("reg:quantileerror", {"quantile_alpha": [0.9, 0.1, 0.5]}),
+    ("reg:expectileerror", {"expectile_alpha": [0.2, 0.8]}),
+    ("multi:softprob", {"num_class": 3}), ("multi:softmax", {"num_class": 3}),
+]
+
+
+@pytest.mark.parametrize("booster", ["gbtree", "gblinear"])
+@pytest.mark.parametrize(
+    "objective,extra", _PRED_CASES,
+    ids=[f"{o}-K{TrainParams.from_dict({'objective': o, **e}).n_groups}"
+         for o, e in _PRED_CASES])
+def test_sql_prediction_matches_pred_transform(spark, booster, objective,
+                                               extra):
+    """Both SQL serving paths — `GBDTModel.transform_expr` and
+    `LinearModel.transform` — map margins to predictions exactly as the
+    objective's NumPy ``pred_transform`` does.  The margins frame feeds
+    the margins straight in: a tree model with no trees plus a
+    ``base_margin`` column, and a gblinear model with identity weights.
+    Row 0 holds crossing quantile margins."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from xgboost_spark.plans.linear import LinearModel
+    from xgboost_spark.plans.model import GBDTModel
+
+    p = TrainParams.from_dict({"objective": objective, **extra})
+    K = p.n_groups
+    rng = np.random.default_rng(3)
+    M = np.vstack([np.linspace(1.5, -1.5, K), np.zeros(K),
+                   rng.normal(scale=3.0, size=(6, K))])
+    cols = [f"m{k}" for k in range(K)]
+    df = spark.createDataFrame(pd.DataFrame(M, columns=cols))
+    if booster == "gblinear":
+        model = LinearModel(p, 0.0, np.eye(K) if K > 1 else np.ones(1),
+                            np.zeros(K) if K > 1 else 0.0, cols)
+        out = model.transform(df)
+    else:
+        model = GBDTModel(p, 0.0, [], cols)
+        df = df.withColumn("bm", F.array(*cols) if K > 1 else F.col("m0"))
+        out = model.transform_expr(df, base_margin_col="bm")
+    got = np.array([np.asarray(v, dtype=np.float64) for v in
+                    out.select("prediction").toPandas()["prediction"]])
+    want = get_objective(objective, p).pred_transform(
+        M if K > 1 else M[:, 0])
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=0)

@@ -4,21 +4,21 @@ Re-expresses the reference's collective layer (`src/collective/comm.h:184`,
 allreduce `src/collective/allreduce.cc:21-129`, rendezvous tracker
 `src/collective/tracker.h:80`) for Spark's barrier execution mode:
 
-- rendezvous: `BarrierTaskContext.allGather` replaces the Rabit tracker —
-  each task binds a listening socket, allgathers ``(rank, ip, port)``, and
-  point-to-point links are formed between exchange partners (the reference's
-  own Spark wrapper uses the same barrier-rendezvous pattern,
-  `spark/core.py:1036-1093`);
+- rendezvous: a per-fit driver-side `RendezvousServer` replaces the
+  Rabit tracker — each task binds a listening socket, registers
+  ``(rank, ip, port)`` with the server and receives the full peer table,
+  and point-to-point links are formed between exchange partners only
+  (the reference's own Spark wrapper bootstraps from the driver too,
+  `spark/core.py:1036-1093`).  A single-task job skips rendezvous;
 - allreduce: recursive-halving reduce-scatter + recursive-doubling
   allgather (Rabenseifner's algorithm — Thakur, Rabenseifner & Gropp,
   IJHPCA 2005, the same family MPI_Allreduce uses), with a pair-fold
   pre/post step for non-power-of-two rank counts.  ``2*log2(p) + 2``
-  latency steps and ``~2x payload`` bytes per rank — vs the previous
-  ring's ``2*(p-1)`` steps at the same bytes.  The boosting loop's
-  histogram payloads are small (<= a few MB), so each allreduce is
-  LATENCY-bound: at p=32 the ring's 62 sequential socket steps measured
-  ~56 ms per call and 93% of the whole training loop (sf0.1 profile,
-  round 14); halving-doubling needs 12 steps for the same reduction.
+  latency steps and ``~2x payload`` bytes per rank.  The boosting
+  loop's histogram payloads are small (<= a few MB), so each allreduce
+  is LATENCY-bound: at p=32 a ring's 62 sequential socket steps
+  measured ~56 ms per call and 93% of the whole training loop (sf0.1
+  profile); halving-doubling needs 12 steps for the same reduction.
 
 Determinism contract (the deterministic replicated tree-growth loop
 relies on it): every element of the reduced array is combined along a
@@ -57,7 +57,7 @@ def _local_ip() -> str:
 
 
 class Comm:
-    """Interface; `Loopback` for a single task, `RingComm` otherwise."""
+    """Interface; `Loopback` for a single task, `MeshComm` otherwise."""
 
     rank: int = 0
     nranks: int = 1
@@ -129,8 +129,8 @@ def _driver_rendezvous(barrier_ctx, rendezvous: tuple, me: dict,
     """Register this rank's (ip, port) with the driver-side
     `RendezvousServer` and receive the full ordered peer table.
 
-    Replaces the `allGather` bootstrap (fixed ~1.0 s per RPC in this
-    Spark build) with millisecond socket round-trips.  Zombie-attempt
+    Millisecond socket round-trips, where a `BarrierTaskContext`
+    allGather RPC costs a fixed ~1.0 s in this Spark build.  Zombie-attempt
     safety: registrations carry the task's attemptNumber, and the
     server only completes an epoch from p DISTINCT ranks of ONE
     attempt, so tasks of a killed stage attempt can never wire into a
@@ -267,70 +267,45 @@ def _partners(rank: int, p: int) -> list[int]:
         while half >= 1:
             out.append(_actual_rank(eff ^ half, rem))
             half >>= 1
-    # ring neighbours ride along so the A/B reference algorithm
-    # (SPARK_GRAFT_ALLREDUCE=ring) can run in the same session
-    for nb in ((rank + 1) % p, (rank - 1) % p):
-        if nb != rank and nb not in out:
-            out.append(nb)
     return out
 
 
-class RingComm(Comm):
-    """Socket mesh between halving-doubling exchange partners.  (The
-    name predates the algorithm switch: callers construct it the same
-    way they did the ring, and a 1-task job still degrades to
-    `Loopback`.)"""
+class MeshComm(Comm):
+    """Socket mesh between halving-doubling exchange partners (a 1-task
+    job degrades to `Loopback`)."""
 
     def __init__(self, rank: int, nranks: int,
-                 socks: dict[int, socket.socket], srv: socket.socket,
-                 mode: str = "hd"):
+                 socks: dict[int, socket.socket], srv: socket.socket):
         self.rank = rank
         self.nranks = nranks
         self._socks = socks
         self._srv = srv
-        self.mode = mode or "hd"
         for s in socks.values():
             s.setblocking(False)
 
     # -- rendezvous ----------------------------------------------------
     @classmethod
-    def create(cls, barrier_ctx, mode: str = "hd",
-               rendezvous: tuple | None = None) -> Comm:
+    def create(cls, barrier_ctx, rendezvous: tuple | None = None) -> Comm:
         """Build the partner mesh from a `BarrierTaskContext`.
 
-        ``mode``: "hd" (default halving-doubling) or "ring" — the
-        reference algorithm, kept for in-session A/B measurement on a
-        steal-prone box (pass it from the driver so a mid-session
-        toggle reaches reused Python workers).
-
-        ``rendezvous``: optional ``(host, port, token)`` of a
-        driver-side `RendezvousServer`.  Every `barrier()`/`allGather()`
-        RPC in this Spark build costs a fixed ~1.0 s (measured: four
-        consecutive allGather calls at p=1 each took 1.003 s — the
-        coordinator reply is polled on a 1 s tick), so the address
-        exchange registers with the driver server instead: p tiny
-        round-trips that complete in milliseconds.  Without
-        ``rendezvous`` (or with SPARK_GRAFT_RENDEZVOUS=allgather) the
-        allGather path is used — kept for A/B and as a fallback.
-
-        The rank count is LOCAL metadata (`getTaskInfos`, no RPC), so a
-        single-task job never synchronizes at all."""
+        ``rendezvous``: ``(host, port, token)`` of the fit's driver-side
+        `RendezvousServer`; required when the job has more than one
+        task.  The rank count is LOCAL metadata (`getTaskInfos`, no
+        RPC), so a single-task job never synchronizes at all."""
         rank = barrier_ctx.partitionId()
         p = len(barrier_ctx.getTaskInfos())
         if p == 1:
             return Loopback()
+        if rendezvous is None:
+            raise ValueError(f"a {p}-rank mesh needs a RendezvousServer "
+                             "address")
         srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         srv.bind(("0.0.0.0", 0))
         srv.listen(16)
         port = srv.getsockname()[1]
         me = {"rank": rank, "ip": _local_ip(), "port": port}
-        if rendezvous is not None:
-            peers = _driver_rendezvous(barrier_ctx, rendezvous, me, p)
-        else:
-            msgs = barrier_ctx.allGather(json.dumps(me))
-            peers = sorted((json.loads(m) for m in msgs),
-                           key=lambda d: d["rank"])
+        peers = _driver_rendezvous(barrier_ctx, rendezvous, me, p)
         if len(peers) != p:
             srv.close()
             raise IOError(f"rendezvous returned {len(peers)} peers, "
@@ -365,7 +340,7 @@ class RingComm(Comm):
                 raise IOError(f"mesh mis-wired: unexpected peer {peer} "
                               f"for rank {rank} (want {sorted(want)})")
             socks[peer] = c
-        return cls(rank, p, socks, srv, mode=mode)
+        return cls(rank, p, socks, srv)
 
     # -- duplex exchange ----------------------------------------------
     def _exchange(self, sock: socket.socket, send_bytes: bytes,
@@ -395,68 +370,8 @@ class RingComm(Comm):
     def _recv(self, peer: int, buf: memoryview):
         self._exchange(self._socks[peer], b"", buf)
 
-    # -- dispatch ------------------------------------------------------
-    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
-        if self.mode == "ring":
-            return self._allreduce_ring(arr, op)
-        return self._allreduce_hd(arr, op)
-
-    # -- reference ring (2*(p-1) steps; kept for in-session A/B against
-    # -- the halving-doubling default on a steal-prone box) ------------
-    def _allreduce_ring(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
-        reduce_fn = _OPS[op]
-        a = np.ascontiguousarray(arr, dtype=np.float64)
-        shape = a.shape
-        buf = a.ravel().copy()
-        p, r = self.nranks, self.rank
-        snd = self._socks[(r + 1) % p]
-        rcv = self._socks[(r - 1) % p]
-        n = len(buf)
-        base, extra = divmod(n, p)
-        off = []
-        s = 0
-        for i in range(p):
-            e = s + base + (1 if i < extra else 0)
-            off.append((s, e))
-            s = e
-        tmp = np.empty(base + 1, dtype=np.float64)
-        for step in range(p - 1):          # reduce-scatter
-            ss, se = off[(r - step) % p]
-            rs, re = off[(r - step - 1) % p]
-            rv = tmp[: re - rs]
-            self._exchange2(snd, rcv, buf[ss:se].tobytes(),
-                            memoryview(rv).cast("B"))
-            buf[rs:re] = reduce_fn(buf[rs:re], rv)
-        for step in range(p - 1):          # allgather
-            ss, se = off[(r + 1 - step) % p]
-            rs, re = off[(r - step) % p]
-            rv = tmp[: re - rs]
-            self._exchange2(snd, rcv, buf[ss:se].tobytes(),
-                            memoryview(rv).cast("B"))
-            buf[rs:re] = rv
-        return buf.reshape(shape)
-
-    def _exchange2(self, snd, rcv, send_bytes: bytes, recv_buf: memoryview):
-        """Duplex exchange over two distinct sockets (ring form)."""
-        sview = memoryview(send_bytes)
-        si, ri, rn = 0, 0, len(recv_buf)
-        deadline = time.time() + 300
-        while si < len(sview) or ri < rn:
-            if time.time() > deadline:
-                raise TimeoutError("ring allreduce stalled")
-            rl, wl, _ = select.select(
-                [rcv] if ri < rn else [], [snd] if si < len(sview) else [],
-                [], 30)
-            if rl:
-                n = rcv.recv_into(recv_buf[ri:], rn - ri)
-                if n == 0:
-                    raise IOError("ring peer closed connection")
-                ri += n
-            if wl:
-                si += snd.send(sview[si:si + (1 << 20)])
-
     # -- halving-doubling allreduce (Rabenseifner) ---------------------
-    def _allreduce_hd(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
+    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
         reduce_fn = _OPS[op]
         a = np.ascontiguousarray(arr, dtype=np.float64)
         shape = a.shape

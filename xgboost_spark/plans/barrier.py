@@ -6,7 +6,7 @@ PySpark integration (`python-package/xgboost/spark/core.py:1128`
 ring-allreduce sync): each barrier task materializes its partition once,
 quantizes it against the broadcast global cuts, and runs the identical
 deterministic tree-growth loop; per-level gradient histograms are summed
-across tasks with a ring allreduce (`xgboost_spark/collective.py`,
+across tasks with a halving-doubling allreduce (`xgboost_spark/collective.py`,
 reference `src/collective/allreduce.cc:21-129`).  Because the reduced
 histograms are bit-identical on every rank and all random draws come
 from the same seeded generator, every task grows the same trees; task 0
@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from xgboost_spark import core
-from xgboost_spark.collective import RingComm
+from xgboost_spark.collective import MeshComm
 from xgboost_spark.config import TrainParams
 from xgboost_spark.local.booster import (_NumpyHistBuilder,
                                           _NumpyMultiHistBuilder)
@@ -54,7 +54,7 @@ _PROF: dict[str, float] = defaultdict(float)
 
 
 class _AllreduceHistBuilder(_NumpyHistBuilder):
-    """Local partial histogram + ring allreduce = global histogram
+    """Local partial histogram + allreduce = global histogram
     (reference `SyncHistogram`, `src/tree/hist/histogram.h:177-188`)."""
 
     def __init__(self, Xb, cuts, n_bins, comm):
@@ -511,9 +511,6 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
         from xgboost_spark.functions.metrics import metric_global_np
         from xgboost_spark.plans.booster import _compute_grads, _maximize
 
-        # captured driver-side so a mid-session A/B toggle reaches the
-        # (env-frozen) reused executor Python workers
-        ar_mode = os.environ.get("SPARK_GRAFT_ALLREDUCE", "hd")
         prof_path_cfg = os.environ.get("SPARK_GRAFT_PROF")
 
         # Driver-side rendezvous server (round-15 optimization): every
@@ -524,11 +521,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
         # millisecond-latency server instead; one server per fit, so
         # concurrent fits never cross-wire.  p=1 jobs skip rendezvous
         # entirely (rank count is local task metadata).
-        # SPARK_GRAFT_RENDEZVOUS=allgather restores the old path (A/B).
         rdv = None
         rdv_addr = None
-        if (n_part > 1 and os.environ.get(
-                "SPARK_GRAFT_RENDEZVOUS", "driver") != "allgather"):
+        if n_part > 1:
             from xgboost_spark.collective import RendezvousServer
             rdv = RendezvousServer(n_part)
             rdv_addr = rdv.address
@@ -550,7 +545,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
             ctx = BarrierTaskContext.get()
             _PROF.clear()
             _t_task0 = time.perf_counter()
-            comm = RingComm.create(ctx, mode=ar_mode, rendezvous=rdv_addr)
+            comm = MeshComm.create(ctx, rendezvous=rdv_addr)
             _PROF["rendezvous"] = time.perf_counter() - _t_task0
             try:
                 cuts_l = bc_cuts.value

@@ -3,7 +3,7 @@
 Two execution strategies (`TrainParams.exec_mode`):
 
 - **barrier** (default via ``auto`` when supported): the whole boosting
-  loop in one `mapInPandas(barrier=True)` job with ring-allreduce
+  loop in one `mapInPandas(barrier=True)` job with allreduce
   histogram sync — see `plans/barrier.py`.  ~100× fewer Spark jobs.
 - **dataframe** (this module's loop): one job per tree level +
   one margin pass per round; fully declarative and oracle-checkable;
@@ -36,7 +36,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import logging
-import os
 import time
 
 import numpy as np
@@ -61,6 +60,10 @@ from xgboost_spark.sources.tables import assemble_features
 # down while per-tree throughput holds steady is hiding in one of the
 # first three numbers).  Diagnostic only — never consumed by training.
 FIT_STAGE_TIMES: dict[str, float] = {}
+
+#: barrier ranks are sized at one per this many training rows (capped
+#: at the core budget); see the rank-count comment in `_fit_impl`
+ROWS_PER_RANK = 40000
 
 _log = logging.getLogger("xgboost_spark")
 
@@ -718,7 +721,7 @@ class SparkBooster:
         isets = self._parse_interactions(feat_names_out, Fn)
 
         # fast path: whole boosting loop in ONE barrier job with in-job
-        # ring-allreduce histogram sync (plans/barrier.py; the reference's
+        # allreduce histogram sync (plans/barrier.py; the reference's
         # own Spark wrapper architecture, spark/core.py:1128)
         if p.exec_mode in ("auto", "barrier"):
             if barrier_eligible:
@@ -741,8 +744,8 @@ class SparkBooster:
                 # p=16-32), extra ranks only enlarge the straggler pool.
                 # Interleaved A/B, sf0.1 fit100: p=32 loop 10.5 s vs
                 # p=16 7.7 s vs p=12 8.1 s.  Derive ranks from the row
-                # count (known free from the sketch scan) at ~40k rows
-                # per rank — the measured compute/latency crossover —
+                # count (known free from the sketch scan) at
+                # ROWS_PER_RANK — the measured compute/latency crossover —
                 # capped at the core budget; any real corpus exceeds
                 # cores x 40k rows, so at scale this is exactly the old
                 # all-cores behavior.  Explicit num_partitions and the
@@ -751,9 +754,8 @@ class SparkBooster:
                 # keep the old sizing.
                 bar_n_part = n_part
                 if num_partitions is None and not has_q and n_rows:
-                    rpr = int(os.environ.get(
-                        "SPARK_GRAFT_ROWS_PER_RANK", "40000")) or 1
-                    bar_n_part = min(n_part, max(1, -(-n_rows // rpr)))
+                    bar_n_part = min(n_part,
+                                     max(1, -(-n_rows // ROWS_PER_RANK)))
                 trees, history, best_it, bar_weights = fit_barrier(
                     p, obj, raw, fnames, cuts, cat_mask,
                     base_score, mono, isets, bar_n_part, evals_raw=evals_raw,

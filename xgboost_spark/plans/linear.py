@@ -3,27 +3,39 @@
 Re-expresses the reference's linear updaters (coordinate descent
 `src/linear/updater_coordinate.cc:24-100`, parallel lock-free shotgun
 `src/linear/updater_shotgun.cc:96`, elastic-net soft threshold
-`CoordinateDelta`) for Spark's execution model:
+`CoordinateDelta`) for Spark's execution model.  One training loop
+serves every output-group count K (reference `src/gbm/gblinear.cc`
+DoBoost): the model is an ``(F, K)`` weight matrix and a ``(K,)``
+bias, and K=1 is just one case of K.  Per boosting round:
 
-- per boosting round ONE Spark job computes the round's sufficient
-  statistics as per-partition partials: bias sums (G, H), per-feature
-  gradient sums gx = X^T g and hx = X^T h, and — on the exact path
-  (F <= 256) — the cross-product matrix M = X^T diag(h) X;
-- the driver then replays the reference's SEQUENTIAL round exactly
-  (single-thread shotgun / coord_descent semantics): the bias updates
-  first and propagates into every feature's gradient sum, and each
-  coordinate evaluates CoordinateDelta at the residuals left by the
-  coordinates before it — hessians are fixed within a round, so the
-  in-round residual updates are linear in M and the whole pass is a
-  deterministic driver-side computation (no extra Spark jobs).
-  Penalties are DENORMALIZED by the sum of instance weights and the
-  linear booster has its own defaults (eta 0.5, lambda 0, alpha 0 —
-  src/linear/param.h), both reference semantics.  Past 256 features a
-  one-snapshot (Jacobi) pass with the same per-coordinate math stands
-  in — at that width the reference's own lock-free shotgun races make
-  sequential bit-parity moot;
-- serving is a pure Catalyst expression (weights are literals), so
-  whole-stage codegen applies and no Python is in the hot path.
+- objectives with a global residual scale (``reg:absoluteerror``,
+  ``reg:quantileerror``) first run one partial-sums pass of K+1 stats
+  at the round's margin;
+- ONE Spark job computes the round's sufficient statistics as
+  per-partition partials, per group k: bias sums (G_k, H_k), the
+  gradient sums X^T g_k and X^T h_k, and — on the exact path
+  (F <= 256) — the cross-product matrix M_k = X^T diag(h_k) X; past
+  256 features only its diagonal X^T h_k x^2 travels.  The driver adds
+  the partials in partition order;
+- the driver then updates each group in turn.  The exact path replays
+  the reference's SEQUENTIAL round (single-thread shotgun /
+  coord_descent semantics): the bias updates first and propagates into
+  every feature's gradient sum, and each coordinate evaluates
+  CoordinateDelta at the residuals left by the coordinates before it —
+  hessians are fixed within a round, so the in-round residual updates
+  are linear in M_k and the whole pass is a deterministic driver-side
+  computation (no extra Spark jobs).  Past 256 features a one-snapshot
+  (Jacobi) pass with the same per-coordinate math stands in — at that
+  width the reference's own lock-free shotgun races make sequential
+  bit-parity moot.
+
+Penalties are DENORMALIZED by the sum of instance weights and the
+linear booster has its own defaults (eta 0.5, lambda 0, alpha 0 —
+src/linear/param.h), both reference semantics.  The intercept is the
+data mean through the objective's link for K=1 and identity-link 0.5
+for K > 1 (the reference multiclass default).  Serving is a pure
+Catalyst expression (weights are literals), so whole-stage codegen
+applies and no Python is in the hot path.
 
 Missing values contribute 0, matching the reference's sparse-entry
 semantics (absent entry = no contribution).
@@ -42,7 +54,13 @@ from pyspark.sql import functions as F
 from xgboost_spark.config import TrainParams
 from xgboost_spark.functions import metrics as metrics_mod
 from xgboost_spark.functions.objectives import get_objective
+from xgboost_spark.plans.model import prediction_expr
 from xgboost_spark.sources.tables import assemble_features
+
+
+def _feature(c: str):
+    """Feature column as double; missing contributes 0."""
+    return F.coalesce(F.col(c).cast("double"), F.lit(0.0))
 
 
 class LinearModel:
@@ -53,8 +71,8 @@ class LinearModel:
                  eval_history: dict | None = None):
         self.params = params
         self.base_score = base_score
-        # (F,) trained scalar form, or (F, K) for a loaded multi-group
-        # reference document (bias then a (K,) vector)
+        # (F,) and a float bias for one output group; (F, K) and a (K,)
+        # bias for K > 1
         self.weights = np.asarray(weights, dtype=np.float64)
         self.bias = (float(bias) if np.ndim(bias) == 0
                      else np.asarray(bias, dtype=np.float64))
@@ -64,35 +82,31 @@ class LinearModel:
 
     @property
     def n_groups(self) -> int:
-        """1 for the trained scalar form; K when a multi-group reference
-        document was loaded (weights shape (F, K))."""
+        """Output groups K: 1 for (F,) weights, else weights.shape[1]."""
         return 1 if self.weights.ndim == 1 else int(self.weights.shape[1])
 
-    def margin_expr(self, feature_cols: list[str] | None = None):
-        cols = feature_cols or self.feature_names
-        e = F.lit(self.base_score + self.bias)
-        for w, c in zip(self.weights, cols):
-            if w != 0.0:
-                e = e + F.lit(float(w)) * F.coalesce(F.col(c).cast("double"), F.lit(0.0))
-        return e
+    def _groups(self) -> list[tuple[np.ndarray, float]]:
+        """Per output group: (weight column, intercept = base_score_k +
+        bias_k); multi-group intercepts are identity-link, like
+        GBDTModel."""
+        W = self.weights.reshape(len(self.weights), -1)
+        bias = np.atleast_1d(self.bias)
+        bs = getattr(self, "base_score_vec", None)
+        return [(W[:, k], (float(bs[k]) if bs is not None
+                           else self.base_score) + float(bias[k]))
+                for k in range(self.n_groups)]
 
     def margin_exprs(self, feature_cols: list[str] | None = None) -> list:
         """One margin expression per output group: margin_k =
         base_score_k + bias_k + sum_f w[f,k] * x_f (reference
-        `src/gbm/gblinear.cc` PredictBatch per-group inner product;
-        multiclass intercepts are identity-link, like GBDTModel)."""
-        if self.n_groups == 1:
-            return [self.margin_expr(feature_cols)]
+        `src/gbm/gblinear.cc` PredictBatch per-group inner product)."""
         cols = feature_cols or self.feature_names
-        bs = getattr(self, "base_score_vec", None)
         outs = []
-        for k in range(self.n_groups):
-            b = (float(bs[k]) if bs is not None else self.base_score)
-            e = F.lit(b + float(self.bias[k]))
-            for w, c in zip(self.weights[:, k], cols):
+        for wk, b in self._groups():
+            e = F.lit(b)
+            for w, c in zip(wk, cols):
                 if w != 0.0:
-                    e = e + F.lit(float(w)) * F.coalesce(
-                        F.col(c).cast("double"), F.lit(0.0))
+                    e = e + F.lit(float(w)) * _feature(c)
             outs.append(e)
         return outs
 
@@ -105,7 +119,8 @@ class LinearModel:
         """``pred_contribs``: per-feature contribution array (w_f * x_f,
         bias+intercept last) — the reference's gblinear contribution
         semantics (`src/gbm/gblinear.cc:153-194` PredictContribution:
-        linear terms are exact Shapley values).  Pure expressions.
+        linear terms are exact Shapley values); K > 1 emits one such
+        (F+1) block per group.  Pure expressions.
 
         ``pred_interactions``: the reference's gblinear
         PredictInteractionContributions (`src/gbm/gblinear.cc:192-204`)
@@ -124,71 +139,25 @@ class LinearModel:
         if iteration_range is not None and iteration_range[0] != 0:
             raise ValueError(
                 "Linear booster does not support prediction range.")
-        name = self.params.objective
-        if self.n_groups > 1:
-            margins = self.margin_exprs(feature_cols)
-            if name == "multi:softmax":
-                pred = (F.array_position(
-                    F.array(*margins), F.greatest(*margins)) - 1
-                ).cast("double")
-            else:
-                # multi:softprob — numerically stable softmax as SQL
-                mx = F.greatest(*margins)
-                exps = [F.exp(m - mx) for m in margins]
-                tot = exps[0]
-                for e in exps[1:]:
-                    tot = tot + e
-                pred = F.array(*[e / tot for e in exps])
-            out = df.withColumn("prediction", pred)
-            if output_margin:
-                out = out.withColumn("margin", F.array(*margins))
-            if pred_contribs:
-                # per-GROUP contribution blocks (reference
-                # `src/gbm/gblinear.cc:153-194` PredictContribution
-                # loops gid: w[f][gid]*x_f per feature, intercept —
-                # bias_gid + base_score_gid — last); linear terms are
-                # exact Shapley values.  Shape (K, F+1) per row.
-                cols = feature_cols or self.feature_names
-                bs = getattr(self, "base_score_vec", None)
-                blocks = []
-                for k in range(self.n_groups):
-                    b = (float(bs[k]) if bs is not None
-                         else float(self.base_score))
-                    terms = [
-                        (F.lit(float(w)) * F.coalesce(
-                            F.col(c).cast("double"), F.lit(0.0)))
-                        for w, c in zip(self.weights[:, k], cols)
-                    ] + [F.lit(float(self.bias[k]) + b)]
-                    blocks.append(F.array(*terms))
-                out = out.withColumn("contribs", F.array(*blocks))
-            if pred_interactions:
-                Fn = len(feature_cols or self.feature_names)
-                zeros = F.array_repeat(F.lit(0.0), Fn * Fn)
-                out = out.withColumn(
-                    "interactions",
-                    F.array(*[zeros for _ in range(self.n_groups)]))
-            return out
-        m = self.margin_expr(feature_cols)
-        if name in ("binary:logistic", "reg:logistic"):
-            pred = F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
-        elif name in ("count:poisson", "reg:gamma", "reg:tweedie", "survival:aft"):
-            pred = F.exp(m)
-        else:
-            pred = m
-        out = df.withColumn("prediction", pred)
+        cols = feature_cols or self.feature_names
+
+        def per_group(blocks):
+            return blocks[0] if self.n_groups == 1 else F.array(*blocks)
+
+        margins = self.margin_exprs(cols)
+        out = df.withColumn("prediction",
+                            prediction_expr(self.params.objective, margins))
         if output_margin:
-            out = out.withColumn("margin", m)
+            out = out.withColumn("margin", per_group(margins))
         if pred_contribs:
-            cols = feature_cols or self.feature_names
-            terms = [
-                (F.lit(float(w)) * F.coalesce(F.col(c).cast("double"), F.lit(0.0)))
-                for w, c in zip(self.weights, cols)
-            ] + [F.lit(float(self.bias + self.base_score))]
-            out = out.withColumn("contribs", F.array(*terms))
+            out = out.withColumn("contribs", per_group([
+                F.array(*[F.lit(float(w)) * _feature(c)
+                          for w, c in zip(wk, cols)], F.lit(b))
+                for wk, b in self._groups()]))
         if pred_interactions:
-            Fn = len(feature_cols or self.feature_names)
+            zeros = F.array_repeat(F.lit(0.0), len(cols) * len(cols))
             out = out.withColumn("interactions",
-                                 F.array_repeat(F.lit(0.0), Fn * Fn))
+                                 per_group([zeros] * self.n_groups))
         return out
 
     def get_score(self, importance_type: str = "weight"):
@@ -450,12 +419,60 @@ def _replay_linear_round(weights_k: np.ndarray, bias_k: float,
     raise ValueError(f"unknown feature_selector {selector!r}")
 
 
+def _jacobi_linear_round(weights_k: np.ndarray, bias_k: float,
+                         G: float, H: float, gx: np.ndarray,
+                         hx: np.ndarray, hx2: np.ndarray, eta: float,
+                         lam_d: float, alpha_d: float, selector: str,
+                         rng: np.random.Generator, top_k: int) -> float:
+    """Wide-feature (F > ``_EXACT_SEQ_MAX_F``) stand-in for
+    :func:`_replay_linear_round`: the same bias-first CoordinateDelta
+    math, but every coordinate evaluates against the round's FROZEN
+    snapshot (one Jacobi pass, no in-round residual propagation), so
+    the payload is ``hx2 = X^T h x^2`` instead of the F^2 cross
+    product.  At that width the reference's own lock-free shotgun races
+    make sequential bit-parity moot.  Mutates ``weights_k`` in place;
+    returns the updated bias."""
+    Fn = len(weights_k)
+    dbias = eta * _coordinate_delta_bias(G, H)
+    bias_k += dbias
+    gx = gx + dbias * hx           # bias residual propagation
+    order = np.arange(Fn)
+    if selector == "shuffle":
+        order = rng.permutation(Fn)
+    elif selector == "random":
+        order = rng.integers(0, Fn, size=Fn)
+    elif selector in ("greedy", "thrifty"):
+        mag = np.array([abs(_coordinate_delta(
+            gx[f], hx2[f], weights_k[f], alpha_d, lam_d))
+            for f in range(Fn)])
+        order = np.argsort(-mag, kind="stable")[
+            :min(top_k if top_k > 0 else Fn, max(Fn - 1, 1))]
+    for f in order:
+        weights_k[f] += eta * _coordinate_delta(
+            gx[f], hx2[f], weights_k[f], alpha_d, lam_d)
+    return bias_k
+
+
+def _parse_batch(pdf: pd.DataFrame, fnames: list[str], has_w: bool):
+    """One Arrow batch as (X, y, w); missing features contribute 0."""
+    X = np.column_stack([
+        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64, na_value=np.nan))
+        for c in fnames])
+    y = pdf["label"].to_numpy(dtype=np.float64)
+    w = pdf["weight"].to_numpy(dtype=np.float64) if has_w else None
+    return X, y, w
+
+
 def train_linear(params: dict | TrainParams, df: DataFrame,
                  feature_cols: list[str] | None = None,
                  array_col: str | None = None, label_col: str = "label",
                  weight_col: str | None = None,
                  evals: list[tuple[DataFrame, str]] | None = None,
                  verbose: bool = False) -> LinearModel:
+    """Train gblinear over an ``(F, K)`` weight matrix and a ``(K,)``
+    bias, K = ``p.n_groups`` (reference `src/gbm/gblinear.cc` DoBoost:
+    one coordinate pass per output group over the round's shared
+    gradient snapshot)."""
     p = params if isinstance(params, TrainParams) else TrainParams.from_dict(params)
     obj = get_objective(p.objective, p)
     raw, fnames = assemble_features(df, feature_cols=feature_cols, array_col=array_col,
@@ -463,34 +480,30 @@ def train_linear(params: dict | TrainParams, df: DataFrame,
     from xgboost_spark.plans.booster import validate_meta
     validate_meta(raw, obj, p.objective)
     raw = raw.localCheckpoint(eager=True)
-    Fn = len(fnames)
+    Fn, K = len(fnames), p.n_groups
     has_w = "weight" in raw.columns
     feat_names_out = feature_cols if (feature_cols and not array_col) else fnames
-
-    if p.n_groups > 1:
-        return _train_linear_multigroup(p, raw, fnames, feat_names_out,
-                                        has_w, obj, evals, feature_cols,
-                                        array_col, label_col, weight_col,
-                                        verbose)
-
-    # base score: distributed stump (same as the tree path)
     w_expr = F.col("weight") if has_w else F.lit(1.0)
+
     if p.base_score is not None:
         base_score = float(p.base_score)
+    elif K > 1:
+        base_score = 0.5        # identity-link multi-group default
     else:
-        name = p.objective
+        # the data intercept through the objective's link (a
+        # distributed stump, same as the tree path)
         r = raw.agg((F.sum(F.col("label") * w_expr) / F.sum(w_expr)).alias("v")).first()
         mean = float(r["v"])
-        if name in ("binary:logistic", "reg:logistic", "binary:logitraw"):
+        if p.objective in ("binary:logistic", "reg:logistic", "binary:logitraw"):
             mp = min(max(mean, 1e-7), 1 - 1e-7)
             base_score = float(np.log(mp / (1 - mp)))
-        elif name in ("count:poisson", "reg:gamma", "reg:tweedie"):
+        elif p.objective in ("count:poisson", "reg:gamma", "reg:tweedie"):
             base_score = float(np.log(max(mean, 1e-16)))
         else:
             base_score = mean
 
-    weights = np.zeros(Fn)
-    bias = 0.0
+    W = np.zeros((Fn, K))
+    bias = np.zeros(K)
     rng = np.random.default_rng(p.seed)
     history: dict[str, dict[str, list[float]]] = {}
     metric_names = p.eval_metric or [obj.default_metric()]
@@ -498,375 +511,89 @@ def train_linear(params: dict | TrainParams, df: DataFrame,
     # DenormalizePenalties (param.h:59-62): penalties scale by the sum
     # of instance weights (row count when unweighted), recomputed by the
     # reference every Update from the constant training set
-    w_expr0 = F.col("weight") if has_w else F.lit(1.0)
-    sum_iw = float(raw.agg(F.sum(w_expr0)).first()[0] or 0.0)
+    sum_iw = float(raw.agg(F.sum(w_expr)).first()[0] or 0.0)
     lam_d, alpha_d = lam_l * sum_iw, alpha_l * sum_iw
     exact_seq = Fn <= _EXACT_SEQ_MAX_F
-    arr_schema = ("G double, H double, gx array<double>, "
-                  "hx array<double>, M array<double>")
-    sums_schema = ", ".join(
-        ["G double", "H double"]
-        + [f"gx{i} double, hx{i} double" for i in range(Fn)])
+    update = _replay_linear_round if exact_seq else _jacobi_linear_round
+    # per-partition partial sums, per group: bias sums G, H; X^T g and
+    # X^T h; then the cross products M_k = X^T diag(h_k) X (exact) or
+    # the diagonals X^T h_k x^2 (wide)
+    last = "M" if exact_seq else "hx2"
+    shapes = {"G": (K,), "H": (K,), "gx": (K, Fn), "hx": (K, Fn),
+              last: (K, Fn, Fn) if exact_seq else (K, Fn)}
+    sums_schema = ", ".join(f"{k} array<double>" for k in shapes)
+    scale_cols = [f"s{i}" for i in range(K + 1)]
+
+    def margin(X, bw, bb):
+        m = bb + X @ bw                     # (n, K)
+        return m if K > 1 else m[:, 0]      # K=1 objectives take 1-D
 
     for it in range(p.num_boost_round):
-        bw = weights.copy()
-        bb = bias + base_score
+        bw, bb = W.copy(), bias + base_score
 
         if obj.needs_global_scale:
             # global residual scale for smooth-MM MAE / smoothed
             # quantile (reference GlobalSum before GetGradient): one
             # partial-sums pre-pass at the current round's margin
-            def scale_fn(it_: Iterator[pd.DataFrame],
-                         _bw=bw, _bb=bb) -> Iterator[pd.DataFrame]:
+            def scale_fn(it_: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 acc = None
                 for pdf in it_:
                     if len(pdf) == 0:
                         continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    st = obj.scale_stats(y, _bb + X @ _bw, w_)
+                    X, y, w_ = _parse_batch(pdf, fnames, has_w)
+                    st = obj.scale_stats(y, margin(X, bw, bb), w_)
                     acc = st if acc is None else acc + st
                 if acc is not None:
-                    yield pd.DataFrame({f"s{i}": [acc[i]]
-                                        for i in range(len(acc))})
+                    yield pd.DataFrame([acc], columns=scale_cols)
 
-            r_sc = (raw.mapInPandas(scale_fn, schema="s0 double, s1 double")
-                    .agg(F.sum("s0").alias("s0"), F.sum("s1").alias("s1"))
-                    .first())
-            obj.set_scale(np.array([float(r_sc["s0"] or 0.0),
-                                    float(r_sc["s1"] or 0.0)]))
+            r_sc = (raw.mapInPandas(scale_fn, schema=", ".join(
+                        f"{c} double" for c in scale_cols))
+                    .agg(*[F.sum(c).alias(c) for c in scale_cols]).first())
+            obj.set_scale(np.array([float(r_sc[c] or 0.0)
+                                    for c in scale_cols]))
 
-        if exact_seq:
-            def sums_fn(it_: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                G = H = 0.0
-                gx = np.zeros(Fn)
-                hx = np.zeros(Fn)
-                M = np.zeros((Fn, Fn))
-                for pdf in it_:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    m = bb + X @ bw
-                    g, h = obj.grad_hess(y, m, w_)
-                    G += g.sum()
-                    H += h.sum()
-                    gx += g @ X
-                    hx += h @ X
-                    M += (X * h[:, None]).T @ X
-                yield pd.DataFrame({
-                    "G": [G], "H": [H], "gx": [gx.tolist()],
-                    "hx": [hx.tolist()], "M": [M.reshape(-1).tolist()]})
-
-            parts = raw.mapInPandas(sums_fn, schema=arr_schema).toPandas()
-            G = float(parts["G"].sum())
-            H = float(parts["H"].sum())
-            gx = np.sum(np.stack(parts["gx"].map(np.asarray)), axis=0)
-            hx = np.sum(np.stack(parts["hx"].map(np.asarray)), axis=0)
-            M = np.sum(np.stack(parts["M"].map(np.asarray)),
-                       axis=0).reshape(Fn, Fn)
-            bias = _replay_linear_round(
-                weights, bias, G, H, gx, hx, M, eta_l, lam_d, alpha_d,
-                p.feature_selector, rng, p.top_k)
-        else:
-            # wide-feature fallback: one frozen gradient snapshot per
-            # round (Jacobi) with the same CoordinateDelta/bias-first
-            # math but WITHOUT in-round residual propagation — the
-            # F^2 cross-product payload stops being cheap past
-            # _EXACT_SEQ_MAX_F, where the reference's own lock-free
-            # shotgun races make exact sequential parity moot
-            def sums_fn(it_: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                G = H = 0.0
-                gx = np.zeros(Fn)
-                hx = np.zeros(Fn)
-                hx2 = np.zeros(Fn)
-                for pdf in it_:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    m = bb + X @ bw
-                    g, h = obj.grad_hess(y, m, w_)
-                    G += g.sum()
-                    H += h.sum()
-                    gx += g @ X
-                    hx += h @ X
-                    hx2 += h @ (X * X)
-                yield pd.DataFrame({
-                    "G": [G], "H": [H],
-                    **{f"gx{i}": [gx[i]] for i in range(Fn)},
-                    **{f"hx{i}": [hx2[i]] for i in range(Fn)},
-                    "HB": [hx.tolist()]})
-
-            r = (raw.mapInPandas(sums_fn, schema=sums_schema
-                                 + ", HB array<double>").toPandas())
-            G = float(r["G"].sum())
-            H = float(r["H"].sum())
-            gxv = np.array([float(r[f"gx{i}"].sum()) for i in range(Fn)])
-            hx2v = np.array([float(r[f"hx{i}"].sum()) for i in range(Fn)])
-            hbv = np.sum(np.stack(r["HB"].map(np.asarray)), axis=0)
-            dbias = eta_l * _coordinate_delta_bias(G, H)
-            bias += dbias
-            gxv = gxv + dbias * hbv      # bias residual propagation
-            order = np.arange(Fn)
-            if p.feature_selector == "shuffle":
-                rng.shuffle(order)
-            elif p.feature_selector == "random":
-                order = rng.integers(0, Fn, size=Fn)
-            elif p.feature_selector in ("greedy", "thrifty"):
-                mag = np.array([abs(_coordinate_delta(
-                    gxv[i], hx2v[i], weights[i], alpha_d, lam_d))
-                    for i in range(Fn)])
-                order = np.argsort(-mag, kind="stable")
-                limit = min(p.top_k if p.top_k > 0 else Fn,
-                            max(Fn - 1, 1))
-                order = order[:limit]
-            for f in order:
-                weights[f] += eta_l * _coordinate_delta(
-                    gxv[f], hx2v[f], weights[f], alpha_d, lam_d)
-
-        if evals:
-            model = LinearModel(p, base_score, weights, bias, feat_names_out)
-            for ev_df, ev_name in evals:
-                ev_raw, _ = assemble_features(
-                    ev_df, feature_cols=feature_cols, array_col=array_col,
-                    label_col=label_col, weight_col=weight_col)
-                scored = model.transform(
-                    ev_raw, feature_cols=fnames, output_margin=True
-                ).select(F.col("label").alias("y"), F.col("margin").alias("m0"),
-                         w_expr.alias("w"))
-                for mname in metric_names:
-                    val = metrics_mod.compute_metric(scored, mname, y="y",
-                                                     margin_cols=["m0"], weight="w")
-                    history.setdefault(ev_name, {}).setdefault(mname, []).append(val)
-                    if verbose:
-                        print(f"[{it}] {ev_name}-{mname}: {val:.6f}")
-
-    return LinearModel(p, base_score, weights, bias, feat_names_out,
-                       eval_history=history)
-
-
-def _train_linear_multigroup(p: TrainParams, raw: DataFrame,
-                             fnames: list[str], feat_names_out: list[str],
-                             has_w: bool, obj, evals, feature_cols,
-                             array_col, label_col, weight_col,
-                             verbose: bool) -> LinearModel:
-    """gblinear training with ``num_output_group > 1`` (reference
-    `src/gbm/gblinear.cc` DoBoost: one coordinate pass PER GROUP over
-    the shared gradient snapshot; weights live in the interleaved
-    ``(F+1) x K`` layout, `gblinear_model.h:40-62`).
-
-    Spark shape mirrors the scalar path: per boosting round ONE
-    mapInPandas job emits per-partition partial sums — per-group
-    (G_k, H_k) plus per-(feature, group) (sum g_k x_f, sum h_k x_f^2) —
-    aggregated JVM-side; the driver applies the shotgun update to every
-    group's coordinates from that single snapshot.  The multiclass
-    intercept is identity-link 0.5 (reference multiclass default base
-    score), like the tree path.
-
-    Past ``_EXACT_SEQ_MAX_F`` features the K*F^2 cross-product payload
-    of the exact sequential replay stops being cheap, so — exactly like
-    the scalar path — a one-snapshot (Jacobi) pass with the same
-    bias-first CoordinateDelta math stands in: per group the bias step
-    propagates into the gradient sums (dbias * sum h_k x_f) and every
-    coordinate evaluates against the FROZEN snapshot.  At that width
-    the reference's own lock-free shotgun races make sequential
-    bit-parity moot; the payload drops to 3*K*F doubles."""
-    Fn = len(fnames)
-    K = p.n_groups
-    exact_seq = Fn <= _EXACT_SEQ_MAX_F
-    base_score = float(p.base_score) if p.base_score is not None else 0.5
-    W = np.zeros((Fn, K))
-    bias = np.zeros(K)
-    rng = np.random.default_rng(p.seed)
-    history: dict[str, dict[str, list[float]]] = {}
-    metric_names = p.eval_metric or [obj.default_metric()]
-    w_expr = F.col("weight") if has_w else F.lit(1.0)
-    eta_l, lam_l, alpha_l = _linear_hyper(p)
-    sum_iw = float(raw.agg(F.sum(w_expr)).first()[0] or 0.0)
-    lam_d, alpha_d = lam_l * sum_iw, alpha_l * sum_iw
-    arr_schema = ("G array<double>, H array<double>, gx array<double>, "
-                  "hx array<double>, M array<double>")
-    wide_schema = ("G array<double>, H array<double>, gx array<double>, "
-                   "hx2 array<double>, HB array<double>")
-
-    for it in range(p.num_boost_round):
-        bw = W.copy()
-        bb = bias + base_score                       # (K,)
-
-        if obj.needs_global_scale:
-            def scale_fn(it_: "Iterator[pd.DataFrame]",
-                         _bw=bw, _bb=bb) -> "Iterator[pd.DataFrame]":
-                acc = None
-                for pdf in it_:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    st = obj.scale_stats(y, _bb[None, :] + X @ _bw, w_)
-                    acc = st if acc is None else acc + st
-                if acc is not None:
-                    yield pd.DataFrame({f"s{i}": [acc[i]]
-                                        for i in range(len(acc))})
-
-            _n_st = K + 1
-            _sc_schema = ", ".join(f"s{i} double" for i in range(_n_st))
-            r_sc = (raw.mapInPandas(scale_fn, schema=_sc_schema)
-                    .agg(*[F.sum(f"s{i}").alias(f"s{i}")
-                           for i in range(_n_st)]).first())
-            obj.set_scale(np.array([float(r_sc[f"s{i}"] or 0.0)
-                                    for i in range(_n_st)]))
-
-        if exact_seq:
-            def sums_fn(it_: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-                G = np.zeros(K)
-                H = np.zeros(K)
-                gx = np.zeros((K, Fn))
-                hx = np.zeros((K, Fn))
-                Mk = np.zeros((K, Fn, Fn))
-                for pdf in it_:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    M = bb[None, :] + X @ bw             # (n, K)
-                    g, h = obj.grad_hess(y, M, w_)       # (n, K)
-                    G += g.sum(axis=0)
-                    H += h.sum(axis=0)
-                    gx += (X.T @ g).T
-                    hx += (X.T @ h).T
+        def sums_fn(it_: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            acc = {k: np.zeros(v) for k, v in shapes.items()}
+            for pdf in it_:
+                if len(pdf) == 0:
+                    continue
+                X, y, w_ = _parse_batch(pdf, fnames, has_w)
+                g, h = obj.grad_hess(y, margin(X, bw, bb), w_)
+                g, h = g.reshape(len(y), K), h.reshape(len(y), K)
+                acc["G"] += g.sum(axis=0)
+                acc["H"] += h.sum(axis=0)
+                acc["gx"] += (X.T @ g).T
+                acc["hx"] += (X.T @ h).T
+                if exact_seq:
                     for k in range(K):
-                        Mk[k] += (X * h[:, k][:, None]).T @ X
-                yield pd.DataFrame({
-                    "G": [G.tolist()], "H": [H.tolist()],
-                    "gx": [gx.reshape(-1).tolist()],
-                    "hx": [hx.reshape(-1).tolist()],
-                    "M": [Mk.reshape(-1).tolist()]})
+                        acc["M"][k] += (X * h[:, k][:, None]).T @ X
+                else:
+                    acc["hx2"] += ((X * X).T @ h).T
+            yield pd.DataFrame({k: [v.reshape(-1).tolist()]
+                                for k, v in acc.items()})
 
-            parts = raw.mapInPandas(sums_fn, schema=arr_schema).toPandas()
-            Gv = np.sum(np.stack(parts["G"].map(np.asarray)), axis=0)
-            Hv = np.sum(np.stack(parts["H"].map(np.asarray)), axis=0)
-            gxv = np.sum(np.stack(parts["gx"].map(np.asarray)),
-                         axis=0).reshape(K, Fn)
-            hxv = np.sum(np.stack(parts["hx"].map(np.asarray)),
-                         axis=0).reshape(K, Fn)
-            Mv = np.sum(np.stack(parts["M"].map(np.asarray)),
-                        axis=0).reshape(K, Fn, Fn)
-
-            # per-group exact sequential replay (gblinear.cc DoBoost
-            # loops gid; updater runs bias-first + residual-updated
-            # coordinates)
-            for k in range(K):
-                wk = W[:, k].copy()
-                bias[k] = _replay_linear_round(
-                    wk, float(bias[k]), float(Gv[k]), float(Hv[k]),
-                    gxv[k], hxv[k], Mv[k], eta_l, lam_d, alpha_d,
-                    p.feature_selector, rng, p.top_k)
-                W[:, k] = wk
-        else:
-            # wide-feature (F > _EXACT_SEQ_MAX_F) fallback — the scalar
-            # path's one-snapshot Jacobi pass, per group: same
-            # CoordinateDelta/bias-first math, NO in-round residual
-            # propagation; payload 3*K*F doubles instead of K*F^2
-            def sums_fn(it_: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-                G = np.zeros(K)
-                H = np.zeros(K)
-                gx = np.zeros((K, Fn))
-                hx2 = np.zeros((K, Fn))
-                hb = np.zeros((K, Fn))
-                for pdf in it_:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.column_stack([
-                        np.nan_to_num(pdf[c].to_numpy(dtype=np.float64,
-                                                      na_value=np.nan))
-                        for c in fnames])
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    M = bb[None, :] + X @ bw             # (n, K)
-                    g, h = obj.grad_hess(y, M, w_)       # (n, K)
-                    G += g.sum(axis=0)
-                    H += h.sum(axis=0)
-                    gx += (X.T @ g).T
-                    hx2 += ((X * X).T @ h).T
-                    hb += (X.T @ h).T
-                yield pd.DataFrame({
-                    "G": [G.tolist()], "H": [H.tolist()],
-                    "gx": [gx.reshape(-1).tolist()],
-                    "hx2": [hx2.reshape(-1).tolist()],
-                    "HB": [hb.reshape(-1).tolist()]})
-
-            parts = raw.mapInPandas(sums_fn, schema=wide_schema).toPandas()
-            Gv = np.sum(np.stack(parts["G"].map(np.asarray)), axis=0)
-            Hv = np.sum(np.stack(parts["H"].map(np.asarray)), axis=0)
-            gxv = np.sum(np.stack(parts["gx"].map(np.asarray)),
-                         axis=0).reshape(K, Fn)
-            hx2v = np.sum(np.stack(parts["hx2"].map(np.asarray)),
-                          axis=0).reshape(K, Fn)
-            hbv = np.sum(np.stack(parts["HB"].map(np.asarray)),
-                         axis=0).reshape(K, Fn)
-            for k in range(K):
-                dbias = eta_l * _coordinate_delta_bias(
-                    float(Gv[k]), float(Hv[k]))
-                bias[k] += dbias
-                gxk = gxv[k] + dbias * hbv[k]   # bias residual propagation
-                order = np.arange(Fn)
-                if p.feature_selector == "shuffle":
-                    order = rng.permutation(Fn)
-                elif p.feature_selector == "random":
-                    order = rng.integers(0, Fn, size=Fn)
-                elif p.feature_selector in ("greedy", "thrifty"):
-                    mag = np.array([abs(_coordinate_delta(
-                        gxk[i], hx2v[k, i], W[i, k], alpha_d, lam_d))
-                        for i in range(Fn)])
-                    order = np.argsort(-mag, kind="stable")
-                    limit = min(p.top_k if p.top_k > 0 else Fn,
-                                max(Fn - 1, 1))
-                    order = order[:limit]
-                for f in order:
-                    W[f, k] += eta_l * _coordinate_delta(
-                        gxk[f], hx2v[k, f], W[f, k], alpha_d, lam_d)
+        parts = raw.mapInPandas(sums_fn, schema=sums_schema).toPandas()
+        S = {k: np.sum(np.stack(parts[k].map(np.asarray)),
+                       axis=0).reshape(v) for k, v in shapes.items()}
+        for k in range(K):
+            wk = W[:, k].copy()
+            bias[k] = update(wk, float(bias[k]), float(S["G"][k]),
+                             float(S["H"][k]), S["gx"][k], S["hx"][k],
+                             S[last][k], eta_l, lam_d, alpha_d,
+                             p.feature_selector, rng, p.top_k)
+            W[:, k] = wk
 
         if evals:
-            model = LinearModel(p, base_score, W.copy(), bias.copy(),
-                                feat_names_out)
+            model = LinearModel(p, base_score, W, bias, feat_names_out)
+            mcols = [f"m{k}" for k in range(K)]
             for ev_df, ev_name in evals:
                 ev_raw, _ = assemble_features(
                     ev_df, feature_cols=feature_cols, array_col=array_col,
                     label_col=label_col, weight_col=weight_col)
-                scored = model.transform(
-                    ev_raw, feature_cols=fnames, output_margin=True)
-                mcols = [f"m{k}" for k in range(K)]
-                scored = scored.select(
+                scored = ev_raw.select(
                     F.col("label").alias("y"), w_expr.alias("w"),
-                    *[F.col("margin").getItem(k).alias(mcols[k])
-                      for k in range(K)])
+                    *[m.alias(c) for m, c in
+                      zip(model.margin_exprs(fnames), mcols)])
                 for mname in metric_names:
                     val = metrics_mod.compute_metric(
                         scored, mname, y="y", margin_cols=mcols, weight="w")
@@ -875,5 +602,8 @@ def _train_linear_multigroup(p: TrainParams, raw: DataFrame,
                     if verbose:
                         print(f"[{it}] {ev_name}-{mname}: {val:.6f}")
 
+    if K == 1:      # the public scalar form: (F,) weights, float bias
+        return LinearModel(p, base_score, W[:, 0], float(bias[0]),
+                           feat_names_out, eval_history=history)
     return LinearModel(p, base_score, W, bias, feat_names_out,
                        eval_history=history)

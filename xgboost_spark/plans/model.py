@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from xgboost_spark import core
 from xgboost_spark.config import TrainParams
-from xgboost_spark.functions.objectives import get_objective
+from xgboost_spark.functions.objectives import _RT_EPS, get_objective
 
 
 def _leaf_str(lv) -> str:
@@ -34,6 +34,51 @@ def _leaf_str(lv) -> str:
             vals = vals[:2] + ["...", vals[-1]]
         return "[" + ", ".join(vals) + "]"
     return f"{float(lv):.9g}"
+
+
+def prediction_expr(objective: str, margins: list):
+    """The objective's ``pred_transform`` as one SQL Column over the
+    per-group margin Columns: the margin-to-prediction mapping shared
+    by `GBDTModel.transform_expr` and `LinearModel.transform`.  A vector
+    result comes back as an array Column."""
+    if len(margins) > 1:
+        if objective == "multi:softmax":
+            # argmax: margins are exact copies of the greatest() input,
+            # so the equality inside array_position is bitwise-safe
+            return (F.array_position(F.array(*margins),
+                                     F.greatest(*margins)) - 1).cast("double")
+        if objective == "multi:softprob":
+            mx = F.greatest(*margins)
+            exps = [F.exp(m - mx) for m in margins]
+            tot = exps[0]
+            for e in exps[1:]:
+                tot = tot + e
+            return F.array(*[e / tot for e in exps])
+        if objective == "reg:quantileerror":
+            # non-crossing: each row's predictions sorted ascending
+            # (quantile_obj.cu:177-198)
+            return F.array_sort(F.array(*margins))
+        if objective == "reg:expectileerror":
+            # stacked expectiles (regression_obj.cu:458-476): pred_0 =
+            # m_0, pred_k = pred_{k-1} + kRtEps + SoftPlus(m_k), as
+            # stable SQL
+            preds = [margins[0]]
+            for m in margins[1:]:
+                sp = F.when(m > 0, m + F.log1p(F.exp(-m))) \
+                     .otherwise(F.log1p(F.exp(m)))
+                preds.append(preds[-1] + F.lit(_RT_EPS) + sp)
+            return F.array(*preds)
+        # any other vector objective transforms each output alone
+        return F.array(*[prediction_expr(objective, [m]) for m in margins])
+    m = margins[0]
+    if objective in ("binary:logistic", "reg:logistic"):
+        return F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
+    if objective in ("count:poisson", "reg:gamma", "reg:tweedie",
+                     "survival:aft", "survival:cox"):
+        return F.exp(m)
+    if objective == "binary:hinge":
+        return F.when(m > 0, 1.0).otherwise(0.0).cast("double")
+    return m
 
 
 class GBDTModel:
@@ -1071,9 +1116,9 @@ class GBDTModel:
                        iteration_range: tuple[int, int] | None = None) -> DataFrame:
         """Catalyst-expression batch predict: appends ``prediction`` built
         from :meth:`margin_exprs` + the objective's link inverse as SQL.
-        Supports scalar-leaf models whose pred_transform is expressible
-        (identity / sigmoid / exp / hinge / softprob / softmax); others —
-        and the pred_leaf / SHAP outputs — use :meth:`transform`.
+        Supports scalar-leaf models; the prediction is
+        :func:`prediction_expr`, and the pred_leaf / SHAP outputs use
+        :meth:`transform`.
 
         Perf (200k rows x 8 features, depth-6 trees, local[4] on 4
         vCPU): bit-identical to :meth:`transform`, one CASE WHEN per
@@ -1128,46 +1173,11 @@ class GBDTModel:
                 margins = [m - F.lit(float(bs[k]))
                            + F.col(base_margin_col).cast("double")
                            for k, m in enumerate(margins)]
-        name = self.params.objective
         if output_margin:
             out = F.array(*margins) if len(margins) > 1 else margins[0]
             return df.withColumn(out_col, out)
-        if len(margins) > 1:
-            if name == "multi:softmax":
-                # argmax: margins are exact copies of the greatest() input,
-                # so the equality inside array_position is bitwise-safe
-                out = (F.array_position(F.array(*margins),
-                                        F.greatest(*margins)) - 1).cast("double")
-            elif name == "reg:quantileerror":
-                # multi-alpha: identity link, one value per alpha
-                out = F.array(*margins)
-            elif name == "reg:expectileerror":
-                # multi-alpha expectile PredTransform (reference
-                # regression_obj.cu:458-476): pred_0 = m_0, pred_k =
-                # pred_{k-1} + kRtEps + SoftPlus(m_k), as stable SQL
-                from xgboost_spark.functions.objectives import _RT_EPS
-                preds = [margins[0]]
-                for m in margins[1:]:
-                    sp = F.when(m > 0, m + F.log1p(F.exp(-m))) \
-                         .otherwise(F.log1p(F.exp(m)))
-                    preds.append(preds[-1] + F.lit(_RT_EPS) + sp)
-                out = F.array(*preds)
-            else:
-                mx = F.greatest(*margins)
-                exps = [F.exp(m - mx) for m in margins]
-                tot = exps[0]
-                for e in exps[1:]:
-                    tot = tot + e
-                out = F.array(*[e / tot for e in exps])
-        elif name in ("binary:logistic", "reg:logistic"):
-            out = F.lit(1.0) / (F.lit(1.0) + F.exp(-margins[0]))
-        elif name in ("count:poisson", "reg:gamma", "reg:tweedie"):
-            out = F.exp(margins[0])
-        elif name == "binary:hinge":
-            out = F.when(margins[0] > 0, 1.0).otherwise(0.0).cast("double")
-        else:
-            out = margins[0]
-        return df.withColumn(out_col, out)
+        return df.withColumn(out_col,
+                             prediction_expr(self.params.objective, margins))
 
     def transform(self, df: DataFrame, feature_cols: list[str] | None = None,
                   array_col: str | None = None,
