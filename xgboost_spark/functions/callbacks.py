@@ -31,6 +31,16 @@ class TrainingState:
         return self._make_model()
 
 
+def eval_line(epoch: int, evals_log: dict, i: int = -1) -> str | None:
+    """One evaluation line in the reference EvaluationMonitor byte format
+    (callback.py:545-569): ``[epoch]`` then ``\t{data}-{metric}:{v:.5f}``
+    for the ``i``-th value of every history entry that has one, in
+    insertion order; None when no entry has one."""
+    parts = [f"{d}-{m}:{vals[i]:.5f}" for d, ms in evals_log.items()
+             for m, vals in ms.items() if -len(vals) <= i < len(vals)]
+    return f"[{epoch}]\t" + "\t".join(parts) if parts else None
+
+
 class TrainingCallback:
     def before_training(self, state: TrainingState):
         pass
@@ -86,13 +96,8 @@ class EvaluationMonitor(TrainingCallback):
         from xgboost_spark.config import get_config
         if get_config()["verbosity"] < 1:
             return False
-        parts = []
-        for data, metrics in evals_log.items():
-            for m, vals in metrics.items():
-                if vals:
-                    parts.append(f"{data}-{m}:{vals[-1]:.5f}")
-        if parts:
-            msg = f"[{epoch}]\t" + "\t".join(parts)
+        msg = eval_line(epoch, evals_log)
+        if msg is not None:
             if epoch % self.period == 0 or self.period == 1:
                 print(msg)
                 self._latest = None
@@ -110,12 +115,9 @@ class EarlyStopping(TrainingCallback):
     """Stop after ``rounds`` consecutive non-improving iterations
     (reference callback.py EarlyStopping): watches ``metric_name`` on
     ``data_name`` (defaults: last metric of the last eval set), infers
-    maximize from the reference's startswith list (mape excluded), and
+    maximize with the inline rule's list (`plans.booster._maximize`), and
     with ``save_best`` the returned model keeps only the rounds up to
     the detected best iteration."""
-
-    _MAXIMIZE_METRICS = ("auc", "aucpr", "pre", "pre@", "map", "ndcg",
-                         "auc@", "aucpr@", "map@", "ndcg@")
 
     def __init__(self, rounds: int, maximize: bool | None = None,
                  min_delta: float = 0.0, metric_name: str | None = None,
@@ -161,10 +163,8 @@ class EarlyStopping(TrainingCallback):
             return False
         cur = vals[-1]
         if self.maximize is None:
-            # reference inference: startswith over the maximize list,
-            # with "mape" explicitly excluded (it startswith "map")
-            self.maximize = (metric != "mape" and any(
-                metric.startswith(x) for x in self._MAXIMIZE_METRICS))
+            from xgboost_spark.plans.booster import _maximize
+            self.maximize = _maximize(metric)
         if self.best is None or self._better(cur, self.best, self.maximize):
             self.best = cur
             self.best_iteration = epoch

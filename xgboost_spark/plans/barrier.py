@@ -19,7 +19,12 @@ aggregations.  As DataFrame jobs those cost a scheduler round-trip each
 same sync is a millisecond-scale allreduce.  The DataFrame path remains
 the declarative, oracle-checkable form and the fallback for what needs
 global relational context (Cox partial likelihood, AMS), callbacks and
-custom metrics.
+custom metrics.  `plans/booster._choose_path` is the one place that
+picks between the two (through `supports_barrier`), before any Spark
+job runs.  Both trainers share booster's per-row parse (`parse_rows`),
+DART dropout and normalization (`dart_drop`, `dart_weights`) and
+early-stopping rule (`_early_stop`); each keeps its own margin-update
+loops.
 
 Scale: per-task memory = its partition's quantized matrix (int16) —
 size partitions so each fits (same contract as the reference Spark
@@ -330,11 +335,22 @@ def _leaf_quantile_refresh(comm, tree, Xb, resid, w, alpha, eta, n_hist=2048,
         tree.leaf_value[nid] = eta * (mn + (i + frac) * scale / n_hist)
 
 
-def supports_barrier(p: TrainParams, obj, evals, callbacks, xgb_model,
+def _add_round(m: np.ndarray, round_trees: list[core.Tree], K: int,
+               w: float, Xb: np.ndarray) -> None:
+    """``m[:, k] += w * tree(Xb)`` for each of a round's trees, in order
+    (a round holds K groups of equally many trees)."""
+    nf = len(round_trees) // K
+    for k in range(K):
+        for j in range(nf):
+            m[:, k] += w * core.tree_predict(round_trees[k * nf + j], Xb,
+                                             binned=True)
+
+
+def supports_barrier(p: TrainParams, obj, evals, callbacks,
                      has_qid: bool = False) -> tuple[bool, str]:
+    """``(True, "")`` when this trainer can run the fit, else ``(False,
+    why)``; `plans.booster._choose_path` is its one caller."""
     from xgboost_spark.functions.metrics import barrier_metric_supported
-    if p.tree_method not in ("hist", "approx"):
-        return False, f"tree_method={p.tree_method} is unsupported"
     if p.booster not in ("gbtree", "dart"):
         return False, f"booster={p.booster} uses the DataFrame path"
     if p.booster == "dart" and p.multi_strategy == "multi_output_tree":
@@ -358,7 +374,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 cuts: list[np.ndarray], cat_mask, base_score: float,
                 mono, isets, n_part: int,
                 evals_raw: list[tuple[DataFrame, str]] | None = None,
-                prev_state: dict | None = None,
+                prev_state: dict | None = None, maximize: bool = False,
                 ) -> tuple[list[list[core.Tree]], dict, int | None]:
     """Run the boosting loop in one barrier job.
 
@@ -369,8 +385,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
     reference metric allreduce `src/metric/elementwise_metric.cu`) or,
     for AUC/AUC-PR, gathered per-score tables swept into the exact
     global curve, so early stopping decides identically on every rank.
+    ``maximize`` is the early-stopping direction, resolved on the driver.
 
-    Returns (trees per round, eval history, best_iteration).
+    Returns (trees per round, eval history, best_iteration, tree weights).
     """
     import pyspark.sql.functions as F
     p = params
@@ -477,24 +494,10 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
         # (immutable history); DART re-weights historical trees, so its
         # checkpoint carries a per-round dropout/rescale EVENT LOG and
         # resume replays the exact float-op sequence (same dw expressions,
-        # same order) — bit-identical either way.  multi_output_tree +
-        # adaptive leaves (history refreshed after the margin update) stays
-        # rejected.
+        # same order) — bit-identical either way.  (dart + multi_output_tree
+        # and multi_output_tree + adaptive leaves never reach this trainer.)
         ckpt_path = None
         if p.checkpoint_dir:
-            if (p.booster == "dart"
-                    and K > 1 and p.multi_strategy == "multi_output_tree"):
-                raise ValueError(
-                    "checkpoint_dir: dart resume replays the per-round "
-                    "dropout/rescale event log, which assumes weighted "
-                    "scalar-leaf margin updates; multi_output_tree ignores "
-                    "tree weights and is unsupported")
-            if (K > 1 and p.multi_strategy == "multi_output_tree"
-                    and obj.adaptive_alpha is not None):
-                raise ValueError(
-                    "checkpoint_dir: exact resume needs immutable historical "
-                    "trees; multi_output_tree+custom adaptive leaves are "
-                    "unsupported")
             os.makedirs(p.checkpoint_dir, exist_ok=True)
             ckpt_path = os.path.join(p.checkpoint_dir, "barrier_ckpt.pkl")
         # fingerprint of everything resume-exactness depends on: a stale
@@ -505,11 +508,12 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
             sorted((k, repr(v)) for k, v in vars(p).items()
                    if k != "checkpoint_dir"),
             list(fnames), int(n_part),
-            np.asarray(base_score, dtype=np.float64).tolist(),
+            np.asarray(base_score, dtype=np.float64).tolist(), bool(maximize),
         )).encode()).hexdigest()
 
         from xgboost_spark.functions.metrics import metric_global_np
-        from xgboost_spark.plans.booster import _compute_grads, _maximize
+        from xgboost_spark.plans.booster import (
+            _compute_grads, _early_stop, dart_drop, dart_weights, parse_rows)
 
         prof_path_cfg = os.environ.get("SPARK_GRAFT_PROF")
 
@@ -559,46 +563,12 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                          for c in need_r})
 
                 Fn = len(fnames)
+                st_prev = bc_prev.value if bc_prev is not None else None
 
                 def load_rows(pdf):
                     """(Xb, y, w, q, bounds, margin) for one role's rows."""
-                    nn = len(pdf)
-                    Xb_ = np.empty((nn, Fn), dtype=np.int16)
-                    for i, c in enumerate(fnames):
-                        x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                        Xb_[:, i] = (core.bin_categorical(x, len(cuts_l[i]))
-                                     if cm is not None and cm[i]
-                                     else core.bin_values(x, cuts_l[i]))
-                    bounds_ = None
-                    if has_b:
-                        yl = pdf["label_lower"].to_numpy(dtype=np.float64)
-                        yu = pdf["label_upper"].to_numpy(dtype=np.float64,
-                                                         na_value=np.inf)
-                        bounds_ = (yl, yu)
-                        y_ = (pdf["label"].to_numpy(dtype=np.float64)
-                              if has_y else yl)
-                    else:
-                        y_ = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w else None)
-                    q_ = (pdf["qid"].to_numpy(dtype=np.int64) if has_q else None)
-                    if has_bm:
-                        # base_margin REPLACES base_score (predictor.cc:66)
-                        m_ = np.repeat(pdf["base_margin"]
-                                       .to_numpy(dtype=np.float64)[:, None], K, 1)
-                    else:
-                        m_ = np.full((nn, K), base_score, dtype=np.float64)
-                    if bc_prev is not None:
-                        # training continuation (reference xgb_model,
-                        # training.py:183): previous model's margin, raw-domain
-                        # traversal on this task's rows
-                        st_prev = bc_prev.value
-                        Xr = np.column_stack([
-                            pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                            for c in fnames]) if nn else np.empty((0, Fn))
-                        core.apply_model_margin(m_, st_prev["trees"],
-                                                st_prev["weights"], Xr, False, K)
-                    return Xb_, y_, w_, q_, bounds_, m_
+                    return parse_rows(pdf, fnames, cuts_l, cm, K, base_score,
+                                      st_prev, has_b)[:6]
 
                 role = (full["_role"].to_numpy(dtype=np.int64)
                         if "_role" in full.columns else np.zeros(len(full), np.int64))
@@ -687,20 +657,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                     w_old = ev["w_old"][di]
                                     dw = (w_old * (f_ - 1.0) if is_train_m
                                           else (w_old * f_) * (1.0 - 1.0 / f_))
-                                    nf2 = len(trees[d]) // K
-                                    for k2 in range(K):
-                                        for j in range(nf2):
-                                            mc[:, k2] += dw * core.tree_predict(
-                                                trees[d][k2 * nf2 + j], Xc,
-                                                binned=True)
+                                    _add_round(mc, trees[d], K, dw, Xc)
                             w_r = ev["w_new"] if ev is not None else tree_weights[ri]
-                            ti = 0
-                            for k in range(K):
-                                for _ in range(len(rt) // K):
-                                    mc[:, k] += w_r * \
-                                        core.tree_predict(rt[ti], Xc,
-                                                          binned=True)
-                                    ti += 1
+                            _add_round(mc, rt, K, w_r, Xc)
                     if (is_approx and K == 1 and obj.const_hess
                             and ck.get("approx_bounds") is not None):
                         # rebuild the frozen round-0 coarse binning from
@@ -714,33 +673,12 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                         _AllreduceHistBuilder(
                                             Xb_ca, cuts_ca, nb_ca, comm))
                 for it_round in range(start_round, p.num_boost_round):
-                    # DART dropout (reference gbtree.h:89-123 DropTrees):
-                    # selection draws are deterministic from the shared rng,
-                    # margin corrections are local rows
-                    dropped: list[int] = []
-                    if is_dart and trees:
-                        if not (p.skip_drop > 0.0 and rng.random() < p.skip_drop):
-                            if p.sample_type == "weighted":
-                                wts = np.asarray(tree_weights)
-                                probs = np.minimum(
-                                    p.rate_drop * wts * len(wts)
-                                    / max(wts.sum(), 1e-16), 1.0)
-                                mask = rng.random(len(trees)) < probs
-                            else:
-                                mask = rng.random(len(trees)) < p.rate_drop
-                            if p.one_drop and not mask.any():
-                                mask[rng.integers(0, len(trees))] = True
-                            dropped = [i for i in range(len(trees)) if mask[i]]
-                    if dropped:
-                        m_eff = margin.copy()
-                        for ri in dropped:
-                            nf = len(trees[ri]) // K
-                            for k2 in range(K):
-                                for j in range(nf):
-                                    m_eff[:, k2] -= tree_weights[ri] * core.tree_predict(
-                                        trees[ri][k2 * nf + j], Xb, binned=True)
-                    else:
-                        m_eff = margin
+                    # DART dropout: selection draws are deterministic from
+                    # the shared rng, margin corrections are local rows
+                    dropped = dart_drop(p, rng, tree_weights)
+                    m_eff = margin.copy() if dropped else margin
+                    for ri in dropped:
+                        _add_round(m_eff, trees[ri], K, -tree_weights[ri], Xb)
                     if obj.needs_global_scale:
                         # per-iteration global residual scale (reference
                         # MAE/quantile GlobalSum, regression_obj.cu:655-660 /
@@ -751,8 +689,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         obj.set_scale(comm.allreduce_sum(
                             obj.scale_stats(y, m_sc, w)))
                     is_mvs = (p.subsample < 1.0
-                              and getattr(p, "sampling_method", "uniform")
-                              == "gradient_based")
+                              and p.sampling_method == "gradient_based")
                     _t_sec = time.perf_counter()
                     g, h = _compute_grads(obj, y, m_eff, w, q, seed + it_round,
                                           1.0 if is_mvs else p.subsample, K,
@@ -879,32 +816,16 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                 leaf=(builder.leaf_assignment(t)
                                       if not approx_round else None))
                     # DART normalization (reference normalize_type semantics)
-                    kdrop = len(dropped)
-                    if is_dart and kdrop > 0:
-                        if p.normalize_type == "forest":
-                            w_new = 1.0 / (1.0 + p.eta)
-                            factor = 1.0 / (1.0 + p.eta)
-                        else:
-                            w_new = 1.0 / (kdrop + p.eta)
-                            factor = kdrop / (kdrop + p.eta)
-                        if is_dart:
-                            dart_log.append({
-                                "dropped": list(dropped),
-                                "w_old": [tree_weights[ri] for ri in dropped],
-                                "factor": factor, "w_new": w_new})
-                        for ri in dropped:
-                            dw = tree_weights[ri] * (factor - 1.0)
-                            nf = len(trees[ri]) // K
-                            for k2 in range(K):
-                                for j in range(nf):
-                                    margin[:, k2] += dw * core.tree_predict(
-                                        trees[ri][k2 * nf + j], Xb, binned=True)
-                            tree_weights[ri] *= factor
-                    else:
-                        w_new = 1.0
-                        if is_dart:
-                            dart_log.append({"dropped": [], "w_old": [],
-                                             "factor": 1.0, "w_new": w_new})
+                    w_new, factor = dart_weights(p, len(dropped))
+                    if is_dart:
+                        dart_log.append({
+                            "dropped": list(dropped),
+                            "w_old": [tree_weights[ri] for ri in dropped],
+                            "factor": factor, "w_new": w_new})
+                    for ri in dropped:
+                        _add_round(margin, trees[ri], K,
+                                   tree_weights[ri] * (factor - 1.0), Xb)
+                        tree_weights[ri] *= factor
                     if not is_multi:
                         ti = 0
                         for k in range(K):
@@ -935,22 +856,13 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         if is_multi:
                             me += core.tree_predict(round_trees[0], Xe, binned=True)
                         else:
-                            if is_dart and kdrop > 0:
-                                # dropped trees were re-weighted w_old -> w_old*factor;
-                                # apply the delta (tree_weights[ri] is already new)
-                                for ri in dropped:
-                                    dw = tree_weights[ri] * (1.0 - 1.0 / factor)
-                                    nf = len(trees[ri]) // K
-                                    for k2 in range(K):
-                                        for j in range(nf):
-                                            me[:, k2] += dw * core.tree_predict(
-                                                trees[ri][k2 * nf + j], Xe, binned=True)
-                            ti = 0
-                            for k in range(K):
-                                for _ in range(n_forest):
-                                    me[:, k] += w_new * core.tree_predict(
-                                        round_trees[ti], Xe, binned=True)
-                                    ti += 1
+                            # dropped trees were re-weighted w_old -> w_old*factor;
+                            # apply the delta (tree_weights[ri] is already new)
+                            for ri in dropped:
+                                _add_round(me, trees[ri], K,
+                                           tree_weights[ri] * (1.0 - 1.0 / factor),
+                                           Xe)
+                            _add_round(me, round_trees, K, w_new, Xe)
                         for mname in metric_names:
                             val = metric_global_np(
                                 comm, mname, ye, me, we, bounds=be, obj=obj,
@@ -960,12 +872,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                             last = val
                     _PROF["eval"] += time.perf_counter() - _t_sec
                     if esr and last is not None:
-                        better = (best_metric is None or
-                                  (last > best_metric if _maximize(metric_names[-1])
-                                   else last < best_metric))
-                        if better:
-                            best_metric, best_it = last, it_round
-                        elif it_round - best_it >= esr:
+                        best_metric, best_it, stop = _early_stop(
+                            last, it_round, best_metric, best_it, maximize, esr)
+                        if stop:
                             break
                     if (ckpt_path and comm.rank == 0
                             and (it_round + 1) % max(p.checkpoint_interval, 1) == 0

@@ -1,18 +1,35 @@
 """Distributed boosting driver — the Spark-native `xgb.train`.
 
-Two execution strategies (`TrainParams.exec_mode`):
+`SparkBooster._fit_impl` runs four stages, each timed in
+`FIT_STAGE_TIMES`:
 
-- **barrier** (default via ``auto`` when supported): the whole boosting
-  loop in one `mapInPandas(barrier=True)` job with allreduce
-  histogram sync — see `plans/barrier.py`.  ~100× fewer Spark jobs.
-- **dataframe** (this module's loop): one job per tree level +
-  one margin pass per round; fully declarative and oracle-checkable;
-  required for what `supports_barrier` refuses (e.g. cox, the ``ams``
-  metric, callbacks, custom metrics).  ``auto`` logs the reason at
-  INFO on the ``xgboost_spark`` logger.
+1. **prep** — parameter validation, `_choose_path`, then
+   `assemble_features` for the training frame and, once, for every eval
+   set.  `_choose_path` is the one place that picks the execution path
+   or refuses the fit, so a refused fit runs no Spark job;
+2. **cuts** — one sketch scan that also carries the fused intercept,
+   the row count and the label/weight validation counts;
+3. **base_score** — the intercept, when the sketch could not carry it;
+4. **loop** — the trainer the path names:
 
-Lifecycle mirrors the reference (`src/learner.cc:1114-1139`,
-`src/gbm/gbtree.cc:182-275`) re-expressed for Spark's execution model:
+   - **barrier** (default via ``auto`` when supported): the whole
+     boosting loop in one `mapInPandas(barrier=True)` job with
+     allreduce histogram sync — `plans/barrier.py` `fit_barrier`.
+     ~100× fewer Spark jobs.
+   - **dataframe** (`SparkBooster._fit_dataframe`): one job per tree
+     level + one margin pass per round; fully declarative and
+     oracle-checkable; required for what `supports_barrier` refuses
+     (e.g. cox, the ``ams`` metric, callbacks, custom metrics).
+     ``auto`` logs the reason at INFO on the ``xgboost_spark`` logger.
+
+The two trainers share the per-row parse (`parse_rows`), the DART
+dropout draw and normalization (`dart_drop`, `dart_weights`), the
+early-stopping rule (`_early_stop`, direction `_maximize`) and the
+verbose line format (`functions/callbacks.eval_line`).
+
+The DataFrame trainer's lifecycle mirrors the reference
+(`src/learner.cc:1114-1139`, `src/gbm/gbtree.cc:182-275`) re-expressed
+for Spark's execution model:
 
 - the quantized matrix lives in a cached DataFrame that is NEVER
   mutated during a tree: rows are routed to nodes by traversing the
@@ -47,6 +64,7 @@ from pyspark.sql import functions as F
 from xgboost_spark import core
 from xgboost_spark.config import TrainParams
 from xgboost_spark.functions import metrics as metrics_mod
+from xgboost_spark.functions.callbacks import TrainingState, eval_line
 from xgboost_spark.functions.objectives import get_objective
 from xgboost_spark.operators.histogram import SparkHistBuilder
 from xgboost_spark.operators.sketch import approx_cuts
@@ -102,13 +120,161 @@ def _compute_grads(obj, y, m, w, q, seed, subsample, K, bounds=None):
     return g, h
 
 
+def parse_rows(pdf: pd.DataFrame, fnames: list[str], cuts, cat_mask, K: int,
+               base_score, prev_state: dict | None, has_b: bool,
+               keep_raw: bool = False):
+    """The per-row parse every tree trainer shares (DataFrame training
+    rows, DataFrame eval rows, each barrier role):
+    ``(Xb, y, w, q, bounds, margin, Xraw)``.
+
+    Features are binned on the training cuts (a categorical code is its
+    own bin).  ``w``/``q`` are None when the frame has no weight/qid
+    column; ``bounds`` is ``(label_lower, label_upper)`` for bounded
+    objectives, whose label defaults to the lower bound.  The start
+    margin is ``base_margin`` when present (it REPLACES base_score,
+    predictor.cc:66), plus the continuation model's output (reference
+    ``xgb_model``, training.py:183).  ``Xraw`` is the raw float matrix
+    when ``keep_raw``, else None."""
+    n, Fn = len(pdf), len(fnames)
+    Xb = np.empty((n, Fn), dtype=np.int16)
+    Xr = np.empty((n, Fn)) if keep_raw or prev_state is not None else None
+    for i, c in enumerate(fnames):
+        x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
+        Xb[:, i] = (core.bin_categorical(x, len(cuts[i]))
+                    if cat_mask is not None and cat_mask[i]
+                    else core.bin_values(x, cuts[i]))
+        if Xr is not None:
+            Xr[:, i] = x
+    bounds = None
+    if has_b:
+        yl = pdf["label_lower"].to_numpy(dtype=np.float64)
+        yu = pdf["label_upper"].to_numpy(dtype=np.float64, na_value=np.inf)
+        bounds = (yl, yu)
+        y = (pdf["label"].to_numpy(dtype=np.float64)
+             if "label" in pdf.columns else yl)
+    else:
+        y = pdf["label"].to_numpy(dtype=np.float64)
+    w = (pdf["weight"].to_numpy(dtype=np.float64)
+         if "weight" in pdf.columns else None)
+    q = pdf["qid"].to_numpy(dtype=np.int64) if "qid" in pdf.columns else None
+    if "base_margin" in pdf.columns:
+        m = np.repeat(pdf["base_margin"].to_numpy(dtype=np.float64)[:, None],
+                      K, 1)
+    else:
+        m = np.full((n, K), base_score, dtype=np.float64)
+    if prev_state is not None:
+        core.apply_model_margin(m, prev_state["trees"], prev_state["weights"],
+                                Xr, False, K)
+    return Xb, y, w, q, bounds, m, (Xr if keep_raw else None)
+
+
+def dart_drop(p, rng, tree_weights: list[float]) -> list[int]:
+    """DART dropout selection (reference gbtree.h:89-123 DropTrees): the
+    indices of the rounds dropped this round.  Every draw comes from
+    the fit's shared ``rng``, in a fixed order, so every barrier rank
+    drops the same rounds."""
+    n = len(tree_weights)
+    if p.booster != "dart" or not n or (p.skip_drop > 0.0
+                                        and rng.random() < p.skip_drop):
+        return []
+    if p.sample_type == "weighted":
+        wts = np.asarray(tree_weights)
+        probs = np.minimum(
+            p.rate_drop * wts * len(wts) / max(wts.sum(), 1e-16), 1.0)
+        mask = rng.random(n) < probs
+    else:
+        mask = rng.random(n) < p.rate_drop
+    if p.one_drop and not mask.any():
+        mask[rng.integers(0, n)] = True
+    return [i for i in range(n) if mask[i]]
+
+
+def dart_weights(p, kdrop: int) -> tuple[float, float]:
+    """DART normalization (reference normalize_type): ``(w_new,
+    factor)`` — the new round's tree weight and the factor each dropped
+    round's weight is scaled by.  tree: 1/(k+lr) and k/(k+lr); forest:
+    1/(1+lr) for both; (1, 1) when nothing was dropped."""
+    if kdrop == 0:
+        return 1.0, 1.0
+    if p.normalize_type == "forest":
+        return 1.0 / (1.0 + p.eta), 1.0 / (1.0 + p.eta)
+    return 1.0 / (kdrop + p.eta), kdrop / (kdrop + p.eta)
+
+
+def _early_stop(val: float, epoch: int, best_metric, best_it,
+                maximize: bool, rounds: int):
+    """One ``early_stopping_rounds`` step (reference EarlyStopping,
+    callback.py:311), shared by both trainers: returns ``(best_metric,
+    best_it, stop)``."""
+    if best_metric is None or (val > best_metric if maximize
+                               else val < best_metric):
+        return val, epoch, False
+    return best_metric, best_it, epoch - best_it >= rounds
+
+
+def _choose_path(p, obj, evals, callbacks, custom_metric,
+                 has_qid: bool) -> tuple[str, str]:
+    """The ONE place a fit's execution path is chosen, or the fit
+    refused, before any Spark job runs: ``("barrier", "")`` for the
+    one-job allreduce trainer (plans/barrier.py), else ``("dataframe",
+    why)``.  ``exec_mode=barrier`` with a combination the barrier
+    trainer refuses raises ValueError; a combination only the barrier
+    trainer implements raises NotImplementedError once the DataFrame
+    path is forced."""
+    if p.exec_mode not in ("auto", "barrier"):
+        why = f"exec_mode={p.exec_mode}"
+    elif custom_metric is not None:
+        why = "custom_metric runs on the DataFrame path"
+    else:
+        from xgboost_spark.plans.barrier import supports_barrier
+        ok, why = supports_barrier(p, obj, evals, callbacks, has_qid=has_qid)
+        if ok:
+            return "barrier", ""
+    if p.exec_mode == "barrier":
+        raise ValueError(f"exec_mode=barrier unsupported here: {why}")
+    if p.exec_mode == "auto":
+        _log.info("fit runs the DataFrame path: %s", why)
+    if p.checkpoint_dir:
+        # fault tolerance lives on the barrier path only; a user
+        # relying on it must learn it is inactive, not find out at
+        # the first mid-fit failure
+        import warnings
+        warnings.warn(
+            "checkpoint_dir is set but this fit runs the DataFrame "
+            f"execution path ({why}); barrier checkpoint/resume "
+            "fault tolerance is inactive for this fit",
+            RuntimeWarning, stacklevel=4)
+    if getattr(obj, "unbiased", False):
+        raise NotImplementedError(
+            "lambdarank_unbiased trains on the barrier path (the t+/t- "
+            "position-bias state is allreduced across rounds inside one "
+            f"job; exec_mode=auto|barrier); blocked because: {why}")
+    if p.subsample < 1.0 and p.sampling_method == "gradient_based":
+        raise NotImplementedError(
+            "sampling_method='gradient_based' (MVS) trains on the "
+            "barrier path — its sampling threshold is a global "
+            "statistic allreduced per round (exec_mode=auto|barrier); "
+            f"blocked because: {why}")
+    if p.tree_method == "approx" and (p.n_groups > 1 or p.booster == "dart"
+                                      or obj.adaptive_alpha is not None):
+        raise NotImplementedError(
+            "tree_method=approx with multi-output, dart, or adaptive "
+            "leaves trains on the barrier path (exec_mode=auto|barrier); "
+            f"blocked because: {why}")
+    if p.n_groups > 1 and p.multi_strategy == "multi_output_tree":
+        raise NotImplementedError(
+            "multi_output_tree trains on the barrier path "
+            f"(exec_mode=auto|barrier); blocked because: {why}")
+    return "dataframe", why
+
+
 def meta_checks(raw: DataFrame, obj, objective_name: str) -> list:
     """(name, bad_row_bool_col, message) triples for the reference's
     MetaInfo::Validate + per-objective CheckLabel (src/data/data.cc
     "Label contains NaN/Inf", regression_loss.h label-range checks).
     Consumed two ways: a standalone column-pruned aggregation
     (:func:`validate_meta` — gblinear and pinned-cuts fits) or fused
-    onto the cuts-sketch scan as extra sums (_fit_impl — saves one full
+    onto the cuts-sketch scan as extra sums (_cuts_stage — saves one full
     corpus pass per fit; the checks themselves are identical)."""
     checks = []
     if "label" in raw.columns:
@@ -162,6 +328,37 @@ def validate_meta(raw: DataFrame, obj, objective_name: str) -> None:
     raise_meta_violations(checks, {name: row[name] for name, _b, _m in checks})
 
 
+def _feature_index(cname, feat_names_out: list[str], what: str) -> int:
+    """Position of a feature given by name or by index."""
+    if isinstance(cname, str) and cname in feat_names_out:
+        return feat_names_out.index(cname)
+    if isinstance(cname, int) or str(cname).isdigit():
+        return int(cname)
+    raise ValueError(f"{what}: unknown feature {cname!r}; "
+                     f"features are {feat_names_out}")
+
+
+def _newton_stump(raw: DataFrame, obj, h_floor: float) -> float:
+    """One distributed Newton step from margin 0 (reference FitIntercept,
+    init_estimation.cc:8-27): ``-G / max(H, h_floor)`` over the
+    objective's gradients summed across every partition."""
+    has_w = "weight" in raw.columns
+
+    def gh_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        G = H = 0.0
+        for pdf in it:
+            yv = pdf["label"].to_numpy(dtype=np.float64)
+            w_ = (pdf["weight"].to_numpy(dtype=np.float64) if has_w else None)
+            g, h = obj.grad_hess(yv, np.zeros(len(pdf)), w_)
+            G += g.sum()
+            H += h.sum()
+        yield pd.DataFrame({"G": [G], "H": [H]})
+
+    r = (raw.mapInPandas(gh_fn, schema="G double, H double")
+         .agg(F.sum("G").alias("G"), F.sum("H").alias("H")).first())
+    return float(-r["G"] / max(r["H"], h_floor))
+
+
 class SparkBooster:
     """Train driver.  Usage::
 
@@ -193,9 +390,6 @@ class SparkBooster:
             parts += [f"h{k} double" for k in range(K)]
         return ", ".join(parts)
 
-    def _validate_meta(self, raw: DataFrame) -> None:
-        validate_meta(raw, self.obj, self.params.objective)
-
     # expectileerror is NOT fusable: its InitEstimation is mean + a
     # per-alpha Newton step (regression_obj.cu:409-455), which needs a
     # second pass over (mean - y) — see _base_score
@@ -205,7 +399,7 @@ class SparkBooster:
 
     def _base_score_fuse_aggs(self, raw: DataFrame):
         """Fused-sum specs for the mean-family intercept, to ride the
-        cuts-sketch scan (see _fit_impl; approx_cuts ``extra_sums``);
+        cuts-sketch scan (see _cuts_stage; approx_cuts ``extra_sums``);
         None when the objective needs its own pass (AFT/custom/median)
         or has a fixed intercept."""
         from xgboost_spark.functions.objectives import CustomObjective
@@ -285,23 +479,7 @@ class SparkBooster:
             # Newton stump from the gradients at margin 0, then the
             # objective's own PredTransform (hinge -> 0/1 indicator;
             # identity for the others, and ProbToMargin is identity)
-            obj0 = self.obj
-            has_w0 = "weight" in raw.columns
-
-            def ghz_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                G = H = 0.0
-                for pdf in it:
-                    yv = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
-                          if has_w0 else None)
-                    g, h = obj0.grad_hess(yv, np.zeros(len(pdf)), w_)
-                    G += g.sum()
-                    H += h.sum()
-                yield pd.DataFrame({"G": [G], "H": [H]})
-
-            r = (raw.mapInPandas(ghz_fn, schema="G double, H double")
-                 .agg(F.sum("G").alias("G"), F.sum("H").alias("H")).first())
-            w0 = float(-r["G"] / max(r["H"], 1e-6))
+            w0 = _newton_stump(raw, self.obj, 1e-6)
             if name == "binary:hinge":
                 return 1.0 if w0 > 0 else 0.0
             return w0
@@ -310,22 +488,7 @@ class SparkBooster:
             if self.obj._bs is not None:
                 return float(self.obj._bs)
             # generic distributed Newton stump on the custom gradient
-            obj = self.obj
-            has_w = "weight" in raw.columns
-
-            def gh0_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                G = H = 0.0
-                for pdf in it:
-                    yv = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64) if has_w else None)
-                    g, h = obj.grad_hess(yv, np.zeros(len(pdf)), w_)
-                    G += g.sum()
-                    H += h.sum()
-                yield pd.DataFrame({"G": [G], "H": [H]})
-
-            r = (raw.mapInPandas(gh0_fn, schema="G double, H double")
-                 .agg(F.sum("G").alias("G"), F.sum("H").alias("H")).first())
-            return float(-r["G"] / max(r["H"], 1e-16))
+            return _newton_stump(raw, self.obj, 1e-16)
         w = F.col("weight") if "weight" in raw.columns else F.lit(1.0)
         y = F.col("label")
         if name == "reg:expectileerror":
@@ -487,13 +650,132 @@ class SparkBooster:
             custom_metric=None, maximize: bool | None = None,
             missing: float | None = None,
             verbose: bool = False) -> GBDTModel:
-        """``custom_metric``: callable ``fn(eval_df) -> (name, value)``
+        """Four stages, each timed in `FIT_STAGE_TIMES`: prep
+        (validation, `_choose_path`, feature assembly of the training
+        frame and of every eval set), cuts, base score, then the one
+        trainer the path names — `fit_barrier` or `_fit_dataframe`.
+
+        ``custom_metric``: callable ``fn(eval_df) -> (name, value)``
         over the internal eval frame (columns ``y``, ``w``, ``m0..mK-1``
         [, ``q``]) — the reference's ``feval`` surface (`training.py:53`
         ``custom_metric``).  ``maximize`` overrides the early-stopping
         direction (else inferred from the last metric's name)."""
         _t0 = time.monotonic()
         FIT_STAGE_TIMES.clear()
+        self._check_fit(evals, custom_metric, xgb_model,
+                        bool(label_lower_col and label_upper_col))
+        p = self.params
+        obj = self.obj
+        has_b = obj.needs_bounds
+        has_q = qid_col is not None
+        path, why = _choose_path(p, obj, evals, callbacks, custom_metric, has_q)
+
+        def assemble(frame: DataFrame):
+            return assemble_features(
+                frame, feature_cols=feature_cols, array_col=array_col,
+                label_col=(label_col if (label_col in frame.columns
+                                         or not has_b) else None),
+                weight_col=weight_col, base_margin_col=base_margin_col,
+                qid_col=qid_col, label_lower_col=label_lower_col,
+                label_upper_col=label_upper_col, missing=missing)
+
+        raw, fnames = assemble(df)
+        # eval sets share the training cuts (QuantileDMatrix ref= semantics,
+        # reference core.py:1434/:1473) and the training missing value
+        evals_raw = [(assemble(ev_df)[0], ev_name)
+                     for ev_df, ev_name in (evals or [])]
+        feat_names_out = feature_cols if (feature_cols and not array_col) else fnames
+        cat_mask, mono, isets = self._feature_meta(feat_names_out,
+                                                   categorical_features)
+        FIT_STAGE_TIMES["prep"] = round(time.monotonic() - _t0, 3)
+
+        _t1 = time.monotonic()
+        n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        # Measured and rejected (round-14 optimization pass): round-robin
+        # repartition + per-fit persist of a partition-starved input.
+        # The single-row-group shuffle map is one core's work wherever it
+        # runs — caching only MOVES it from the training job into the
+        # sketch job (interleaved A/B at sf0.1: cuts 1.28->2.18 s, loop
+        # 3.80->3.01 s, net ~zero) while adding cache-memory pressure at
+        # scale, so the two-scan design stays.
+        if has_q:
+            raw = raw.repartition(n_part, "qid")   # co-locate ranking groups
+            self._set_group_weight_norm(raw)
+        # training continuation (reference training.py:183 xgb_model):
+        # reuse the previous model's cuts and start margins at its output
+        prev_state = None
+        if xgb_model is not None:
+            if cuts is None and xgb_model.cuts is not None:
+                cuts = xgb_model.cuts
+            prev_state = xgb_model._broadcastable()
+        cuts, fused_bs, n_rows = self._cuts_stage(
+            raw, fnames, cuts, cat_mask, path, fuse_bs=xgb_model is None)
+        FIT_STAGE_TIMES["cuts"] = round(time.monotonic() - _t1, 3)
+
+        _t1 = time.monotonic()
+        base_score = (xgb_model.base_score if xgb_model is not None
+                      else (fused_bs if fused_bs is not None
+                            else self._base_score(raw)))
+        FIT_STAGE_TIMES["base_score"] = round(time.monotonic() - _t1, 3)
+
+        _t1 = time.monotonic()
+        if path == "dataframe":
+            model = self._fit_dataframe(
+                raw, evals_raw, fnames, cuts, cat_mask, base_score, mono,
+                isets, n_part, prev_state, xgb_model, feat_names_out,
+                callbacks, custom_metric, maximize, verbose)
+            FIT_STAGE_TIMES["loop"] = round(time.monotonic() - _t1, 3)
+            return model
+        # the whole boosting loop in ONE barrier job with in-job
+        # allreduce histogram sync (plans/barrier.py; the reference's
+        # own Spark wrapper architecture, spark/core.py:1128)
+        from xgboost_spark.plans.barrier import fit_barrier
+        # Rank-count sizing (round-14 optimization pass): every tree
+        # level is a full-mesh synchronization across all ranks, so past
+        # the point where per-rank histogram compute (~rows_per_rank x
+        # ~0.1 us/row/level) stops covering the per-level collective
+        # latency (~10 ms at p=16-32), extra ranks only enlarge the
+        # straggler pool.  Interleaved A/B, sf0.1 fit100: p=32 loop
+        # 10.5 s vs p=16 7.7 s vs p=12 8.1 s.  Derive ranks from the row
+        # count (known free from the sketch scan) at ROWS_PER_RANK — the
+        # measured compute/latency crossover — capped at the core
+        # budget; any real corpus exceeds cores x 40k rows, so at scale
+        # this is exactly the old all-cores behavior.  Explicit
+        # num_partitions and the qid co-location path keep their
+        # contract; fits whose cuts arrive pre-built (continuation) have
+        # no count and keep the old sizing.
+        if num_partitions is None and not has_q and n_rows:
+            n_part = min(n_part, max(1, -(-n_rows // ROWS_PER_RANK)))
+        # the early-stopping direction is resolved here, once: every
+        # rank of the job reads the same value
+        metric_names = _effective_metrics(p, obj)
+        if maximize is None and metric_names:
+            maximize = _maximize(metric_names[-1])
+        trees, history, best_it, tree_weights = fit_barrier(
+            p, obj, raw, fnames, cuts, cat_mask, base_score, mono, isets,
+            n_part, evals_raw=evals_raw, prev_state=prev_state,
+            maximize=bool(maximize))
+        FIT_STAGE_TIMES["loop"] = round(time.monotonic() - _t1, 3)
+        if verbose:
+            # the barrier job returns the whole eval history at once:
+            # replay it in the bytes the DataFrame path prints per round
+            n_ep = max((len(v) for ms in history.values()
+                        for v in ms.values()), default=0)
+            for ep in range(n_ep):
+                line = eval_line(ep, history, ep)
+                if line is not None:
+                    print(line)
+        return self._assemble_model(
+            trees, tree_weights, xgb_model, base_score, feat_names_out,
+            cuts, best_it, history, p.booster == "dart")
+
+    def _check_fit(self, evals, custom_metric, xgb_model,
+                   has_bound_cols: bool) -> None:
+        """Driver-only validation of a fit's arguments (no Spark job);
+        also resets the objective's per-fit state."""
+        p = self.params
+        K = p.n_groups
+        obj = self.obj
         for _, _ev_name in (evals or []):
             # reference CallbackContainer.after_iteration asserts this
             # (callback.py:263): history keys are parsed by splitting the
@@ -501,15 +783,15 @@ class SparkBooster:
             if "-" in _ev_name:
                 raise ValueError(
                     f"Dataset name should not contain `-`: {_ev_name!r}")
-        if self.params.early_stopping_rounds and not evals:
+        if p.early_stopping_rounds and not evals:
             # reference EarlyStopping.after_iteration (callback.py:449):
             # silent no-op stopping would be a footgun, so fail up front
             raise ValueError(
                 "Must have at least 1 validation dataset for early "
                 "stopping.")
-        if (self.params.early_stopping_rounds and evals
-                and not self.params.eval_metric
-                and self.params.disable_default_eval_metric
+        if (p.early_stopping_rounds and evals
+                and not p.eval_metric
+                and p.disable_default_eval_metric
                 and custom_metric is None):
             # same footgun through the r14 disable_default_eval_metric
             # path: zero metrics -> an empty evals_log -> the reference
@@ -518,17 +800,9 @@ class SparkBooster:
                 "early stopping requires at least one metric: "
                 "eval_metric is empty, disable_default_eval_metric is "
                 "set, and no custom_metric was given")
-        p = self.params
-        K = p.n_groups
-        spark = df.sparkSession
-        sc = spark.sparkContext
-        obj = self.obj
         obj.set_scale(None)      # never reuse a previous fit's scale
         if hasattr(obj, "weight_norm"):
-            obj.weight_norm = 1.0    # per-fit; recomputed below when qid+weights
-        has_b = obj.needs_bounds
-        is_cox = obj.needs_global_sort
-        is_approx = p.tree_method == "approx"
+            obj.weight_norm = 1.0    # per-fit; see _set_group_weight_norm
         if p.tree_method not in ("hist", "approx"):
             raise ValueError(f"unsupported tree_method {p.tree_method!r} "
                              "(exact greedy is not distributed; use hist)")
@@ -536,30 +810,16 @@ class SparkBooster:
             raise NotImplementedError(
                 "custom adaptive-leaf objectives (adaptive_alpha set) need "
                 "scalar leaves — use multi_strategy='one_output_per_tree'")
-        if is_approx and p.multi_strategy == "multi_output_tree" and K > 1:
+        if (p.tree_method == "approx"
+                and p.multi_strategy == "multi_output_tree" and K > 1):
             # reference: CHECK(!p_tree->IsMultiTarget()) << "approx" <<
             # MTNotImplemented() (updater_approx.cc:166)
             raise NotImplementedError(
                 "approx is not yet implemented for multi-target trees — "
                 "use tree_method='hist' or "
                 "multi_strategy='one_output_per_tree'")
-        if has_b and not (label_lower_col and label_upper_col):
+        if obj.needs_bounds and not has_bound_cols:
             raise ValueError(f"{p.objective} needs label_lower_col and label_upper_col")
-        eff_label = label_col if (label_col in df.columns or not has_b) else None
-        raw, fnames = assemble_features(
-            df, feature_cols=feature_cols, array_col=array_col, label_col=eff_label,
-            weight_col=weight_col, base_margin_col=base_margin_col, qid_col=qid_col,
-            label_lower_col=label_lower_col, label_upper_col=label_upper_col,
-            missing=missing,
-        )
-        Fn = len(fnames)
-        # label/weight/bounds validation (reference MetaInfo::Validate):
-        # when a cuts sketch is about to scan the corpus anyway, the
-        # bad-row counts ride THAT scan as fused sums (round-14
-        # optimization — the standalone column-pruned aggregation was a
-        # whole extra corpus pass per fit); fits with pre-built cuts
-        # (continuation, pinned-cuts oracles) keep the standalone pass
-        vm_checks = meta_checks(raw, self.obj, self.params.objective)
         # fail a vector-alpha eval metric that can't match this model's
         # output width BEFORE training starts (the kernels raise too,
         # but mid-barrier-job — reference CHECKs this upfront)
@@ -572,316 +832,160 @@ class SparkBooster:
                     raise ValueError(
                         f"eval_metric {mname!r} has {n_alphas} alphas but "
                         f"the model produces {K} output group(s)")
-        FIT_STAGE_TIMES["prep"] = round(time.monotonic() - _t0, 3)
-        _t1 = time.monotonic()
-        feat_names_out = feature_cols if (feature_cols and not array_col) else fnames
-        if p.feature_weights is not None:
-            if isinstance(p.feature_weights, dict):
-                fwl = [float(p.feature_weights.get(c, 1.0)) for c in feat_names_out]
-            else:
-                fwl = [float(v) for v in p.feature_weights]
-            if len(fwl) != Fn:
-                raise ValueError(
-                    f"feature_weights: {len(fwl)} weights for {Fn} features")
-            p.feature_weights = fwl      # normalized; grow_tree reads it
-        fw = (np.asarray(p.feature_weights, dtype=np.float64)
-              if p.feature_weights is not None else None)
-        has_q = qid_col is not None
-        n_part = num_partitions or sc.defaultParallelism
-        # Measured and rejected (round-14 optimization pass): round-robin
-        # repartition + per-fit persist of a partition-starved input.
-        # The single-row-group shuffle map is one core's work wherever it
-        # runs — caching only MOVES it from the training job into the
-        # sketch job (interleaved A/B at sf0.1: cuts 1.28->2.18 s, loop
-        # 3.80->3.01 s, net ~zero) while adding cache-memory pressure at
-        # scale, so the two-scan design stays.
-        if has_q:
-            raw = raw.repartition(n_part, "qid")   # co-locate ranking groups
-            if hasattr(obj, "weight_norm"):
-                # group-weight normalization n_groups / sum(w_group)
-                # (ranking_utils.cc:37-44, applied lambdarank_obj.cc:
-                # 245-249 as gpair * w * w_norm): computed ONCE per fit
-                # — weights are immutable during training — as a tiny
-                # two-level agg (per-group first() then a global
-                # count/sum), global across all workers.  Unweighted
-                # data stays at exactly 1.0 (sum w_group == n_groups).
-                if "weight" in raw.columns:
-                    # the same job also validates the ranking-weight
-                    # contract: the reference sizes info.weights_ at
-                    # n_groups (rank_metric.cc:295-296 CHECK_EQ +
-                    # error::GroupWeight) — the per-row equivalent is
-                    # weights CONSTANT within each group
-                    r_wn = (raw.groupBy("qid")
-                            .agg(F.first("weight").alias("w"),
-                                 (F.max("weight") - F.min("weight"))
-                                 .alias("spread"))
-                            .agg(F.count("*").alias("n"),
-                                 F.sum("w").alias("s"),
-                                 F.max("spread").alias("mx")).first())
-                    if r_wn is not None and float(r_wn["mx"] or 0.0) > 0.0:
-                        raise ValueError(
-                            "ranking weights must be per-GROUP: the "
-                            "weight column varies within a qid group "
-                            "(the reference sizes group weights at "
-                            "n_groups — rank_metric.cc:295)")
-                    if r_wn is not None and float(r_wn["s"] or 0.0) > 0.0:
-                        obj.weight_norm = float(r_wn["n"]) / float(r_wn["s"])
-        # training continuation (reference training.py:183 xgb_model):
-        # reuse the previous model's cuts and start margins at its output
-        prev_state = None
-        if xgb_model is not None:
-            if getattr(xgb_model, "base_score_vec", None) is not None:
-                raise NotImplementedError(
-                    "training continuation from a vector-intercept model "
-                    "is unsupported; serve it with transform() instead")
-            if cuts is None and xgb_model.cuts is not None:
-                cuts = xgb_model.cuts
-            prev_state = xgb_model._broadcastable()
-        # categorical features: ordinal codes are the bins; cuts become
-        # identity ranges sized by the observed max code
-        cat_mask = None
-        if categorical_features:
-            cat_mask = np.zeros(Fn, dtype=bool)
-            cat_idx = []
-            for cname in categorical_features:
-                if isinstance(cname, str) and cname in feat_names_out:
-                    idx = feat_names_out.index(cname)
-                elif isinstance(cname, int) or str(cname).isdigit():
-                    idx = int(cname)
-                else:
-                    raise ValueError(
-                        f"categorical_features: unknown feature {cname!r}; "
-                        f"features are {feat_names_out}")
-                cat_mask[idx] = True
-                cat_idx.append(idx)
-        # the ONE path decision of this fit: the sketch resolution below
-        # and the dispatch after it read the same (ok, why)
-        if p.exec_mode not in ("auto", "barrier"):
-            barrier_eligible, why = False, f"exec_mode={p.exec_mode}"
-        elif custom_metric is not None:
-            barrier_eligible, why = False, \
-                "custom_metric runs on the DataFrame path"
-        else:
-            from xgboost_spark.plans.barrier import supports_barrier
-            barrier_eligible, why = supports_barrier(
-                p, obj, evals, callbacks, xgb_model, has_qid=has_q)
-        fused_bs = None
-        n_rows = None       # known only when the sketch scan runs below
+        if (xgb_model is not None
+                and getattr(xgb_model, "base_score_vec", None) is not None):
+            raise NotImplementedError(
+                "training continuation from a vector-intercept model "
+                "is unsupported; serve it with transform() instead")
+
+    def _set_group_weight_norm(self, raw: DataFrame) -> None:
+        """Ranking group-weight normalization n_groups / sum(w_group)
+        (ranking_utils.cc:37-44, applied lambdarank_obj.cc:245-249 as
+        gpair * w * w_norm): computed ONCE per fit — weights are
+        immutable during training — as a tiny two-level agg (per-group
+        first() then a global count/sum), global across all workers.
+        Unweighted data stays at exactly 1.0 (sum w_group == n_groups)."""
+        obj = self.obj
+        if not hasattr(obj, "weight_norm") or "weight" not in raw.columns:
+            return
+        # the same job also validates the ranking-weight contract: the
+        # reference sizes info.weights_ at n_groups (rank_metric.cc:
+        # 295-296 CHECK_EQ + error::GroupWeight) — the per-row
+        # equivalent is weights CONSTANT within each group
+        r_wn = (raw.groupBy("qid")
+                .agg(F.first("weight").alias("w"),
+                     (F.max("weight") - F.min("weight")).alias("spread"))
+                .agg(F.count("*").alias("n"), F.sum("w").alias("s"),
+                     F.max("spread").alias("mx")).first())
+        if r_wn is not None and float(r_wn["mx"] or 0.0) > 0.0:
+            raise ValueError(
+                "ranking weights must be per-GROUP: the "
+                "weight column varies within a qid group "
+                "(the reference sizes group weights at "
+                "n_groups — rank_metric.cc:295)")
+        if r_wn is not None and float(r_wn["s"] or 0.0) > 0.0:
+            obj.weight_norm = float(r_wn["n"]) / float(r_wn["s"])
+
+    def _cuts_stage(self, raw: DataFrame, fnames: list[str], cuts, cat_mask,
+                    path: str, fuse_bs: bool):
+        """``(cuts, fused base score or None, row count or None)``.
+
+        Without pre-built cuts ONE sketch scan produces the cuts and, as
+        fused sums on the same pass, the mean-family intercept (when
+        ``fuse_bs``), the exact row count (it sizes the barrier rank
+        count) and the label/weight/bounds bad-row counts (reference
+        MetaInfo::Validate; the standalone column-pruned aggregation
+        was a whole extra corpus pass per fit).  Pre-built cuts
+        (continuation, pinned-cuts fits) keep the standalone validation
+        pass.  Categorical features get identity cuts sized by their
+        largest observed code."""
+        p = self.params
+        fused_bs = n_rows = None
         if cuts is None:
             sketch_bins = p.max_bin
-            if is_approx and barrier_eligible:
+            if p.tree_method == "approx" and path == "barrier":
                 # barrier approx pre-bins at 4x resolution; per-round
                 # hessian-weighted re-sketch merges fine bins in-job
                 # (plans/barrier.py _approx_rebin)
                 sketch_bins = min(4 * p.max_bin, 2048)
-            # the mean-family intercept is a plain agg over the same
-            # frame — ride the sketch job so cuts + base score cost ONE
-            # scan instead of two (fixed per-fit latency at any scale)
             bs_aggs = (self._base_score_fuse_aggs(raw)
-                       if (p.base_score is None and xgb_model is None) else None)
-            # an exact row count rides the same scan (one more fused
-            # sum) — it sizes the barrier rank count below for free
-            cnt_spec = [("_n_rows_", None, None)]
-            # ... and so do the meta-validation bad-row counts (each an
-            # 0/1 flag column summed in the same pass)
+                       if (p.base_score is None and fuse_bs) else None)
+            vm_checks = meta_checks(raw, self.obj, p.objective)
             vm_src = raw
             vm_specs = []
             for name, bad, _msg in vm_checks:
-                vm_src = vm_src.withColumn(f"_vm_{name}",
-                                           bad.cast("double"))
+                # each check is a 0/1 flag column summed in the same pass
+                vm_src = vm_src.withColumn(f"_vm_{name}", bad.cast("double"))
                 vm_specs.append((f"_vm_{name}", f"_vm_{name}", None))
-            cuts, _bs_row = approx_cuts(
+            cuts, row = approx_cuts(
                 vm_src, fnames, sketch_bins,
-                extra_sums=(bs_aggs or []) + cnt_spec + vm_specs)
+                extra_sums=(bs_aggs or []) + [("_n_rows_", None, None)]
+                + vm_specs)
             raise_meta_violations(
-                vm_checks, {name: _bs_row.get(f"_vm_{name}")
+                vm_checks, {name: row.get(f"_vm_{name}")
                             for name, _b, _m in vm_checks})
             if bs_aggs:
-                fused_bs = self._base_score_from_fused(_bs_row)
-            _nr = _bs_row.get("_n_rows_")
-            n_rows = int(_nr) if _nr is not None else None
+                fused_bs = self._base_score_from_fused(row)
+            if row.get("_n_rows_") is not None:
+                n_rows = int(row["_n_rows_"])
         else:
-            # pre-built cuts (continuation / pinned-cuts fits): no
-            # sketch scan to ride, keep the standalone validation pass
-            self._validate_meta(raw)
-        if cat_mask is not None and cuts is not None:
-            maxes = raw.agg(*[F.max(fnames[i]).alias(f"m{i}") for i in cat_idx]).first()
+            validate_meta(raw, self.obj, p.objective)
+        if cat_mask is not None:
+            cat_idx = list(np.nonzero(cat_mask)[0])
+            maxes = raw.agg(*[F.max(fnames[i]).alias(f"m{i}")
+                              for i in cat_idx]).first()
             cuts = list(cuts)
-            for j, i in enumerate(cat_idx):
-                n_cats = int(maxes[f"m{j}"] or 0) + 1
+            for i in cat_idx:
+                n_cats = int(maxes[f"m{i}"] or 0) + 1
                 cuts[i] = np.arange(max(n_cats, 2), dtype=np.float64)
-        FIT_STAGE_TIMES["cuts"] = round(time.monotonic() - _t1, 3)
-        _t1 = time.monotonic()
-        base_score = (xgb_model.base_score if xgb_model is not None
-                      else (fused_bs if fused_bs is not None
-                            else self._base_score(raw)))
-        FIT_STAGE_TIMES["base_score"] = round(time.monotonic() - _t1, 3)
-        _t1 = time.monotonic()
-        mono = self._parse_monotone(feat_names_out, Fn)
-        isets = self._parse_interactions(feat_names_out, Fn)
+        return cuts, fused_bs, n_rows
 
-        # fast path: whole boosting loop in ONE barrier job with in-job
-        # allreduce histogram sync (plans/barrier.py; the reference's
-        # own Spark wrapper architecture, spark/core.py:1128)
-        if p.exec_mode in ("auto", "barrier"):
-            if barrier_eligible:
-                from xgboost_spark.plans.barrier import fit_barrier
-                evals_raw = []
-                for ev_df, ev_name in (evals or []):
-                    ev_raw, _ = assemble_features(
-                        ev_df, feature_cols=feature_cols, array_col=array_col,
-                        label_col=(label_col if (label_col in ev_df.columns
-                                                 or not has_b) else None),
-                        weight_col=weight_col, base_margin_col=base_margin_col,
-                        qid_col=qid_col, label_lower_col=label_lower_col,
-                        label_upper_col=label_upper_col, missing=missing)
-                    evals_raw.append((ev_raw, ev_name))
-                # Rank-count sizing (round-14 optimization pass): every
-                # tree level is a full-mesh synchronization across all
-                # ranks, so past the point where per-rank histogram
-                # compute (~rows_per_rank x ~0.1 us/row/level) stops
-                # covering the per-level collective latency (~10 ms at
-                # p=16-32), extra ranks only enlarge the straggler pool.
-                # Interleaved A/B, sf0.1 fit100: p=32 loop 10.5 s vs
-                # p=16 7.7 s vs p=12 8.1 s.  Derive ranks from the row
-                # count (known free from the sketch scan) at
-                # ROWS_PER_RANK — the measured compute/latency crossover —
-                # capped at the core budget; any real corpus exceeds
-                # cores x 40k rows, so at scale this is exactly the old
-                # all-cores behavior.  Explicit num_partitions and the
-                # qid co-location path keep their contract; fits whose
-                # cuts arrive pre-built (continuation) have no count and
-                # keep the old sizing.
-                bar_n_part = n_part
-                if num_partitions is None and not has_q and n_rows:
-                    bar_n_part = min(n_part,
-                                     max(1, -(-n_rows // ROWS_PER_RANK)))
-                trees, history, best_it, bar_weights = fit_barrier(
-                    p, obj, raw, fnames, cuts, cat_mask,
-                    base_score, mono, isets, bar_n_part, evals_raw=evals_raw,
-                    prev_state=prev_state)
-                FIT_STAGE_TIMES["loop"] = round(time.monotonic() - _t1, 3)
-                if verbose and history:
-                    # the barrier job returns the full eval history in
-                    # one shot — replay it in the reference
-                    # EvaluationMonitor byte format (callback.py:545-569)
-                    # so verbose output matches the DataFrame path
-                    n_ep = max(len(v) for ms in history.values()
-                               for v in ms.values())
-                    for ep in range(n_ep):
-                        parts = [f"{d}-{m}:{vals[ep]:.5f}"
-                                 for d, ms in history.items()
-                                 for m, vals in ms.items() if ep < len(vals)]
-                        if parts:
-                            print(f"[{ep}]\t" + "\t".join(parts))
-                return self._assemble_model(
-                    trees, bar_weights, xgb_model, base_score,
-                    feat_names_out, cuts, best_it, history,
-                    p.booster == "dart")
-            if p.exec_mode == "barrier":
-                raise ValueError(f"exec_mode=barrier unsupported here: {why}")
-            _log.info("fit runs the DataFrame path: %s", why)
-        if p.checkpoint_dir:
-            # fault tolerance lives on the barrier path only; a user
-            # relying on it must learn it is inactive, not find out at
-            # the first mid-fit failure
-            import warnings
-            warnings.warn(
-                "checkpoint_dir is set but this fit runs the DataFrame "
-                f"execution path ({why}); barrier checkpoint/resume "
-                "fault tolerance is inactive for this fit",
-                RuntimeWarning, stacklevel=3)
-        if getattr(obj, "unbiased", False):
-            raise NotImplementedError(
-                "lambdarank_unbiased trains on the barrier path (the t+/t- "
-                "position-bias state is allreduced across rounds inside one "
-                f"job; exec_mode=auto|barrier); blocked because: {why}")
-        if (p.subsample < 1.0
-                and getattr(p, "sampling_method", "uniform")
-                == "gradient_based"):
-            raise NotImplementedError(
-                "sampling_method='gradient_based' (MVS) trains on the "
-                "barrier path — its sampling threshold is a global "
-                "statistic allreduced per round (exec_mode=auto|barrier); "
-                f"blocked because: {why}")
-        if is_approx and (p.n_groups > 1 or p.booster == "dart"
-                          or obj.adaptive_alpha is not None):
-            raise NotImplementedError(
-                "tree_method=approx with multi-output, dart, or adaptive "
-                "leaves trains on the barrier path (exec_mode=auto|barrier); "
-                f"blocked because: {why}")
-        if K > 1 and p.multi_strategy == "multi_output_tree":
-            raise NotImplementedError(
-                "multi_output_tree trains on the barrier path "
-                f"(exec_mode=auto|barrier); blocked because: {why}")
+    def _fit_dataframe(self, raw: DataFrame, evals_raw, fnames: list[str],
+                       cuts, cat_mask, base_score, mono, isets, n_part: int,
+                       prev_state, xgb_model, feat_names_out, callbacks,
+                       custom_metric, maximize, verbose) -> GBDTModel:
+        """The per-level DataFrame trainer (module docstring): binned
+        rows, margins and gradients live in a checkpointed DataFrame;
+        each tree level is one histogram job, each round one margin
+        pass per frame; callbacks drive the loop like the reference's
+        CallbackContainer."""
+        p = self.params
+        obj = self.obj
+        sc = raw.sparkSession.sparkContext
+        K = p.n_groups
+        Fn = len(fnames)
+        has_q = "qid" in raw.columns
+        has_b = obj.needs_bounds
+        is_cox = obj.needs_global_sort
+        is_approx = p.tree_method == "approx"
+        fw = (np.asarray(p.feature_weights, dtype=np.float64)
+              if p.feature_weights is not None else None)
         bc_prev = sc.broadcast(prev_state) if prev_state is not None else None
         bc_cuts = sc.broadcast([np.asarray(c) for c in cuts])
         bc_catmask = sc.broadcast(cat_mask)
-        has_w = "weight" in raw.columns
-        has_bm = "base_margin" in raw.columns
         subsample = p.subsample
         seed = p.seed
 
-        def init_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cuts_l = bc_cuts.value
-            cm = bc_catmask.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                out = {}
-                for i, c in enumerate(fnames):
-                    x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                    out[f"x{i}"] = (core.bin_categorical(x, len(cuts_l[i]))
-                                    if cm is not None and cm[i]
-                                    else core.bin_values(x, cuts_l[i]))
+        def rows_fn(with_grads: bool):
+            def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                cuts_l = bc_cuts.value
+                cm = bc_catmask.value
+                st_prev = bc_prev.value if bc_prev is not None else None
+                for pdf in it:
+                    if len(pdf) == 0:
+                        continue
+                    Xb, y, w, q, bounds, m0, Xr = parse_rows(
+                        pdf, fnames, cuts_l, cm, K, base_score, st_prev,
+                        has_b, keep_raw=is_approx)
+                    out = {f"x{i}": Xb[:, i] for i in range(Fn)}
                     if is_approx:
-                        out[f"rawx{i}"] = x
-                bounds = None
-                if has_b:
-                    yl = pdf["label_lower"].to_numpy(dtype=np.float64)
-                    yu = pdf["label_upper"].to_numpy(dtype=np.float64, na_value=np.inf)
-                    out["yl"], out["yu"] = yl, yu
-                    bounds = (yl, yu)
-                    y = (pdf["label"].to_numpy(dtype=np.float64)
-                         if "label" in pdf.columns else yl)
-                else:
-                    y = pdf["label"].to_numpy(dtype=np.float64)
-                w = pdf["weight"].to_numpy(dtype=np.float64) if has_w else np.ones(len(pdf))
-                out["y"] = y
-                out["w"] = w
-                q = None
-                if has_q:
-                    q = pdf["qid"].to_numpy(dtype=np.int64)
-                    out["q"] = q
-                if has_bm:
-                    # base_margin REPLACES base_score (predictor.cc:66)
-                    m0 = np.repeat(pdf["base_margin"]
-                                   .to_numpy(dtype=np.float64)[:, None], K, 1)
-                else:
-                    m0 = np.full((len(pdf), K), base_score, dtype=np.float64)
-                if bc_prev is not None:
-                    st_prev = bc_prev.value
-                    Xr = np.column_stack([
-                        pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                        for c in fnames])
-                    core.apply_model_margin(m0, st_prev["trees"],
-                                            st_prev["weights"], Xr, False, K)
-                for k in range(K):
-                    out[f"m{k}"] = m0[:, k]
-                if is_cox or obj.needs_global_scale:
-                    # filled by the cox / global-scale pass
-                    g = h = np.zeros((len(pdf), K))
-                else:
-                    g, h = _compute_grads(obj, y, m0, w if has_w else None, q,
-                                          seed, subsample, K, bounds=bounds)
-                for k in range(K):
-                    out[f"g{k}"] = g[:, k]
-                    out[f"h{k}"] = h[:, k]
-                yield pd.DataFrame(out)
+                        out.update({f"rawx{i}": Xr[:, i] for i in range(Fn)})
+                    out["y"] = y
+                    out["w"] = w if w is not None else np.ones(len(pdf))
+                    if has_b:
+                        out["yl"], out["yu"] = bounds
+                    if has_q:
+                        out["q"] = q
+                    for k in range(K):
+                        out[f"m{k}"] = m0[:, k]
+                    if with_grads:
+                        if is_cox or obj.needs_global_scale:
+                            # filled by the cox / global-scale pass
+                            g = h = np.zeros((len(pdf), K))
+                        else:
+                            g, h = _compute_grads(obj, y, m0, w, q, seed,
+                                                  subsample, K, bounds=bounds)
+                        for k in range(K):
+                            out[f"g{k}"] = g[:, k]
+                            out[f"h{k}"] = h[:, k]
+                    yield pd.DataFrame(out)
+            return fn
 
         train_schema = self._schema(Fn, K, has_q, with_grads=True, with_bounds=has_b,
                                     with_raw=is_approx)
-        binned = raw.mapInPandas(init_fn, schema=train_schema)
+        eval_schema = self._schema(Fn, K, has_q, with_grads=False,
+                                   with_bounds=has_b, with_raw=is_approx)
+        binned = raw.mapInPandas(rows_fn(True), schema=train_schema)
         if not has_q:
             binned = binned.repartition(n_part)
         binned = binned.localCheckpoint(eager=True)
@@ -889,68 +993,10 @@ class SparkBooster:
             binned = self._cox_grad_pass(binned, train_schema, n_part)
         elif obj.needs_global_scale:
             binned = self._scale_grad_pass(binned, train_schema, K, seed)
-
-        # eval sets share the training cuts (QuantileDMatrix ref= semantics,
-        # reference core.py:1434/:1473)
-        eval_states = []
-        for ev_df, ev_name in (evals or []):
-            ev_raw, _ = assemble_features(
-                ev_df, feature_cols=feature_cols, array_col=array_col,
-                label_col=(label_col if (label_col in ev_df.columns or not has_b) else None),
-                weight_col=weight_col, base_margin_col=base_margin_col, qid_col=qid_col,
-                label_lower_col=label_lower_col, label_upper_col=label_upper_col,
-            )
-
-            def ev_init(it: Iterator[pd.DataFrame], _has_w=("weight" in ev_raw.columns),
-                        _has_bm=("base_margin" in ev_raw.columns)) -> Iterator[pd.DataFrame]:
-                cuts_l = bc_cuts.value
-                cm = bc_catmask.value
-                for pdf in it:
-                    if len(pdf) == 0:
-                        continue
-                    out = {}
-                    for i, c in enumerate(fnames):
-                        x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                        out[f"x{i}"] = (core.bin_categorical(x, len(cuts_l[i]))
-                                        if cm is not None and cm[i]
-                                        else core.bin_values(x, cuts_l[i]))
-                        if is_approx:
-                            out[f"rawx{i}"] = x
-                    if has_b:
-                        yl = pdf["label_lower"].to_numpy(dtype=np.float64)
-                        yu = pdf["label_upper"].to_numpy(dtype=np.float64, na_value=np.inf)
-                        out["yl"], out["yu"] = yl, yu
-                        out["y"] = (pdf["label"].to_numpy(dtype=np.float64)
-                                    if "label" in pdf.columns else yl)
-                    else:
-                        out["y"] = pdf["label"].to_numpy(dtype=np.float64)
-                    out["w"] = (pdf["weight"].to_numpy(dtype=np.float64)
-                                if _has_w else np.ones(len(pdf)))
-                    if has_q:
-                        out["q"] = pdf["qid"].to_numpy(dtype=np.int64)
-                    if _has_bm:
-                        m0 = np.repeat(pdf["base_margin"]
-                                       .to_numpy(dtype=np.float64)[:, None],
-                                       K, 1)
-                    else:
-                        m0 = np.full((len(pdf), K), base_score,
-                                     dtype=np.float64)
-                    if bc_prev is not None:
-                        st_prev = bc_prev.value
-                        Xr = np.column_stack([
-                            pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-                            for c in fnames])
-                        core.apply_model_margin(m0, st_prev["trees"],
-                                                st_prev["weights"], Xr, False, K)
-                    for k in range(K):
-                        out[f"m{k}"] = m0[:, k]
-                    yield pd.DataFrame(out)
-
-            ev_binned = ev_raw.mapInPandas(
-                ev_init, schema=self._schema(Fn, K, has_q, with_grads=False, with_bounds=has_b,
-                                             with_raw=is_approx)
-            ).localCheckpoint(eager=True)
-            eval_states.append([ev_binned, ev_name])
+        eval_states = [
+            [ev_raw.mapInPandas(rows_fn(False), schema=eval_schema)
+             .localCheckpoint(eager=True), ev_name]
+            for ev_raw, ev_name in evals_raw]
 
         fcols = [f"x{i}" for i in range(Fn)]
         builders = [
@@ -960,17 +1006,14 @@ class SparkBooster:
         rng = np.random.default_rng(p.seed)
         trees: list[list[core.Tree]] = []
         tree_weights: list[float] = []
-        is_dart = p.booster == "dart"
         history: dict[str, dict[str, list[float]]] = {}
         best_it, best_metric = None, None
         metric_names = _effective_metrics(p, obj)
 
-        from xgboost_spark.functions.callbacks import TrainingState
-
         def _make_model():
             return self._assemble_model(
                 trees, tree_weights, xgb_model, base_score, feat_names_out,
-                cuts, best_it, history, is_dart)
+                cuts, best_it, history, p.booster == "dart")
 
         cb_state = TrainingState(p, _make_model)
         cb_state.xgb_model = xgb_model    # continuation offset for
@@ -994,13 +1037,10 @@ class SparkBooster:
                 # GHistIndexMatrix regen flag is !const_hess, so
                 # reg:squarederror sketches ONCE — round 0, weighted by
                 # that round's hessians — and reuses the cuts; every
-                # other objective re-sketches per round.  (Known
-                # divergence on this composed fallback path only: K>1
-                # groups share one sketch weighted by group-0 hessians,
-                # where the reference regenerates per group — the
-                # barrier trainer, which handles every multiclass approx
-                # fit without callbacks/custom metrics, re-sketches per
-                # group like the reference.)
+                # other objective re-sketches per round.  (Only K=1
+                # gbtree approx fits reach this trainer: `_choose_path`
+                # sends the rest to the barrier trainer, which
+                # re-sketches per group like the reference.)
                 from xgboost_spark.operators.sketch import weighted_cuts_all
                 new_cuts = weighted_cuts_all(
                     binned, [f"rawx{i}" for i in range(Fn)], "h0",
@@ -1013,27 +1053,14 @@ class SparkBooster:
                     SparkHistBuilder(binned, fcols, cuts, gcol=f"g{k}", hcol=f"h{k}")
                     for k in range(K)
                 ]
-            # DART: select dropped rounds, refresh gradients at the
-            # dropped-out margin (reference gbtree.h:89-123 DropTrees)
-            dropped: list[int] = []
-            if is_dart and trees:
-                if not (p.skip_drop > 0.0 and rng.random() < p.skip_drop):
-                    if p.sample_type == "weighted":
-                        wts = np.asarray(tree_weights)
-                        probs = np.minimum(
-                            p.rate_drop * wts * len(wts) / max(wts.sum(), 1e-16), 1.0)
-                        mask = rng.random(len(trees)) < probs
-                    else:
-                        mask = rng.random(len(trees)) < p.rate_drop
-                    if p.one_drop and not mask.any():
-                        mask[rng.integers(0, len(trees))] = True
-                    dropped = [i for i in range(len(trees)) if mask[i]]
-                if dropped:
-                    binned = self._dart_grad_pass(
-                        binned, trees, tree_weights, dropped, K, fcols, has_q,
-                        train_schema, seed + it_round)
-                    for k in range(K):
-                        builders[k].df = binned
+            # DART: refresh gradients at the dropped-out margin
+            dropped = dart_drop(p, rng, tree_weights)
+            if dropped:
+                binned = self._dart_grad_pass(
+                    binned, trees, tree_weights, dropped, K, fcols, has_q,
+                    train_schema, seed + it_round)
+                for k in range(K):
+                    builders[k].df = binned
 
             round_trees: list[core.Tree] = []
             fmask = None
@@ -1062,28 +1089,18 @@ class SparkBooster:
                     self._adaptive_leaf_refresh(binned, t, alpha_k, p.eta,
                                                 group=k_r)
 
-            # DART weight normalization (reference normalize_type docs:
-            # tree  -> w_new = 1/(k+lr), dropped *= k/(k+lr)
-            # forest-> w_new = 1/(1+lr), dropped *= 1/(1+lr))
+            # DART re-weighting: one (group, tree, delta weight) margin
+            # correction per dropped tree, applied by the margin pass
+            w_new, factor = dart_weights(p, len(dropped))
             adjust: list[tuple[int, dict, float]] = []
-            kdrop = len(dropped)
-            if is_dart and kdrop > 0:
-                if p.normalize_type == "forest":
-                    w_new = 1.0 / (1.0 + p.eta)
-                    factor = 1.0 / (1.0 + p.eta)
-                else:
-                    w_new = 1.0 / (kdrop + p.eta)
-                    factor = kdrop / (kdrop + p.eta)
-                for ri in dropped:
-                    dw = tree_weights[ri] * (factor - 1.0)
-                    # round ri trees are ordered [k0_f0, .., k0_fN, k1_f0, ..]
-                    nf = len(trees[ri]) // K
-                    for k in range(K):
-                        for j in range(nf):
-                            adjust.append((k, trees[ri][k * nf + j].finalize_arrays(), dw))
-                    tree_weights[ri] *= factor
-            else:
-                w_new = 1.0
+            for ri in dropped:
+                dw = tree_weights[ri] * (factor - 1.0)
+                # round ri trees are ordered [k0_f0, .., k0_fN, k1_f0, ..]
+                nf = len(trees[ri]) // K
+                for k in range(K):
+                    for j in range(nf):
+                        adjust.append((k, trees[ri][k * nf + j].finalize_arrays(), dw))
+                tree_weights[ri] *= factor
             trees.append(round_trees)
             tree_weights.append(w_new)
 
@@ -1098,10 +1115,7 @@ class SparkBooster:
             for st in eval_states:
                 st[0] = self._update_margins(
                     st[0], round_trees, K, fcols, has_q, with_grads=False,
-                    next_seed=0,
-                    train_schema=self._schema(Fn, K, has_q, with_grads=False,
-                                              with_bounds=has_b,
-                                              with_raw=is_approx),
+                    next_seed=0, train_schema=eval_schema,
                     new_weight=w_new, adjust=adjust, use_raw=is_approx,
                 )
             # evaluation + early stopping (reference EvalOneIter
@@ -1119,22 +1133,16 @@ class SparkBooster:
                         history.setdefault(ev_name, {}).setdefault(cname, []).append(val)
                         last, last_name = val, cname
                 if verbose and history:
-                    # reference EvaluationMonitor byte format
-                    # (callback.py:545-569): one line per epoch,
-                    # '\t{data}-{metric}:{v:.5f}' over the history in
-                    # insertion order (custom metric rides at the end
-                    # of its data block, like the parsed feval string)
-                    print(f"[{it_round}]" + "".join(
-                        f"\t{d}-{m}:{vals[-1]:.5f}"
-                        for d, ms in history.items()
-                        for m, vals in ms.items() if vals))
+                    # the custom metric rides at the end of its data
+                    # block, like the reference's parsed feval string
+                    print(eval_line(it_round, history))
                 if p.early_stopping_rounds and last is not None:
-                    mx = maximize if maximize is not None else _maximize(last_name)
-                    better = (best_metric is None or
-                              (last > best_metric if mx else last < best_metric))
-                    if better:
-                        best_metric, best_it = last, it_round
-                    elif it_round - best_it >= p.early_stopping_rounds:
+                    best_metric, best_it, stop = _early_stop(
+                        last, it_round, best_metric, best_it,
+                        maximize if maximize is not None
+                        else _maximize(last_name),
+                        p.early_stopping_rounds)
+                    if stop:
                         break
             stop = False
             for cb in (callbacks or []):
@@ -1145,7 +1153,6 @@ class SparkBooster:
         p.eta = orig_eta
         for cb in (callbacks or []):
             cb.after_training(cb_state)
-        FIT_STAGE_TIMES["loop"] = round(time.monotonic() - _t1, 3)
         model = _make_model()
         for cb in (callbacks or []):
             # reference after_training returns the (possibly save_best-
@@ -1154,6 +1161,32 @@ class SparkBooster:
             if hasattr(cb, "finalize_model"):
                 model = cb.finalize_model(model)
         return model
+
+    def _feature_meta(self, feat_names_out: list[str], categorical_features):
+        """Per-feature parameters resolved against the feature names:
+        ``(categorical mask, monotone directions, interaction sets)``;
+        ``feature_weights`` is normalized to a list in place."""
+        p = self.params
+        Fn = len(feat_names_out)
+        if p.feature_weights is not None:
+            if isinstance(p.feature_weights, dict):
+                fwl = [float(p.feature_weights.get(c, 1.0)) for c in feat_names_out]
+            else:
+                fwl = [float(v) for v in p.feature_weights]
+            if len(fwl) != Fn:
+                raise ValueError(
+                    f"feature_weights: {len(fwl)} weights for {Fn} features")
+            p.feature_weights = fwl      # normalized; grow_tree reads it
+        # categorical features: ordinal codes are the bins; cuts become
+        # identity ranges sized by the observed max code
+        cat_mask = None
+        if categorical_features:
+            cat_mask = np.zeros(Fn, dtype=bool)
+            for cname in categorical_features:
+                cat_mask[_feature_index(cname, feat_names_out,
+                                        "categorical_features")] = True
+        return (cat_mask, self._parse_monotone(feat_names_out, Fn),
+                self._parse_interactions(feat_names_out, Fn))
 
     def _parse_monotone(self, feat_names_out: list[str], Fn: int):
         p = self.params
@@ -1185,15 +1218,8 @@ class SparkBooster:
         for group in ic:
             m = np.zeros(Fn, dtype=bool)
             for cname in group:
-                if isinstance(cname, str) and cname in feat_names_out:
-                    idx = feat_names_out.index(cname)
-                elif isinstance(cname, int) or str(cname).isdigit():
-                    idx = int(cname)
-                else:
-                    raise ValueError(
-                        f"interaction_constraints: unknown feature {cname!r}; "
-                        f"features are {feat_names_out}")
-                m[idx] = True
+                m[_feature_index(cname, feat_names_out,
+                                 "interaction_constraints")] = True
             isets.append(m)
         return isets
 
