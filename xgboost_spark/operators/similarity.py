@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xgboost_spark.operators.util import sql_double
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -207,16 +209,6 @@ EXPR_ASSIGN_MAX = 64
 IVF_BROADCAST_QUERY_MAX = 100_000
 
 
-def _sql_double(x) -> str:
-    """A double as Spark SQL text that parses back to the same value."""
-    x = float(x)
-    if np.isfinite(x):
-        return f"{x!r}D"
-    if np.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
-
-
 def _d2_fold_sql(vec_sql: str, center) -> str:
     """SQL text of the squared-L2 fold between ``vec_sql`` and a
     literal centroid: the SAME left-to-right aggregate/zip_with
@@ -230,7 +222,7 @@ def _d2_fold_sql(vec_sql: str, center) -> str:
     bit-identical to F.lit's; non-finite values (NaN/Inf embeddings
     propagate into centroids) have no literal form and render as casts
     of Spark's special strings, as F.lit would carry them."""
-    lits = ", ".join(_sql_double(x) for x in center)
+    lits = ", ".join(sql_double(x) for x in center)
     return (f"aggregate(zip_with({vec_sql}, array({lits}), "
             "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)")
 

@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xgboost_spark.operators.util import sql_ident
+
 
 def _finish_cuts(qs: list[float], vmax: float) -> np.ndarray:
     cuts = np.unique(np.asarray(qs, dtype=np.float64))
@@ -96,7 +98,8 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
         for c in (v, w):
             if c is not None and c not in need:
                 need.append(c)
-    src = df.select(*[F.col(c).cast("double").alias(c) for c in need])
+    src = df.selectExpr(*[f"CAST({sql_ident(c)} AS DOUBLE) AS {sql_ident(c)}"
+                          for c in need])
     n_specs = len(specs)
 
     def compact(batches):

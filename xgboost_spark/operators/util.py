@@ -2,9 +2,40 @@
 
 from __future__ import annotations
 
+import math
 import warnings
 
 from pyspark.sql import DataFrame, Window
+
+
+# SQL text for projections built on the driver: every Column-API call
+# (F.col, .cast, .alias, ...) is a dozen py4j round trips, so a
+# per-column projection is written as SQL text and parsed once
+# (selectExpr / filter / F.expr) instead.
+
+def sql_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier: backtick-quoted, with any
+    backtick doubled, so a dot, space or backtick stays part of the
+    name (``F.col("a.b")`` reads field ``b`` of a struct ``a``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x) -> str:
+    """A double as Spark SQL text that parses back to the same value."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
+def sql_null_if(e: str, value) -> str:
+    """SQL text of ``e`` with the values equal to ``value`` (a missing
+    sentinel) turned into a DOUBLE NULL.  Spark's ``=`` holds for
+    NaN = NaN and for 0.0 = -0.0."""
+    return (f"CASE WHEN {e} = {sql_double(value)} "
+            f"THEN CAST(NULL AS DOUBLE) ELSE {e} END")
 
 
 def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:

@@ -389,7 +389,6 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
 
     Returns (trees per round, eval history, best_iteration, tree weights).
     """
-    import pyspark.sql.functions as F
     p = params
     K = p.n_groups
     spark = raw.sparkSession
@@ -411,14 +410,14 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                     ("qid", has_q), ("label_lower", has_b), ("label_upper", has_b)):
         if flag:
             need.append(c)
-    sel = raw.select(*need).withColumn("_role", F.lit(0))
-    for i, (ev_raw, _nm) in enumerate(evals_raw):
-        ev = ev_raw
-        for c in need:      # tolerate absent optional cols on eval frames
-            if c not in ev.columns:
-                ev = ev.withColumn(
-                    c, F.lit(1.0 if c == "weight" else 0.0).cast("double"))
-        sel = sel.unionByName(ev.select(*need).withColumn("_role", F.lit(i + 1)))
+    sel = raw.selectExpr(*need, "0 AS _role")
+    for i, (ev, _nm) in enumerate(evals_raw):
+        # tolerate absent optional cols on eval frames
+        have = set(ev.columns)
+        sel = sel.unionByName(ev.selectExpr(
+            *[c if c in have else
+              f"CAST({'1.0D' if c == 'weight' else '0.0D'} AS DOUBLE) AS {c}"
+              for c in need], f"{i + 1} AS _role"))
     need_r = need + ["_role"]
     _mpb_restore = None
     if has_q:

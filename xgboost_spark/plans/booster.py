@@ -68,6 +68,7 @@ from xgboost_spark.functions.callbacks import TrainingState, eval_line
 from xgboost_spark.functions.objectives import get_objective
 from xgboost_spark.operators.histogram import SparkHistBuilder
 from xgboost_spark.operators.sketch import approx_cuts
+from xgboost_spark.operators.util import sql_double
 from xgboost_spark.plans.model import GBDTModel
 from xgboost_spark.sources.tables import assemble_features
 
@@ -269,7 +270,7 @@ def _choose_path(p, obj, evals, callbacks, custom_metric,
 
 
 def meta_checks(raw: DataFrame, obj, objective_name: str) -> list:
-    """(name, bad_row_bool_col, message) triples for the reference's
+    """(name, bad-row SQL predicate, message) triples for the reference's
     MetaInfo::Validate + per-objective CheckLabel (src/data/data.cc
     "Label contains NaN/Inf", regression_loss.h label-range checks).
     Consumed two ways: a standalone column-pruned aggregation
@@ -278,30 +279,31 @@ def meta_checks(raw: DataFrame, obj, objective_name: str) -> list:
     corpus pass per fit; the checks themselves are identical)."""
     checks = []
     if "label" in raw.columns:
-        y = F.col("label")
-        bad = y.isNull() | F.isnan(y) | (F.abs(y) > 1e308)
+        # nested left to right, as `|` on Columns builds it: the SQL
+        # parser would balance a flat OR chain into another plan
+        bad = "(label IS NULL OR isnan(label)) OR abs(label) > 1e+308D"
         rng = getattr(obj, "label_range", None)
         if rng is not None:
             lo, hi, lo_excl = rng
             if np.isfinite(lo):
-                bad = bad | ((y <= lo) if lo_excl else (y < lo))
+                op = "<=" if lo_excl else "<"
+                bad = f"({bad}) OR label {op} {sql_double(lo)}"
             if np.isfinite(hi):
-                bad = bad | (y > hi)
+                bad = f"({bad}) OR label > {sql_double(hi)}"
         checks.append(("bad_label", bad,
                        f"label contains NaN/Inf/null or values outside the "
                        f"valid range for objective {objective_name!r}"))
     if "weight" in raw.columns:
-        wc = F.col("weight")
-        badw = wc.isNull() | F.isnan(wc) | (wc < 0)
-        checks.append(("bad_weight", badw,
+        checks.append(("bad_weight",
+                       "(weight IS NULL OR isnan(weight)) OR weight < 0",
                        "weights must be finite and >= 0"))
     if "label_lower" in raw.columns and "label_upper" in raw.columns:
-        lo, hi = F.col("label_lower"), F.col("label_upper")
         # AFT censored intervals: lower finite >= 0, lower <= upper
         # (upper may be +inf or NULL for right-censored rows)
-        badb = (lo.isNull() | F.isnan(lo) | (lo < 0)
-                | (hi.isNotNull() & (F.isnan(hi) | (lo > hi))))
-        checks.append(("bad_bounds", badb,
+        checks.append(("bad_bounds",
+                       "((label_lower IS NULL OR isnan(label_lower)) "
+                       "OR label_lower < 0) OR (label_upper IS NOT NULL AND "
+                       "(isnan(label_upper) OR label_lower > label_upper))",
                        "survival bounds must satisfy 0 <= label_lower <= "
                        "label_upper (upper may be +inf)"))
     return checks
@@ -323,8 +325,8 @@ def validate_meta(raw: DataFrame, obj, objective_name: str) -> None:
     checks = meta_checks(raw, obj, objective_name)
     if not checks:
         return
-    row = raw.agg(*[F.sum(bad.cast("long")).alias(name)
-                    for name, bad, _ in checks]).first()
+    row = raw.selectExpr(*[f"sum(CAST(({bad}) AS BIGINT)) AS {name}"
+                           for name, bad, _ in checks]).first()
     raise_meta_violations(checks, {name: row[name] for name, _b, _m in checks})
 
 
@@ -891,12 +893,12 @@ class SparkBooster:
             bs_aggs = (self._base_score_fuse_aggs(raw)
                        if (p.base_score is None and fuse_bs) else None)
             vm_checks = meta_checks(raw, self.obj, p.objective)
-            vm_src = raw
-            vm_specs = []
-            for name, bad, _msg in vm_checks:
-                # each check is a 0/1 flag column summed in the same pass
-                vm_src = vm_src.withColumn(f"_vm_{name}", bad.cast("double"))
-                vm_specs.append((f"_vm_{name}", f"_vm_{name}", None))
+            # each check is a 0/1 flag column summed in the same pass
+            vm_src = raw.selectExpr("*", *[
+                f"CAST(({bad}) AS DOUBLE) AS _vm_{name}"
+                for name, bad, _msg in vm_checks])
+            vm_specs = [(f"_vm_{name}", f"_vm_{name}", None)
+                        for name, _bad, _msg in vm_checks]
             cuts, row = approx_cuts(
                 vm_src, fnames, sketch_bins,
                 extra_sums=(bs_aggs or []) + [("_n_rows_", None, None)]

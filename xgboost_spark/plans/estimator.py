@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xgboost_spark.config import TrainParams
+from xgboost_spark.operators.util import sql_ident
 from xgboost_spark.plans.booster import SparkBooster
 from xgboost_spark.plans.model import GBDTModel
 
@@ -248,8 +249,9 @@ class _GBDTEstimator(Estimator, MLReadable, MLWritable):
         evals = None
         train_df = dataset
         if self.validation_indicator_col:
-            train_df = dataset.filter(~F.col(self.validation_indicator_col))
-            evals = [(dataset.filter(F.col(self.validation_indicator_col)), "validation")]
+            is_val = sql_ident(self.validation_indicator_col)
+            train_df = dataset.filter(f"NOT {is_val}")
+            evals = [(dataset.filter(is_val), "validation")]
         if self.num_workers is not None:
             # reference _repartition_needed (spark/core.py:806-821):
             # repartition when forced or partitions != num_workers; the
@@ -441,6 +443,10 @@ class SparkGBDTClassifier(_GBDTEstimator):
     _default_objective = "binary:logistic"
     _supports_qid = False
 
+    def _label_max(self, dataset: DataFrame):
+        return dataset.selectExpr(
+            f"max({sql_ident(self.label_col)})").first()[0]
+
     def _fit(self, dataset: DataFrame):
         p = self.train_params
         explicit_obj = (self.isSet(getattr(self, "objective"))
@@ -450,14 +456,14 @@ class SparkGBDTClassifier(_GBDTEstimator):
             # single-column max: Catalyst prunes the scan to the label
             # column (the reference classifier pays the same pass —
             # np.unique(y) in sklearn fit)
-            k = dataset.agg(F.max(self.label_col)).first()[0]
+            k = self._label_max(dataset)
             if k is not None and int(k) > 1:
                 self._set(objective="multi:softprob",
                           num_class=int(k) + 1)
                 inferred += ["objective", "num_class"]
                 p = self.train_params
         if p.objective.startswith("multi:") and p.num_class <= 1:
-            k = dataset.agg(F.max(self.label_col)).first()[0]
+            k = self._label_max(dataset)
             self._set(num_class=int(k) + 1)
             inferred.append("num_class")
         try:
@@ -493,26 +499,27 @@ class SparkGBDTClassifierModel(_GBDTModel):
             out = out.withColumnRenamed("contribs", self._pred_contrib_col)
         if self.core.params.n_groups > 1:
             # multinomial: raw = margins, probs = softmax (max-shifted)
-            mx = F.array_max("margin")
-            out = out.withColumn(
-                "_exp", F.transform("margin", lambda x: F.exp(x - mx)))
-            s = F.aggregate("_exp", F.lit(0.0), lambda a, x: a + x)
-            out = out.withColumn("_probs", F.transform("_exp", lambda x: x / s))
-            raw = F.col("margin")
+            out = out.withColumn("_exp", F.expr(
+                "transform(margin, x -> exp(x - array_max(margin)))"))
+            probs = ("transform(_exp, x -> x / "
+                     "aggregate(_exp, 0.0D, (acc, y) -> acc + y))")
+            raw = "margin"
         else:
             # binomial (transform_margin, spark/core.py:1492-1500):
             # raw = [-margin, margin], probs = [1-sigmoid, sigmoid]
             # (the engine's margin column is a length-1 array for K=1)
-            m1 = F.element_at(F.col("margin"), 1)
-            p1 = F.lit(1.0) / (F.lit(1.0) + F.exp(-m1))
-            raw = F.array(-m1, m1)
-            out = out.withColumn("_probs", F.array(F.lit(1.0) - p1, p1))
-        return (out
-                .withColumn("rawPrediction", array_to_vector(raw))
-                .withColumn("prediction", F.expr(
-                    "cast(array_position(_probs, array_max(_probs)) - 1"
-                    " as double)"))
-                .withColumn("probability", array_to_vector(F.col("_probs")))
+            m1 = "element_at(margin, 1)"
+            p1 = f"1.0D / (1.0D + exp(-{m1}))"
+            raw = f"array(-{m1}, {m1})"
+            probs = f"array(1.0D - {p1}, {p1})"
+        return (out.withColumns({
+                    "_probs": F.expr(probs),
+                    "rawPrediction": array_to_vector(F.expr(raw))})
+                .withColumns({
+                    "prediction": F.expr(
+                        "cast(array_position(_probs, array_max(_probs)) - 1"
+                        " as double)"),
+                    "probability": array_to_vector(F.col("_probs"))})
                 .drop("_probs", "_exp", "margin"))
 
     def transform_with_label(self, dataset: DataFrame, threshold: float = 0.5) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from xgboost_spark import core
 from xgboost_spark.config import TrainParams
 from xgboost_spark.functions.objectives import _RT_EPS, get_objective
+from xgboost_spark.operators.util import sql_ident, sql_null_if
 
 
 def _leaf_str(lv) -> str:
@@ -1026,7 +1027,8 @@ class GBDTModel:
         for i, c in enumerate(cols):
             if c in self.category_maps and dt.get(c) == "string":
                 tmp = f"__cat_{c}"
-                df = df.withColumn(tmp, encode_col(F.col(c), self.category_maps[c]))
+                df = df.withColumn(tmp, encode_col(F.col(sql_ident(c)),
+                                                   self.category_maps[c]))
                 cols[i] = tmp
                 added.append(tmp)
         return df, cols, added
@@ -1266,27 +1268,24 @@ class GBDTModel:
                 # MLlib vectors densify JVM-side; output column becomes
                 # array<double>
                 from pyspark.ml.functions import vector_to_array
-                df = df.withColumn(array_col, vector_to_array(F.col(array_col)))
+                df = df.withColumn(array_col,
+                                   vector_to_array(F.col(sql_ident(array_col))))
         # sentinel-as-missing (reference DMatrix missing=): NULL the
         # matching values so they route down default directions, same as
         # at fit time.  Explicit argument wins over the fit-time value.
         mv = missing if missing is not None else self.missing
         if mv is not None:
-            mvf = float(mv)
             if array_col is not None:
-                df = df.withColumn(array_col, F.transform(
-                    F.col(array_col),
-                    lambda x: F.when(x.cast("double") == mvf,
-                                     F.lit(None).cast("double"))
-                    .otherwise(x.cast("double"))))
+                a = sql_ident(array_col)
+                nulled = {array_col: f"transform({a}, x -> "
+                                     f"{sql_null_if('CAST(x AS DOUBLE)', mv)})"}
             else:
                 dts = dict(df.dtypes)
-                for c in feature_cols:
-                    if dts.get(c) != "string":
-                        df = df.withColumn(c, F.when(
-                            F.col(c).cast("double") == mvf,
-                            F.lit(None).cast("double"))
-                            .otherwise(F.col(c).cast("double")))
+                nulled = {c: sql_null_if(f"CAST({sql_ident(c)} AS DOUBLE)", mv)
+                          for c in feature_cols if dts.get(c) != "string"}
+            # one projection, one SQL parse per column (a chain of
+            # Column calls costs ~100 py4j round trips per column)
+            df = df.withColumns({c: F.expr(e) for c, e in nulled.items()})
         spark = df.sparkSession
         K = self.params.n_groups
         if (pred_contribs or pred_interactions) and any(
@@ -1322,6 +1321,21 @@ class GBDTModel:
                 for rnd, covers in zip(state["trees"], state["covers"])]
         bc = spark.sparkContext.broadcast(state)
         fields = list(df.schema.fields)
+        names = [f.name for f in fields]
+        # PySpark's mapInPandas resolves each input column as df[name],
+        # which misreads a dot or backtick inside the name: such an input
+        # runs under positional names and gets its own back on the output
+        # (only then — each rename is one more eagerly analysed plan)
+        renamed = any("." in c or "`" in c for c in names)
+        if renamed:
+            pos = [f"_c{i}" for i in range(len(names))]
+            at = dict(zip(names, pos))
+            feature_cols = [at.get(c, c) for c in feature_cols]
+            array_col = at.get(array_col, array_col)
+            base_margin_col = at.get(base_margin_col, base_margin_col)
+            fields = [T.StructField(c, f.dataType, f.nullable)
+                      for c, f in zip(pos, fields)]
+            df = df.toDF(*pos)
         # vector prediction: class probabilities (softprob) or one value
         # per alpha (multi-alpha quantile/expectile)
         if K > 1 and self.params.objective in ("multi:softprob",
@@ -1441,6 +1455,8 @@ class GBDTModel:
                 yield out
 
         res = df.mapInPandas(fn, schema=out_schema)
+        if renamed:
+            res = res.toDF(*names, *out_schema.names[len(names):])
         return res.drop(*enc_tmp) if enc_tmp else res
 
     def register_sql_udf(self, spark: SparkSession, name: str):
@@ -1512,10 +1528,12 @@ class GBDTModel:
         use_array = array_col is not None
         has_bm = base_margin_col is not None
         predict_udf = self._predict_pandas_udf(bc, K, use_array, has_bm)
-        args = ([F.col(array_col)] if use_array
-                else [F.col(c).cast("double") for c in feature_cols])
+        # one SQL parse per argument (F.col + .cast is ~24 round trips)
+        args = ([F.expr(sql_ident(array_col))] if use_array
+                else [F.expr(f"CAST({sql_ident(c)} AS DOUBLE)")
+                      for c in feature_cols])
         if has_bm:
-            args.append(F.col(base_margin_col))
+            args.append(F.expr(sql_ident(base_margin_col)))
         return df.withColumn("prediction", predict_udf(*args))
 
     # ----------------------------------------------------- model-as-a-table

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xgboost_spark.operators.util import sql_ident
+
 
 def fit_ordinal_encoder(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
     """Sorted-distinct dictionary per column, one aggregation for all
@@ -29,7 +31,8 @@ def fit_ordinal_encoder(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
     if not cols:
         return {}
     row = df.agg(*[
-        F.sort_array(F.collect_set(F.col(c).cast("string"))).alias(c) for c in cols
+        F.sort_array(F.collect_set(F.col(sql_ident(c)).cast("string"))).alias(c)
+        for c in cols
     ]).first()
     return {c: [str(v) for v in row[c]] for c in cols}
 
@@ -58,5 +61,5 @@ def encode_ordinal(df: DataFrame, mapping: dict[str, list[str]],
             continue
         if only_string and dt[c] != "string":
             continue
-        out = out.withColumn(c, encode_col(F.col(c), cats))
+        out = out.withColumn(c, encode_col(F.col(sql_ident(c)), cats))
     return out

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xgboost_spark.operators.util import sql_ident, sql_null_if
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -94,47 +96,37 @@ def assemble_features(
     e.g. ``missing=0.0`` reproduces zero-as-missing sparse semantics.
     NaN is always missing.
     """
-    cols = []
-    names: list[str] = []
-    def _m(c):
-        if missing is None:
-            return c
-        return F.when(c == float(missing), F.lit(None).cast("double")).otherwise(c)
-
+    # SQL text parsed once by selectExpr: the same expression tree as
+    # F.col(c).cast("double").alias(..) at a fraction of the py4j calls
+    feats: list[str] = []
     if array_col is not None:
-        src = F.col(array_col)
         dt = df.schema[array_col].dataType
         if dt.typeName() == "udt" and getattr(dt, "pyUDT", "").endswith("VectorUDT") \
                 or type(dt).__name__ == "VectorUDT":
             # MLlib sparse/dense vectors (the reference's CSR ingestion
             # surface, c_api.h:221): densify JVM-side via vector_to_array
             from pyspark.ml.functions import vector_to_array
-            src = vector_to_array(src)
-            n = len(df.select(src.alias("_v")).first()[0])
-        else:
-            n = len(df.select(array_col).first()[0])
-        for i in range(n):
-            names.append(f"f{i}")
-            cols.append(_m(F.element_at(src, i + 1).cast("double")).alias(f"f{i}"))
-    if feature_cols:
-        for i, c in enumerate(feature_cols, start=len(names)):
-            names.append(f"f{i}")
-            cols.append(_m(F.col(c).cast("double")).alias(f"f{i}"))
-    if not names:
+            df = df.withColumn(array_col, vector_to_array(F.col(sql_ident(array_col))))
+        src = sql_ident(array_col)
+        n = len(df.select(src).first()[0])
+        feats += [f"element_at({src}, {i + 1})" for i in range(n)]
+    feats += [sql_ident(c) for c in feature_cols or []]
+    if not feats:
         raise ValueError("no features given")
-    if label_col:
-        cols.append(F.col(label_col).cast("double").alias("label"))
-    if weight_col:
-        cols.append(F.col(weight_col).cast("double").alias("weight"))
-    if base_margin_col:
-        cols.append(F.col(base_margin_col).cast("double").alias("base_margin"))
-    if qid_col:
-        cols.append(F.col(qid_col).cast("long").alias("qid"))
-    if label_lower_col:
-        cols.append(F.col(label_lower_col).cast("double").alias("label_lower"))
-    if label_upper_col:
-        cols.append(F.col(label_upper_col).cast("double").alias("label_upper"))
-    return df.select(*cols), names
+    names = [f"f{i}" for i in range(len(feats))]
+    cols = []
+    for e, nm in zip(feats, names):
+        d = f"CAST({e} AS DOUBLE)"
+        cols.append(f"{d if missing is None else sql_null_if(d, missing)} AS {nm}")
+    for c, alias, t in ((label_col, "label", "DOUBLE"),
+                        (weight_col, "weight", "DOUBLE"),
+                        (base_margin_col, "base_margin", "DOUBLE"),
+                        (qid_col, "qid", "BIGINT"),
+                        (label_lower_col, "label_lower", "DOUBLE"),
+                        (label_upper_col, "label_upper", "DOUBLE")):
+        if c:
+            cols.append(f"CAST({sql_ident(c)} AS {t}) AS {alias}")
+    return df.selectExpr(*cols), names
 
 
 def lineitem_matrix(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[str]]:
