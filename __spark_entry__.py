@@ -2023,7 +2023,7 @@ def q_ordinal_encode(spark, sf_dir):
     docs = _table(spark, sf_dir, "documents")
     mapping = fit_ordinal_encoder(docs, ["lang"])
     return docs.select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                       encode_col(F.col("lang"), mapping["lang"]).alias("code"))
+                       encode_col("lang", mapping["lang"]).alias("code"))
 
 
 def q_train_string_cat(spark, sf_dir):

@@ -69,3 +69,33 @@ def test_dart_weights_survive_json_roundtrip(spark, reg_df, tmp_path):
     a = model.transform(reg_df.limit(100), feature_cols=FCOLS).toPandas()["prediction"]
     b = loaded.transform(reg_df.limit(100), feature_cols=FCOLS).toPandas()["prediction"]
     assert np.allclose(a.to_numpy(), b.to_numpy(), atol=1e-12)
+
+
+def test_dart_global_scale_ignores_arrow_batch_size(spark, reg_df):
+    """DART with a global-scale objective on the DataFrame path: the
+    residual scale at the dropped-out margin is one sum over every row,
+    so the Arrow batch size must not change the trees."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    params = {"num_boost_round": 5, "max_depth": 3, "seed": 9,
+              "objective": "reg:absoluteerror", "booster": "dart",
+              "rate_drop": 0.5, "one_drop": True, "exec_mode": "dataframe"}
+    old = spark.conf.get(key, None)
+    models = []
+    try:
+        for batch in ("65536", "200"):
+            spark.conf.set(key, batch)
+            models.append(train(params, reg_df, feature_cols=FCOLS,
+                                num_partitions=4))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    a, b = models
+    assert a.tree_weights == b.tree_weights
+    for ra, rb in zip(a.trees, b.trees):
+        for ta, tb in zip(ra, rb):
+            assert ta.feature == tb.feature and ta.left == tb.left
+            assert ta.split_bin == tb.split_bin
+            assert np.allclose(ta.leaf_value, tb.leaf_value, rtol=0,
+                               atol=1e-12)

@@ -34,9 +34,12 @@ _EVALS = [(None, "v")]
      {"callbacks": [TrainingCallback()], "has_qid": True},
      (NotImplementedError, "lambdarank_unbiased trains on the barrier path "
       ".*blocked because: callbacks run on the DataFrame path")),
+    ({"objective": "survival:cox", "booster": "dart"}, {},
+     (NotImplementedError, "booster='dart' is not supported with "
+                           "survival:cox")),
 ], ids=["plain", "cox", "ams", "callbacks", "custom_metric",
         "exec_mode_dataframe", "exec_mode_barrier_callbacks",
-        "unbiased_callbacks"])
+        "unbiased_callbacks", "dart_cox"])
 def test_choose_path_table(params, kw, want):
     """`_choose_path` is the one place a fit's path is picked or the fit
     refused; it needs no SparkSession."""
@@ -52,14 +55,23 @@ def test_choose_path_table(params, kw, want):
         assert _choose_path(p, obj, **args) == want
 
 
+def _jobs(spark, group: str, run) -> int:
+    """Spark jobs that ``run()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_refused_fit_runs_no_spark_job(spark, reg_df):
     """A combination only the barrier trainer implements, forced onto
     the DataFrame path, is refused before the sketch or the base-score
     job runs."""
-    sc = spark.sparkContext
-    group = "refused-fit-probe"
-    sc.setJobGroup(group, "refused fit")
-    try:
+    def fit():
         with pytest.raises(NotImplementedError,
                            match="sampling_method='gradient_based'"):
             SparkBooster(TrainParams(
@@ -67,10 +79,40 @@ def test_refused_fit_runs_no_spark_job(spark, reg_df):
                 num_boost_round=2, max_depth=2)).fit(
                 reg_df, feature_cols=FCOLS, label_col="label",
                 callbacks=[TrainingCallback()])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert _jobs(spark, "refused-fit-probe", fit) == 0
+
+
+def test_dart_cox_refused_before_any_job(spark, reg_df):
+    """DART with survival:cox is refused up front, not at the first
+    dropped round."""
+    def fit():
+        with pytest.raises(NotImplementedError, match="booster='dart'"):
+            SparkBooster(TrainParams(
+                objective="survival:cox", booster="dart", rate_drop=0.5,
+                num_boost_round=3, max_depth=2)).fit(
+                reg_df, feature_cols=FCOLS, label_col="label")
+
+    assert _jobs(spark, "dart-cox-probe", fit) == 0
+
+
+def test_dataframe_path_jobs_per_round_dart_as_gbtree(spark, reg_df):
+    """A DART round on the DataFrame path costs the Spark jobs of a
+    gbtree round: its gradients at the dropped-out margin ride the
+    margin pass.  Per-round cost = jobs(6 rounds) - jobs(5 rounds)."""
+    def per_round(**params):
+        counts = []
+        for rounds in (5, 6):
+            p = TrainParams(exec_mode="dataframe", max_depth=3, seed=1,
+                            num_boost_round=rounds, **params)
+            counts.append(_jobs(
+                spark, f"jobs-{params.get('booster', 'gbtree')}-{rounds}",
+                lambda: SparkBooster(p).fit(reg_df, feature_cols=FCOLS)))
+        return counts[1] - counts[0]
+
+    gbtree = per_round()
+    dart = per_round(booster="dart", rate_drop=0.5, one_drop=True)
+    assert dart == gbtree, (dart, gbtree)
 
 
 def test_barrier_early_stopping_honours_maximize(spark):

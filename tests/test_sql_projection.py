@@ -1,7 +1,8 @@
 """Projections written as SQL text (`operators/util.py` `sql_ident`,
-`sql_double`, `sql_null_if`): column names that need quoting, the
-missing-sentinel literals, and the py4j cost of building the fit's
-feature assembly and a transform."""
+`sql_double`, `sql_null_if`, `sql_str`): column names that need
+quoting, the missing-sentinel literals, the categorical recode map, and
+the py4j cost of building the fit's feature assembly, a transform and a
+recode."""
 
 import hashlib
 import math
@@ -10,12 +11,14 @@ import threading
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from xgboost_spark.config import TrainParams
 from xgboost_spark.operators.util import sql_double, sql_ident
 from xgboost_spark.plans.booster import SparkBooster
 from xgboost_spark.plans.estimator import SparkGBDTClassifier
 from xgboost_spark.plans.model import GBDTModel
+from xgboost_spark.sources.encoder import encode_col
 from xgboost_spark.sources.tables import assemble_features
 
 ODD = ["a.b", "c d", "e`f"]
@@ -85,6 +88,21 @@ def test_dotted_and_quoted_feature_names_fit_and_transform(spark, xy):
             == scored(plain, plain_df, PLAIN, pred_contribs=True))
     odd.feature_names = PLAIN
     assert _digest(odd) == _digest(plain)
+
+
+def test_transform_expr_quotes_feature_names(spark, xy):
+    """The SQL scoring path reads dotted and spaced feature names as
+    columns, and predicts what the UDF path predicts."""
+    X, y = xy
+    model = SparkBooster(TrainParams(num_boost_round=3, max_depth=3,
+                                     max_bin=32)).fit(
+        _frame(spark, X, ODD, y=y), feature_cols=ODD, label_col="y")
+    df = _frame(spark, X, ODD)
+    udf = model.transform(df).orderBy("rid").select("prediction").collect()
+    expr = (model.transform_expr(df).orderBy("rid")
+            .select("prediction").collect())
+    assert [r[0] for r in expr] == pytest.approx([r[0] for r in udf],
+                                                 rel=1e-12, abs=1e-12)
 
 
 def test_classifier_dotted_label_and_validation_indicator(spark, xy):
@@ -230,3 +248,35 @@ def test_projection_round_trips_per_column(spark):
     # withColumns: a key and a value list element plus one F.expr; the
     # UDF argument: one list element plus one F.expr
     assert counts[64][1] - counts[8][1] <= (2 + 3 + 1 + 3) * extra, counts
+
+
+# ------------------------------------------------------------ categories
+CATS = ["", "plain", "it's", "back\\slash", "\\'", "a'b\\c", "na\u00efve",
+        "\u65e5\u672c\u8a9e", "tab\there", "\\u0041", "\\n"]
+
+
+def test_encode_col_matches_the_column_form(spark):
+    """One SQL map literal recodes exactly as the `F.create_map` of
+    `F.lit` pairs did: every category to its code, unknowns and NULL to
+    NULL, under a name that needs quoting."""
+    name = "s.t"
+    values = CATS + ["unknown", None]
+    df = spark.createDataFrame(pd.DataFrame({name: values,
+                                             "rid": range(len(values))}))
+    pairs = []
+    for code, v in enumerate(CATS):
+        pairs += [F.lit(v), F.lit(float(code))]
+    old = F.create_map(*pairs)[
+        F.col(sql_ident(name)).cast("string")].cast("double")
+    rows = (df.select("rid", encode_col(name, CATS).alias("new"),
+                      old.alias("old")).orderBy("rid").collect())
+    assert [r["new"] for r in rows] == [r["old"] for r in rows]
+    assert [r["new"] for r in rows] == [float(i) for i in range(len(CATS))] + [
+        None, None]
+    assert dict(df.select(encode_col(name, []).alias("e")).dtypes)["e"] == "double"
+
+
+def test_encode_col_round_trips_do_not_grow_with_categories(spark):
+    counts = [_round_trips(lambda: encode_col(
+        "c", [f"v{i}" for i in range(k)])) for k in (10, 1000)]
+    assert counts[0] == counts[1], counts

@@ -114,6 +114,67 @@ def test_refresh_leaves_new_data_moves_leaves(spark, reg_df, reg_data):
     assert not np.allclose(leaves_a, leaves_b)
 
 
+def test_refresh_leaves_honours_the_missing_sentinel(spark, reg_data):
+    """A model fit with ``missing=0.0`` sees the zeros as missing; the
+    refresh must too, or its leaves move on the model's own data."""
+    X, y = reg_data
+    X = np.where(np.isnan(X), 0.0, X)
+    fcols = [f"c{i}" for i in range(5)]
+    pdf = pd.DataFrame(X, columns=fcols)
+    pdf["label"] = y
+    df = spark.createDataFrame(pdf)
+    model = train(TrainParams(num_boost_round=3, max_depth=3, base_score=0.0),
+                  df, feature_cols=fcols, missing=0.0)
+    refreshed = refresh_leaves(model, df, feature_cols=fcols)
+    assert refreshed.missing == 0.0
+    for rnd_a, rnd_b in zip(model.trees, refreshed.trees):
+        for ta, tb in zip(rnd_a, rnd_b):
+            assert ta.feature == tb.feature
+            assert np.allclose(ta.leaf_value, tb.leaf_value, rtol=0, atol=1e-9)
+
+
+def test_refresh_leaves_replays_dart_weights(spark, reg_df, reg_data):
+    """A DART model keeps its tree weights through a refresh, and each
+    round's gradients are taken at the weighted margin of the refreshed
+    rounds before it (checked against a NumPy replay)."""
+    X, y = reg_data
+    p = TrainParams(num_boost_round=4, max_depth=3, base_score=0.0,
+                    booster="dart", rate_drop=0.5, one_drop=True, seed=7)
+    fcols = [f"c{i}" for i in range(5)]
+    model = train(p, reg_df, feature_cols=fcols)
+    assert any(w != 1.0 for w in model.tree_weights)
+    refreshed = refresh_leaves(model, reg_df, feature_cols=fcols)
+    assert refreshed.tree_weights == model.tree_weights
+    Xb = np.column_stack([core.bin_values(X[:, i], model.cuts[i])
+                          for i in range(X.shape[1])])
+    m = np.zeros(len(y))
+    for wt, (tree,) in zip(refreshed.tree_weights, refreshed.trees):
+        arrs = tree.finalize_arrays()
+        lid = core.leaf_ids_from_arrays(arrs, Xb, binned=True)
+        g = m - y                                  # squared error, w = 1
+        for nid in np.unique(lid):
+            want = p.eta * core.calc_weight(g[lid == nid].sum(),
+                                            float((lid == nid).sum()),
+                                            p.reg_lambda, p.reg_alpha,
+                                            p.max_delta_step)
+            assert tree.leaf_value[nid] == pytest.approx(want, rel=1e-9,
+                                                         abs=1e-12)
+        m += wt * arrs["leaf_value"][lid]
+
+
+def test_refresh_leaves_cox_model_on_its_own_data(spark, reg_df):
+    """Cox gradients need the Breslow risk sets: the refresh takes them
+    from the trainer's relational pass, so refreshing a cox model on
+    its own data keeps its leaves."""
+    fcols = [f"c{i}" for i in range(5)]
+    model = train(TrainParams(objective="survival:cox", num_boost_round=2,
+                              max_depth=2), reg_df, feature_cols=fcols)
+    refreshed = refresh_leaves(model, reg_df, feature_cols=fcols)
+    for rnd_a, rnd_b in zip(model.trees, refreshed.trees):
+        for ta, tb in zip(rnd_a, rnd_b):
+            assert np.allclose(ta.leaf_value, tb.leaf_value, rtol=0, atol=1e-9)
+
+
 def test_interaction_constraint_whole_path_containment():
     """Reference FeatureInteractionConstraintHost::SplitImpl
     (constraints.cc:58-102): a candidate is permitted only via a

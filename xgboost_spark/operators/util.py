@@ -20,6 +20,12 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_str(s: str) -> str:
+    """A string as a Spark SQL string literal: single-quoted, with
+    backslash and quote escaped (the parser unescapes both)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def sql_double(x) -> str:
     """A double as Spark SQL text that parses back to the same value."""
     x = float(x)

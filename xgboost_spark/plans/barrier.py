@@ -22,9 +22,10 @@ global relational context (Cox partial likelihood, AMS), callbacks and
 custom metrics.  `plans/booster._choose_path` is the one place that
 picks between the two (through `supports_barrier`), before any Spark
 job runs.  Both trainers share booster's per-row parse (`parse_rows`),
-DART dropout and normalization (`dart_drop`, `dart_weights`) and
-early-stopping rule (`_early_stop`); each keeps its own margin-update
-loops.
+gradient kernel (`_compute_grads`), DART dropout and normalization
+(`dart_drop`, `dart_weights`) and early-stopping rule (`_early_stop`).
+The margin cache is kept in NumPy arrays here and by booster's one
+frame kernel (`_frame_batch`) on the DataFrame path.
 
 Scale: per-task memory = its partition's quantized matrix (int16) —
 size partitions so each fits (same contract as the reference Spark

@@ -36,16 +36,24 @@ for Spark's execution model:
   broadcast partial tree inside the histogram pass (see
   operators/histogram.py) — one Spark job per tree level;
 - the prediction cache (`include/xgboost/cache.h`, used
-  `learner.cc:1128`) becomes persisted margin columns: after each round
-  ONE Arrow-batched pass adds the new trees' leaf values to the margin
-  and computes the next round's gradients, then `localCheckpoint`
-  truncates the lineage (at cluster scale use a reliable checkpoint
-  dir; the pattern is identical);
+  `learner.cc:1128`) becomes persisted margin columns, kept by ONE
+  per-batch kernel (`_frame_batch`) that `_frame_pass` maps over a
+  frame and `localCheckpoint`s (at cluster scale use a reliable
+  checkpoint dir; the pattern is identical).  After each round the
+  kernel adds the new trees (and, for DART, the rescale corrections)
+  to the margin and writes the next round's gradients at that margin
+  minus the next round's dropped trees; it re-bins approx features and
+  replays `refresh_leaves`' margins too;
 - gradients/hessians are fp64 columns (reference accumulates
   `GradientPairPrecise`, `src/common/hist_util.h:388`).
 
-Per-round Spark jobs: depth (histogram levels) + 1 (margin/grad update)
-+ |evals| — independent of cluster size and of the number of tree nodes.
+Per-round Spark jobs: one histogram query per tree level (two jobs
+under AQE: shuffle map stage, then result) + 1 margin/gradient pass,
+plus per eval frame one margin pass and its metric queries — 7 at
+depth 3 without evals, for gbtree and DART alike, independent of
+cluster size and of the number of tree nodes.  Global-scale objectives
+add one scale-statistics job, cox its Breslow pass, approx a re-sketch
+and a re-bin pass.
 """
 
 from __future__ import annotations
@@ -169,6 +177,224 @@ def parse_rows(pdf: pd.DataFrame, fnames: list[str], cuts, cat_mask, K: int,
     return Xb, y, w, q, bounds, m, (Xr if keep_raw else None)
 
 
+# ---------------------------------------------------------------------
+# The DataFrame trainer's frame: one row per training (or eval) row,
+# columns ``x*`` [``rawx*``] ``y w`` [``yl yu``] [``q``] ``m*`` [``g* h*``]
+
+
+def _frame_schema(Fn: int, K: int, has_q: bool, with_grads: bool,
+                  with_bounds: bool = False, with_raw: bool = False) -> str:
+    parts = [f"x{i} smallint" for i in range(Fn)]
+    if with_raw:
+        parts += [f"rawx{i} double" for i in range(Fn)]
+    parts += ["y double", "w double"]
+    if with_bounds:
+        parts += ["yl double", "yu double"]
+    if has_q:
+        parts.append("q long")
+    parts += [f"m{k} double" for k in range(K)]
+    if with_grads:
+        parts += [f"g{k} double" for k in range(K)]
+        parts += [f"h{k} double" for k in range(K)]
+    return ", ".join(parts)
+
+
+def _global_grads(obj) -> bool:
+    """Gradients that need a frame-wide statistic first: the Breslow
+    risk sets (cox) or the residual scale (global-scale objectives)."""
+    return obj.needs_global_sort or obj.needs_global_scale
+
+
+def _write_grads(out: dict, grads, y, m, w, q, bounds, K: int) -> None:
+    """The gradient writer: ``g*``/``h*`` columns at margin ``m``;
+    ``grads`` is ``(obj, seed, subsample)``."""
+    obj, seed, subsample = grads
+    g, h = _compute_grads(obj, y, m, w, q, seed, subsample, K, bounds=bounds)
+    for k in range(K):
+        out[f"g{k}"] = g[:, k]
+        out[f"h{k}"] = h[:, k]
+
+
+def _round_entries(round_trees: list, K: int, weight: float) -> list:
+    """One boosting round as ``(group, tree arrays, weight)`` entries;
+    a round's trees are ordered ``[k0_f0, .., k0_fN, k1_f0, ..]``."""
+    nf = len(round_trees) // K
+    return [(i // nf, t.finalize_arrays(), weight)
+            for i, t in enumerate(round_trees)]
+
+
+def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
+                cat_mask, K: int, base_score, prev_state=None,
+                has_b: bool = False, keep_raw: bool = False,
+                grads=None) -> DataFrame:
+    """The init pass: `parse_rows` per batch into frame columns, then
+    the gradient writer when ``grads`` is given (for objectives whose
+    gradients need a global statistic, `_grads_pass` writes them next).
+    Not checkpointed: the trainer repartitions the result first."""
+    sc = raw.sparkSession.sparkContext
+    bc = sc.broadcast(([np.asarray(c) for c in cuts], prev_state))
+    Fn = len(fnames)
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cuts_l, st_prev = bc.value
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            Xb, y, w, q, bounds, m, Xr = parse_rows(
+                pdf, fnames, cuts_l, cat_mask, K, base_score, st_prev,
+                has_b, keep_raw=keep_raw)
+            out = {f"x{i}": Xb[:, i] for i in range(Fn)}
+            if keep_raw:
+                out.update({f"rawx{i}": Xr[:, i] for i in range(Fn)})
+            out["y"] = y
+            out["w"] = w if w is not None else np.ones(len(pdf))
+            if has_b:
+                out["yl"], out["yu"] = bounds
+            if q is not None:
+                out["q"] = q
+            for k in range(K):
+                out[f"m{k}"] = m[:, k]
+            if grads is not None and _global_grads(grads[0]):
+                # zeros that `_grads_pass` overwrites; the columns stay,
+                # as the trainer's round-robin repartition first sorts
+                # rows by their bytes
+                out.update({f"{c}{k}": np.zeros(len(pdf))
+                            for c in "gh" for k in range(K)})
+            elif grads is not None:
+                _write_grads(out, grads, y, m, w, q, bounds, K)
+            yield pd.DataFrame(out)
+
+    return raw.mapInPandas(fn, schema=schema)
+
+
+def _frame_batch(pdf: pd.DataFrame, K: int, add=(), drop=(),
+                 use_raw: bool = False, cuts=None, cat_mask=None,
+                 grads=None):
+    """The one per-batch kernel over a frame (the reference's prediction
+    cache update, `learner.cc:1128-1131`): returns ``(out columns,
+    margin minus drop)``.
+
+    In order: re-bin ``x*`` from ``rawx*`` on ``cuts`` (approx); add
+    each ``(group, tree arrays, weight)`` entry of ``add`` to the
+    margin; subtract the ``drop`` entries from a copy of it (DART);
+    write ``g*``/``h*`` at that copy when ``grads`` is given.  Trees
+    route rows by bin (``x*``) or, with ``use_raw``, by raw value
+    (approx: bins change per round, raw split values do not).  Columns
+    not written pass through."""
+    out = {c: pdf[c] for c in pdf.columns}
+    Fn = sum(c[0] == "x" for c in pdf.columns)
+    if cuts is not None:
+        for i in range(Fn):
+            if cat_mask is None or not cat_mask[i]:
+                out[f"x{i}"] = core.bin_values(
+                    pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan),
+                    cuts[i])
+    m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64)
+                         for k in range(K)])
+    if add or drop:
+        if use_raw:
+            X = np.column_stack([
+                pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan)
+                for i in range(Fn)])
+        else:
+            X = np.column_stack([pdf[f"x{i}"].to_numpy(dtype=np.int16, na_value=-1)
+                                 for i in range(Fn)])
+
+        def leaf_values(arrs):
+            lid = core.leaf_ids_from_arrays(arrs, X, binned=not use_raw)
+            return arrs["leaf_value"][lid]
+
+        for k, arrs, wt in add:
+            m[:, k] += wt * leaf_values(arrs)
+        if add:
+            out.update({f"m{k}": m[:, k] for k in range(K)})
+        if drop:
+            m = m.copy()
+            for k, arrs, wt in drop:
+                m[:, k] -= wt * leaf_values(arrs)
+    if grads is not None:
+        y = pdf["y"].to_numpy(dtype=np.float64)
+        w = pdf["w"].to_numpy(dtype=np.float64)
+        q = pdf["q"].to_numpy(dtype=np.int64) if "q" in out else None
+        bounds = ((pdf["yl"].to_numpy(dtype=np.float64),
+                   pdf["yu"].to_numpy(dtype=np.float64))
+                  if "yl" in out else None)
+        _write_grads(out, grads, y, m, w, q, bounds, K)
+    return out, m
+
+
+def _frame_pass(frame: DataFrame, schema: str, K: int, add=(), drop=(),
+                use_raw: bool = False, cuts=None, cat_mask=None,
+                grads=None) -> DataFrame:
+    """`_frame_batch` mapped over ``frame``, localCheckpointed (at
+    cluster scale a reliable checkpoint dir; the pattern is the same)."""
+    bc = frame.sparkSession.sparkContext.broadcast((list(add), list(drop), cuts))
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        add_l, drop_l, cuts_l = bc.value
+        for pdf in it:
+            if len(pdf):
+                out, _m = _frame_batch(pdf, K, add_l, drop_l, use_raw, cuts_l,
+                                       cat_mask, grads)
+                yield pd.DataFrame(out)
+
+    return frame.mapInPandas(fn, schema=schema).localCheckpoint(eager=True)
+
+
+def _scale_stats(frame: DataFrame, obj, K: int, add, drop,
+                 use_raw: bool) -> np.ndarray:
+    """The objective's global scale statistics (reference smooth-MM MAE
+    / logistic-smoothed quantile: a GLOBAL weighted reduction per
+    iteration, regression_obj.cu:642-660 / quantile_obj.cu:123-152)
+    summed over every partition, at the margin `_frame_batch` computes
+    from the same ``add``/``drop``: one job."""
+    bc = frame.sparkSession.sparkContext.broadcast((list(add), list(drop)))
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        add_l, drop_l = bc.value
+        acc = None
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            _out, m = _frame_batch(pdf, K, add_l, drop_l, use_raw)
+            st = obj.scale_stats(pdf["y"].to_numpy(dtype=np.float64),
+                                 m if K > 1 else m[:, 0],
+                                 pdf["w"].to_numpy(dtype=np.float64))
+            acc = st if acc is None else acc + st
+        if acc is not None:
+            yield pd.DataFrame({f"s{i}": [acc[i]] for i in range(len(acc))})
+
+    n_stats = K + 1
+    r = (frame.mapInPandas(fn, schema=", ".join(f"s{i} double"
+                                                for i in range(n_stats)))
+         .agg(*[F.sum(f"s{i}").alias(f"s{i}") for i in range(n_stats)])
+         .first())
+    return np.array([float(r[f"s{i}"] or 0.0) for i in range(n_stats)])
+
+
+def _grads_pass(frame: DataFrame, schema: str, obj, K: int, add, drop,
+                grads, use_raw: bool = False,
+                n_part: int | None = None) -> DataFrame:
+    """``frame`` with ``add`` applied to its margins and ``g*``/``h*``
+    written at that margin minus ``drop``: one `_frame_pass`.  A
+    global-scale objective first sums its scale statistics at the same
+    margin (`_scale_stats`, as the barrier trainer allreduces them), so
+    every batch computes gradients with one scale.  Cox runs the margin
+    pass, then the Breslow pass (`_cox_grad_pass`); `_choose_path`
+    refuses DART with cox, so ``drop`` is empty there."""
+    if obj.needs_global_sort:
+        if add:
+            frame = _frame_pass(frame, schema, K, add, use_raw=use_raw)
+        return SparkBooster._cox_grad_pass(frame, schema, n_part)
+    if not obj.needs_global_scale:
+        return _frame_pass(frame, schema, K, add, drop, use_raw, grads=grads)
+    obj.set_scale(_scale_stats(frame, obj, K, add, drop, use_raw))
+    try:                        # the scale is pickled into the pass
+        return _frame_pass(frame, schema, K, add, drop, use_raw, grads=grads)
+    finally:
+        obj.set_scale(None)     # never leak a stale scale
+
+
 def dart_drop(p, rng, tree_weights: list[float]) -> list[int]:
     """DART dropout selection (reference gbtree.h:89-123 DropTrees): the
     indices of the rounds dropped this round.  Every draw comes from
@@ -266,6 +492,12 @@ def _choose_path(p, obj, evals, callbacks, custom_metric,
         raise NotImplementedError(
             "multi_output_tree trains on the barrier path "
             f"(exec_mode=auto|barrier); blocked because: {why}")
+    if p.booster == "dart" and obj.needs_global_sort:
+        # the Breslow pass reads the cached margin, not the dropped-out
+        # one DART trains on
+        raise NotImplementedError(
+            f"booster='dart' is not supported with {p.objective}: its "
+            "risk-set gradients need the dropped-out margin")
     return "dataframe", why
 
 
@@ -376,22 +608,6 @@ class SparkBooster:
         self.obj = get_objective(obj if obj is not None else params.objective, params)
 
     # ------------------------------------------------------------------
-    def _schema(self, Fn: int, K: int, has_q: bool, with_grads: bool,
-                with_bounds: bool = False, with_raw: bool = False) -> str:
-        parts = [f"x{i} smallint" for i in range(Fn)]
-        if with_raw:
-            parts += [f"rawx{i} double" for i in range(Fn)]
-        parts += ["y double", "w double"]
-        if with_bounds:
-            parts += ["yl double", "yu double"]
-        if has_q:
-            parts.append("q long")
-        parts += [f"m{k} double" for k in range(K)]
-        if with_grads:
-            parts += [f"g{k} double" for k in range(K)]
-            parts += [f"h{k} double" for k in range(K)]
-        return ", ".join(parts)
-
     # expectileerror is NOT fusable: its InitEstimation is mean + a
     # per-alpha Newton step (regression_obj.cu:409-455), which needs a
     # second pass over (mean - y) — see _base_score
@@ -930,75 +1146,45 @@ class SparkBooster:
         rows, margins and gradients live in a checkpointed DataFrame;
         each tree level is one histogram job, each round one margin
         pass per frame; callbacks drive the loop like the reference's
-        CallbackContainer."""
+        CallbackContainer.
+
+        DART draws round r+1's dropout at the end of round r, so it
+        reads the DART parameters as they stand then: only a callback
+        that edits them in ``before_iteration`` could notice."""
         p = self.params
         obj = self.obj
-        sc = raw.sparkSession.sparkContext
         K = p.n_groups
         Fn = len(fnames)
         has_q = "qid" in raw.columns
         has_b = obj.needs_bounds
-        is_cox = obj.needs_global_sort
         is_approx = p.tree_method == "approx"
         fw = (np.asarray(p.feature_weights, dtype=np.float64)
               if p.feature_weights is not None else None)
-        bc_prev = sc.broadcast(prev_state) if prev_state is not None else None
-        bc_cuts = sc.broadcast([np.asarray(c) for c in cuts])
-        bc_catmask = sc.broadcast(cat_mask)
-        subsample = p.subsample
         seed = p.seed
 
-        def rows_fn(with_grads: bool):
-            def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cuts_l = bc_cuts.value
-                cm = bc_catmask.value
-                st_prev = bc_prev.value if bc_prev is not None else None
-                for pdf in it:
-                    if len(pdf) == 0:
-                        continue
-                    Xb, y, w, q, bounds, m0, Xr = parse_rows(
-                        pdf, fnames, cuts_l, cm, K, base_score, st_prev,
-                        has_b, keep_raw=is_approx)
-                    out = {f"x{i}": Xb[:, i] for i in range(Fn)}
-                    if is_approx:
-                        out.update({f"rawx{i}": Xr[:, i] for i in range(Fn)})
-                    out["y"] = y
-                    out["w"] = w if w is not None else np.ones(len(pdf))
-                    if has_b:
-                        out["yl"], out["yu"] = bounds
-                    if has_q:
-                        out["q"] = q
-                    for k in range(K):
-                        out[f"m{k}"] = m0[:, k]
-                    if with_grads:
-                        if is_cox or obj.needs_global_scale:
-                            # filled by the cox / global-scale pass
-                            g = h = np.zeros((len(pdf), K))
-                        else:
-                            g, h = _compute_grads(obj, y, m0, w, q, seed,
-                                                  subsample, K, bounds=bounds)
-                        for k in range(K):
-                            out[f"g{k}"] = g[:, k]
-                            out[f"h{k}"] = h[:, k]
-                    yield pd.DataFrame(out)
-            return fn
+        def grads(round_seed: int):
+            return (obj, round_seed, p.subsample)
 
-        train_schema = self._schema(Fn, K, has_q, with_grads=True, with_bounds=has_b,
-                                    with_raw=is_approx)
-        eval_schema = self._schema(Fn, K, has_q, with_grads=False,
-                                   with_bounds=has_b, with_raw=is_approx)
-        binned = raw.mapInPandas(rows_fn(True), schema=train_schema)
+        train_schema = _frame_schema(Fn, K, has_q, with_grads=True,
+                                     with_bounds=has_b, with_raw=is_approx)
+        eval_schema = _frame_schema(Fn, K, has_q, with_grads=False,
+                                    with_bounds=has_b, with_raw=is_approx)
+
+        def parse(frame: DataFrame, with_grads: bool) -> DataFrame:
+            return _parse_pass(
+                frame, train_schema if with_grads else eval_schema, fnames,
+                cuts, cat_mask, K, base_score, prev_state, has_b, is_approx,
+                grads(seed) if with_grads else None)
+
+        binned = parse(raw, True)
         if not has_q:
             binned = binned.repartition(n_part)
         binned = binned.localCheckpoint(eager=True)
-        if is_cox:
-            binned = self._cox_grad_pass(binned, train_schema, n_part)
-        elif obj.needs_global_scale:
-            binned = self._scale_grad_pass(binned, train_schema, K, seed)
-        eval_states = [
-            [ev_raw.mapInPandas(rows_fn(False), schema=eval_schema)
-             .localCheckpoint(eager=True), ev_name]
-            for ev_raw, ev_name in evals_raw]
+        if _global_grads(obj):
+            binned = _grads_pass(binned, train_schema, obj, K, [], [],
+                                 grads(seed), n_part=n_part)
+        eval_states = [[parse(ev_raw, False).localCheckpoint(eager=True),
+                        ev_name] for ev_raw, ev_name in evals_raw]
 
         fcols = [f"x{i}" for i in range(Fn)]
         builders = [
@@ -1008,6 +1194,7 @@ class SparkBooster:
         rng = np.random.default_rng(p.seed)
         trees: list[list[core.Tree]] = []
         tree_weights: list[float] = []
+        dropped: list[int] = []       # DART: this round's dropped rounds
         history: dict[str, dict[str, list[float]]] = {}
         best_it, best_metric = None, None
         metric_names = _effective_metrics(p, obj)
@@ -1048,21 +1235,12 @@ class SparkBooster:
                     binned, [f"rawx{i}" for i in range(Fn)], "h0",
                     p.max_bin, n_part, skip=cat_idx_skip)
                 cuts = [c if nc is None else nc for c, nc in zip(cuts, new_cuts)]
-                bc_it_cuts = sc.broadcast([np.asarray(c) for c in cuts])
-                binned = self._rebin_pass(binned, bc_it_cuts, Fn, cat_mask,
-                                          train_schema)
+                binned = _frame_pass(binned, train_schema, K, cuts=cuts,
+                                     cat_mask=cat_mask)
                 builders = [
                     SparkHistBuilder(binned, fcols, cuts, gcol=f"g{k}", hcol=f"h{k}")
                     for k in range(K)
                 ]
-            # DART: refresh gradients at the dropped-out margin
-            dropped = dart_drop(p, rng, tree_weights)
-            if dropped:
-                binned = self._dart_grad_pass(
-                    binned, trees, tree_weights, dropped, K, fcols, has_q,
-                    train_schema, seed + it_round)
-                for k in range(K):
-                    builders[k].df = binned
 
             round_trees: list[core.Tree] = []
             fmask = None
@@ -1091,35 +1269,31 @@ class SparkBooster:
                     self._adaptive_leaf_refresh(binned, t, alpha_k, p.eta,
                                                 group=k_r)
 
-            # DART re-weighting: one (group, tree, delta weight) margin
-            # correction per dropped tree, applied by the margin pass
+            # the margin pass adds the new round, then one (group, tree,
+            # delta weight) correction per tree of each re-weighted
+            # dropped round (DART)
             w_new, factor = dart_weights(p, len(dropped))
-            adjust: list[tuple[int, dict, float]] = []
+            add = _round_entries(round_trees, K, w_new)
             for ri in dropped:
-                dw = tree_weights[ri] * (factor - 1.0)
-                # round ri trees are ordered [k0_f0, .., k0_fN, k1_f0, ..]
-                nf = len(trees[ri]) // K
-                for k in range(K):
-                    for j in range(nf):
-                        adjust.append((k, trees[ri][k * nf + j].finalize_arrays(), dw))
+                add += _round_entries(trees[ri], K,
+                                      tree_weights[ri] * (factor - 1.0))
                 tree_weights[ri] *= factor
             trees.append(round_trees)
             tree_weights.append(w_new)
-
-            next_seed = seed + it_round + 1
-            binned = self._update_margins(
-                binned, round_trees, K, fcols, has_q, with_grads=True,
-                next_seed=next_seed, train_schema=train_schema,
-                new_weight=w_new, adjust=adjust, use_raw=is_approx,
-            )
+            # DART: draw the next round's dropout now that this round is
+            # committed (nothing below draws from rng before the next
+            # round grows), so the margin pass writes its gradients at
+            # the dropped-out margin directly
+            dropped = dart_drop(p, rng, tree_weights)
+            drop = [e for ri in dropped
+                    for e in _round_entries(trees[ri], K, tree_weights[ri])]
+            binned = _grads_pass(binned, train_schema, obj, K, add, drop,
+                                 grads(seed + it_round + 1), is_approx)
             for k in range(K):
                 builders[k].df = binned
             for st in eval_states:
-                st[0] = self._update_margins(
-                    st[0], round_trees, K, fcols, has_q, with_grads=False,
-                    next_seed=0, train_schema=eval_schema,
-                    new_weight=w_new, adjust=adjust, use_raw=is_approx,
-                )
+                st[0] = _frame_pass(st[0], eval_schema, K, add,
+                                    use_raw=is_approx)
             # evaluation + early stopping (reference EvalOneIter
             # `learner.cc:1164-1194`; EarlyStopping callback.py:311)
             if eval_states:
@@ -1295,214 +1469,8 @@ class SparkBooster:
             if tree.left[nid] == -1:
                 tree.leaf_value[nid] = eta * float(r["qv"])
 
-    def _update_margins(self, df: DataFrame, round_trees: list[core.Tree], K: int,
-                        fcols: list[str], has_q: bool, with_grads: bool,
-                        next_seed: int, train_schema: str,
-                        new_weight: float = 1.0,
-                        adjust: list[tuple[int, dict, float]] | None = None,
-                        use_raw: bool = False) -> DataFrame:
-        """Margin-cache update.  ``new_weight`` scales the new trees (DART);
-        ``adjust`` applies (group, tree_arrays, delta_weight) corrections
-        for re-weighted dropped trees — one pass covers both.  ``use_raw``
-        routes rows by raw-domain thresholds (approx mode: bin ids change
-        per round, raw split values do not)."""
-        p = self.params
-        obj = self.obj
-        sc = df.sparkSession.sparkContext
-        n_forest = len(round_trees) // K
-        bc = sc.broadcast([t.finalize_arrays() for t in round_trees])
-        bc_adj = sc.broadcast(adjust or [])
-        subsample = p.subsample
-        has_b = obj.needs_bounds
-        is_cox = obj.needs_global_sort
-
-        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tree_arrs = bc.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                if use_raw:
-                    Xb = np.column_stack([
-                        pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan)
-                        for i in range(len(fcols))])
-                else:
-                    Xb = np.column_stack([
-                        pdf[c].to_numpy(dtype=np.int16, na_value=-1) for c in fcols])
-                out = {c: pdf[c] for c in pdf.columns
-                       if c in fcols or c.startswith("rawx")}
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                w = pdf["w"].to_numpy(dtype=np.float64)
-                out["y"] = y
-                out["w"] = w
-                bounds = None
-                if has_b:
-                    yl = pdf["yl"].to_numpy(dtype=np.float64)
-                    yu = pdf["yu"].to_numpy(dtype=np.float64)
-                    out["yl"], out["yu"] = yl, yu
-                    bounds = (yl, yu)
-                q = None
-                if has_q:
-                    q = pdf["q"].to_numpy(dtype=np.int64)
-                    out["q"] = q
-                m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64) for k in range(K)])
-                ti = 0
-                for k in range(K):
-                    for _ in range(n_forest):
-                        arrs = tree_arrs[ti]
-                        lid = core.leaf_ids_from_arrays(arrs, Xb, binned=not use_raw)
-                        m[:, k] += new_weight * arrs["leaf_value"][lid]
-                        ti += 1
-                for k_adj, arrs, dw in bc_adj.value:
-                    lid = core.leaf_ids_from_arrays(arrs, Xb, binned=not use_raw)
-                    m[:, k_adj] += dw * arrs["leaf_value"][lid]
-                for k in range(K):
-                    out[f"m{k}"] = m[:, k]
-                if with_grads:
-                    if is_cox or obj.needs_global_scale:
-                        # filled by the cox / global-scale pass
-                        g = h = np.zeros((len(pdf), K))
-                    else:
-                        g, h = _compute_grads(obj, y, m, w, q, next_seed, subsample, K,
-                                              bounds=bounds)
-                    for k in range(K):
-                        out[f"g{k}"] = g[:, k]
-                        out[f"h{k}"] = h[:, k]
-                yield pd.DataFrame(out)
-
-        out_df = df.mapInPandas(fn, schema=train_schema).localCheckpoint(eager=True)
-        if with_grads and is_cox:
-            out_df = self._cox_grad_pass(out_df, train_schema, None)
-        elif with_grads and obj.needs_global_scale:
-            out_df = self._scale_grad_pass(out_df, train_schema, K, next_seed)
-        return out_df
-
-    def _rebin_pass(self, binned: DataFrame, bc_cuts, Fn: int,
-                    cat_mask, train_schema: str) -> DataFrame:
-        """Re-quantize numeric features against fresh cuts (approx mode);
-        raw columns and everything else pass through untouched."""
-
-        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cuts_l = bc_cuts.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                out = {c: pdf[c] for c in pdf.columns}
-                for i in range(Fn):
-                    if cat_mask is not None and cat_mask[i]:
-                        continue
-                    out[f"x{i}"] = core.bin_values(
-                        pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan),
-                        cuts_l[i])
-                yield pd.DataFrame(out)
-
-        return binned.mapInPandas(fn, schema=train_schema).localCheckpoint(eager=True)
-
-    def _dart_grad_pass(self, binned: DataFrame, trees, tree_weights,
-                        dropped: list[int], K: int, fcols: list[str],
-                        has_q: bool, train_schema: str, grad_seed: int) -> DataFrame:
-        """Recompute gradients at the dropped-out margin
-        m_eff = m - sum_{r in D} w_r * T_r(x) without touching the cached
-        margin columns (reference DART boosting, gbtree.h:89-123)."""
-        obj = self.obj
-        p = self.params
-        sc = binned.sparkSession.sparkContext
-        drop_arrs = []
-        for ri in dropped:
-            nf = len(trees[ri]) // K
-            for k in range(K):
-                for j in range(nf):
-                    drop_arrs.append((k, trees[ri][k * nf + j].finalize_arrays(),
-                                      tree_weights[ri]))
-        bc = sc.broadcast(drop_arrs)
-        subsample = p.subsample
-        has_b = obj.needs_bounds
-
-        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            arrs_l = bc.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                Xb = np.column_stack([pdf[c].to_numpy(dtype=np.int16, na_value=-1)
-                                      for c in fcols])
-                out = {c: pdf[c] for c in pdf.columns if not c.startswith(("g", "h"))}
-                m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64)
-                                     for k in range(K)])
-                m_eff = m.copy()
-                for k_adj, arrs, w in arrs_l:
-                    lid = core.leaf_ids_from_arrays(arrs, Xb, binned=True)
-                    m_eff[:, k_adj] -= w * arrs["leaf_value"][lid]
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                w_ = pdf["w"].to_numpy(dtype=np.float64)
-                q = pdf["q"].to_numpy(dtype=np.int64) if has_q else None
-                bounds = ((pdf["yl"].to_numpy(dtype=np.float64),
-                           pdf["yu"].to_numpy(dtype=np.float64)) if has_b else None)
-                g, h = _compute_grads(obj, y, m_eff, w_, q, grad_seed, subsample, K,
-                                      bounds=bounds)
-                for k in range(K):
-                    out[f"g{k}"] = g[:, k]
-                    out[f"h{k}"] = h[:, k]
-                yield pd.DataFrame(out)
-
-        return binned.mapInPandas(fn, schema=train_schema).localCheckpoint(eager=True)
-
-    def _scale_grad_pass(self, binned: DataFrame, train_schema: str,
-                         K: int, seed: int) -> DataFrame:
-        """Gradients for global-scale objectives (reference smooth-MM
-        MAE / logistic-smoothed quantile: the per-iteration residual
-        scale is a GLOBAL weighted reduction, regression_obj.cu:642-660
-        / quantile_obj.cu:123-152).  Two steps over the checkpointed
-        frame: (1) aggregate the objective's scale_stats partial sums,
-        (2) recompute the g/h columns with the global scale installed —
-        a per-partition scale would silently train a different model
-        than the single-machine reference."""
-        obj = self.obj
-        p = self.params
-        subsample = p.subsample
-
-        def stats_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc = None
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                w = pdf["w"].to_numpy(dtype=np.float64)
-                m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64)
-                                     for k in range(K)])
-                st = obj.scale_stats(y, m if K > 1 else m[:, 0], w)
-                acc = st if acc is None else acc + st
-            if acc is not None:
-                yield pd.DataFrame({f"s{i}": [acc[i]]
-                                    for i in range(len(acc))})
-
-        n_stats = K + 1
-        st_schema = ", ".join(f"s{i} double" for i in range(n_stats))
-        r = (binned.mapInPandas(stats_fn, schema=st_schema)
-             .agg(*[F.sum(f"s{i}").alias(f"s{i}") for i in range(n_stats)])
-             .first())
-        stats = np.array([float(r[f"s{i}"] or 0.0) for i in range(n_stats)])
-        obj.set_scale(stats)          # pickled into the closure below
-
-        def grads_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                out = {c: pdf[c] for c in pdf.columns}
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                w = pdf["w"].to_numpy(dtype=np.float64)
-                m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64)
-                                     for k in range(K)])
-                g, h = _compute_grads(obj, y, m, w, None, seed, subsample, K)
-                for k in range(K):
-                    out[f"g{k}"] = g[:, k]
-                    out[f"h{k}"] = h[:, k]
-                yield pd.DataFrame(out)
-
-        out_df = (binned.mapInPandas(grads_fn, schema=train_schema)
-                  .localCheckpoint(eager=True))
-        obj.set_scale(None)           # never leak a stale scale
-        return out_df
-
-    def _cox_grad_pass(self, binned: DataFrame, train_schema: str,
+    @staticmethod
+    def _cox_grad_pass(binned: DataFrame, train_schema: str,
                        n_part: int | None) -> DataFrame:
         """Cox partial-likelihood gradients, distributed (reference
         `regression_obj.cu:598-604` needs label-sorted data; here the sort
@@ -1706,10 +1674,12 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
                    weight_col: str | None = None) -> GBDTModel:
     """Refresh updater (reference `src/tree/updater_refresh.cc:153`):
     keep every tree's structure but recompute node stats and leaf weights
-    on (possibly new) data.  Replays the boosting sequence: for each round,
-    gradients at the current margin, then one `groupBy(leaf).agg(sum g, sum h)`
-    job per tree to re-derive `leaf = eta * CalcWeight(G, H)`.
-    Single-output models only (K=1)."""
+    on (possibly new) data.  Replays the boosting sequence over the
+    DataFrame trainer's frame, whose ``g0``/``h0`` hold the gradients at
+    the current margin (no row sampling): one `groupBy(leaf).agg(sum g,
+    sum h)` job per tree re-derives ``leaf = eta * CalcWeight(G, H)``,
+    then one `_grads_pass` adds the refreshed round, scaled by its DART
+    weight.  Single-output models only (K=1)."""
     p = model.params
     if p.n_groups != 1:
         raise NotImplementedError("refresh_leaves supports single-output models")
@@ -1717,57 +1687,17 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
     sc = df.sparkSession.sparkContext
     raw, fnames = assemble_features(
         df, feature_cols=feature_cols, array_col=array_col,
-        label_col=label_col, weight_col=weight_col)
-    has_w = "weight" in raw.columns
-    bc_cuts = sc.broadcast([np.asarray(c) for c in model.cuts])
+        label_col=label_col, weight_col=weight_col, missing=model.missing)
     Fn = len(fnames)
-
-    def init_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cuts_l = bc_cuts.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            out = {}
-            for i, c in enumerate(fnames):
-                out[f"x{i}"] = core.bin_values(
-                    pdf[c].to_numpy(dtype=np.float64, na_value=np.nan), cuts_l[i])
-            out["y"] = pdf["label"].to_numpy(dtype=np.float64)
-            out["w"] = (pdf["weight"].to_numpy(dtype=np.float64)
-                        if has_w else np.ones(len(pdf)))
-            out["m0"] = np.full(len(pdf), model.base_score, dtype=np.float64)
-            yield pd.DataFrame(out)
-
-    schema = ", ".join([f"x{i} smallint" for i in range(Fn)]
-                       + ["y double", "w double", "m0 double"])
-    binned = raw.mapInPandas(init_fn, schema=schema).localCheckpoint(eager=True)
+    schema = _frame_schema(Fn, 1, False, with_grads=True)
+    grads = (obj, p.seed, 1.0)
+    frame = _parse_pass(raw, schema, fnames, model.cuts, None, 1,
+                        model.base_score, grads=grads).localCheckpoint(eager=True)
+    if _global_grads(obj):
+        frame = _grads_pass(frame, schema, obj, 1, [], [], grads)
     fcols = [f"x{i}" for i in range(Fn)]
-    def _install_global_scale(cur_binned):
-        # refresh gradients for global-scale objectives (smooth MAE /
-        # smoothed quantile) are evaluated at the current m0 margin;
-        # install the GLOBAL residual scale so the per-partition
-        # grad_hess calls below match the reference's GlobalSum scale
-        def _sc_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc = None
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                st = obj.scale_stats(
-                    pdf["y"].to_numpy(dtype=np.float64),
-                    pdf["m0"].to_numpy(dtype=np.float64),
-                    pdf["w"].to_numpy(dtype=np.float64))
-                acc = st if acc is None else acc + st
-            if acc is not None:
-                yield pd.DataFrame({f"s{i}": [acc[i]] for i in range(len(acc))})
-
-        _r = (cur_binned.mapInPandas(_sc_fn, schema="s0 double, s1 double")
-              .agg(F.sum("s0").alias("s0"), F.sum("s1").alias("s1")).first())
-        obj.set_scale(np.array([float(_r["s0"] or 0.0),
-                                float(_r["s1"] or 0.0)]))
-
     new_trees: list[list[core.Tree]] = []
-    for round_trees in model.trees:
-        if obj.needs_global_scale:
-            _install_global_scale(binned)
+    for ri, round_trees in enumerate(model.trees):
         refreshed = []
         for tree in round_trees:
             bc_tree = sc.broadcast(tree.finalize_arrays())
@@ -1779,13 +1709,11 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
                         continue
                     Xb = np.column_stack([
                         pdf[c].to_numpy(dtype=np.int16, na_value=-1) for c in fcols])
-                    y = pdf["y"].to_numpy(dtype=np.float64)
-                    w = pdf["w"].to_numpy(dtype=np.float64)
-                    g, h = obj.grad_hess(y, pdf["m0"].to_numpy(dtype=np.float64), w)
                     leaf = core.leaf_ids_from_arrays(arrs, Xb, binned=True)
-                    yield pd.DataFrame({"leaf": leaf.astype(np.int32), "g": g, "h": h})
+                    yield pd.DataFrame({"leaf": leaf.astype(np.int32),
+                                        "g": pdf["g0"], "h": pdf["h0"]})
 
-            stats = (binned.mapInPandas(stats_fn, schema="leaf int, g double, h double")
+            stats = (frame.mapInPandas(stats_fn, schema="leaf int, g double, h double")
                      .groupBy("leaf").agg(F.sum("g").alias("G"), F.sum("h").alias("H"))
                      .collect())
             t2 = core.Tree(
@@ -1803,23 +1731,12 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
                         r["G"], r["H"], p.reg_lambda, p.reg_alpha, p.max_delta_step))
             refreshed.append(t2)
         new_trees.append(refreshed)
-        bc_round = sc.broadcast([t.finalize_arrays() for t in refreshed])
-
-        def margin_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tree_arrs = bc_round.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                Xb = np.column_stack([
-                    pdf[c].to_numpy(dtype=np.int16, na_value=-1) for c in fcols])
-                out = {c: pdf[c] for c in pdf.columns}
-                m = pdf["m0"].to_numpy(dtype=np.float64).copy()
-                for arrs in tree_arrs:
-                    m += arrs["leaf_value"][core.leaf_ids_from_arrays(arrs, Xb, binned=True)]
-                out["m0"] = m
-                yield pd.DataFrame(out)
-
-        binned = binned.mapInPandas(margin_fn, schema=schema).localCheckpoint(eager=True)
-    obj.set_scale(None)
-    return GBDTModel(p, model.base_score, new_trees, model.feature_names, model.cuts,
-                     best_iteration=model.best_iteration, eval_history=model.eval_history)
+        weight = model.tree_weights[ri] if model.tree_weights else 1.0
+        frame = _grads_pass(frame, schema, obj, 1,
+                            _round_entries(refreshed, 1, weight), [], grads)
+    out = GBDTModel(p, model.base_score, new_trees, model.feature_names,
+                    model.cuts, best_iteration=model.best_iteration,
+                    eval_history=model.eval_history,
+                    tree_weights=model.tree_weights)
+    out.missing = model.missing
+    return out

@@ -1027,8 +1027,7 @@ class GBDTModel:
         for i, c in enumerate(cols):
             if c in self.category_maps and dt.get(c) == "string":
                 tmp = f"__cat_{c}"
-                df = df.withColumn(tmp, encode_col(F.col(sql_ident(c)),
-                                                   self.category_maps[c]))
+                df = df.withColumn(tmp, encode_col(c, self.category_maps[c]))
                 cols[i] = tmp
                 added.append(tmp)
         return df, cols, added
@@ -1143,7 +1142,7 @@ class GBDTModel:
         feature_cols = feature_cols or self.feature_names
         if array_col is not None:
             dt = df.schema[array_col].dataType
-            col = F.col(array_col)
+            col = F.col(sql_ident(array_col))
             if type(dt).__name__ == "VectorUDT":
                 from pyspark.ml.functions import vector_to_array
                 col = vector_to_array(col)
@@ -1157,9 +1156,9 @@ class GBDTModel:
                 if self.category_maps and c in self.category_maps \
                         and dt.get(c) == "string":
                     from xgboost_spark.sources.encoder import encode_col
-                    feats.append(encode_col(F.col(c), self.category_maps[c]))
+                    feats.append(encode_col(c, self.category_maps[c]))
                 else:
-                    feats.append(F.col(c).cast("double"))
+                    feats.append(F.col(sql_ident(c)).cast("double"))
         margins = self.margin_exprs(feats)
         if base_margin_col is not None:
             # base_margin REPLACES base_score (predictor.cc:66-72):
@@ -1169,11 +1168,12 @@ class GBDTModel:
             bm_dt = dict(df.dtypes).get(base_margin_col, "")
             if bm_dt.startswith("array") and len(margins) > 1:
                 margins = [m - F.lit(float(bs[k]))
-                           + F.col(base_margin_col).getItem(k).cast("double")
+                           + F.col(sql_ident(base_margin_col)).getItem(k)
+                           .cast("double")
                            for k, m in enumerate(margins)]
             else:
                 margins = [m - F.lit(float(bs[k]))
-                           + F.col(base_margin_col).cast("double")
+                           + F.col(sql_ident(base_margin_col)).cast("double")
                            for k, m in enumerate(margins)]
         if output_margin:
             out = F.array(*margins) if len(margins) > 1 else margins[0]

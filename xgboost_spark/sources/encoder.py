@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from xgboost_spark.operators.util import sql_ident
+from xgboost_spark.operators.util import sql_double, sql_ident, sql_str
 
 
 def fit_ordinal_encoder(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
@@ -37,16 +37,16 @@ def fit_ordinal_encoder(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
     return {c: [str(v) for v in row[c]] for c in cols}
 
 
-def encode_col(col: Column, categories: list[str]) -> Column:
-    """value -> ordinal code as a map-literal lookup; unknowns -> NULL
-    (missing)."""
-    pairs: list[Column] = []
-    for code, v in enumerate(categories):
-        pairs.append(F.lit(v))
-        pairs.append(F.lit(float(code)))
-    if not pairs:
-        return F.lit(None).cast("double")
-    return F.create_map(*pairs)[col.cast("string")].cast("double")
+def encode_col(name: str, categories: list[str]) -> Column:
+    """Column ``name`` -> ordinal code as a map-literal lookup;
+    unknowns -> NULL (missing).  One SQL parse, however many categories
+    (a Column-API map costs py4j round trips per entry)."""
+    if not categories:
+        return F.expr("CAST(NULL AS DOUBLE)")
+    pairs = ", ".join(f"{sql_str(v)}, {sql_double(code)}"
+                      for code, v in enumerate(categories))
+    return F.expr(f"CAST(map({pairs})[CAST({sql_ident(name)} AS STRING)] "
+                  "AS DOUBLE)")
 
 
 def encode_ordinal(df: DataFrame, mapping: dict[str, list[str]],
@@ -61,5 +61,5 @@ def encode_ordinal(df: DataFrame, mapping: dict[str, list[str]],
             continue
         if only_string and dt[c] != "string":
             continue
-        out = out.withColumn(c, encode_col(F.col(sql_ident(c)), cats))
+        out = out.withColumn(c, encode_col(c, cats))
     return out
