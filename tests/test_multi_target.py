@@ -84,3 +84,22 @@ def test_dataframe_mode_rejects_multi_output(spark, cls_df):
     with pytest.raises(NotImplementedError, match="multi_output_tree"):
         SparkBooster(p).fit(cls_df, feature_cols=[f"f{i}" for i in range(4)],
                             label_col="label")
+
+
+def test_barrier_multi_output_tree_profiles_its_histogram_sync(
+        spark, cls_df, tmp_path, monkeypatch):
+    """The multi-target barrier builder records the same profile keys as
+    the scalar one: local histogram time and the sync's time, calls and
+    payload bytes."""
+    prof = tmp_path / "prof.json"
+    monkeypatch.setenv("SPARK_GRAFT_PROF", str(prof))
+    p = TrainParams(objective="multi:softprob", num_class=3,
+                    multi_strategy="multi_output_tree", exec_mode="barrier",
+                    num_boost_round=2, max_depth=3, max_bin=16, seed=1)
+    SparkBooster(p).fit(cls_df, feature_cols=[f"f{i}" for i in range(4)],
+                        label_col="label", num_partitions=2)
+    import json
+    got = json.loads(prof.read_text())
+    for k in ("hist_local", "hist_allreduce", "allreduce_calls",
+              "allreduce_bytes"):
+        assert got.get(k, 0) > 0, k

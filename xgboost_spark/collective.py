@@ -19,6 +19,15 @@ allreduce `src/collective/allreduce.cc:21-129`, rendezvous tracker
   is LATENCY-bound: at p=32 a ring's 62 sequential socket steps
   measured ~56 ms per call and 93% of the whole training loop (sf0.1
   profile); halving-doubling needs 12 steps for the same reduction.
+- the two halves are public, and `Comm.allreduce` is just one call of
+  each: ``reduce_scatter`` (pair-fold + halving) leaves each of the
+  ``owners`` ranks (the largest power of two <= p) with one fully
+  reduced contiguous range, and a folded-out rank with an empty one;
+  ``allgather`` (doubling + unfold) copies the owned ranges back to
+  every rank.  The barrier trainer stops after the first half for its
+  histograms and searches splits only on the features its range holds
+  (`plans/barrier._AllreduceHistBuilder`); it gathers the small
+  per-rank candidate tables with the second half.
 
 Determinism contract (the deterministic replicated tree-growth loop
 relies on it): every element of the reduced array is combined along a
@@ -28,7 +37,12 @@ copy those bytes verbatim — so all ranks observe bit-identical results,
 and re-running the same job reproduces them exactly.  (IEEE addition is
 commutative, so the two sides of one exchange computing ``a+b`` and
 ``b+a`` agree bitwise; only association order matters, and that is
-fixed by the rank topology.)
+fixed by the rank topology.)  The order depends on the halving-partner
+sequence only, never on where the segment boundaries fall: at p=4
+every element sums as ``(r0+r2)+(r1+r3)``.  So an owned range holds
+exactly the bits a full allreduce returns there, and reducing any
+subset of elements on its own (the trainer's categorical features)
+gives those same bits too.
 """
 
 from __future__ import annotations
@@ -62,9 +76,32 @@ class Comm:
     rank: int = 0
     nranks: int = 1
 
-    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
-        """op in {sum, min, max} (reference `Op` enum, comm.h:184)."""
+    @property
+    def owners(self) -> int:
+        """Ranks that own a non-empty range after `reduce_scatter`: the
+        largest power of two <= nranks."""
+        return _fold_count(self.nranks)[0]
+
+    def reduce_scatter(self, arr: np.ndarray, op: str = "sum"):
+        """First half of `allreduce`: ``(lo, part)``, where ``part`` is
+        the fully reduced ``arr.ravel()[lo:lo + len(part)]`` that this
+        rank owns.  op in {sum, min, max} (reference `Op` enum,
+        comm.h:184)."""
         raise NotImplementedError
+
+    def allgather(self, part: np.ndarray, n: int) -> np.ndarray:
+        """Second half of `allreduce`: every rank passes the part it owns
+        of an n-element array (as `reduce_scatter` of n elements assigns
+        them) and receives the whole array, each part copied verbatim."""
+        raise NotImplementedError
+
+    def reduce_scatter_sum(self, arr: np.ndarray):
+        return self.reduce_scatter(arr, "sum")
+
+    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
+        a = np.asarray(arr, dtype=np.float64)
+        return self.allgather(self.reduce_scatter(a, op)[1],
+                              a.size).reshape(a.shape)
 
     def allreduce_sum(self, arr: np.ndarray) -> np.ndarray:
         return self.allreduce(arr, "sum")
@@ -106,8 +143,11 @@ _OPS = {"sum": np.add, "min": np.minimum, "max": np.maximum}
 
 
 class Loopback(Comm):
-    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
-        return np.asarray(arr, dtype=np.float64)
+    def reduce_scatter(self, arr: np.ndarray, op: str = "sum"):
+        return 0, np.asarray(arr, dtype=np.float64).ravel()
+
+    def allgather(self, part: np.ndarray, n: int) -> np.ndarray:
+        return part
 
     def allgather_rows(self, a: np.ndarray) -> np.ndarray:
         return np.asarray(a, dtype=np.float64)
@@ -371,61 +411,69 @@ class MeshComm(Comm):
         self._exchange(self._socks[peer], b"", buf)
 
     # -- halving-doubling allreduce (Rabenseifner) ---------------------
-    def allreduce(self, arr: np.ndarray, op: str = "sum") -> np.ndarray:
+    def _halving(self, n: int):
+        """The reduce-scatter's steps over an n-element array, outermost
+        first: ``(s, e, mid, partner, lower)`` per step, and the owned
+        range ``(s, e)`` left at the end (empty for a folded-out rank)."""
+        q, rem = _fold_count(self.nranks)
+        eff = _eff_rank(self.rank, rem)
+        if eff is None:
+            return [], (0, 0)
+        steps = []
+        s, e = 0, n
+        half = q >> 1
+        while half >= 1:
+            lower = (eff & half) == 0
+            mid = s + (e - s) // 2
+            steps.append((s, e, mid, _actual_rank(eff ^ half, rem), lower))
+            s, e = (s, mid) if lower else (mid, e)
+            half >>= 1
+        return steps, (s, e)
+
+    def reduce_scatter(self, arr: np.ndarray, op: str = "sum"):
         reduce_fn = _OPS[op]
-        a = np.ascontiguousarray(arr, dtype=np.float64)
-        shape = a.shape
-        buf = a.ravel().copy()
+        buf = np.ascontiguousarray(arr, dtype=np.float64).ravel().copy()
         n = len(buf)
-        p, r = self.nranks, self.rank
-        q, rem = _fold_count(p)
-        byt = memoryview(buf).cast("B")
+        r, rem = self.rank, _fold_count(self.nranks)[1]
         # fold: odd ranks of the first 2*rem hand their whole array to
-        # their even partner and wait for the final result
+        # their even partner and own nothing
         if r < 2 * rem and r % 2 == 1:
-            self._send(r - 1, byt.tobytes())
-            self._recv(r - 1, byt)
-            return buf.reshape(shape)
+            self._send(r - 1, memoryview(buf).cast("B"))
+            return 0, buf[:0]
         tmp = np.empty(n, dtype=np.float64)
         if r < 2 * rem:                       # even half of a folded pair
             self._recv(r + 1, memoryview(tmp).cast("B"))
             buf[:] = reduce_fn(buf, tmp)
-        eff = _eff_rank(r, rem)
-        # reduce-scatter: halve the segment against the partner at each
-        # distance; keep the half matching our side of the group
-        s, e = 0, n
-        hist: list[tuple[int, int, int, bool]] = []
-        half = q >> 1
-        while half >= 1:
-            partner = _actual_rank(eff ^ half, rem)
-            lower = (eff & half) == 0
-            mid = s + (e - s) // 2
-            if lower:
-                ks, ke, gs, ge = s, mid, mid, e
-            else:
-                ks, ke, gs, ge = mid, e, s, mid
+        # halve the segment against the partner at each distance; keep
+        # the half matching our side of the group
+        steps, (s, e) = self._halving(n)
+        for s_, e_, mid, partner, lower in steps:
+            ks, ke, gs, ge = (s_, mid, mid, e_) if lower else (mid, e_, s_, mid)
             rv = tmp[: ke - ks]
-            self._exchange(self._socks[partner],
-                           buf[gs:ge].tobytes(),
+            self._exchange(self._socks[partner], buf[gs:ge].tobytes(),
                            memoryview(rv).cast("B"))
             buf[ks:ke] = reduce_fn(buf[ks:ke], rv)
-            hist.append((s, e, partner, lower))
-            s, e = ks, ke
-            half >>= 1
-        # allgather: retrace outward, swapping owned segments verbatim
-        for s, e, partner, lower in reversed(hist):
-            mid = s + (e - s) // 2
-            if lower:
-                ks, ke, gs, ge = s, mid, mid, e
-            else:
-                ks, ke, gs, ge = mid, e, s, mid
-            self._exchange(self._socks[partner],
-                           buf[ks:ke].tobytes(),
+        return s, buf[s:e]
+
+    def allgather(self, part: np.ndarray, n: int) -> np.ndarray:
+        buf = np.empty(n, dtype=np.float64)
+        byt = memoryview(buf).cast("B")
+        r, rem = self.rank, _fold_count(self.nranks)[1]
+        if r < 2 * rem and r % 2 == 1:        # folded out: receive it all
+            self._recv(r - 1, byt)
+            return buf
+        steps, (s, e) = self._halving(n)
+        buf[s:e] = part
+        # recursive doubling: retrace the halving outward, swapping
+        # owned segments verbatim
+        for s_, e_, mid, partner, lower in reversed(steps):
+            ks, ke, gs, ge = (s_, mid, mid, e_) if lower else (mid, e_, s_, mid)
+            self._exchange(self._socks[partner], buf[ks:ke].tobytes(),
                            byt[gs * 8: ge * 8])
         # unfold: hand the complete result back to the folded-out rank
         if r < 2 * rem:
-            self._send(r + 1, byt.tobytes())
-        return buf.reshape(shape)
+            self._send(r + 1, byt)
+        return buf
 
     def close(self):
         for s in (*self._socks.values(), self._srv):

@@ -179,46 +179,88 @@ def leaf_ids_from_arrays(a: dict[str, np.ndarray], X: np.ndarray, binned: bool,
     UpdatePosition, `src/common/partition_builder.h`): each row is
     routed once per NEW level, O(n*depth) per tree total instead of the
     O(n*depth^2) of per-level root re-traversals.
+
+    Leaves route to themselves, so every working row steps one level
+    per wave with no per-wave ``nonzero``/gather compaction; rows leave
+    the working set only once at most half of it is still at internal
+    nodes (complete depthwise trees never compact, and deep lossguide
+    paths do not re-walk finished rows).
     """
     n = X.shape[0]
     cats = a.get("categories")
-    strict = bool(a.get("tie_strict"))
+    left = a["left"]
+    leaf = left == -1
+    ids = np.arange(len(left), dtype=np.int32)
+    # kids[2*nid + go_left]: the next node (a leaf's kids are itself)
+    kids = np.stack([np.where(leaf, ids, a["right"]),
+                     np.where(leaf, ids, left)], axis=1).astype(np.int32).ravel()
+    feat = np.where(leaf, 0, a["feature"]).astype(np.intp)
+    dflt = a["default_left"]
+    if binned:
+        thr = a["split_bin"]
+    elif a.get("tie_strict"):
+        # reference predictor convention: STRICT less-than over
+        # float32 operands (predict_fn.h:22) — ties route RIGHT
+        thr = a["split_value"].astype(np.float32)
+    else:
+        thr = a["split_value"]
+    strict = not binned and bool(a.get("tie_strict"))
+    cat_ids = ([i for i, c in enumerate(cats) if c is not None]
+               if cats is not None else [])
+    # X read through its flat buffer: one take per wave, no copy for
+    # either memory order
+    if not (X.flags.c_contiguous or X.flags.f_contiguous):
+        X = np.ascontiguousarray(X)
+    flat = X.ravel(order="K")
+    rs, fs = (st // X.itemsize for st in X.strides)
+    feat *= fs
     node = node0 if node0 is not None else np.zeros(n, dtype=np.int32)
-    active = a["left"][node] != -1
-    while active.any():
-        idx = np.nonzero(active)[0]
-        nd = node[idx]
-        f = a["feature"][nd]
-        x = X[idx, f]
+    rows = None                  # the working rows (None = all)
+    base = np.arange(n, dtype=np.intp) * rs
+    cur = node                   # their nodes
+    while True:
+        internal = ~leaf.take(cur)
+        k = int(np.count_nonzero(internal))
+        if k == 0:
+            break
+        if 2 * k <= len(cur):
+            keep = np.nonzero(internal)[0]
+            if rows is None:
+                node[:] = cur
+                rows = keep
+            else:
+                node[rows] = cur
+                rows = rows[keep]
+            cur, base = cur[keep], base[keep]
+        x = flat.take(base + feat.take(cur))
+        t = thr.take(cur)
         if binned:
             miss = x == MISSING_BIN
-            go_left = np.where(miss, a["default_left"][nd], x <= a["split_bin"][nd])
-        elif strict:
-            # reference predictor convention: STRICT less-than over
-            # float32 operands (predict_fn.h:22) — ties route RIGHT
-            miss = np.isnan(x)
-            go_left = np.where(
-                miss, a["default_left"][nd],
-                x.astype(np.float32)
-                < a["split_value"][nd].astype(np.float32))
+            go_left = x <= t
         else:
             miss = np.isnan(x)
-            go_left = np.where(miss, a["default_left"][nd], x <= a["split_value"][nd])
-        if cats is not None:
+            go_left = x.astype(np.float32) < t if strict else x <= t
+        if miss.any():
+            go_left = np.where(miss, dflt.take(cur), go_left)
+        if cat_ids:
             # categorical nodes: membership test (category code routed
-            # left iff in the node's set); few distinct nids per wave
-            for nid in np.unique(nd):
-                cset = cats[nid]
-                if cset is None:
+            # left iff in the node's set)
+            here = np.zeros(len(left), dtype=bool)
+            here[cur] = True
+            for nid in cat_ids:
+                if not here[nid]:
                     continue
-                m = nd == nid
+                m = cur == nid
                 xm = x[m]
                 mm = (xm == MISSING_BIN) if binned else np.isnan(xm)
                 code = np.where(mm, -1, np.nan_to_num(xm)).astype(np.int64)
-                go_left[m] = np.where(mm, a["default_left"][nid],
-                                      np.isin(code, cset))
-        node[idx] = np.where(go_left, a["left"][nd], a["right"][nd])
-        active = a["left"][node] != -1
+                go_left[m] = np.where(mm, dflt[nid], np.isin(code, cats[nid]))
+        cur = kids.take(2 * cur + go_left)
+    if rows is None:
+        if cur is not node:
+            node[:] = cur
+    else:
+        node[rows] = cur
     return node
 
 
@@ -425,33 +467,38 @@ def grow_tree_multi(builder, params, rng: np.random.Generator,
     return tree
 
 
-def split_search(
+#: fields of one split candidate row (`split_candidates`)
+CAND_FIELDS = 7     # gain, feature, bin, G_left, H_left, G_right, H_right
+
+
+def split_candidates(
     hist_g: np.ndarray,          # (n_nodes, n_feat, n_bins+1) — last slot = missing
     hist_h: np.ndarray,
     reg_lambda: float = 1.0,
     reg_alpha: float = 0.0,
-    gamma: float = 0.0,
     min_child_weight: float = 1.0,
     max_delta_step: float = 0.0,
-    feature_mask: np.ndarray | None = None,   # bool (n_feat,) — colsample
-    monotone: np.ndarray | None = None,       # int8 (n_feat,) in {-1,0,+1}
-    cat_features: np.ndarray | None = None,   # bool (n_feat,) — categorical
-    max_cat_to_onehot: int = 4,
-    max_cat_threshold: int = 64,
-    node_bounds: np.ndarray | None = None,    # (n_nodes, 2) [lower, upper] weight bounds
-    n_bins_feat: np.ndarray | None = None,    # (n_feat,) total bins per feature
-) -> list[SplitResult | None]:
-    """Best split per node from node histograms.
+    feature_mask: np.ndarray | None = None,
+    monotone: np.ndarray | None = None,
+    cat_features: np.ndarray | None = None,
+    node_bounds: np.ndarray | None = None,
+    f0: int = 0,
+) -> np.ndarray:
+    """Best numeric split per node and scan direction over one block of
+    features (global ids ``f0 .. f0+n_feat-1``): an ``(n_nodes, 2,
+    CAND_FIELDS)`` table of ``np.argmax``'s first maximum over the
+    block's flattened (feature, bin) gains, with its child sums.
 
     Vectorized EnumerateSplit over all (node, feature, bin, direction):
     forward scan = missing goes right, backward scan = missing goes left
     (reference `evaluate_splits.h:205-330`, both directions `:323-325`).
-    Returns None for a node when no split beats ``gamma``.
-    """
+    Every value depends on its own feature's histogram only, so a
+    block's rows equal the same features' rows of a search over all
+    features.  ``monotone`` is None unless some feature (in any block)
+    is constrained: node bounds then re-score EVERY feature."""
     N, F, Bp1 = hist_g.shape
     B = Bp1 - 1
-    if B < 2:
-        return [None] * N
+    out = np.empty((N, 2, CAND_FIELDS))
     g_miss = hist_g[:, :, B]
     h_miss = hist_h[:, :, B]
     g_tot = hist_g.sum(axis=2)                      # (N, F) — same value each feature
@@ -464,11 +511,7 @@ def split_search(
     hl_bwd = hl_fwd + h_miss[:, :, None]
 
     parent_gain = calc_gain(g_tot, h_tot, reg_lambda, reg_alpha, max_delta_step)  # (N,F)
-
-    results: list[SplitResult | None] = []
-    best_gain = np.full(N, -np.inf)
-    best = [None] * N
-
+    rows = np.arange(N)
     for direction, (gl, hl) in enumerate(((gl_fwd, hl_fwd), (gl_bwd, hl_bwd))):
         gr = g_tot[:, :, None] - gl
         hr = h_tot[:, :, None] - hl
@@ -478,7 +521,7 @@ def split_search(
             - parent_gain[:, :, None]
         )
         invalid = (hl < min_child_weight) | (hr < min_child_weight)
-        if monotone is not None and monotone.any():
+        if monotone is not None:
             wl = calc_weight(gl, hl, reg_lambda, reg_alpha, max_delta_step)
             wr = calc_weight(gr, hr, reg_lambda, reg_alpha, max_delta_step)
             if node_bounds is not None:
@@ -516,115 +559,179 @@ def split_search(
             else:  # per-node mask (colsample_bynode)
                 invalid |= ~feature_mask[:, :, None]
         if cat_features is not None:
-            invalid |= cat_features[None, :, None]   # handled separately below
+            invalid |= cat_features[None, :, None]   # handled in pick_splits
         gain = np.where(invalid, -np.inf, gain)
-        flat = gain.reshape(N, -1)
-        idx = np.argmax(flat, axis=1)
-        val = flat[np.arange(N), idx]
+        idx = np.argmax(gain.reshape(N, -1), axis=1)
+        f, b = np.divmod(idx, B - 1)
+        o = out[:, direction]
+        o[:, 0] = gain.reshape(N, -1)[rows, idx]
+        o[:, 1] = f0 + f
+        o[:, 2] = b
+        o[:, 3] = gl[rows, f, b]
+        o[:, 4] = hl[rows, f, b]
+        o[:, 5] = g_tot[rows, f] - o[:, 3]
+        o[:, 6] = h_tot[rows, f] - o[:, 4]
+    return out
+
+
+def pick_splits(
+    cands: np.ndarray,           # (n_blocks, n_nodes, 2, CAND_FIELDS), feature order
+    cat_g: np.ndarray,           # (n_nodes, n_cat, n_bins+1) — categorical features
+    cat_h: np.ndarray,
+    cat_fids: np.ndarray,        # (n_cat,) their global feature ids
+    reg_lambda: float = 1.0,
+    reg_alpha: float = 0.0,
+    gamma: float = 0.0,
+    min_child_weight: float = 1.0,
+    max_delta_step: float = 0.0,
+    feature_mask: np.ndarray | None = None,
+    monotone: np.ndarray | None = None,
+    max_cat_to_onehot: int = 4,
+    max_cat_threshold: int = 64,
+    n_bins_feat: np.ndarray | None = None,
+) -> list[SplitResult | None]:
+    """Best split per node from the blocks' `split_candidates` tables.
+
+    ``np.argmax`` over the blocks' values, in feature order, picks the
+    first maximum (a NaN first), as one argmax over every feature would.
+    Returns None for a node when no split beats ``gamma``."""
+    N = cands.shape[1]
+    B = cat_g.shape[2] - 1
+    best_gain = np.full(N, -np.inf)
+    best: list[SplitResult | None] = [None] * N
+    rows = np.arange(N)
+    for direction in (0, 1):
+        c = cands[np.argmax(cands[:, :, direction, 0], axis=0), rows, direction]
         for nid in range(N):
             # strict '>' (plus epsilon on the backward pass) keeps the
             # forward/missing-right split on ties — stable direction choice
-            if val[nid] > best_gain[nid] + (0.0 if direction == 0 else 1e-12):
-                f, b = divmod(int(idx[nid]), B - 1)
-                best_gain[nid] = val[nid]
+            if c[nid, 0] > best_gain[nid] + (0.0 if direction == 0 else 1e-12):
+                val, f, b, gl, hl, gr, hr = c[nid].tolist()
+                best_gain[nid] = c[nid, 0]
                 best[nid] = SplitResult(
-                    nid=nid, gain=float(val[nid]), fidx=f, split_bin=b,
+                    nid=nid, gain=val, fidx=int(f), split_bin=int(b),
                     default_left=(direction == 1),
-                    g_left=float(gl[nid, f, b]), h_left=float(hl[nid, f, b]),
-                    g_right=float(g_tot[nid, f] - gl[nid, f, b]),
-                    h_right=float(h_tot[nid, f] - hl[nid, f, b]),
-                )
+                    g_left=gl, h_left=hl, g_right=gr, h_right=hr)
     # categorical enumeration (reference EnumerateOneHot
     # `evaluate_splits.h:64` and EnumeratePart `:119-192`): one-hot when
     # few categories, else scan categories sorted by grad/hess ratio —
     # the sorted-prefix split is the optimal set partition
-    if cat_features is not None and cat_features.any():
-        for nid in range(N):
-            for f in np.nonzero(cat_features)[0]:
-                if monotone is not None and monotone[f] != 0:
-                    continue  # monotonicity is undefined over category sets
-                if feature_mask is not None:
-                    fm = feature_mask if feature_mask.ndim == 1 else feature_mask[nid]
-                    if not fm[f]:
-                        continue
-                gb = hist_g[nid, f, :B]
-                hb = hist_h[nid, f, :B]
-                gm = float(g_miss[nid, f])
-                hm = float(h_miss[nid, f])
-                present = np.nonzero((hb != 0) | (gb != 0))[0]
-                if len(present) < 2:
-                    continue
-                gt = float(gb.sum() + gm)
-                ht = float(hb.sum() + hm)
-                pgain = float(calc_gain(gt, ht, reg_lambda, reg_alpha, max_delta_step))
-                # one-hot vs partition decided on the feature's TOTAL
-                # category count (UseOneHot, categorical.h:84 over the
-                # cut-pointer width, evaluate_splits.h:306) — the same
-                # regime at every node; present-count is the fallback
-                # for callers without per-feature bin metadata
-                n_cats_f = (int(n_bins_feat[f]) if n_bins_feat is not None
-                            else len(present))
-                if n_cats_f < max_cat_to_onehot:
-                    # one-hot: {c} vs rest, missing on either side
-                    cand = [([c], float(gb[c]), float(hb[c])) for c in present]
-                else:
-                    # partition sort key = the per-category LEAF WEIGHT
-                    # (reference CalcWeightCat, split_evaluator.h:290 →
-                    # tree::CalcWeight — so reg_alpha's L1 threshold
-                    # and max_delta_step's clamp reorder/tie categories
-                    # exactly as the reference sorts them; round-12
-                    # fix, previously the unregularized g/(h+lambda)
-                    # ratio).  Negated so that with alpha=0/mds=0 the
-                    # key reduces to g/(h+lambda) and the established
-                    # ascending-ratio enumeration order (and every
-                    # certified oracle) is unchanged; the two-ended
-                    # max_cat_threshold cap makes the candidate FAMILY
-                    # reversal-invariant.
-                    key = np.array([-calc_weight(float(gb[c]), float(hb[c]),
-                                                 reg_lambda, reg_alpha,
-                                                 max_delta_step)
-                                    for c in present])
-                    order = present[np.argsort(key, kind="stable")]
-                    cg = np.cumsum(gb[order])
-                    ch = np.cumsum(hb[order])
-                    # max_cat_threshold (reference param.h:42 default 64,
-                    # evaluate_splits.h:148): scan at most thr-1 set
-                    # sizes from EACH end of the sorted order — bounds
-                    # work and over-fitting for huge-cardinality splits
-                    thr = max(int(max_cat_threshold), 1)
-                    n_sets = len(order) - 1
-                    cand = [(order[: j + 1].tolist(), float(cg[j]), float(ch[j]))
-                            for j in range(n_sets)
-                            if (j + 1 <= thr - 1
-                                or n_sets - j <= thr - 1)]
-                for cats_left, gl_, hl_ in cand:
-                    for direction in (0, 1):        # 0: missing right, 1: left
-                        gl2 = gl_ + (gm if direction else 0.0)
-                        hl2 = hl_ + (hm if direction else 0.0)
-                        gr2 = gt - gl2
-                        hr2 = ht - hl2
-                        if hl2 < min_child_weight or hr2 < min_child_weight:
-                            continue
-                        gn = float(
-                            calc_gain(gl2, hl2, reg_lambda, reg_alpha, max_delta_step)
-                            + calc_gain(gr2, hr2, reg_lambda, reg_alpha, max_delta_step)
-                            - pgain)
-                        if gn > best_gain[nid] + 1e-12:
-                            best_gain[nid] = gn
-                            best[nid] = SplitResult(
-                                nid=nid, gain=gn, fidx=int(f), split_bin=-1,
-                                default_left=bool(direction),
-                                g_left=gl2, h_left=hl2, g_right=gr2, h_right=hr2,
-                                categories=sorted(int(c) for c in cats_left))
     for nid in range(N):
-        r = best[nid]
-        # same validity rule as split_search_multi (driver.h)
-        if (r is None or r.gain <= RT_EPS or r.gain < gamma
-                or not np.isfinite(r.gain)):
-            results.append(None)
-        else:
-            results.append(r)
-    return results
+        for ci, f in enumerate(cat_fids):
+            if monotone is not None and monotone[f] != 0:
+                continue  # monotonicity is undefined over category sets
+            if feature_mask is not None:
+                fm = feature_mask if feature_mask.ndim == 1 else feature_mask[nid]
+                if not fm[f]:
+                    continue
+            gb = cat_g[nid, ci, :B]
+            hb = cat_h[nid, ci, :B]
+            gm = float(cat_g[nid, ci, B])
+            hm = float(cat_h[nid, ci, B])
+            present = np.nonzero((hb != 0) | (gb != 0))[0]
+            if len(present) < 2:
+                continue
+            gt = float(gb.sum() + gm)
+            ht = float(hb.sum() + hm)
+            pgain = float(calc_gain(gt, ht, reg_lambda, reg_alpha, max_delta_step))
+            # one-hot vs partition decided on the feature's TOTAL
+            # category count (UseOneHot, categorical.h:84 over the
+            # cut-pointer width, evaluate_splits.h:306) — the same
+            # regime at every node; present-count is the fallback
+            # for callers without per-feature bin metadata
+            n_cats_f = (int(n_bins_feat[f]) if n_bins_feat is not None
+                        else len(present))
+            if n_cats_f < max_cat_to_onehot:
+                # one-hot: {c} vs rest, missing on either side
+                cand = [([c], float(gb[c]), float(hb[c])) for c in present]
+            else:
+                # partition sort key = the per-category LEAF WEIGHT
+                # (reference CalcWeightCat, split_evaluator.h:290 →
+                # tree::CalcWeight — so reg_alpha's L1 threshold
+                # and max_delta_step's clamp reorder/tie categories
+                # exactly as the reference sorts them; round-12
+                # fix, previously the unregularized g/(h+lambda)
+                # ratio).  Negated so that with alpha=0/mds=0 the
+                # key reduces to g/(h+lambda) and the established
+                # ascending-ratio enumeration order (and every
+                # certified oracle) is unchanged; the two-ended
+                # max_cat_threshold cap makes the candidate FAMILY
+                # reversal-invariant.
+                key = np.array([-calc_weight(float(gb[c]), float(hb[c]),
+                                             reg_lambda, reg_alpha,
+                                             max_delta_step)
+                                for c in present])
+                order = present[np.argsort(key, kind="stable")]
+                cg = np.cumsum(gb[order])
+                ch = np.cumsum(hb[order])
+                # max_cat_threshold (reference param.h:42 default 64,
+                # evaluate_splits.h:148): scan at most thr-1 set
+                # sizes from EACH end of the sorted order — bounds
+                # work and over-fitting for huge-cardinality splits
+                thr = max(int(max_cat_threshold), 1)
+                n_sets = len(order) - 1
+                cand = [(order[: j + 1].tolist(), float(cg[j]), float(ch[j]))
+                        for j in range(n_sets)
+                        if (j + 1 <= thr - 1
+                            or n_sets - j <= thr - 1)]
+            for cats_left, gl_, hl_ in cand:
+                for direction in (0, 1):        # 0: missing right, 1: left
+                    gl2 = gl_ + (gm if direction else 0.0)
+                    hl2 = hl_ + (hm if direction else 0.0)
+                    gr2 = gt - gl2
+                    hr2 = ht - hl2
+                    if hl2 < min_child_weight or hr2 < min_child_weight:
+                        continue
+                    gn = float(
+                        calc_gain(gl2, hl2, reg_lambda, reg_alpha, max_delta_step)
+                        + calc_gain(gr2, hr2, reg_lambda, reg_alpha, max_delta_step)
+                        - pgain)
+                    if gn > best_gain[nid] + 1e-12:
+                        best_gain[nid] = gn
+                        best[nid] = SplitResult(
+                            nid=nid, gain=gn, fidx=int(f), split_bin=-1,
+                            default_left=bool(direction),
+                            g_left=gl2, h_left=hl2, g_right=gr2, h_right=hr2,
+                            categories=sorted(int(c) for c in cats_left))
+    # same validity rule as split_search_multi (driver.h)
+    return [None if (r is None or r.gain <= RT_EPS or r.gain < gamma
+                     or not np.isfinite(r.gain)) else r
+            for r in best]
+
+
+def split_search(
+    hist_g: np.ndarray,          # (n_nodes, n_feat, n_bins+1) — last slot = missing
+    hist_h: np.ndarray,
+    reg_lambda: float = 1.0,
+    reg_alpha: float = 0.0,
+    gamma: float = 0.0,
+    min_child_weight: float = 1.0,
+    max_delta_step: float = 0.0,
+    feature_mask: np.ndarray | None = None,   # bool (n_feat,) — colsample
+    monotone: np.ndarray | None = None,       # int8 (n_feat,) in {-1,0,+1}
+    cat_features: np.ndarray | None = None,   # bool (n_feat,) — categorical
+    max_cat_to_onehot: int = 4,
+    max_cat_threshold: int = 64,
+    node_bounds: np.ndarray | None = None,    # (n_nodes, 2) [lower, upper] weight bounds
+    n_bins_feat: np.ndarray | None = None,    # (n_feat,) total bins per feature
+) -> list[SplitResult | None]:
+    """Best split per node from node histograms over all features: the
+    one-block case of `split_candidates` + `pick_splits`."""
+    N, F, Bp1 = hist_g.shape
+    if Bp1 - 1 < 2:
+        return [None] * N
+    cands = split_candidates(
+        hist_g, hist_h, reg_lambda, reg_alpha, min_child_weight,
+        max_delta_step, feature_mask,
+        monotone if monotone is not None and monotone.any() else None,
+        cat_features, node_bounds)
+    cat_fids = (np.nonzero(cat_features)[0] if cat_features is not None
+                else np.zeros(0, dtype=np.int64))
+    return pick_splits(
+        cands[None], hist_g[:, cat_fids], hist_h[:, cat_fids], cat_fids,
+        reg_lambda, reg_alpha, gamma, min_child_weight, max_delta_step,
+        feature_mask, monotone, max_cat_to_onehot, max_cat_threshold,
+        n_bins_feat)
 
 
 # ---------------------------------------------------------------------------
@@ -662,15 +769,27 @@ def make_cuts(x: np.ndarray, max_bin: int, weights: np.ndarray | None = None) ->
 # ---------------------------------------------------------------------------
 
 class HistBuilder:
-    """Interface the grower uses to obtain node histograms.
+    """Interface the grower uses to obtain node histograms and splits.
 
     ``build(tree, nids)`` returns ``(hist_g, hist_h)`` of shape
-    ``(len(nids), n_features, n_bins+1)`` — last slot is the missing
+    ``(len(nids), n_cols, n_bins+1)`` — last slot is the missing
     bucket — aggregated over the rows currently routed to each node by
-    ``tree``.  The Spark implementation runs one job per call (all nodes
-    of a level batched, mirroring the reference's contiguous node batch +
-    single allreduce, `src/tree/hist/histogram.h:109,188`); the local
-    implementation uses np.bincount.
+    ``tree``.  Columns are all ``n_features`` features here; a builder
+    may return a block of them instead (the barrier's sharded builder
+    returns the features its rank owns), as long as its `best_splits`
+    and `root_sums` read that layout.  The grower only caches these
+    arrays and subtracts them elementwise (parent - sibling).  The Spark
+    implementation runs one job per call (all nodes of a level batched,
+    mirroring the reference's contiguous node batch + single allreduce,
+    `src/tree/hist/histogram.h:109,188`); the local implementation uses
+    np.bincount.
+
+    ``best_splits(hist_g, hist_h, **kw)`` is `split_search` over what
+    ``build`` returned, with `split_search`'s keyword arguments over ALL
+    features; it must return what `split_search` over the full
+    histograms would, bit for bit.  ``root_sums`` is the root's (G, H):
+    the sums over global feature 0's bins, read after the root's
+    ``best_splits``.
     """
 
     n_features: int
@@ -678,6 +797,12 @@ class HistBuilder:
 
     def build(self, tree: Tree, nids: list[int]):  # pragma: no cover - interface
         raise NotImplementedError
+
+    def best_splits(self, hist_g, hist_h, **kw) -> list[SplitResult | None]:
+        return split_search(hist_g, hist_h, **kw)
+
+    def root_sums(self, hist_g, hist_h) -> tuple[float, float]:
+        return float(hist_g[0, 0].sum()), float(hist_h[0, 0].sum())
 
     def split_value(self, fidx: int, split_bin: int) -> float:  # pragma: no cover
         """Raw-domain threshold for a quantized split (= cuts[fidx][bin])."""
@@ -994,8 +1119,6 @@ def grow_tree(
         # lossguide: expand best loss_chg first (driver.h lossguide order)
         hg, hh = builder.build(tree, [0])
         hist_cache[0] = (hg[0], hh[0])
-        if root_g is None:
-            tree.sum_grad[0], tree.sum_hess[0] = float(hg[0, 0].sum()), float(hh[0, 0].sum())
         candidates: list[tuple[float, int, SplitResult]] = []
 
         def nmask(nid: int) -> np.ndarray:
@@ -1004,8 +1127,10 @@ def grow_tree(
                 m = m & allowed[nid]
             return m
 
-        res = split_search(hg, hh, feature_mask=nmask(0),
-                           node_bounds=node_bounds_for([0]), **kw)[0]
+        res = builder.best_splits(hg, hh, feature_mask=nmask(0),
+                                  node_bounds=node_bounds_for([0]), **kw)[0]
+        if root_g is None:
+            tree.sum_grad[0], tree.sum_hess[0] = builder.root_sums(hg, hh)
         if res is not None:
             candidates.append((-res.gain, 0, res))
         n_leaves = 1
@@ -1028,11 +1153,12 @@ def grow_tree(
             counter += 1
             on_expand(nid, f, lid, rid, res)
             hg, hh = hists_for([lid, rid])
-            for child, hgi, hhi in ((lid, hg[0], hh[0]), (rid, hg[1], hh[1])):
-                r = split_search(hgi[None], hhi[None], feature_mask=nmask(child),
-                                 node_bounds=node_bounds_for([child]), **kw)[0]
+            masks = np.stack([nmask(lid), nmask(rid)])
+            both = builder.best_splits(hg, hh, feature_mask=masks,
+                                       node_bounds=node_bounds_for([lid, rid]),
+                                       **kw)
+            for child, r in zip((lid, rid), both):
                 if r is not None and depth_of(child) < max_depth:
-                    r = SplitResult(**{**r.__dict__})
                     candidates.append((-r.gain, child, r))
                 else:
                     commit_leaf(child)
@@ -1047,8 +1173,6 @@ def grow_tree(
             if depth == 0:
                 hg, hh = builder.build(tree, [0])
                 hist_cache[0] = (hg[0], hh[0])
-                if root_g is None:
-                    tree.sum_grad[0], tree.sum_hess[0] = float(hg[0, 0].sum()), float(hh[0, 0].sum())
             else:
                 hg, hh = hists_for(active)
             fmask = level_mask()
@@ -1058,11 +1182,13 @@ def grow_tree(
                     else node_mask(fmask)
                     for nid in active
                 ])
-                results = split_search(hg, hh, feature_mask=masks,
-                                       node_bounds=node_bounds_for(active), **kw)
             else:
-                results = split_search(hg, hh, feature_mask=fmask,
-                                       node_bounds=node_bounds_for(active), **kw)
+                masks = fmask
+            results = builder.best_splits(hg, hh, feature_mask=masks,
+                                          node_bounds=node_bounds_for(active),
+                                          **kw)
+            if depth == 0 and root_g is None:
+                tree.sum_grad[0], tree.sum_hess[0] = builder.root_sums(hg, hh)
             nxt = []
             for nid, res in zip(active, results):
                 if res is None:

@@ -84,20 +84,6 @@ class _NumpyHistBuilder(core.HistBuilder):
     #: trick's usual regime.  Crossover ~0.7.)
     _FUSED_MIN_FRAC = 0.75
 
-    def _compress(self, tree: core.Tree, nids: list[int]):
-        """One boolean mask + one fancy copy for ALL requested nodes:
-        rows are tagged with their node's SLOT in ``nids`` and compacted
-        once, instead of an O(n) mask scan + gather PER NODE (the
-        round-10 sf10 profile's second hotspot after routing).  Returns
-        (slot_per_row, row_index) for the selected rows."""
-        node_of_row = self._node_assignment(tree)
-        slot = np.full(tree.n_nodes + 1, -1, dtype=np.int32)
-        slot[np.asarray(nids, dtype=np.int64)] = np.arange(
-            len(nids), dtype=np.int32)
-        s = slot[node_of_row]
-        idx = np.nonzero(s >= 0)[0]
-        return s[idx], idx
-
     def _hist_keys(self, tree: core.Tree, nids: list[int]):
         """Plan the per-feature bincount keys: returns
         ``(base, sel, n_slots)`` where ``key_f = base + cols[f][sel]``
@@ -128,8 +114,15 @@ class _NumpyHistBuilder(core.HistBuilder):
         return s[idx] * (B + 1), idx, len(nids)
 
     def build(self, tree: core.Tree, nids: list[int]):
+        shape = (len(nids), self.n_features, self.n_bins + 1)
+        hg, hh = np.empty(shape), np.empty(shape)
+        self._fill(tree, nids, hg, hh)
+        return hg, hh
+
+    def _fill(self, tree: core.Tree, nids: list[int], hg, hh):
+        """Write node ``i``'s histogram of feature ``f`` into
+        ``hg[i, f]`` / ``hh[i, f]`` (any (NN, F, B+1) view)."""
         B = self.n_bins
-        F = self.n_features
         NN = len(nids)
         cols = self._feature_cols()
         base, sel, n_slots = self._hist_keys(tree, nids)
@@ -137,18 +130,15 @@ class _NumpyHistBuilder(core.HistBuilder):
             gN, hN = self.g, self.h
         else:
             gN, hN = self.g[sel], self.h[sel]
-        hg = np.empty((NN, F, B + 1))
-        hh = np.empty((NN, F, B + 1))
         size = n_slots * (B + 1)
         want = NN * (B + 1)
         key = np.empty(len(base), dtype=np.int64)
-        for f in range(F):
+        for f in range(self.n_features):
             np.add(base, cols[f] if sel is None else cols[f][sel], out=key)
             hg[:, f, :] = np.bincount(
                 key, weights=gN, minlength=size)[:want].reshape(NN, B + 1)
             hh[:, f, :] = np.bincount(
                 key, weights=hN, minlength=size)[:want].reshape(NN, B + 1)
-        return hg, hh
 
 
 class _NumpyMultiHistBuilder(_NumpyHistBuilder):
@@ -163,22 +153,25 @@ class _NumpyMultiHistBuilder(_NumpyHistBuilder):
         B, F, K = self.n_bins, self.n_features, self.K
         NN = len(nids)
         cols = self._feature_cols()
-        sN, idx = self._compress(tree, nids)
+        base, sel, n_slots = self._hist_keys(tree, nids)
+        if sel is None:
+            gN, hN = self.g, self.h
+        else:
+            gN, hN = self.g[sel], self.h[sel]
         hg = np.empty((K, NN, F, B + 1))
         hh = np.empty((K, NN, F, B + 1))
-        gN, hN = self.g[idx], self.h[idx]
-        base = sN.astype(np.int64) * (B + 1)
-        size = NN * (B + 1)
-        key = np.empty(len(idx), dtype=np.int64)
+        size = n_slots * (B + 1)
+        want = NN * (B + 1)
+        key = np.empty(len(base), dtype=np.int64)
         for f in range(F):
-            np.add(base, cols[f][idx], out=key)
+            np.add(base, cols[f] if sel is None else cols[f][sel], out=key)
             for k in range(K):
                 hg[k, :, f, :] = np.bincount(
                     key, weights=gN[:, k],
-                    minlength=size).reshape(NN, B + 1)
+                    minlength=size)[:want].reshape(NN, B + 1)
                 hh[k, :, f, :] = np.bincount(
                     key, weights=hN[:, k],
-                    minlength=size).reshape(NN, B + 1)
+                    minlength=size)[:want].reshape(NN, B + 1)
         return hg, hh
 
 

@@ -6,11 +6,15 @@ PySpark integration (`python-package/xgboost/spark/core.py:1128`
 ring-allreduce sync): each barrier task materializes its partition once,
 quantizes it against the broadcast global cuts, and runs the identical
 deterministic tree-growth loop; per-level gradient histograms are summed
-across tasks with a halving-doubling allreduce (`xgboost_spark/collective.py`,
-reference `src/collective/allreduce.cc:21-129`).  Because the reduced
-histograms are bit-identical on every rank and all random draws come
-from the same seeded generator, every task grows the same trees; task 0
-returns the model.
+across tasks with the reduce-scatter half of a halving-doubling
+allreduce (`xgboost_spark/collective.py`, reference
+`src/collective/allreduce.cc:21-129`): each rank keeps the fully reduced
+histograms of its own block of features, searches splits there, and the
+ranks gather their per-block best candidates, so every rank picks the
+same split (`_AllreduceHistBuilder`).  Because the reduced values are
+bit-identical to a full allreduce's and all random draws come from the
+same seeded generator, every task grows the same trees; task 0 returns
+the model.
 
 Why it exists alongside the per-level DataFrame path
 (`plans/booster.py`): a depth-6, 100-round training is ~700 level
@@ -29,8 +33,11 @@ frame kernel (`_frame_batch`) on the DataFrame path.
 
 Scale: per-task memory = its partition's quantized matrix (int16) —
 size partitions so each fits (same contract as the reference Spark
-wrapper's per-worker DMatrix).  Allreduce payloads are nodes x features
-x (bins+1) x 2 float64, independent of row count.
+wrapper's per-worker DMatrix).  Per level, each rank sends and receives
+about nodes x features x (bins+1) x 2 float64 in the reduce-scatter
+(half of a full allreduce's traffic) plus a candidate gather of
+nodes x 14 + 2 float64 per owning rank, independent of row count;
+categorical features add one allreduce of their own histograms.
 """
 
 from __future__ import annotations
@@ -60,24 +67,105 @@ _PROF: dict[str, float] = defaultdict(float)
 
 
 class _AllreduceHistBuilder(_NumpyHistBuilder):
-    """Local partial histogram + allreduce = global histogram
-    (reference `SyncHistogram`, `src/tree/hist/histogram.h:177-188`)."""
+    """Feature-sharded histogram sync and split search (LightGBM's
+    data-parallel scheme, Ke et al. 2017; the reference instead
+    allreduces every histogram to every worker, `SyncHistogram`,
+    `src/tree/hist/histogram.h:177-188`).
 
-    def __init__(self, Xb, cuts, n_bins, comm):
+    ``build`` lays the local histograms out feature-major, zero-padded
+    to a multiple of ``comm.owners`` features so each owned range of the
+    reduce-scatter is whole features, and returns this rank's block of
+    fully reduced features followed by every categorical feature (one
+    extra allreduce, so each rank can replay the sequential categorical
+    enumeration).  ``best_splits`` searches the block only, gathers the
+    per-block best candidates verbatim and picks the winner on every
+    rank.  Each element is reduced in the same order as a full
+    allreduce, so at any rank count the trees are byte-identical to
+    those of a full allreduce and one search over all features."""
+
+    def __init__(self, Xb, cuts, n_bins, comm, cat_features=None):
         super().__init__(Xb, cuts, n_bins)
         self.comm = comm
+        q = comm.owners
+        self.n_pad = -(-self.n_features // q) * q
+        self.cat_fids = (np.nonzero(cat_features)[0]
+                         if cat_features is not None
+                         else np.zeros(0, dtype=np.int64))
+        self.f0 = self.fb = 0           # owned block, set by build
+        self._root = (0.0, 0.0)
 
     def build(self, tree: core.Tree, nids: list[int]):
         t0 = time.perf_counter()
-        hg, hh = super().build(tree, nids)
+        F, NN, B1 = self.n_features, len(nids), self.n_bins + 1
+        buf = np.empty((self.n_pad, 2, NN, B1))
+        buf[F:] = 0.0
+        self._fill(tree, nids, buf[:F, 0].transpose(1, 0, 2),
+                   buf[:F, 1].transpose(1, 0, 2))
         t1 = time.perf_counter()
-        red = self.comm.allreduce_sum(np.stack([hg, hh]))
+        lo, part = self.comm.reduce_scatter_sum(buf)
+        per = 2 * NN * B1
+        self.f0, self.fb = lo // per, len(part) // per
+        full = part.reshape(self.fb, 2, NN, B1)
+        if len(self.cat_fids):
+            full = np.concatenate(
+                [full, self.comm.allreduce_sum(buf[self.cat_fids])])
         t2 = time.perf_counter()
         _PROF["hist_local"] += t1 - t0
         _PROF["hist_allreduce"] += t2 - t1
         _PROF["allreduce_calls"] += 1
-        _PROF["allreduce_bytes"] += 2 * hg.nbytes
-        return red[0], red[1]
+        _PROF["allreduce_bytes"] += F * per * 8
+        return (np.ascontiguousarray(full[:, 0].transpose(1, 0, 2)),
+                np.ascontiguousarray(full[:, 1].transpose(1, 0, 2)))
+
+    def _block(self, a, fill):
+        """A per-feature array's owned block, padding features = fill."""
+        a = np.asarray(a)
+        out = np.full(a.shape[:-1] + (self.fb,), fill, dtype=a.dtype)
+        n = max(0, min(self.n_features - self.f0, self.fb))
+        out[..., :n] = a[..., self.f0:self.f0 + n]
+        return out
+
+    def best_splits(self, hg, hh, *, reg_lambda, reg_alpha, gamma,
+                    min_child_weight, max_delta_step, feature_mask=None,
+                    monotone=None, cat_features=None, node_bounds=None,
+                    max_cat_to_onehot=4, max_cat_threshold=64,
+                    n_bins_feat=None):
+        t0 = time.perf_counter()
+        N, fb = hg.shape[0], self.fb
+        size = N * 2 * core.CAND_FIELDS + 2
+        table = np.full(size, -np.inf)
+        if fb and self.n_bins >= 2:
+            bg = np.ascontiguousarray(hg[:, :fb])
+            bh = np.ascontiguousarray(hh[:, :fb])
+            mono = (monotone if monotone is not None and monotone.any()
+                    else None)
+            table[:-2] = core.split_candidates(
+                bg, bh, reg_lambda, reg_alpha, min_child_weight,
+                max_delta_step,
+                self._block(feature_mask if feature_mask is not None
+                            else np.ones(self.n_features, dtype=bool), False),
+                None if mono is None else self._block(mono, 0),
+                (None if cat_features is None
+                 else self._block(cat_features, False)),
+                node_bounds, f0=self.f0).ravel()
+        if fb:
+            # global feature 0's node sums, read from the first block
+            table[-2:] = hg[0, 0].sum(), hh[0, 0].sum()
+        q = self.comm.owners
+        allt = self.comm.allgather(table[:size if fb else 0],
+                                   q * size).reshape(q, size)
+        self._root = (float(allt[0, -2]), float(allt[0, -1]))
+        out = core.pick_splits(
+            allt[:, :-2].reshape(q, N, 2, core.CAND_FIELDS),
+            np.ascontiguousarray(hg[:, fb:]), np.ascontiguousarray(hh[:, fb:]),
+            self.cat_fids, reg_lambda, reg_alpha, gamma, min_child_weight,
+            max_delta_step, feature_mask, monotone, max_cat_to_onehot,
+            max_cat_threshold, n_bins_feat)
+        _PROF["split"] += time.perf_counter() - t0
+        return out
+
+    def root_sums(self, hg, hh) -> tuple[float, float]:
+        return self._root
 
 
 class _AllreduceMultiHistBuilder(_NumpyMultiHistBuilder):
@@ -88,11 +176,15 @@ class _AllreduceMultiHistBuilder(_NumpyMultiHistBuilder):
         self.comm = comm
 
     def build(self, tree: core.Tree, nids: list[int]):
+        t0 = time.perf_counter()
         hg, hh = super().build(tree, nids)
+        t1 = time.perf_counter()
         red = self.comm.allreduce_sum(np.stack([hg, hh]))
+        _PROF["hist_local"] += t1 - t0
+        _PROF["hist_allreduce"] += time.perf_counter() - t1
+        _PROF["allreduce_calls"] += 1
+        _PROF["allreduce_bytes"] += 2 * hg.nbytes
         return red[0], red[1]
-
-
 
 
 def _mvs_threshold_allreduce(comm, rag: np.ndarray, subsample: float,
@@ -589,7 +681,8 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 approx_cache = None
                 builder = (_AllreduceMultiHistBuilder(Xb, cuts_l, n_bins, K, comm)
                            if is_multi
-                           else _AllreduceHistBuilder(Xb, cuts_l, n_bins, comm))
+                           else _AllreduceHistBuilder(Xb, cuts_l, n_bins, comm,
+                                                      cm))
                 fw = (np.asarray(p.feature_weights, dtype=np.float64)
                       if p.feature_weights is not None else None)
                 rng = np.random.default_rng(p.seed)
@@ -671,7 +764,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         nb_ca = max(len(c) for c in cuts_ca)
                         approx_cache = (Xb_ca, cuts_ca, a_bounds,
                                         _AllreduceHistBuilder(
-                                            Xb_ca, cuts_ca, nb_ca, comm))
+                                            Xb_ca, cuts_ca, nb_ca, comm, cm))
                 for it_round in range(start_round, p.num_boost_round):
                     # DART dropout: selection draws are deterministic from
                     # the shared rng, margin corrections are local rows
@@ -733,7 +826,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                 comm, Xb, h, cuts_l, cm, p.max_bin)
                             nb_c = max(len(c) for c in coarse_cuts)
                             builder = _AllreduceHistBuilder(
-                                Xb_c, coarse_cuts, nb_c, comm)
+                                Xb_c, coarse_cuts, nb_c, comm, cm)
                             if obj.const_hess:
                                 approx_cache = (Xb_c, coarse_cuts,
                                                 bounds_list, builder)
@@ -754,7 +847,8 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                             nb_ck = max(len(c) for c in cuts_ck)
                             approx_groups.append(
                                 (_AllreduceHistBuilder(Xb_ck, cuts_ck,
-                                                       nb_ck, comm), bnd_k))
+                                                       nb_ck, comm, cm),
+                                 bnd_k))
                     approx_round = (bounds_list is not None
                                     or approx_groups is not None)
                     _t_sec = time.perf_counter()
