@@ -107,7 +107,7 @@ def test_approx_const_hess_checkpoint_resume(spark, reg_df, tmp_path):
     import os
     from xgboost_spark.config import TrainParams
     from xgboost_spark.plans.booster import SparkBooster
-    from test_barrier import _failing_squared_error, _structurally_equal
+    from test_barrier import _failing_objective, _structurally_equal
     fc = FCOLS
     kw = dict(num_boost_round=6, max_depth=3, max_bin=16, eta=0.4, seed=3,
               tree_method="approx", subsample=0.7, exec_mode="barrier")
@@ -117,7 +117,7 @@ def test_approx_const_hess_checkpoint_resume(spark, reg_df, tmp_path):
         reg_df, feature_cols=fc, label_col="label")
     p_ck = TrainParams(checkpoint_dir=ckdir, checkpoint_interval=2, **kw)
     with pytest.raises(Exception, match="injected mid-training failure"):
-        SparkBooster(p_ck, obj=_failing_squared_error(3)).fit(
+        SparkBooster(p_ck, obj=_failing_objective(3)).fit(
             reg_df, feature_cols=fc, label_col="label")
     assert os.path.exists(ckpt)
     m_res = SparkBooster(p_ck).fit(reg_df, feature_cols=fc,

@@ -352,27 +352,28 @@ def test_barrier_approx_dart_and_evals(spark, reg_df):
     assert preds.filter("prediction is null or isnan(prediction)").count() == 0
 
 
-def _failing_squared_error(fail_after: int):
-    """SquaredError that raises after ``fail_after`` gradient rounds —
+def _failing_objective(fail_after: int, params: TrainParams | None = None):
+    """The built-in objective ``params.objective`` (squared error when
+    ``params`` is None), raising after ``fail_after`` gradient rounds —
     simulates an executor loss mid-training inside the barrier job (the
     objective is called once per round by every task, so it is a
-    deterministic failure-injection point).  Defined inside a function
-    so cloudpickle serializes the class BY VALUE — the pytest module
-    name is not importable from the barrier python workers."""
-    from xgboost_spark.functions.objectives import SquaredError
+    deterministic failure-injection point).  The subclass is defined
+    inside a function so cloudpickle serializes it BY VALUE — the pytest
+    module name is not importable from the barrier python workers."""
+    from xgboost_spark.functions.objectives import get_objective
+    base = get_objective(params.objective if params else "reg:squarederror",
+                         params)
 
-    class _FailingSquaredError(SquaredError):
-        def __init__(self, n):
-            self._calls = 0
-            self.fail_after = n
-
+    class _Failing(type(base)):
         def grad_hess(self, y, margin, w):
             self._calls += 1
             if self._calls > self.fail_after:
                 raise RuntimeError("injected mid-training failure")
             return super().grad_hess(y, margin, w)
 
-    return _FailingSquaredError(fail_after)
+    obj = _Failing.__new__(_Failing)
+    obj.__dict__.update(base.__dict__, _calls=0, fail_after=fail_after)
+    return obj
 
 
 def test_barrier_checkpoint_resume(spark, reg_df, tmp_path):
@@ -395,7 +396,7 @@ def test_barrier_checkpoint_resume(spark, reg_df, tmp_path):
 
     p_ck = TrainParams(checkpoint_dir=ckdir, checkpoint_interval=2, **kw)
     with pytest.raises(Exception, match="injected mid-training failure"):
-        SparkBooster(p_ck, obj=_failing_squared_error(3)).fit(
+        SparkBooster(p_ck, obj=_failing_objective(3)).fit(
             reg_df, feature_cols=fc, label_col="label")
     assert os.path.exists(ckpt), "failed fit must leave its checkpoint"
 
@@ -426,7 +427,7 @@ def test_barrier_checkpoint_resume_dart(spark, reg_df, tmp_path):
 
     p_ck = TrainParams(checkpoint_dir=ckdir, checkpoint_interval=2, **kw)
     with pytest.raises(Exception, match="injected mid-training failure"):
-        SparkBooster(p_ck, obj=_failing_squared_error(3)).fit(
+        SparkBooster(p_ck, obj=_failing_objective(3)).fit(
             reg_df, feature_cols=fc, label_col="label")
     assert os.path.exists(ckpt), "failed fit must leave its checkpoint"
 
@@ -437,6 +438,46 @@ def test_barrier_checkpoint_resume_dart(spark, reg_df, tmp_path):
     assert np.allclose(m_res.tree_weights, m_full.tree_weights, atol=0), \
         "dart tree weights must match the uninterrupted run exactly"
     assert not os.path.exists(ckpt), "completed fit must delete its checkpoint"
+
+
+_CLASS3 = ("CAST(CASE WHEN c0 > 0.5 THEN 2 WHEN c1 > 0 THEN 1 ELSE 0 END "
+           "AS DOUBLE) AS label")
+
+
+@pytest.mark.parametrize("params,label", [
+    (dict(booster="dart", rate_drop=0.5, one_drop=True), "label"),
+    (dict(objective="multi:softprob", num_class=3), _CLASS3),
+    (dict(objective="multi:softprob", num_class=3,
+          multi_strategy="multi_output_tree"), _CLASS3),
+], ids=["dart", "softprob", "multi_output_tree"])
+def test_barrier_checkpoint_resume_with_evals(spark, reg_df, tmp_path, params,
+                                              label):
+    """Kill-and-resume with an eval set: resume replays the eval margins
+    too (DART's eval-side rescale deltas; K=3 scalar groups; 2-D vector
+    leaves), so the resumed model's bytes and its whole eval history
+    equal an uninterrupted fit's."""
+    import os
+    fc = [f"c{i}" for i in range(5)]
+    df = reg_df.selectExpr(*fc, label)
+    evals = [(df.filter("c3 > 0"), "valid")]
+    kw = dict(num_boost_round=6, max_depth=3, max_bin=32, eta=0.4, seed=7,
+              exec_mode="barrier", **params)
+    ckdir = str(tmp_path / "ck")
+
+    m_full = SparkBooster(TrainParams(**kw)).fit(
+        df, feature_cols=fc, label_col="label", evals=evals)
+
+    p_ck = TrainParams(checkpoint_dir=ckdir, checkpoint_interval=2, **kw)
+    with pytest.raises(Exception, match="injected mid-training failure"):
+        SparkBooster(p_ck, obj=_failing_objective(3, p_ck)).fit(
+            df, feature_cols=fc, label_col="label", evals=evals)
+    assert os.path.exists(os.path.join(ckdir, "barrier_ckpt.pkl"))
+
+    m_res = SparkBooster(p_ck).fit(df, feature_cols=fc, label_col="label",
+                                   evals=evals)
+    assert len(m_res.trees) == 6
+    assert m_res.eval_history == m_full.eval_history
+    assert bytes(m_res.save_raw()) == bytes(m_full.save_raw())
 
 
 def test_barrier_checkpoint_rejects_stale_fingerprint(spark, reg_df, tmp_path):
@@ -450,7 +491,7 @@ def test_barrier_checkpoint_rejects_stale_fingerprint(spark, reg_df, tmp_path):
                 checkpoint_interval=2)
     with pytest.raises(Exception, match="injected mid-training failure"):
         SparkBooster(TrainParams(num_boost_round=6, **base),
-                     obj=_failing_squared_error(3)).fit(
+                     obj=_failing_objective(3)).fit(
             reg_df, feature_cols=fc, label_col="label")
     assert os.path.exists(os.path.join(ckdir, "barrier_ckpt.pkl"))
     with pytest.raises(Exception, match="different fit configuration"):

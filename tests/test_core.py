@@ -166,3 +166,63 @@ def test_grow_tree_subtraction_consistency():
     assert t1.feature == t2.feature
     assert t1.split_bin == t2.split_bin
     assert np.allclose(t1.leaf_value, t2.leaf_value)
+
+
+def test_apply_model_margin_leaf_ids_match_traversal():
+    """`core.apply_model_margin` with per-tree ``lids`` (the barrier
+    trainer's builder-cached shortcut) adds bit for bit what the full
+    traversal adds: K=3 x num_parallel_tree=2 rounds, a 2-D-leaf round,
+    negative (DART drop) weights, and leaf ids from
+    `_NumpyHistBuilder.leaf_assignment`."""
+    from xgboost_spark.local.booster import LocalBooster, _NumpyHistBuilder
+    rng = np.random.default_rng(4)
+    n, K = 1500, 3
+    X = rng.normal(size=(n, 4))
+    X[rng.random(X.shape) < 0.05] = np.nan
+    y = ((np.nan_to_num(X[:, 0]) > 0).astype(float)
+         + (np.nan_to_num(X[:, 1]) > 0.5))
+    kw = dict(objective="multi:softprob", num_class=K, max_depth=3)
+    lb = LocalBooster(TrainParams(num_boost_round=4, **kw)).fit(X, y)
+    Xb = lb.bin(X)
+    # four K-tree rounds as two num_parallel_tree=2 rounds, k-major
+    forest = [[lb.trees[r + j][k] for k in range(K) for j in range(2)]
+              for r in (0, 2)]
+    vec = LocalBooster(TrainParams(num_boost_round=2,
+                                   multi_strategy="multi_output_tree",
+                                   **kw)).fit(X, y).trees
+    assert vec[0][0].finalize_arrays()["leaf_value"].ndim == 2
+    base = rng.normal(size=(n, K))
+
+    def margins(rounds, weights, lids):
+        full = core.apply_model_margin(base.copy(), rounds, weights, Xb,
+                                       True, K)
+        cached = core.apply_model_margin(base.copy(), rounds, weights, Xb,
+                                         True, K, lids=lids)
+        assert not np.array_equal(full, base)
+        assert full.tobytes() == cached.tobytes()
+        return full
+
+    def traversed(rounds):
+        return [core.tree_leaf_ids(t, Xb, True) for rnd in rounds for t in rnd]
+
+    full = margins(forest, [1.0, 0.7], traversed(forest))
+    ref = base.copy()                  # the per-tree, per-group update
+    for rnd, w in zip(forest, [1.0, 0.7]):
+        for i, t in enumerate(rnd):
+            ref[:, i // 2] += w * core.tree_predict(t, Xb, binned=True)
+    assert ref.tobytes() == full.tobytes()
+    margins(vec, [1.0, 1.0], traversed(vec))
+    margins(forest, [-0.3, -1.1], traversed(forest))
+
+    # leaf ids from the builder the trees were grown on: the last tree
+    # alone resumes its cached assignment; asked for tree by tree, each
+    # tree of the round re-routes from the root (the cache follows one)
+    bu = _NumpyHistBuilder(Xb, lb.cuts, max(len(c) for c in lb.cuts))
+    g, h = rng.normal(size=(n, K)), rng.uniform(0.5, 1.5, (n, K))
+    grown = []
+    for k in range(K):
+        bu.set_grad(g[:, k], h[:, k])
+        grown.append(core.grow_tree(bu, TrainParams(**kw),
+                                    np.random.default_rng(k)))
+    margins([grown[-1:]], [0.5], [bu.leaf_assignment(grown[-1])])
+    margins([grown], [0.5], (bu.leaf_assignment(t) for t in grown))

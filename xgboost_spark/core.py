@@ -274,16 +274,25 @@ def tree_predict(tree: Tree, X: np.ndarray, binned: bool) -> np.ndarray:
 
 
 def apply_model_margin(m: np.ndarray, trees, weights, X: np.ndarray,
-                       binned: bool, K: int) -> np.ndarray:
-    """``m (n,K) += ensemble margin`` from broadcastable tree-array dicts.
-    Round layout is k-major: K output groups x num_parallel_tree forest
+                       binned: bool, K: int, lids=None) -> np.ndarray:
+    """``m (n,K) += w * leaf(tree, X)`` over rounds of trees, in order:
+    the one prediction-cache update (reference `include/xgboost/cache.h`,
+    `learner.cc:1128-1131`) for serving, continuation and both trainers.
+
+    ``trees[r]`` is one round as `Tree`s or their broadcastable
+    `Tree.finalize_arrays` dicts, weighted by ``weights[r]``.  Round
+    layout is k-major: K output groups x num_parallel_tree forest
     members (reference `GBTree::BoostNewTrees`, gbtree.cc:315); 2-D
-    leaf_value = multi_output_tree (vector leaves)."""
-    for ri, rnd in enumerate(trees):
-        tw = weights[ri]
+    leaf_value = multi_output_tree (vector leaves).  ``lids``: optional
+    per-tree leaf ids (an iterable consumed in tree order) that replace
+    the traversal of ``X``, e.g. a hist builder's cached assignment."""
+    lids = None if lids is None else iter(lids)
+    for rnd, tw in zip(trees, weights):
         nf = max(len(rnd) // K, 1)
-        for i, arrs in enumerate(rnd):
-            lid = leaf_ids_from_arrays(arrs, X, binned)
+        for i, t in enumerate(rnd):
+            arrs = t if isinstance(t, dict) else t.finalize_arrays()
+            lid = (leaf_ids_from_arrays(arrs, X, binned) if lids is None
+                   else next(lids))
             if arrs["leaf_value"].ndim == 2:
                 m += tw * arrs["leaf_value"][lid]
             else:

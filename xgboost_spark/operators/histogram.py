@@ -135,18 +135,3 @@ class SparkHistBuilder(core.HistBuilder):
             hg[s, pdf["fidx"].to_numpy(), pdf["bin"].to_numpy()] = pdf["g"].to_numpy()
             hh[s, pdf["fidx"].to_numpy(), pdf["bin"].to_numpy()] = pdf["h"].to_numpy()
         return hg, hh
-
-
-def grad_hist_query(df: DataFrame, bin_col: str, grad_col, hess_col) -> DataFrame:
-    """Pure-DataFrame histogram (oracle-checkable form): one feature,
-    `groupBy(bin).agg(sum g, sum h)` — demonstrates that the inner loop
-    is an ordinary hash aggregation Catalyst handles natively.
-    """
-    return (
-        df.groupBy(F.col(bin_col).alias("bin"))
-        .agg(
-            F.round(F.sum(grad_col), 6).alias("sum_g"),
-            F.round(F.sum(hess_col), 6).alias("sum_h"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-    )

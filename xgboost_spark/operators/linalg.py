@@ -18,13 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dim_of(df: DataFrame, vec_col: str) -> int:
-    first = df.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError(f"no non-null '{vec_col}' row to infer dim from")
-    return len(first[0])
-
-
 def gram_moments(df: DataFrame, vec_col: str = "embedding",
                  shift: np.ndarray | None = None
                  ) -> tuple[int, np.ndarray, np.ndarray, np.ndarray]:

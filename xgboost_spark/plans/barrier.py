@@ -28,8 +28,10 @@ picks between the two (through `supports_barrier`), before any Spark
 job runs.  Both trainers share booster's per-row parse (`parse_rows`),
 gradient kernel (`_compute_grads`), DART dropout and normalization
 (`dart_drop`, `dart_weights`) and early-stopping rule (`_early_stop`).
-The margin cache is kept in NumPy arrays here and by booster's one
-frame kernel (`_frame_batch`) on the DataFrame path.
+Both keep their margin caches with the one tree-margin kernel,
+`core.apply_model_margin`: here on per-task NumPy arrays (the new
+round's leaf ids come from the hist builder's cached assignment), on
+the DataFrame path inside booster's frame kernel (`_frame_batch`).
 
 Scale: per-task memory = its partition's quantized matrix (int16) —
 size partitions so each fits (same contract as the reference Spark
@@ -295,11 +297,11 @@ def _mvs_threshold_allreduce(comm, rag: np.ndarray, subsample: float,
 def _approx_rebin(comm, Xb_fine, h, fine_cuts, cat_mask, max_bin):
     """Per-round hessian-weighted re-sketch (reference approx updater,
     `updater_approx.cc:95-130`) without touching raw values: features are
-    pre-binned at fine resolution (4x max_bin); the weighted quantile
-    boundaries are picked from ONE allreduced (feature x fine-bin)
-    hessian histogram, and re-quantization is a per-feature LUT.  Error
-    is bounded by the fine grid — the same approximation class as a
-    direct weighted sketch at 4x resolution.
+    pre-binned at fine resolution (4x max_bin); the quantile boundaries,
+    weighted by one output group's hessians ``h``, are picked from ONE
+    allreduced (feature x fine-bin) histogram, and re-quantization is a
+    per-feature LUT.  Error is bounded by the fine grid — the same
+    approximation class as a direct weighted sketch at 4x resolution.
 
     Trees grown on the coarse binning are remapped back to the FINE bin
     space afterwards (`_remap_split_bins`), so margins, eval sets and
@@ -312,7 +314,7 @@ def _approx_rebin(comm, Xb_fine, h, fine_cuts, cat_mask, max_bin):
     fineB = max(len(c) for c in fine_cuts)
     hist = np.zeros(Fn * (fineB + 1))
     if n:
-        hw = np.abs(h).sum(axis=1) if h.ndim == 2 else np.abs(h)
+        hw = np.abs(h)
         for f in range(Fn):
             b = Xb_fine[:, f].astype(np.int64)
             b = np.where(b == core.MISSING_BIN, fineB, b)
@@ -428,15 +430,15 @@ def _leaf_quantile_refresh(comm, tree, Xb, resid, w, alpha, eta, n_hist=2048,
         tree.leaf_value[nid] = eta * (mn + (i + frac) * scale / n_hist)
 
 
-def _add_round(m: np.ndarray, round_trees: list[core.Tree], K: int,
-               w: float, Xb: np.ndarray) -> None:
-    """``m[:, k] += w * tree(Xb)`` for each of a round's trees, in order
-    (a round holds K groups of equally many trees)."""
-    nf = len(round_trees) // K
-    for k in range(K):
-        for j in range(nf):
-            m[:, k] += w * core.tree_predict(round_trees[k * nf + j], Xb,
-                                             binned=True)
+def _dart_deltas(w_old: list[float], factor: float,
+                 train: bool) -> list[float]:
+    """Margin weight deltas of a DART round's rescaled dropped rounds
+    (pre-rescale weights ``w_old``).  The training margin adds
+    ``w * (f - 1)``, the eval margins ``(w * f) * (1 - 1/f)``:
+    algebraically equal, bitwise distinct, and resume replays each
+    margin with its own form."""
+    return [w * (factor - 1.0) if train
+            else (w * factor) * (1.0 - 1.0 / factor) for w in w_old]
 
 
 def supports_barrier(p: TrainParams, obj, evals, callbacks,
@@ -468,7 +470,8 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 mono, isets, n_part: int,
                 evals_raw: list[tuple[DataFrame, str]] | None = None,
                 prev_state: dict | None = None, maximize: bool = False,
-                ) -> tuple[list[list[core.Tree]], dict, int | None]:
+                ) -> tuple[list[list[core.Tree]], dict, int | None,
+                           list[float]]:
     """Run the boosting loop in one barrier job.
 
     Eval sets ride in the SAME job: tagged with a ``_role`` column,
@@ -733,26 +736,18 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                     replay = [(Xb, margin, True)] + [(st[0], st[5], False)
                                                      for st in ev_states]
                     for ri, rt in enumerate(trees):
-                        ev = dart_log[ri] if (is_dart and ri < len(dart_log)) \
-                            else None
+                        # each round as the live loop applied it: its
+                        # DART rescale deltas (same float forms), then
+                        # the round itself
+                        ev = (dart_log[ri] if is_dart and ri < len(dart_log)
+                              else {"dropped": [], "w_old": [], "factor": 1.0,
+                                    "w_new": tree_weights[ri]})
                         for Xc, mc, is_train_m in replay:
-                            if is_multi:
-                                mc += core.tree_predict(rt[0], Xc, binned=True)
-                                continue
-                            if ev and ev["dropped"]:
-                                # replay the round's rescale deltas with the
-                                # SAME float expressions the live loop used
-                                # (train and eval paths compute dw through
-                                # different — algebraically equal, bitwise
-                                # distinct — forms; see the loop below)
-                                f_ = ev["factor"]
-                                for di, d in enumerate(ev["dropped"]):
-                                    w_old = ev["w_old"][di]
-                                    dw = (w_old * (f_ - 1.0) if is_train_m
-                                          else (w_old * f_) * (1.0 - 1.0 / f_))
-                                    _add_round(mc, trees[d], K, dw, Xc)
-                            w_r = ev["w_new"] if ev is not None else tree_weights[ri]
-                            _add_round(mc, rt, K, w_r, Xc)
+                            core.apply_model_margin(
+                                mc, [trees[d] for d in ev["dropped"]] + [rt],
+                                _dart_deltas(ev["w_old"], ev["factor"],
+                                             is_train_m) + [ev["w_new"]],
+                                Xc, True, K)
                     if (is_approx and K == 1 and obj.const_hess
                             and ck.get("approx_bounds") is not None):
                         # rebuild the frozen round-0 coarse binning from
@@ -762,16 +757,16 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         Xb_ca, cuts_ca = _rebin_from_bounds(Xb, cuts_l,
                                                             a_bounds)
                         nb_ca = max(len(c) for c in cuts_ca)
-                        approx_cache = (Xb_ca, cuts_ca, a_bounds,
-                                        _AllreduceHistBuilder(
-                                            Xb_ca, cuts_ca, nb_ca, comm, cm))
+                        approx_cache = [(_AllreduceHistBuilder(
+                            Xb_ca, cuts_ca, nb_ca, comm, cm), a_bounds)]
                 for it_round in range(start_round, p.num_boost_round):
                     # DART dropout: selection draws are deterministic from
                     # the shared rng, margin corrections are local rows
                     dropped = dart_drop(p, rng, tree_weights)
-                    m_eff = margin.copy() if dropped else margin
-                    for ri in dropped:
-                        _add_round(m_eff, trees[ri], K, -tree_weights[ri], Xb)
+                    m_eff = core.apply_model_margin(
+                        margin.copy() if dropped else margin,
+                        [trees[ri] for ri in dropped],
+                        [-tree_weights[ri] for ri in dropped], Xb, True, K)
                     if obj.needs_global_scale:
                         # per-iteration global residual scale (reference
                         # MAE/quantile GlobalSum, regression_obj.cu:655-660 /
@@ -811,32 +806,17 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                     fmask = None
                     if p.colsample_bytree < 1.0:
                         fmask = core._rng_mask(rng, Fn, p.colsample_bytree, weights=fw)
-                    bounds_list = None
-                    approx_groups = None
-                    if is_approx and K == 1:
-                        # per-round hessian-weighted re-quantization —
-                        # except const-hess objectives (squarederror),
-                        # whose round-0 binning is frozen (BatchSpec
-                        # regen = !const_hess, updater_approx.cc:47-52)
-                        if approx_cache is not None:
-                            Xb_c, coarse_cuts, bounds_list, builder = \
-                                approx_cache
-                        else:
-                            Xb_c, coarse_cuts, bounds_list = _approx_rebin(
-                                comm, Xb, h, cuts_l, cm, p.max_bin)
-                            nb_c = max(len(c) for c in coarse_cuts)
-                            builder = _AllreduceHistBuilder(
-                                Xb_c, coarse_cuts, nb_c, comm, cm)
-                            if obj.const_hess:
-                                approx_cache = (Xb_c, coarse_cuts,
-                                                bounds_list, builder)
-                    elif is_approx and not is_multi:
-                        # K>1 scalar groups: the reference regenerates the
-                        # GHistIndexMatrix once per group — gbtree
-                        # BoostNewTrees calls the updater per group and
-                        # each Update re-sketches with THAT group's
-                        # hessians (updater_approx.cc:283-298) — so each
-                        # class gets its own coarse binning.  (approx +
+                    approx_groups = approx_cache
+                    if is_approx and approx_groups is None:
+                        # per-group hessian-weighted re-quantization: the
+                        # reference regenerates the GHistIndexMatrix once
+                        # per group — gbtree BoostNewTrees calls the
+                        # updater per group and each Update re-sketches
+                        # with THAT group's hessians
+                        # (updater_approx.cc:283-298).  Const-hess K=1
+                        # objectives (squarederror) freeze round 0's
+                        # binning (BatchSpec regen = !const_hess,
+                        # updater_approx.cc:47-52).  (approx +
                         # multi_output_tree is rejected at fit entry,
                         # matching CHECK(!IsMultiTarget),
                         # updater_approx.cc:166.)
@@ -849,8 +829,8 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                 (_AllreduceHistBuilder(Xb_ck, cuts_ck,
                                                        nb_ck, comm, cm),
                                  bnd_k))
-                    approx_round = (bounds_list is not None
-                                    or approx_groups is not None)
+                        if K == 1 and obj.const_hess:
+                            approx_cache = approx_groups
                     _t_sec = time.perf_counter()
                     round_trees: list[core.Tree] = []
                     if is_multi:
@@ -860,7 +840,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         round_trees = [tree]
                     else:
                         for k in range(K):
-                            if approx_groups is not None:
+                            if is_approx:
                                 builder = approx_groups[k][0]
                             builder.set_grad(g[:, k], h[:, k])
                             forest = []
@@ -879,27 +859,13 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                             round_trees.extend(forest)
                     _PROF["grow"] += time.perf_counter() - _t_sec
                     _t_sec = time.perf_counter()
-                    if bounds_list is not None:
+                    if is_approx:
                         # back to the global fine bin space: all later
                         # traversals use the one persistent binned matrix
-                        for t in round_trees:
-                            _remap_split_bins(t, bounds_list)
-                    elif approx_groups is not None:
+                        # (so the coarse builders' cached leaf ids no
+                        # longer match the trees)
                         for ti, t in enumerate(round_trees):
-                            bnd_k = approx_groups[ti // n_forest][1]
-                            if bnd_k is not None:
-                                _remap_split_bins(t, bnd_k)
-                    if is_multi:
-                        if bounds_list is not None:
-                            # approx: split bins were remapped to the fine
-                            # space — the coarse builder's cache no longer
-                            # matches the tree; route on the fine matrix
-                            margin += core.tree_predict(round_trees[0], Xb,
-                                                        binned=True)
-                        else:
-                            margin += round_trees[0].finalize_arrays()[
-                                "leaf_value"][
-                                    builder.leaf_assignment(round_trees[0])]
+                            _remap_split_bins(t, approx_groups[ti // n_forest][1])
                     if obj.adaptive_alpha is not None:
                         aa = obj.adaptive_alpha
                         for ti, t in enumerate(round_trees):
@@ -908,55 +874,40 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                 comm, t, Xb, y - margin[:, k_r], w,
                                 aa[k_r] if isinstance(aa, tuple) else aa, p.eta,
                                 leaf=(builder.leaf_assignment(t)
-                                      if not approx_round else None))
+                                      if not is_approx else None))
                     # DART normalization (reference normalize_type semantics)
                     w_new, factor = dart_weights(p, len(dropped))
+                    w_old = [tree_weights[ri] for ri in dropped]
                     if is_dart:
                         dart_log.append({
-                            "dropped": list(dropped),
-                            "w_old": [tree_weights[ri] for ri in dropped],
+                            "dropped": list(dropped), "w_old": w_old,
                             "factor": factor, "w_new": w_new})
+                    core.apply_model_margin(
+                        margin, [trees[ri] for ri in dropped],
+                        _dart_deltas(w_old, factor, True), Xb, True, K)
                     for ri in dropped:
-                        _add_round(margin, trees[ri], K,
-                                   tree_weights[ri] * (factor - 1.0), Xb)
                         tree_weights[ri] *= factor
-                    if not is_multi:
-                        ti = 0
-                        for k in range(K):
-                            for _ in range(n_forest):
-                                t_new = round_trees[ti]
-                                if approx_round:
-                                    # approx: tree remapped to fine bins —
-                                    # the coarse builder cache is invalid
-                                    margin[:, k] += w_new * core.tree_predict(
-                                        t_new, Xb, binned=True)
-                                else:
-                                    # builder-cached incremental assignment:
-                                    # only the final level routes (full
-                                    # re-traversal was a per-round
-                                    # O(n*depth) tax in the sf10 profile)
-                                    lid = builder.leaf_assignment(t_new)
-                                    margin[:, k] += w_new * \
-                                        t_new.finalize_arrays()["leaf_value"][lid]
-                                ti += 1
+                    # the builder's cached incremental assignment: only
+                    # the final level routes (full re-traversal was a
+                    # per-round O(n*depth) tax in the sf10 profile)
+                    core.apply_model_margin(
+                        margin, [round_trees], [w_new], Xb, True, K,
+                        lids=(None if is_approx else
+                              (builder.leaf_assignment(t)
+                               for t in round_trees)))
                     trees.append(round_trees)
                     tree_weights.append(w_new)
                     _PROF["margin_update"] += time.perf_counter() - _t_sec
                     _t_sec = time.perf_counter()
                     # eval-set margins + allreduced metrics (EvalOneIter,
-                    # reference learner.cc:1164-1194)
+                    # reference learner.cc:1164-1194): the dropped
+                    # rounds' rescale deltas, then the new round
                     last = None
                     for ei, (Xe, ye, we, qe, be, me) in enumerate(ev_states):
-                        if is_multi:
-                            me += core.tree_predict(round_trees[0], Xe, binned=True)
-                        else:
-                            # dropped trees were re-weighted w_old -> w_old*factor;
-                            # apply the delta (tree_weights[ri] is already new)
-                            for ri in dropped:
-                                _add_round(me, trees[ri], K,
-                                           tree_weights[ri] * (1.0 - 1.0 / factor),
-                                           Xe)
-                            _add_round(me, round_trees, K, w_new, Xe)
+                        core.apply_model_margin(
+                            me, [trees[ri] for ri in dropped] + [round_trees],
+                            _dart_deltas(w_old, factor, False) + [w_new],
+                            Xe, True, K)
                         for mname in metric_names:
                             val = metric_global_np(
                                 comm, mname, ye, me, we, bounds=be, obj=obj,
@@ -989,7 +940,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                          # round-0 binning rides along so
                                          # a resume keeps the same cuts
                                          "approx_bounds": (
-                                             approx_cache[2]
+                                             approx_cache[0][1]
                                              if approx_cache is not None
                                              else None),
                                          "obj_state": obj.__dict__}, fh)

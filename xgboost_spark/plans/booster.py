@@ -22,10 +22,12 @@
      (e.g. cox, the ``ams`` metric, callbacks, custom metrics).
      ``auto`` logs the reason at INFO on the ``xgboost_spark`` logger.
 
-The two trainers share the per-row parse (`parse_rows`), the DART
-dropout draw and normalization (`dart_drop`, `dart_weights`), the
-early-stopping rule (`_early_stop`, direction `_maximize`) and the
-verbose line format (`functions/callbacks.eval_line`).
+The two trainers share the per-row parse (`parse_rows`), the
+tree-margin kernel (`core.apply_model_margin`, which serving and
+continuation use too), the DART dropout draw and normalization
+(`dart_drop`, `dart_weights`), the early-stopping rule (`_early_stop`,
+direction `_maximize`) and the verbose line format
+(`functions/callbacks.eval_line`).
 
 The DataFrame trainer's lifecycle mirrors the reference
 (`src/learner.cc:1114-1139`, `src/gbm/gbtree.cc:182-275`) re-expressed
@@ -40,10 +42,11 @@ for Spark's execution model:
   per-batch kernel (`_frame_batch`) that `_frame_pass` maps over a
   frame and `localCheckpoint`s (at cluster scale use a reliable
   checkpoint dir; the pattern is identical).  After each round the
-  kernel adds the new trees (and, for DART, the rescale corrections)
-  to the margin and writes the next round's gradients at that margin
-  minus the next round's dropped trees; it re-bins approx features and
-  replays `refresh_leaves`' margins too;
+  kernel adds the new round and then, for DART, each dropped round's
+  rescale delta to the margin (`core.apply_model_margin` over
+  ``(rounds, weights)``), and writes the next round's gradients at
+  that margin minus the next round's dropped rounds; it re-bins approx
+  features and replays `refresh_leaves`' margins too;
 - gradients/hessians are fp64 columns (reference accumulates
   `GradientPairPrecise`, `src/common/hist_util.h:388`).
 
@@ -215,14 +218,6 @@ def _write_grads(out: dict, grads, y, m, w, q, bounds, K: int) -> None:
         out[f"h{k}"] = h[:, k]
 
 
-def _round_entries(round_trees: list, K: int, weight: float) -> list:
-    """One boosting round as ``(group, tree arrays, weight)`` entries;
-    a round's trees are ordered ``[k0_f0, .., k0_fN, k1_f0, ..]``."""
-    nf = len(round_trees) // K
-    return [(i // nf, t.finalize_arrays(), weight)
-            for i, t in enumerate(round_trees)]
-
-
 def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
                 cat_mask, K: int, base_score, prev_state=None,
                 has_b: bool = False, keep_raw: bool = False,
@@ -267,20 +262,20 @@ def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
     return raw.mapInPandas(fn, schema=schema)
 
 
-def _frame_batch(pdf: pd.DataFrame, K: int, add=(), drop=(),
+def _frame_batch(pdf: pd.DataFrame, K: int, add=None, drop=None,
                  use_raw: bool = False, cuts=None, cat_mask=None,
                  grads=None):
     """The one per-batch kernel over a frame (the reference's prediction
     cache update, `learner.cc:1128-1131`): returns ``(out columns,
     margin minus drop)``.
 
-    In order: re-bin ``x*`` from ``rawx*`` on ``cuts`` (approx); add
-    each ``(group, tree arrays, weight)`` entry of ``add`` to the
-    margin; subtract the ``drop`` entries from a copy of it (DART);
-    write ``g*``/``h*`` at that copy when ``grads`` is given.  Trees
-    route rows by bin (``x*``) or, with ``use_raw``, by raw value
-    (approx: bins change per round, raw split values do not).  Columns
-    not written pass through."""
+    ``add`` and ``drop`` are ``(rounds, weights)`` for
+    `core.apply_model_margin`, or None.  In order: re-bin ``x*`` from
+    ``rawx*`` on ``cuts`` (approx); add ``add`` to the margin; subtract
+    ``drop`` from a copy of it (DART); write ``g*``/``h*`` at that copy
+    when ``grads`` is given.  Trees route rows by bin (``x*``) or, with
+    ``use_raw``, by raw value (approx: bins change per round, raw split
+    values do not).  Columns not written pass through."""
     out = {c: pdf[c] for c in pdf.columns}
     Fn = sum(c[0] == "x" for c in pdf.columns)
     if cuts is not None:
@@ -299,19 +294,14 @@ def _frame_batch(pdf: pd.DataFrame, K: int, add=(), drop=(),
         else:
             X = np.column_stack([pdf[f"x{i}"].to_numpy(dtype=np.int16, na_value=-1)
                                  for i in range(Fn)])
-
-        def leaf_values(arrs):
-            lid = core.leaf_ids_from_arrays(arrs, X, binned=not use_raw)
-            return arrs["leaf_value"][lid]
-
-        for k, arrs, wt in add:
-            m[:, k] += wt * leaf_values(arrs)
         if add:
+            core.apply_model_margin(m, *add, X, not use_raw, K)
             out.update({f"m{k}": m[:, k] for k in range(K)})
         if drop:
-            m = m.copy()
-            for k, arrs, wt in drop:
-                m[:, k] -= wt * leaf_values(arrs)
+            rounds, weights = drop
+            m = core.apply_model_margin(m.copy(), rounds,
+                                        [-wt for wt in weights], X,
+                                        not use_raw, K)
     if grads is not None:
         y = pdf["y"].to_numpy(dtype=np.float64)
         w = pdf["w"].to_numpy(dtype=np.float64)
@@ -323,12 +313,12 @@ def _frame_batch(pdf: pd.DataFrame, K: int, add=(), drop=(),
     return out, m
 
 
-def _frame_pass(frame: DataFrame, schema: str, K: int, add=(), drop=(),
+def _frame_pass(frame: DataFrame, schema: str, K: int, add=None, drop=None,
                 use_raw: bool = False, cuts=None, cat_mask=None,
                 grads=None) -> DataFrame:
     """`_frame_batch` mapped over ``frame``, localCheckpointed (at
     cluster scale a reliable checkpoint dir; the pattern is the same)."""
-    bc = frame.sparkSession.sparkContext.broadcast((list(add), list(drop), cuts))
+    bc = frame.sparkSession.sparkContext.broadcast((add, drop, cuts))
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         add_l, drop_l, cuts_l = bc.value
@@ -348,7 +338,7 @@ def _scale_stats(frame: DataFrame, obj, K: int, add, drop,
     iteration, regression_obj.cu:642-660 / quantile_obj.cu:123-152)
     summed over every partition, at the margin `_frame_batch` computes
     from the same ``add``/``drop``: one job."""
-    bc = frame.sparkSession.sparkContext.broadcast((list(add), list(drop)))
+    bc = frame.sparkSession.sparkContext.broadcast((add, drop))
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         add_l, drop_l = bc.value
@@ -1181,7 +1171,7 @@ class SparkBooster:
             binned = binned.repartition(n_part)
         binned = binned.localCheckpoint(eager=True)
         if _global_grads(obj):
-            binned = _grads_pass(binned, train_schema, obj, K, [], [],
+            binned = _grads_pass(binned, train_schema, obj, K, None, None,
                                  grads(seed), n_part=n_part)
         eval_states = [[parse(ev_raw, False).localCheckpoint(eager=True),
                         ev_name] for ev_raw, ev_name in evals_raw]
@@ -1269,14 +1259,13 @@ class SparkBooster:
                     self._adaptive_leaf_refresh(binned, t, alpha_k, p.eta,
                                                 group=k_r)
 
-            # the margin pass adds the new round, then one (group, tree,
-            # delta weight) correction per tree of each re-weighted
-            # dropped round (DART)
+            # the margin pass adds the new round, then each re-weighted
+            # dropped round's delta weight (DART)
             w_new, factor = dart_weights(p, len(dropped))
-            add = _round_entries(round_trees, K, w_new)
+            add = ([round_trees] + [trees[ri] for ri in dropped],
+                   [w_new] + [tree_weights[ri] * (factor - 1.0)
+                              for ri in dropped])
             for ri in dropped:
-                add += _round_entries(trees[ri], K,
-                                      tree_weights[ri] * (factor - 1.0))
                 tree_weights[ri] *= factor
             trees.append(round_trees)
             tree_weights.append(w_new)
@@ -1285,8 +1274,8 @@ class SparkBooster:
             # round grows), so the margin pass writes its gradients at
             # the dropped-out margin directly
             dropped = dart_drop(p, rng, tree_weights)
-            drop = [e for ri in dropped
-                    for e in _round_entries(trees[ri], K, tree_weights[ri])]
+            drop = (([trees[ri] for ri in dropped],
+                     [tree_weights[ri] for ri in dropped]) if dropped else None)
             binned = _grads_pass(binned, train_schema, obj, K, add, drop,
                                  grads(seed + it_round + 1), is_approx)
             for k in range(K):
@@ -1694,7 +1683,7 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
     frame = _parse_pass(raw, schema, fnames, model.cuts, None, 1,
                         model.base_score, grads=grads).localCheckpoint(eager=True)
     if _global_grads(obj):
-        frame = _grads_pass(frame, schema, obj, 1, [], [], grads)
+        frame = _grads_pass(frame, schema, obj, 1, None, None, grads)
     fcols = [f"x{i}" for i in range(Fn)]
     new_trees: list[list[core.Tree]] = []
     for ri, round_trees in enumerate(model.trees):
@@ -1732,8 +1721,8 @@ def refresh_leaves(model: GBDTModel, df: DataFrame,
             refreshed.append(t2)
         new_trees.append(refreshed)
         weight = model.tree_weights[ri] if model.tree_weights else 1.0
-        frame = _grads_pass(frame, schema, obj, 1,
-                            _round_entries(refreshed, 1, weight), [], grads)
+        frame = _grads_pass(frame, schema, obj, 1, ([refreshed], [weight]),
+                            None, grads)
     out = GBDTModel(p, model.base_score, new_trees, model.feature_names,
                     model.cuts, best_iteration=model.best_iteration,
                     eval_history=model.eval_history,

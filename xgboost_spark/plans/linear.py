@@ -299,14 +299,6 @@ class LinearModel:
             return cls.from_json(f.read())
 
 
-def _threshold_l1(g: float, alpha: float) -> float:
-    if g > alpha:
-        return g - alpha
-    if g < -alpha:
-        return g + alpha
-    return 0.0
-
-
 # reference LinearTrainParam defaults (src/linear/param.h:30-56) —
 # SEPARATE from the tree params that share the user-facing names:
 # gblinear's eta defaults to 0.5 and its L1/L2 penalties to 0
