@@ -2147,7 +2147,7 @@ def q_train_approx(spark, sf_dir):
     sketch is weighted by round-0 hessians, which are ALL-ONES here:
     the hessian histogram over fine bins is exact INTEGER row counts,
     the coarse bounds (CDF inversion targets W*k/8, searchsorted-left,
-    unique+append-last — `plans/barrier.py _approx_rebin`) are integer-
+    unique+append-last — `core.approx_bounds`) are integer-
     exact, and the DuckDB oracle replays them bin for bin.  The depth-1
     split (gain desc, feature asc, bin asc) and Newton leaves
     eta*-G/(H+lambda) follow; output = per-leaf (routing count, 4dp

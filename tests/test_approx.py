@@ -1,41 +1,16 @@
 """tree_method=approx: per-round hessian-weighted re-sketch.
 Reference analog: src/tree/updater_approx.cc (grow_histmaker)."""
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
 
-from xgboost_spark.operators.sketch import weighted_cuts_all
 from xgboost_spark.plans.booster import train
 
 
 FCOLS = [f"c{i}" for i in range(5)]
-
-
-def test_weighted_cuts_all_matches_per_feature_oracle(spark):
-    rng = np.random.default_rng(13)
-    n = 5000
-    pdf = pd.DataFrame({"a": rng.normal(0, 1, n), "b": rng.exponential(2, n),
-                        "h": rng.uniform(0.1, 2.0, n)})
-    df = spark.createDataFrame(pdf)
-    cuts = weighted_cuts_all(df, ["a", "b"], "h", max_bin=16, n_part=8)
-    # numpy oracle: weighted type-1 quantiles per feature
-    for ci, col in enumerate(["a", "b"]):
-        v = pdf[col].to_numpy()
-        w = pdf["h"].to_numpy()
-        order = np.argsort(v, kind="stable")
-        vs, ws = v[order], w[order]
-        cw = np.cumsum(ws)
-        total = cw[-1]
-        expect = []
-        for b in range(1, 17):
-            # cut_b = max{v : ceil(cumw*B/W) == b} boundary
-            idx = np.searchsorted(cw, b * total / 16, side="right") - 1
-            expect.append(vs[max(idx, 0)])
-        got = cuts[ci]
-        # boundaries should be close (same CDF inversion, fp rounding aside)
-        assert got is not None and len(got) >= 8
-        assert abs(got[len(got) // 2] - np.quantile(v, 0.5)) < 0.5
 
 
 def test_approx_training_close_to_hist(spark, reg_df, reg_data):
@@ -45,7 +20,7 @@ def test_approx_training_close_to_hist(spark, reg_df, reg_data):
     m_appr = train({"num_boost_round": 5, "max_depth": 3, "base_score": 0.0,
                     "tree_method": "approx", "eval_metric": ["rmse"]},
                    reg_df, feature_cols=FCOLS,
-                   evals=[(reg_df, "train")])   # eval frames carry raw cols too
+                   evals=[(reg_df, "train")])   # evals traverse the fine bins
     assert len(m_appr.eval_history["train"]["rmse"]) == 5
     ph = m_hist.transform(reg_df, feature_cols=FCOLS).toPandas()["prediction"].to_numpy()
     pa = m_appr.transform(reg_df, feature_cols=FCOLS).toPandas()["prediction"].to_numpy()
@@ -58,12 +33,6 @@ def test_approx_training_close_to_hist(spark, reg_df, reg_data):
 
 
 def test_approx_rejects_unsupported_combos(spark, reg_df):
-    # approx+dart needs the barrier path's per-round fine-bin re-sketch;
-    # forcing the DataFrame path is an explicit error
-    with pytest.raises(NotImplementedError):
-        train({"tree_method": "approx", "booster": "dart",
-               "exec_mode": "dataframe", "num_boost_round": 1},
-              reg_df, feature_cols=FCOLS)
     with pytest.raises(ValueError):
         train({"tree_method": "exact", "num_boost_round": 1},
               reg_df, feature_cols=FCOLS)
@@ -75,17 +44,17 @@ def test_approx_const_hess_sketch_once_composed(spark, reg_df, monkeypatch):
     GHistIndexMatrix regen flag is !const_hess): reg:squarederror
     (the only ObjInfo{., true} objective, regression_loss.h:32)
     sketches ONCE — round 0 — and reuses the cuts; a non-const-hess
-    objective re-sketches EVERY round.  Counted on the composed path
-    via weighted_cuts_all invocations."""
-    import xgboost_spark.operators.sketch as sk
+    objective re-sketches EVERY round.  Counted on the DataFrame path
+    via the driver's core.approx_bounds calls."""
+    from xgboost_spark import core
     calls = []
-    real = sk.weighted_cuts_all
+    real = core.approx_bounds
 
     def counting(*a, **k):
         calls.append(1)
         return real(*a, **k)
 
-    monkeypatch.setattr(sk, "weighted_cuts_all", counting)
+    monkeypatch.setattr(core, "approx_bounds", counting)
     train({"num_boost_round": 3, "max_depth": 2, "tree_method": "approx",
            "exec_mode": "dataframe", "base_score": 0.0},
           reg_df, feature_cols=FCOLS)
@@ -170,3 +139,34 @@ def test_approx_multi_output_tree_rejected(spark, reg_df):
                "multi_strategy": "multi_output_tree",
                "tree_method": "approx", "num_boost_round": 1},
               df, feature_cols=["c0", "c1", "c2"])
+
+
+def test_approx_dataframe_fit_ignores_session_history(spark):
+    """The same DataFrame-path approx fit, before and after 200 small
+    unrelated queries, gives the same model bytes: the per-round
+    binning reads only the frame's fine bins and its hessians, summed
+    in partition order — nothing seeded from the session's RDD count
+    (a range-partitioned re-sketch of raw values was)."""
+    from xgboost_spark.config import TrainParams
+    from xgboost_spark.plans.booster import SparkBooster
+    rng = np.random.default_rng(11)
+    n = 2000
+    X = rng.normal(0, 1, (n, 5))
+    X[rng.random(X.shape) < 0.03] = np.nan
+    x0, x1 = np.nan_to_num(X[:, 0]), np.nan_to_num(X[:, 1])
+    pdf = pd.DataFrame(X, columns=FCOLS)
+    pdf["label"] = np.sin(2 * x0) + 0.5 * x1 + rng.normal(0, 0.2, n)
+    df = spark.createDataFrame(pdf).repartition(4).cache()
+    p = TrainParams(tree_method="approx", objective="reg:pseudohubererror",
+                    num_boost_round=5, max_depth=3, max_bin=16, eta=0.4,
+                    seed=3, exec_mode="dataframe")
+
+    def digest():
+        m = SparkBooster(p).fit(df, feature_cols=FCOLS, label_col="label")
+        return hashlib.sha256(bytes(m.save_raw())).hexdigest()
+
+    first = digest()
+    for i in range(200):
+        spark.range(0, 3, 1, 1).selectExpr(f"id + {i}").collect()
+    assert digest() == first
+    df.unpersist()

@@ -19,9 +19,10 @@ The matrix, every fit with one eval set on small seeded data:
 - both trainers (``barrier``, ``dataframe``): hist, DART, DART with
   weighted dropout and forest normalization, approx, ``multi:softprob``
   K=3, DART softprob, ``num_parallel_tree=3`` with subsample, MAE, DART
-  MAE, logistic with ``auc`` + ``logloss`` and early stopping;
-- barrier only (the DataFrame trainer refuses them): multi_output_tree
-  K=3, approx + DART, approx K=3, approx MAE;
+  MAE, logistic with ``auc`` + ``logloss`` and early stopping, approx +
+  DART, approx K=3, approx MAE;
+- barrier only (the DataFrame trainer refuses it): multi_output_tree
+  K=3;
 - continuation (``xgb_model=``) of the hist and of the DART model on
   both trainers, and `refresh_leaves` of each (path ``refresh``).
 
@@ -61,14 +62,14 @@ BOTH = [
     ("logistic_auc", "bin", {"objective": "binary:logistic",
                              "eval_metric": ["auc", "logloss"],
                              "early_stopping_rounds": 2}),
-]
-BARRIER_ONLY = [
-    ("multi_output_tree", "multi", {**SOFTPROB,
-                                    "multi_strategy": "multi_output_tree"}),
     ("approx_dart", "reg", {"tree_method": "approx", "max_bin": 16, **DART}),
     ("approx_softprob", "multi", {"tree_method": "approx", "max_bin": 16,
                                   **SOFTPROB}),
     ("approx_mae", "reg", {"tree_method": "approx", "max_bin": 16, **MAE}),
+]
+BARRIER_ONLY = [
+    ("multi_output_tree", "multi", {**SOFTPROB,
+                                    "multi_strategy": "multi_output_tree"}),
 ]
 
 

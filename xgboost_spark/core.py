@@ -1271,3 +1271,93 @@ def bin_values(x: np.ndarray, cuts: np.ndarray) -> np.ndarray:
     b = np.searchsorted(cuts, x, side="left")
     b = np.minimum(b, len(cuts) - 1)
     return np.where(np.isnan(x), MISSING_BIN, b).astype(np.int16)
+
+
+# ---------------------------------------------------------------------------
+# approx: per-round hessian-weighted re-binning of a fine quantized matrix
+# ---------------------------------------------------------------------------
+#
+# The reference approx updater re-sketches every round with that round's
+# hessians as weights (`updater_approx.cc:95-130`).  Here features are
+# quantized once at fine resolution (4x max_bin); each round picks the
+# coarse boundaries from one global (feature x fine bin) sum-of-|h|
+# histogram and re-quantizes through a per-feature lookup table, so raw
+# values are never read again.  Error is bounded by the fine grid — the
+# approximation class of a direct weighted sketch at 4x resolution.
+# Both tree trainers call these kernels; each sums the histogram its own
+# way (barrier: allreduce; DataFrame: one job, partitions in order).
+
+def approx_hist(Xb_fine: np.ndarray, h: np.ndarray, n_bins: int) -> np.ndarray:
+    """The local ``(features, n_bins + 1)`` histogram of ``|h|`` over the
+    fine bins (missing rows in the last slot)."""
+    n, Fn = Xb_fine.shape
+    hist = np.zeros((Fn, n_bins + 1))
+    if n:
+        hw = np.abs(h)
+        for f in range(Fn):
+            b = Xb_fine[:, f].astype(np.int64)
+            b = np.where(b == MISSING_BIN, n_bins, b)
+            hist[f] = np.bincount(b, weights=hw,
+                                  minlength=n_bins + 1)[: n_bins + 1]
+    return hist
+
+
+def approx_bounds(hist: np.ndarray, fine_cuts, cat_mask, max_bin: int) -> list:
+    """The round's coarse binning from the globally summed `approx_hist`:
+    ``bounds_list[f]`` maps coarse bin -> the last fine bin it covers
+    (equal-|h| CDF inversion); None = feature not re-binned (categorical,
+    or at most ``max_bin`` fine bins)."""
+    bounds_list = []
+    for f, fc in enumerate(fine_cuts):
+        nf = len(fc)
+        if (cat_mask is not None and cat_mask[f]) or nf <= max_bin:
+            bounds_list.append(None)
+            continue
+        w = hist[f, :nf]
+        W = w.sum()
+        if W <= 0:      # no hessian mass this round: even fine-bin merge
+            bounds = np.linspace(0, nf - 1, max_bin).astype(np.int64)
+        else:
+            cum = np.cumsum(w)
+            targets = W * np.arange(1, max_bin) / max_bin
+            bounds = np.searchsorted(cum, targets, side="left")
+            bounds = np.unique(np.append(bounds, nf - 1))
+        bounds_list.append(bounds)
+    return bounds_list
+
+
+def coarse_cuts(fine_cuts, bounds_list) -> list[np.ndarray]:
+    """The cuts of an `approx_bounds` binning: a coarse bin's upper bound
+    is that of the last fine bin it covers."""
+    return [np.asarray(fc, dtype=np.float64) if b is None
+            else np.asarray(fc, dtype=np.float64)[b]
+            for fc, b in zip(fine_cuts, bounds_list)]
+
+
+def approx_rebin(Xb_fine: np.ndarray, bounds_list) -> np.ndarray:
+    """Fine bins -> the coarse bins of ``bounds_list`` through a
+    per-feature lookup table; missing stays missing."""
+    Xb_c = Xb_fine.copy()
+    for f, bounds in enumerate(bounds_list):
+        if bounds is None:
+            continue
+        lut = np.searchsorted(bounds, np.arange(bounds[-1] + 1),
+                              side="left").astype(np.int16)
+        col = Xb_fine[:, f]
+        Xb_c[:, f] = np.where(col == MISSING_BIN, MISSING_BIN,
+                              lut[np.maximum(col, 0)])
+    return Xb_c
+
+
+def remap_split_bins(tree: Tree, bounds_list) -> None:
+    """Rewrite a tree grown on a round's coarse bins into the fine bin
+    space: coarse split ``b <= sb`` is fine split ``b_fine <= bounds[sb]``
+    (the lookup table is monotone).  ``split_value`` is already the
+    raw-domain boundary and needs no change."""
+    for nid in range(tree.n_nodes):
+        f = tree.feature[nid]
+        if f < 0 or tree.categories[nid] is not None:
+            continue
+        b = bounds_list[f]
+        if b is not None:
+            tree.split_bin[nid] = int(b[tree.split_bin[nid]])

@@ -42,7 +42,8 @@ from xgboost_spark import core
 PARTIAL_SCHEMA = "nid int, fidx int, bin int, g double, h double"
 
 
-def _partial_hist_fn(bc_state, fcols: list[str], gcol: str, hcol: str, n_bins: int):
+def _partial_hist_fn(bc_state, fcols: list[str], gcol: str, hcol: str, n_bins: int,
+                     bounds=None):
     F_ = len(fcols)
     B = n_bins
 
@@ -58,6 +59,8 @@ def _partial_hist_fn(bc_state, fcols: list[str], gcol: str, hcol: str, n_bins: i
             if len(pdf) == 0:
                 continue
             Xb = np.column_stack([pdf[c].to_numpy(dtype=np.int16, na_value=-1) for c in fcols])
+            if bounds is not None:
+                Xb = core.approx_rebin(Xb, bounds)
             node = core.leaf_ids_from_arrays(arrays, Xb, binned=True)
             s = slot[node]
             rows = s >= 0
@@ -97,12 +100,15 @@ class SparkHistBuilder(core.HistBuilder):
     """HistBuilder over a cached quantized DataFrame.
 
     One `build()` call = one Spark job (map pass + tiny shuffle +
-    driver collect), covering every requested node.
+    driver collect), covering every requested node.  With ``bounds``
+    (an approx round's `core.approx_bounds`), each batch's fine bins
+    are mapped onto that round's coarse bins, whose cuts are ``cuts``.
     """
 
     def __init__(self, binned_df: DataFrame, fcols: list[str], cuts: list[np.ndarray],
-                 gcol: str = "g0", hcol: str = "h0"):
+                 gcol: str = "g0", hcol: str = "h0", bounds=None):
         self.df = binned_df
+        self.bounds = bounds
         self.fcols = fcols
         self.cuts = cuts
         self.gcol = gcol
@@ -117,7 +123,8 @@ class SparkHistBuilder(core.HistBuilder):
     def build(self, tree: core.Tree, nids: list[int]):
         bc = self._sc.broadcast((tree.finalize_arrays(), list(nids)))
         try:
-            fn = _partial_hist_fn(bc, self.fcols, self.gcol, self.hcol, self.n_bins)
+            fn = _partial_hist_fn(bc, self.fcols, self.gcol, self.hcol, self.n_bins,
+                                  self.bounds)
             sel = self.df.select(*self.fcols, self.gcol, self.hcol)
             partials = sel.mapInPandas(fn, schema=PARTIAL_SCHEMA)
             agg = partials.groupBy("nid", "fidx", "bin").agg(

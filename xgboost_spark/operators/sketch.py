@@ -6,11 +6,11 @@ summaries and merges them across workers
 `SketchOnDMatrix` `src/common/hist_util.h:198`).  The unweighted path
 mirrors that worker-summary/merge shape with an Arrow-batched NumPy
 compaction sketch (`approx_cuts`) — one corpus scan, per-feature merge,
-driver traffic independent of corpus size.  The hessian-weighted path
-(the
-`approx` updater's per-iteration re-sketch,
-`src/tree/updater_approx.cc:95-130`) is expressed as a range-partitioned
-cumulative-weight query — no single-partition global sort, so it scales.
+driver traffic independent of corpus size.  The weighted single-column
+sketch (`weighted_cuts`) is a range-partitioned cumulative-weight query
+— no single-partition global sort, so it scales.  The trainers' `approx`
+re-sketch does not read raw values: it merges the bins of a 4x-finer
+`approx_cuts` grid by hessian weight (`core.approx_bounds`).
 """
 
 from __future__ import annotations
@@ -230,65 +230,6 @@ def weighted_cuts(df: DataFrame, col: str, weight_col: str, max_bin: int,
     )
     vmax = max(r["cut"] for r in rows)
     return _finish_cuts([r["cut"] for r in rows], vmax)
-
-
-def weighted_cuts_all(df: DataFrame, value_cols: list[str], weight_col: str,
-                      max_bin: int, n_part: int | None = None,
-                      skip: list[int] | None = None) -> list[np.ndarray]:
-    """Hessian-weighted cuts for ALL features in ~4 jobs (the `approx`
-    updater's per-iteration re-sketch, `src/tree/updater_approx.cc:95-130`).
-
-    Plan: melt to long format with a JVM-side explode -> groupBy
-    (fidx, value) weight sums -> ONE multi-column prefix scan over the
-    (fidx, value) order (operators/scan.py) -> per-feature cumulative
-    weight = running total minus the feature's start offset (driver
-    math over F values) -> bucket boundaries collected (<= F x max_bin
-    rows).  ``skip`` lists feature indices to exclude (categoricals).
-    """
-    skip_set = set(skip or [])
-    pairs = [
-        F.struct(F.lit(i).alias("fidx"),
-                 F.col(c).cast("double").alias("v"))
-        for i, c in enumerate(value_cols) if i not in skip_set
-    ]
-    if not pairs:
-        return [np.asarray([np.inf])] * len(value_cols)
-    long = (df.select(F.explode(F.array(*pairs)).alias("p"),
-                      F.col(weight_col).cast("double").alias("w"))
-            .select("p.fidx", "p.v", "w")
-            .filter(F.col("v").isNotNull()))
-    per_v = long.groupBy("fidx", "v").agg(F.sum("w").alias("ww"))
-    from xgboost_spark.operators.scan import prefix_sums
-    scanned = prefix_sums(per_v, ["fidx", "v"], ["ww"], n_part)
-    totals = {int(r["fidx"]): (float(r["W"]), float(r["mx"]))
-              for r in per_v.groupBy("fidx")
-              .agg(F.sum("ww").alias("W"), F.max("v").alias("mx")).collect()}
-    # feature start offsets: cumulative totals of preceding features
-    starts = {}
-    acc = 0.0
-    for fi in sorted(totals):
-        starts[fi] = acc
-        acc += totals[fi][0]
-    start_df = df.sparkSession.createDataFrame(
-        [(fi, s) for fi, s in starts.items()], "fidx int, start double")
-    tot_df = df.sparkSession.createDataFrame(
-        [(fi, t[0]) for fi, t in totals.items()], "fidx int, W double")
-    b = (scanned.join(F.broadcast(start_df), "fidx")
-         .join(F.broadcast(tot_df), "fidx")
-         .withColumn("cumw", F.col("cum_ww") - F.col("start"))
-         .withColumn("bucket", F.ceil(F.col("cumw") * max_bin / F.col("W"))))
-    rows = (b.groupBy("fidx", "bucket").agg(F.max("v").alias("cut"))
-            .collect())
-    cuts_map: dict[int, list[float]] = {}
-    for r in rows:
-        cuts_map.setdefault(int(r["fidx"]), []).append(float(r["cut"]))
-    out = []
-    for i in range(len(value_cols)):
-        if i in skip_set or i not in cuts_map:
-            out.append(None)
-            continue
-        out.append(_finish_cuts(sorted(cuts_map[i]), totals[i][1]))
-    return out
 
 
 def exact_quantiles(df: DataFrame, col: str, n_bins: int,

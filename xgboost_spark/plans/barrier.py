@@ -294,96 +294,6 @@ def _mvs_threshold_allreduce(comm, rag: np.ndarray, subsample: float,
     return float(S_lo / denom) if denom > 0 else float(s_g / k)
 
 
-def _approx_rebin(comm, Xb_fine, h, fine_cuts, cat_mask, max_bin):
-    """Per-round hessian-weighted re-sketch (reference approx updater,
-    `updater_approx.cc:95-130`) without touching raw values: features are
-    pre-binned at fine resolution (4x max_bin); the quantile boundaries,
-    weighted by one output group's hessians ``h``, are picked from ONE
-    allreduced (feature x fine-bin) histogram, and re-quantization is a
-    per-feature LUT.  Error is bounded by the fine grid — the same
-    approximation class as a direct weighted sketch at 4x resolution.
-
-    Trees grown on the coarse binning are remapped back to the FINE bin
-    space afterwards (`_remap_split_bins`), so margins, eval sets and
-    DART corrections all traverse one consistent binned matrix.
-
-    Returns (Xb_coarse, coarse_cuts, bounds_list) where
-    ``bounds_list[f]`` maps coarse bin -> last fine bin it covers
-    (None = feature not re-binned)."""
-    n, Fn = Xb_fine.shape
-    fineB = max(len(c) for c in fine_cuts)
-    hist = np.zeros(Fn * (fineB + 1))
-    if n:
-        hw = np.abs(h)
-        for f in range(Fn):
-            b = Xb_fine[:, f].astype(np.int64)
-            b = np.where(b == core.MISSING_BIN, fineB, b)
-            hist[f * (fineB + 1):(f + 1) * (fineB + 1)] += np.bincount(
-                b, weights=hw, minlength=fineB + 1)[: fineB + 1]
-    hist = comm.allreduce_sum(hist).reshape(Fn, fineB + 1)
-    Xb_c = Xb_fine.copy()
-    coarse_cuts = []
-    bounds_list = []
-    for f in range(Fn):
-        nf = len(fine_cuts[f])
-        if (cat_mask is not None and cat_mask[f]) or nf <= max_bin:
-            coarse_cuts.append(np.asarray(fine_cuts[f], dtype=np.float64))
-            bounds_list.append(None)
-            continue
-        w = hist[f, :nf]
-        W = w.sum()
-        if W <= 0:      # no hessian mass this round: even fine-bin merge
-            bounds = np.linspace(0, nf - 1, max_bin).astype(np.int64)
-        else:
-            cum = np.cumsum(w)
-            targets = W * np.arange(1, max_bin) / max_bin
-            bounds = np.searchsorted(cum, targets, side="left")
-            bounds = np.unique(np.append(bounds, nf - 1))
-        lut = np.searchsorted(bounds, np.arange(nf), side="left").astype(np.int16)
-        bounds_list.append(bounds)
-        coarse_cuts.append(np.asarray(fine_cuts[f], dtype=np.float64)[bounds])
-        col = Xb_fine[:, f]
-        Xb_c[:, f] = np.where(col == core.MISSING_BIN, core.MISSING_BIN,
-                              lut[np.maximum(col, 0)])
-    return Xb_c, coarse_cuts, bounds_list
-
-
-def _rebin_from_bounds(Xb_fine, fine_cuts, bounds_list):
-    """Re-apply a persisted coarse binning (checkpoint resume of the
-    const-hess sketch-once cadence): the round-0 bounds are global, so
-    every rank reconstructs its own coarse matrix with the same LUT
-    application as `_approx_rebin` — resumed fits keep the ORIGINAL
-    round-0 cuts instead of re-sketching at the resume round."""
-    Xb_c = Xb_fine.copy()
-    coarse_cuts = []
-    for f, bounds in enumerate(bounds_list):
-        fc = np.asarray(fine_cuts[f], dtype=np.float64)
-        if bounds is None:
-            coarse_cuts.append(fc)
-            continue
-        lut = np.searchsorted(bounds, np.arange(len(fc)),
-                              side="left").astype(np.int16)
-        col = Xb_fine[:, f]
-        Xb_c[:, f] = np.where(col == core.MISSING_BIN, core.MISSING_BIN,
-                              lut[np.maximum(col, 0)])
-        coarse_cuts.append(fc[bounds])
-    return Xb_c, coarse_cuts
-
-
-def _remap_split_bins(tree: core.Tree, bounds_list) -> None:
-    """Rewrite a tree grown in a round's coarse bin space back into the
-    global FINE bin space: coarse split ``b <= sb`` == fine split
-    ``b_fine <= bounds[sb]`` (the LUT is monotone).  ``split_value`` is
-    already the raw-domain boundary and needs no change."""
-    for nid in range(tree.n_nodes):
-        f = tree.feature[nid]
-        if f < 0 or tree.categories[nid] is not None:
-            continue
-        b = bounds_list[f]
-        if b is not None:
-            tree.split_bin[nid] = int(b[tree.split_bin[nid]])
-
-
 def _leaf_quantile_refresh(comm, tree, Xb, resid, w, alpha, eta, n_hist=2048,
                            leaf=None):
     """UpdateTreeLeaf for CUSTOM adaptive objectives in barrier mode
@@ -663,7 +573,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 def load_rows(pdf):
                     """(Xb, y, w, q, bounds, margin) for one role's rows."""
                     return parse_rows(pdf, fnames, cuts_l, cm, K, base_score,
-                                      st_prev, has_b)[:6]
+                                      st_prev, has_b)
 
                 role = (full["_role"].to_numpy(dtype=np.int64)
                         if "_role" in full.columns else np.zeros(len(full), np.int64))
@@ -682,6 +592,15 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 # BatchSpec: regen = !const_hess): round 0's coarse
                 # binning is cached and reused for every later round
                 approx_cache = None
+
+                def approx_group(bnd):
+                    """(builder over the coarse bins, bounds) of one
+                    output group's `core.approx_bounds` binning."""
+                    cuts_c = core.coarse_cuts(cuts_l, bnd)
+                    return (_AllreduceHistBuilder(
+                        core.approx_rebin(Xb, bnd), cuts_c,
+                        max(len(c) for c in cuts_c), comm, cm), bnd)
+
                 builder = (_AllreduceMultiHistBuilder(Xb, cuts_l, n_bins, K, comm)
                            if is_multi
                            else _AllreduceHistBuilder(Xb, cuts_l, n_bins, comm,
@@ -753,12 +672,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         # rebuild the frozen round-0 coarse binning from
                         # the persisted bounds so the resumed fit keeps
                         # the original cuts (BatchSpec regen=!const_hess)
-                        a_bounds = ck["approx_bounds"]
-                        Xb_ca, cuts_ca = _rebin_from_bounds(Xb, cuts_l,
-                                                            a_bounds)
-                        nb_ca = max(len(c) for c in cuts_ca)
-                        approx_cache = [(_AllreduceHistBuilder(
-                            Xb_ca, cuts_ca, nb_ca, comm, cm), a_bounds)]
+                        approx_cache = [approx_group(ck["approx_bounds"])]
                 for it_round in range(start_round, p.num_boost_round):
                     # DART dropout: selection draws are deterministic from
                     # the shared rng, margin corrections are local rows
@@ -820,15 +734,10 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         # multi_output_tree is rejected at fit entry,
                         # matching CHECK(!IsMultiTarget),
                         # updater_approx.cc:166.)
-                        approx_groups = []
-                        for k in range(K):
-                            Xb_ck, cuts_ck, bnd_k = _approx_rebin(
-                                comm, Xb, h[:, k], cuts_l, cm, p.max_bin)
-                            nb_ck = max(len(c) for c in cuts_ck)
-                            approx_groups.append(
-                                (_AllreduceHistBuilder(Xb_ck, cuts_ck,
-                                                       nb_ck, comm, cm),
-                                 bnd_k))
+                        approx_groups = [approx_group(core.approx_bounds(
+                            comm.allreduce_sum(
+                                core.approx_hist(Xb, h[:, k], n_bins)),
+                            cuts_l, cm, p.max_bin)) for k in range(K)]
                         if K == 1 and obj.const_hess:
                             approx_cache = approx_groups
                     _t_sec = time.perf_counter()
@@ -865,7 +774,7 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                         # (so the coarse builders' cached leaf ids no
                         # longer match the trees)
                         for ti, t in enumerate(round_trees):
-                            _remap_split_bins(t, approx_groups[ti // n_forest][1])
+                            core.remap_split_bins(t, approx_groups[ti // n_forest][1])
                     if obj.adaptive_alpha is not None:
                         aa = obj.adaptive_alpha
                         for ti, t in enumerate(round_trees):

@@ -45,8 +45,8 @@ for Spark's execution model:
   kernel adds the new round and then, for DART, each dropped round's
   rescale delta to the margin (`core.apply_model_margin` over
   ``(rounds, weights)``), and writes the next round's gradients at
-  that margin minus the next round's dropped rounds; it re-bins approx
-  features and replays `refresh_leaves`' margins too;
+  that margin minus the next round's dropped rounds; it replays
+  `refresh_leaves`' margins too;
 - gradients/hessians are fp64 columns (reference accumulates
   `GradientPairPrecise`, `src/common/hist_util.h:388`).
 
@@ -55,8 +55,9 @@ under AQE: shuffle map stage, then result) + 1 margin/gradient pass,
 plus per eval frame one margin pass and its metric queries — 7 at
 depth 3 without evals, for gbtree and DART alike, independent of
 cluster size and of the number of tree nodes.  Global-scale objectives
-add one scale-statistics job, cox its Breslow pass, approx a re-sketch
-and a re-bin pass.
+add one scale-statistics job, cox its Breslow pass, approx (unless
+its binning is frozen) one job summing the |hessian| histogram over
+the fine bins (`_approx_hists`).
 """
 
 from __future__ import annotations
@@ -133,11 +134,10 @@ def _compute_grads(obj, y, m, w, q, seed, subsample, K, bounds=None):
 
 
 def parse_rows(pdf: pd.DataFrame, fnames: list[str], cuts, cat_mask, K: int,
-               base_score, prev_state: dict | None, has_b: bool,
-               keep_raw: bool = False):
+               base_score, prev_state: dict | None, has_b: bool):
     """The per-row parse every tree trainer shares (DataFrame training
     rows, DataFrame eval rows, each barrier role):
-    ``(Xb, y, w, q, bounds, margin, Xraw)``.
+    ``(Xb, y, w, q, bounds, margin)``.
 
     Features are binned on the training cuts (a categorical code is its
     own bin).  ``w``/``q`` are None when the frame has no weight/qid
@@ -145,11 +145,10 @@ def parse_rows(pdf: pd.DataFrame, fnames: list[str], cuts, cat_mask, K: int,
     objectives, whose label defaults to the lower bound.  The start
     margin is ``base_margin`` when present (it REPLACES base_score,
     predictor.cc:66), plus the continuation model's output (reference
-    ``xgb_model``, training.py:183).  ``Xraw`` is the raw float matrix
-    when ``keep_raw``, else None."""
+    ``xgb_model``, training.py:183), which routes rows by raw value."""
     n, Fn = len(pdf), len(fnames)
     Xb = np.empty((n, Fn), dtype=np.int16)
-    Xr = np.empty((n, Fn)) if keep_raw or prev_state is not None else None
+    Xr = np.empty((n, Fn)) if prev_state is not None else None
     for i, c in enumerate(fnames):
         x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
         Xb[:, i] = (core.bin_categorical(x, len(cuts[i]))
@@ -177,20 +176,17 @@ def parse_rows(pdf: pd.DataFrame, fnames: list[str], cuts, cat_mask, K: int,
     if prev_state is not None:
         core.apply_model_margin(m, prev_state["trees"], prev_state["weights"],
                                 Xr, False, K)
-    return Xb, y, w, q, bounds, m, (Xr if keep_raw else None)
+    return Xb, y, w, q, bounds, m
 
 
 # ---------------------------------------------------------------------
 # The DataFrame trainer's frame: one row per training (or eval) row,
-# columns ``x*`` [``rawx*``] ``y w`` [``yl yu``] [``q``] ``m*`` [``g* h*``]
+# columns ``x*`` ``y w`` [``yl yu``] [``q``] ``m*`` [``g* h*``]
 
 
 def _frame_schema(Fn: int, K: int, has_q: bool, with_grads: bool,
-                  with_bounds: bool = False, with_raw: bool = False) -> str:
-    parts = [f"x{i} smallint" for i in range(Fn)]
-    if with_raw:
-        parts += [f"rawx{i} double" for i in range(Fn)]
-    parts += ["y double", "w double"]
+                  with_bounds: bool = False) -> str:
+    parts = [f"x{i} smallint" for i in range(Fn)] + ["y double", "w double"]
     if with_bounds:
         parts += ["yl double", "yu double"]
     if has_q:
@@ -220,8 +216,7 @@ def _write_grads(out: dict, grads, y, m, w, q, bounds, K: int) -> None:
 
 def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
                 cat_mask, K: int, base_score, prev_state=None,
-                has_b: bool = False, keep_raw: bool = False,
-                grads=None) -> DataFrame:
+                has_b: bool = False, grads=None) -> DataFrame:
     """The init pass: `parse_rows` per batch into frame columns, then
     the gradient writer when ``grads`` is given (for objectives whose
     gradients need a global statistic, `_grads_pass` writes them next).
@@ -235,12 +230,10 @@ def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            Xb, y, w, q, bounds, m, Xr = parse_rows(
+            Xb, y, w, q, bounds, m = parse_rows(
                 pdf, fnames, cuts_l, cat_mask, K, base_score, st_prev,
-                has_b, keep_raw=keep_raw)
+                has_b)
             out = {f"x{i}": Xb[:, i] for i in range(Fn)}
-            if keep_raw:
-                out.update({f"rawx{i}": Xr[:, i] for i in range(Fn)})
             out["y"] = y
             out["w"] = w if w is not None else np.ones(len(pdf))
             if has_b:
@@ -262,46 +255,36 @@ def _parse_pass(raw: DataFrame, schema: str, fnames: list[str], cuts,
     return raw.mapInPandas(fn, schema=schema)
 
 
+def _frame_bins(pdf: pd.DataFrame) -> np.ndarray:
+    """A frame batch's ``x*`` columns as the int16 bin matrix."""
+    return np.column_stack([pdf[c].to_numpy(dtype=np.int16, na_value=-1)
+                            for c in pdf.columns if c[0] == "x"])
+
+
 def _frame_batch(pdf: pd.DataFrame, K: int, add=None, drop=None,
-                 use_raw: bool = False, cuts=None, cat_mask=None,
                  grads=None):
     """The one per-batch kernel over a frame (the reference's prediction
     cache update, `learner.cc:1128-1131`): returns ``(out columns,
     margin minus drop)``.
 
     ``add`` and ``drop`` are ``(rounds, weights)`` for
-    `core.apply_model_margin`, or None.  In order: re-bin ``x*`` from
-    ``rawx*`` on ``cuts`` (approx); add ``add`` to the margin; subtract
-    ``drop`` from a copy of it (DART); write ``g*``/``h*`` at that copy
-    when ``grads`` is given.  Trees route rows by bin (``x*``) or, with
-    ``use_raw``, by raw value (approx: bins change per round, raw split
-    values do not).  Columns not written pass through."""
+    `core.apply_model_margin`, or None.  In order: add ``add`` to the
+    margin; subtract ``drop`` from a copy of it (DART); write
+    ``g*``/``h*`` at that copy when ``grads`` is given.  Trees route
+    rows by bin (``x*``; approx trees are remapped to these fine bins
+    after growth).  Columns not written pass through."""
     out = {c: pdf[c] for c in pdf.columns}
-    Fn = sum(c[0] == "x" for c in pdf.columns)
-    if cuts is not None:
-        for i in range(Fn):
-            if cat_mask is None or not cat_mask[i]:
-                out[f"x{i}"] = core.bin_values(
-                    pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan),
-                    cuts[i])
     m = np.column_stack([pdf[f"m{k}"].to_numpy(dtype=np.float64)
                          for k in range(K)])
     if add or drop:
-        if use_raw:
-            X = np.column_stack([
-                pdf[f"rawx{i}"].to_numpy(dtype=np.float64, na_value=np.nan)
-                for i in range(Fn)])
-        else:
-            X = np.column_stack([pdf[f"x{i}"].to_numpy(dtype=np.int16, na_value=-1)
-                                 for i in range(Fn)])
+        X = _frame_bins(pdf)
         if add:
-            core.apply_model_margin(m, *add, X, not use_raw, K)
+            core.apply_model_margin(m, *add, X, True, K)
             out.update({f"m{k}": m[:, k] for k in range(K)})
         if drop:
             rounds, weights = drop
             m = core.apply_model_margin(m.copy(), rounds,
-                                        [-wt for wt in weights], X,
-                                        not use_raw, K)
+                                        [-wt for wt in weights], X, True, K)
     if grads is not None:
         y = pdf["y"].to_numpy(dtype=np.float64)
         w = pdf["w"].to_numpy(dtype=np.float64)
@@ -314,25 +297,22 @@ def _frame_batch(pdf: pd.DataFrame, K: int, add=None, drop=None,
 
 
 def _frame_pass(frame: DataFrame, schema: str, K: int, add=None, drop=None,
-                use_raw: bool = False, cuts=None, cat_mask=None,
                 grads=None) -> DataFrame:
     """`_frame_batch` mapped over ``frame``, localCheckpointed (at
     cluster scale a reliable checkpoint dir; the pattern is the same)."""
-    bc = frame.sparkSession.sparkContext.broadcast((add, drop, cuts))
+    bc = frame.sparkSession.sparkContext.broadcast((add, drop))
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        add_l, drop_l, cuts_l = bc.value
+        add_l, drop_l = bc.value
         for pdf in it:
             if len(pdf):
-                out, _m = _frame_batch(pdf, K, add_l, drop_l, use_raw, cuts_l,
-                                       cat_mask, grads)
+                out, _m = _frame_batch(pdf, K, add_l, drop_l, grads)
                 yield pd.DataFrame(out)
 
     return frame.mapInPandas(fn, schema=schema).localCheckpoint(eager=True)
 
 
-def _scale_stats(frame: DataFrame, obj, K: int, add, drop,
-                 use_raw: bool) -> np.ndarray:
+def _scale_stats(frame: DataFrame, obj, K: int, add, drop) -> np.ndarray:
     """The objective's global scale statistics (reference smooth-MM MAE
     / logistic-smoothed quantile: a GLOBAL weighted reduction per
     iteration, regression_obj.cu:642-660 / quantile_obj.cu:123-152)
@@ -346,7 +326,7 @@ def _scale_stats(frame: DataFrame, obj, K: int, add, drop,
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            _out, m = _frame_batch(pdf, K, add_l, drop_l, use_raw)
+            _out, m = _frame_batch(pdf, K, add_l, drop_l)
             st = obj.scale_stats(pdf["y"].to_numpy(dtype=np.float64),
                                  m if K > 1 else m[:, 0],
                                  pdf["w"].to_numpy(dtype=np.float64))
@@ -362,9 +342,37 @@ def _scale_stats(frame: DataFrame, obj, K: int, add, drop,
     return np.array([float(r[f"s{i}"] or 0.0) for i in range(n_stats)])
 
 
+def _approx_hists(frame: DataFrame, Fn: int, K: int,
+                  n_bins: int) -> np.ndarray:
+    """Each output group's global |h| histogram over the fine bins,
+    ``(K, Fn, n_bins + 1)``, for `core.approx_bounds`: every partition
+    sums `core.approx_hist` over its batches, and the driver adds the
+    partitions in partition order, so the sum does not depend on task
+    scheduling.  One job."""
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = None
+        for pdf in it:
+            if len(pdf):
+                X = _frame_bins(pdf)
+                hk = np.stack([
+                    core.approx_hist(X, pdf[f"h{k}"].to_numpy(np.float64),
+                                     n_bins) for k in range(K)])
+                acc = hk if acc is None else acc + hk
+        if acc is not None:
+            yield pd.DataFrame({"pid": [TaskContext.get().partitionId()],
+                                "hist": [acc.tobytes()]})
+
+    sel = frame.select(*[f"x{i}" for i in range(Fn)],
+                       *[f"h{k}" for k in range(K)])
+    out = np.zeros((K, Fn, n_bins + 1))
+    for r in sorted(sel.mapInPandas(fn, "pid int, hist binary").collect(),
+                    key=lambda r: r["pid"]):
+        out += np.frombuffer(r["hist"]).reshape(out.shape)
+    return out
+
+
 def _grads_pass(frame: DataFrame, schema: str, obj, K: int, add, drop,
-                grads, use_raw: bool = False,
-                n_part: int | None = None) -> DataFrame:
+                grads, n_part: int | None = None) -> DataFrame:
     """``frame`` with ``add`` applied to its margins and ``g*``/``h*``
     written at that margin minus ``drop``: one `_frame_pass`.  A
     global-scale objective first sums its scale statistics at the same
@@ -374,13 +382,13 @@ def _grads_pass(frame: DataFrame, schema: str, obj, K: int, add, drop,
     refuses DART with cox, so ``drop`` is empty there."""
     if obj.needs_global_sort:
         if add:
-            frame = _frame_pass(frame, schema, K, add, use_raw=use_raw)
+            frame = _frame_pass(frame, schema, K, add)
         return SparkBooster._cox_grad_pass(frame, schema, n_part)
     if not obj.needs_global_scale:
-        return _frame_pass(frame, schema, K, add, drop, use_raw, grads=grads)
-    obj.set_scale(_scale_stats(frame, obj, K, add, drop, use_raw))
+        return _frame_pass(frame, schema, K, add, drop, grads=grads)
+    obj.set_scale(_scale_stats(frame, obj, K, add, drop))
     try:                        # the scale is pickled into the pass
-        return _frame_pass(frame, schema, K, add, drop, use_raw, grads=grads)
+        return _frame_pass(frame, schema, K, add, drop, grads=grads)
     finally:
         obj.set_scale(None)     # never leak a stale scale
 
@@ -471,12 +479,6 @@ def _choose_path(p, obj, evals, callbacks, custom_metric,
             "sampling_method='gradient_based' (MVS) trains on the "
             "barrier path — its sampling threshold is a global "
             "statistic allreduced per round (exec_mode=auto|barrier); "
-            f"blocked because: {why}")
-    if p.tree_method == "approx" and (p.n_groups > 1 or p.booster == "dart"
-                                      or obj.adaptive_alpha is not None):
-        raise NotImplementedError(
-            "tree_method=approx with multi-output, dart, or adaptive "
-            "leaves trains on the barrier path (exec_mode=auto|barrier); "
             f"blocked because: {why}")
     if p.n_groups > 1 and p.multi_strategy == "multi_output_tree":
         raise NotImplementedError(
@@ -917,7 +919,7 @@ class SparkBooster:
                 cuts = xgb_model.cuts
             prev_state = xgb_model._broadcastable()
         cuts, fused_bs, n_rows = self._cuts_stage(
-            raw, fnames, cuts, cat_mask, path, fuse_bs=xgb_model is None)
+            raw, fnames, cuts, cat_mask, fuse_bs=xgb_model is None)
         FIT_STAGE_TIMES["cuts"] = round(time.monotonic() - _t1, 3)
 
         _t1 = time.monotonic()
@@ -1075,7 +1077,7 @@ class SparkBooster:
             obj.weight_norm = float(r_wn["n"]) / float(r_wn["s"])
 
     def _cuts_stage(self, raw: DataFrame, fnames: list[str], cuts, cat_mask,
-                    path: str, fuse_bs: bool):
+                    fuse_bs: bool):
         """``(cuts, fused base score or None, row count or None)``.
 
         Without pre-built cuts ONE sketch scan produces the cuts and, as
@@ -1091,10 +1093,10 @@ class SparkBooster:
         fused_bs = n_rows = None
         if cuts is None:
             sketch_bins = p.max_bin
-            if p.tree_method == "approx" and path == "barrier":
-                # barrier approx pre-bins at 4x resolution; per-round
-                # hessian-weighted re-sketch merges fine bins in-job
-                # (plans/barrier.py _approx_rebin)
+            if p.tree_method == "approx":
+                # approx quantizes at 4x resolution; each round's
+                # hessian-weighted binning merges these fine bins
+                # (core.approx_bounds), on either trainer
                 sketch_bins = min(4 * p.max_bin, 2048)
             bs_aggs = (self._base_score_fuse_aggs(raw)
                        if (p.base_score is None and fuse_bs) else None)
@@ -1151,19 +1153,20 @@ class SparkBooster:
         fw = (np.asarray(p.feature_weights, dtype=np.float64)
               if p.feature_weights is not None else None)
         seed = p.seed
+        n_forest = max(p.num_parallel_tree, 1)
 
         def grads(round_seed: int):
             return (obj, round_seed, p.subsample)
 
         train_schema = _frame_schema(Fn, K, has_q, with_grads=True,
-                                     with_bounds=has_b, with_raw=is_approx)
+                                     with_bounds=has_b)
         eval_schema = _frame_schema(Fn, K, has_q, with_grads=False,
-                                    with_bounds=has_b, with_raw=is_approx)
+                                    with_bounds=has_b)
 
         def parse(frame: DataFrame, with_grads: bool) -> DataFrame:
             return _parse_pass(
                 frame, train_schema if with_grads else eval_schema, fnames,
-                cuts, cat_mask, K, base_score, prev_state, has_b, is_approx,
+                cuts, cat_mask, K, base_score, prev_state, has_b,
                 grads(seed) if with_grads else None)
 
         binned = parse(raw, True)
@@ -1200,7 +1203,8 @@ class SparkBooster:
         for cb in (callbacks or []):
             cb.before_training(cb_state)
 
-        cat_idx_skip = (list(np.nonzero(cat_mask)[0]) if cat_mask is not None else [])
+        n_bins = max(len(c) for c in cuts)
+        approx_cache = None       # the frozen const-hess binning
         for it_round in range(p.num_boost_round):
             stop = False
             for cb in (callbacks or []):
@@ -1209,35 +1213,36 @@ class SparkBooster:
                 break
             p.eta = cb_state.eta      # LearningRateScheduler applies here
 
-            if is_approx and (it_round == 0 or not obj.const_hess):
-                # per-round hessian-weighted re-sketch + re-quantization
-                # (reference approx updater, updater_approx.cc:95-130).
-                # Cadence twin (updater_approx.cc:47-52 BatchSpec): the
-                # GHistIndexMatrix regen flag is !const_hess, so
-                # reg:squarederror sketches ONCE — round 0, weighted by
-                # that round's hessians — and reuses the cuts; every
-                # other objective re-sketches per round.  (Only K=1
-                # gbtree approx fits reach this trainer: `_choose_path`
-                # sends the rest to the barrier trainer, which
-                # re-sketches per group like the reference.)
-                from xgboost_spark.operators.sketch import weighted_cuts_all
-                new_cuts = weighted_cuts_all(
-                    binned, [f"rawx{i}" for i in range(Fn)], "h0",
-                    p.max_bin, n_part, skip=cat_idx_skip)
-                cuts = [c if nc is None else nc for c, nc in zip(cuts, new_cuts)]
-                binned = _frame_pass(binned, train_schema, K, cuts=cuts,
-                                     cat_mask=cat_mask)
+            round_bounds = approx_cache
+            if is_approx and round_bounds is None:
+                # per-group hessian-weighted re-binning of the fine bins
+                # (reference approx updater, updater_approx.cc:95-130,
+                # re-sketching per group, :283-298), as the barrier
+                # trainer does it: one job sums each group's |h|
+                # histogram, `core.approx_bounds` picks the coarse bins
+                # and each group's builder maps batches onto them.
+                # Const-hess K=1 objectives (squarederror) freeze round
+                # 0's binning (BatchSpec regen = !const_hess,
+                # updater_approx.cc:47-52).
+                hists = _approx_hists(binned, Fn, K, n_bins)
+                round_bounds = [core.approx_bounds(hists[k], cuts, cat_mask,
+                                                   p.max_bin)
+                                for k in range(K)]
                 builders = [
-                    SparkHistBuilder(binned, fcols, cuts, gcol=f"g{k}", hcol=f"h{k}")
+                    SparkHistBuilder(binned, fcols,
+                                     core.coarse_cuts(cuts, round_bounds[k]),
+                                     gcol=f"g{k}", hcol=f"h{k}",
+                                     bounds=round_bounds[k])
                     for k in range(K)
                 ]
+                if K == 1 and obj.const_hess:
+                    approx_cache = round_bounds
 
             round_trees: list[core.Tree] = []
             fmask = None
             if p.colsample_bytree < 1.0:
                 fmask = core._rng_mask(rng, Fn, p.colsample_bytree, weights=fw)
             for k in range(K):
-                n_forest = max(p.num_parallel_tree, 1)
                 forest = []
                 for _ in range(n_forest):
                     tree = core.grow_tree(builders[k], p, rng,
@@ -1250,11 +1255,15 @@ class SparkBooster:
                     for t in forest:
                         t.leaf_value = [v / n_forest for v in t.leaf_value]
                 round_trees.extend(forest)
+            if is_approx:
+                # back to the fine bins every frame holds (margins,
+                # evals, adaptive leaves and the model's cuts)
+                for i, t in enumerate(round_trees):
+                    core.remap_split_bins(t, round_bounds[i // n_forest])
             if obj.adaptive_alpha is not None:
-                nf_r = max(len(round_trees) // K, 1)
                 aa = obj.adaptive_alpha
                 for i, t in enumerate(round_trees):
-                    k_r = i // nf_r
+                    k_r = i // n_forest
                     alpha_k = aa[k_r] if isinstance(aa, tuple) else aa
                     self._adaptive_leaf_refresh(binned, t, alpha_k, p.eta,
                                                 group=k_r)
@@ -1277,12 +1286,11 @@ class SparkBooster:
             drop = (([trees[ri] for ri in dropped],
                      [tree_weights[ri] for ri in dropped]) if dropped else None)
             binned = _grads_pass(binned, train_schema, obj, K, add, drop,
-                                 grads(seed + it_round + 1), is_approx)
+                                 grads(seed + it_round + 1))
             for k in range(K):
                 builders[k].df = binned
             for st in eval_states:
-                st[0] = _frame_pass(st[0], eval_schema, K, add,
-                                    use_raw=is_approx)
+                st[0] = _frame_pass(st[0], eval_schema, K, add)
             # evaluation + early stopping (reference EvalOneIter
             # `learner.cc:1164-1194`; EarlyStopping callback.py:311)
             if eval_states:
