@@ -141,6 +141,7 @@ def test_approx_multi_output_tree_rejected(spark, reg_df):
               df, feature_cols=["c0", "c1", "c2"])
 
 
+@pytest.mark.slow
 def test_approx_dataframe_fit_ignores_session_history(spark):
     """The same DataFrame-path approx fit, before and after 200 small
     unrelated queries, gives the same model bytes: the per-round
